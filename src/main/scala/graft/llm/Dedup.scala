@@ -529,14 +529,19 @@ object Dedup {
     * gives ~3·10⁻⁴ per 300-shingle doc at ~28.8 bits/key (~3.4 GiB
     * per 10⁹ keys — still one broadcast). Two passes over the bench
     * side only (count for sizing, then the aggregate); deterministic
-    * (fixed hash seed, bit-OR merge is order-free). */
+    * (fixed hash seed, bit-OR merge is order-free). An empty benchmark
+    * set gives an empty filter, which flags nothing. */
   def contaminationBloom(bench: DataFrame, benchText: String, n: Int = 3,
                          fpp: Double = 1e-6)
       : org.apache.spark.util.sketch.BloomFilter = {
     val h = bench.select(explode(graft.functions.ShingleHashes(
         lower(col(benchText)), n)).as("h"))
       .distinct()
-    h.stat.bloomFilter("h", math.max(h.count(), 1L), fpp)
+    val keys = h.count()
+    // the aggregate over zero rows has no bit array to return, so the
+    // empty filter is built directly, sized as for one key
+    if (keys == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
+    else h.stat.bloomFilter("h", keys, fpp)
   }
 
   /** Map-only Bloom decontamination: same output contract and plan

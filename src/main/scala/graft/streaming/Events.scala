@@ -346,6 +346,58 @@ object Events {
     (0 until 4).map(b => lit(b.toLong << 16) +
       shiftright(sig, b * 16).bitwiseAND(lit(0xffffL)))
 
+  /** Reject any of `names` already present in `df`: a scratch or output
+    * column silently clobbering a caller column (or an ambiguous
+    * reference later) is worse than a loud reject. */
+  private def rejectReserved(df: DataFrame, names: Seq[String],
+                             owner: String): Unit =
+    names.filter(df.columns.contains).foreach(c =>
+      throw new IllegalArgumentException(
+        s"column name $c is reserved by $owner"))
+
+  /** Scratch and output column names of the three table probes
+    * ([[noveltyBandedJoin]], [[noveltyBandExistsJoin]],
+    * [[noveltyKeyExistsJoin]]): each probe rejects its own, and the
+    * ingest loops reject them up front, before the replay probe. */
+  private val BandedProbeNames = Seq("__graft_bsig", "novel") ++
+    (0 until 4).flatMap(b => Seq(s"__graft_bk$b", s"__graft_sigs$b"))
+  private val BandExistsProbeNames =
+    Seq("__graft_barr", "__graft_band", "novel")
+  private val KeyProbeNames = Seq("__graft_key", "novel")
+
+  /** The exact bottom-`k` rows by `sig` per `keys` group — the
+    * deterministic per-bucket candidate cap ([[DefaultMaxBandBucket]]).
+    * A NULL key (a commit-marker row) is its own group, so it survives. */
+  private def bottomK(df: DataFrame, keys: Seq[String], k: Int): DataFrame =
+    df.withColumn("__graft_rn", row_number().over(
+        org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(col): _*).orderBy("sig")))
+      .filter(col("__graft_rn") <= k).drop("__graft_rn")
+
+  /** Max touched-partition values a batch-form probe turns into a
+    * literal IN partition filter — past this the filter list is itself
+    * a plan-size cost and the batch touches most partitions anyway, so
+    * the probe reads the whole index (prune nothing, decide
+    * identically). The prefix geometries stay far below it (≤ 256
+    * prefixes); an embedding index's cells can reach it. */
+  val MaxProbedCellFilters = 10000
+
+  /** `index` restricted to the `pfxCol` partitions named in the
+    * one-column frame `touched` — a batch's touched prefixes or cells,
+    * metadata-sized after distinct. The values become LITERAL partition
+    * filters: static partition pruning, so a small batch reads only its
+    * fraction of the index (StreamingSpec pins the PartitionFilters).
+    * No touched value reads nothing; past [[MaxProbedCellFilters]]
+    * values the whole index is read. One collect. */
+  private def prunedToTouched(index: DataFrame, pfxCol: String,
+                              touched: DataFrame): DataFrame = {
+    val vals = touched.distinct().collect().map(_.get(0)).toSeq
+    if (vals.isEmpty) index.filter(lit(false))
+    else if (vals.length <= MaxProbedCellFilters)
+      index.filter(col(pfxCol).isin(vals: _*))
+    else index
+  }
+
   /** Count of band buckets in a band-exploded index whose population
     * exceeds `maxBucket` — the LOUD metric for the novelty-probe cap:
     * nonzero means [[noveltyBandedJoin]] is dropping candidates in
@@ -424,21 +476,15 @@ object Events {
     require(maxHamming < 4,
       "4×16-bit band lookup complete only for maxHamming < 4")
     require(maxBucket > 0, s"maxBucket must be positive: $maxBucket")
-    // the probe's scratch names must not collide with caller columns
-    // (the r12 reserved-name sweep rule: a silent clobber or an
-    // ambiguous-reference error later is worse than a loud reject) —
-    // and neither may the OUTPUT column `novel` (r13 ADVICE: a caller
-    // frame already carrying `novel` was silently overwritten)
-    val reserved = Seq("__graft_bsig", "novel") ++
-      (0 until 4).flatMap(b => Seq(s"__graft_bk$b", s"__graft_sigs$b"))
-    reserved.filter(signed.columns.contains).foreach(c =>
-      throw new IllegalArgumentException(
-        s"column name $c is reserved by noveltyBandedJoin's probe"))
+    // the probe's scratch names and its OUTPUT column `novel` must not
+    // collide with caller columns
+    rejectReserved(signed, BandedProbeNames, "noveltyBandedJoin's probe")
     val sig = col(sigCol)
-    val idx = banded
+    def probeRows(b: DataFrame): DataFrame = b
       .select(col("band_key").cast(LongType).as("band_key"),
         col("sig").cast(LongType).as("sig"))
       .filter(col("sig").isNotNull)
+    val idx = probeRows(banded)
     if (signed.isStreaming) {
       val grouped = groupedBandIndex(idx, maxBucket)
       var df = signed
@@ -489,23 +535,13 @@ object Events {
           val shifts =
             if (pfxShift >= 0) Seq(pfxShift)
             else Seq(BandPfxShift, TinyIndexPfxShift)
-          val pfx = batchSigs
+          probeRows(prunedToTouched(banded, "band_pfx", batchSigs
             .select(explode(array(shifts.flatMap(sh =>
-              bandKeyCols(bsig).map(k => shiftright(k, sh))): _*)).as("p"))
-            .distinct().collect().map(_.getLong(0))
-          if (pfx.isEmpty) idx.filter(lit(false))
-          else banded
-            .filter(col("band_pfx").isin(pfx.map(p => p: Any).toSeq: _*))
-            .select(col("band_key").cast(LongType).as("band_key"),
-              col("sig").cast(LongType).as("sig"))
-            .filter(col("sig").isNotNull)
+              bandKeyCols(bsig).map(k => shiftright(k, sh))): _*)).as("p"))))
         }
       val capped =
         if (maxBucket == Int.MaxValue) pruned
-        else pruned.withColumn("__graft_rn",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy("band_key").orderBy("sig")))
-          .filter(col("__graft_rn") <= maxBucket).drop("__graft_rn")
+        else bottomK(pruned, Seq("band_key"), maxBucket)
       val dupSigs = batchSigs
         .select(bsig, explode(array(bandKeyCols(bsig): _*)).as("band_key"))
         .join(capped, Seq("band_key"))
@@ -548,9 +584,9 @@ object Events {
         s"stream-static novelty probe over $n indexed signatures: every " +
           "micro-batch re-scans the whole materialized index (no prefix " +
           "pruning is possible for a stream). Corpus-scale continuous " +
-          "ingest belongs on the foreachBatch ingest loops " +
-          "(startImageNoveltyIngest and siblings), which probe " +
-          "batch-form with literal partition pruning.")
+          "ingest belongs on the foreachBatch ingest loop " +
+          "(startNoveltyIngest over a *NoveltyIngestBatch entry), which " +
+          "probes batch-form with literal partition pruning.")
     grouped
   }
 
@@ -572,9 +608,10 @@ object Events {
     * machinery), rep = MIN signature per component; rows whose
     * signature is not its component's representative are dropped,
     * NULL-signature rows pass through. This is the opt-in INTRA-BATCH
-    * arm of the novelty-ingest loop ([[noveltyIngestBatch]]'s
-    * `collapseIntraBatch`): the index probe tests arrivals against
-    * HISTORY only, so same-batch near-dups would otherwise all pass.
+    * arm of the signature novelty-ingest loop (`collapseIntraBatch` of
+    * [[textNoveltyIngestBatch]] and its image/audio twins): the index
+    * probe tests arrivals against HISTORY only, so same-batch near-dups
+    * would otherwise all pass.
     * Note the granularity is the signature, not the row: rows SHARING
     * the representative signature still pass together (exact-payload
     * row dedup is upstream's job — it needs a row identity this
@@ -1671,8 +1708,8 @@ object Events {
   val TinyIndexBandedRows = 4096
 
   /** Table property recording a signature index's `band_pfx` grain
-    * (the shift applied to `band_key`); absent on pre-r15 tables,
-    * which read as [[BandPfxShift]]. */
+    * (the shift applied to `band_key`), written by
+    * [[createSignatureIndex]] and re-chosen by every compaction. */
   val PfxShiftProp = "graft.pfx.shift"
 
   /** `band_pfx` of a signature-index band key at grain `shift`;
@@ -1778,12 +1815,8 @@ object Events {
       val capSkip = maxBucket == Int.MaxValue || n <= maxBucket
       val shift =
         if (n <= TinyIndexBandedRows) TinyIndexPfxShift else BandPfxShift
-      val capped = if (capSkip) pinned else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("band_key").orderBy("sig")
-        pinned.withColumn("__graft_rn", row_number().over(w))
-          .filter(col("__graft_rn") <= maxBucket).drop("__graft_rn")
-      }
+      val capped =
+        if (capSkip) pinned else bottomK(pinned, Seq("band_key"), maxBucket)
       val withPfx = capped
         .withColumn("band_pfx", sigBandPfx(col("band_key"), shift))
       // a tiny seed also skips the pre-write grouping SHUFFLE: one task
@@ -1929,10 +1962,7 @@ object Events {
             // rebuild. The preserved max batch keeps its per-batch
             // contribution; its NULL-sig marker rides its own NULL
             // band_key window partition at rn=1, so it survives.
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("batch_id", "band_key").orderBy("sig")
-            noMarkers.withColumn("__graft_rn", row_number().over(w))
-              .filter(col("__graft_rn") <= k).drop("__graft_rn")
+            bottomK(noMarkers, Seq("batch_id", "band_key"), k)
           case None => noMarkers
         }
       case Some("embedding") =>
@@ -2047,18 +2077,66 @@ object Events {
         compactBatchTable(spark, sinkTable)
     }
 
-  /** One micro-batch of the novelty-ingest loop (exposed for batch-mode
-    * testing — [[startImageNoveltyIngest]] wires it into foreachBatch):
+  // ------------------------------------------------------------------
+  // the novelty-ingest kernel: one commit protocol for every index
+  // geometry; a geometry supplies only what differs
+  // ------------------------------------------------------------------
+
+  /** What one index geometry plugs into [[ingestBatch]].
     *
-    *  1. decode arrivals to signatures (`sign`, map-only, all caller
-    *     columns kept);
-    *  2. test them against the index AS OF BATCH START via the banded
-    *     stream-static join ([[noveltySigJoin]] — the index is a table,
-    *     never a plan literal, so it may grow without bound);
+    * @param kind      the [[IndexKindProp]] value its index declares
+    * @param createdBy the create function that makes such an index
+    * @param pfxCol    the index's partition column beside `batch_id`
+    * @param reserved  caller column names the loop rejects beyond
+    *                  `batch_id` and `novel`: the geometry's own output
+    *                  columns and its probe's and collapse's scratch
+    *                  names */
+  private abstract class IngestGeometry(val kind: String,
+                                        val createdBy: String,
+                                        val pfxCol: String,
+                                        val reserved: Seq[String]) {
+    /** Run `use` over the batch as the probe reads it (signed, and
+      * collapsed within the batch when asked); whatever the staging
+      * pins is released when `use` returns. */
+    def staged(batch: DataFrame)(use: DataFrame => Unit): Unit = use(batch)
+    /** The staged rows that are novel against `idx` — the index as of
+      * batch start — plus `novel`. */
+    def probe(staged: DataFrame, idx: DataFrame): DataFrame
+    /** This batch's index data rows, from its committed sink slice. */
+    def indexRows(slice: DataFrame): DataFrame
+    /** `pfxCol` of an index data row; an all-NULL row (the commit
+      * marker) lands in a partition no probe selects. */
+    def pfx: Column
+    /** Pre-write grouping of the index append (marker included). */
+    def group(rows: DataFrame): DataFrame =
+      groupForPartitionedWrite(rows, pfxCol)
+  }
+
+  /** Run `use` over `df` persisted for its duration: signing is the
+    * expensive per-row step, and the intra-batch collapse, the probe
+    * and the sink write all read the signed batch. Batch-sized, dropped
+    * before return. */
+  private def persisted(df: DataFrame)(use: DataFrame => Unit): Unit = {
+    val cached = df.persist(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try use(cached) finally cached.unpersist()
+  }
+
+  /** One micro-batch of the novelty-ingest loop, for every index
+    * geometry — the `*NoveltyIngestBatch` entries are its one-call
+    * spellings, and [[startNoveltyIngest]] wires one into foreachBatch:
+    *
+    *  1. stage the arrivals (signed map-only, all caller columns kept;
+    *     same-batch near-duplicates collapsed when asked);
+    *  2. test them against the index AS OF BATCH START with the
+    *     geometry's batch-form probe — the index is a table, never a
+    *     plan literal, so it may grow without bound, and the probe
+    *     reads only the index partitions the batch touches;
     *  3. append the novel rows (+ `batch_id`) to the sink;
-    *  4. append their distinct signatures to the index under this
-    *     `batch_id`, plus one NULL-sig marker row — so batch N+1
-    *     dedups against batch N.
+    *  4. read them BACK from the sink's batch partition (column- and
+    *     partition-pruned — no second decode or probe), derive the
+    *     index rows, and append them under this `batch_id` with one
+    *     all-NULL marker row — so batch N+1 dedups against batch N.
     *
     * Replay safety (foreachBatch may re-deliver a batch): the index
     * append is the LAST write and always contains the marker row, so
@@ -2066,183 +2144,86 @@ object Events {
     * partition-pruned probe and a no-op. A crash between sink and
     * index appends re-runs the batch; the sink probe (also
     * partition-pruned — both tables are partitioned by batch_id) skips
-    * the already-committed sink append, and the novelty decisions are
-    * unchanged because the index still lacks this batch's rows. NULL
-    * signatures (undecodable payloads) are KEPT in the sink — absence
-    * of a signature is absence of duplicate evidence — and never enter
-    * the index. Arrivals within one batch are tested against the index
-    * only, NOT against each other, UNLESS `collapseIntraBatch` is set:
-    * then [[collapseBySignature]] first collapses the batch's own
-    * near-duplicate signatures to one representative each (min sig per
-    * connected component), so a same-batch duplicate flood contributes
-    * ONE representative instead of all passing together.
+    * the already-committed sink append, the novelty decisions are
+    * unchanged because the index still lacks this batch's rows, and
+    * the index append derives from the sink read-back, so it equals
+    * the uncrashed one row for row. Every argument and reserved-name
+    * check runs before the replay probe, so a re-delivered batch fails
+    * exactly like its first delivery. Rows without duplicate evidence
+    * (a NULL signature, band array, vector or key) are KEPT in the sink
+    * and never enter the index. Arrivals are tested against the index
+    * only, NOT against each other, unless the geometry's
+    * `collapseIntraBatch` is set.
     *
-    * Per-batch cost at 100 TB: decode O(|batch|) (the signed batch is
-    * cached for the batch's lifetime — the probe's duplicate-signature
-    * set and the sink write both read it), ONE banded equi-join
-    * batch × capped-companion slice whose index side comes straight
-    * off the prefix-pruned
-    * scan with no exchange (the unavoidable O(index) scan — but never
-    * an index shuffle), two metadata-pruned existence probes, and
-    * appends sized to the batch landing bucket-local in their own
-    * partition — prior batches are never read or rewritten. Partition
-    * growth is bounded by [[compactBatchTable]] on a maintenance
-    * cadence (both tables recover from a mid-compaction crash on
-    * entry here). */
-  private def noveltyIngestBatch(batch: DataFrame, batchId: Long,
-                                 indexTable: String, sinkTable: String,
-                                 maxHamming: Int,
-                                 sign: DataFrame => DataFrame,
-                                 sigCol: String,
-                                 collapseIntraBatch: Boolean): Unit = {
+    * Per-batch cost: staging O(|batch|), one pruned probe of the index,
+    * two metadata-pruned existence probes, and appends sized to the
+    * batch in their own partition — prior batches are never read or
+    * rewritten. Partition growth is bounded
+    * by [[compactBatchTable]] on a maintenance cadence; both tables
+    * recover from a mid-compaction crash on entry here. */
+  private def ingestBatch(batch: DataFrame, batchId: Long,
+                          indexTable: String, sinkTable: String,
+                          g: IngestGeometry): Unit = {
     require(batchId >= 0, s"batch_id must be >= 0 (got $batchId; -1 is " +
       "reserved for the index seed)")
     checkTableName(indexTable)
     checkTableName(sinkTable)
-    // the loop WRITES batch_id (ingest provenance; `novel` is guarded
-    // inside the probe) — a caller frame already carrying it would be
-    // silently clobbered in the sink (r13 ADVICE: loud reject instead)
-    require(!batch.columns.contains("batch_id"),
-      "column name batch_id is reserved by the novelty-ingest loop")
+    rejectReserved(batch, Seq("batch_id", "novel") ++ g.reserved,
+      s"the ${g.kind} novelty-ingest loop")
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     recoverCompacted(spark, indexTable)
     recoverCompacted(spark, sinkTable)
-    require(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(indexTable))
-        .partitionColumnNames.contains("batch_id"),
-      s"$indexTable is not a batch_id-partitioned signature index — " +
-        "(re)create it with createSignatureIndex")
-    // a CappedKProp-declared index is pre-capped at write time — the
-    // probe runs windowless; a raw/pre-r14 table keeps the per-probe
-    // cap as a fallback
-    val idxProps = tablePropsOf(spark, indexTable)
-    val cappedK = idxProps.get(CappedKProp).map(_.toInt)
-    // the table's declared prefix grain (pre-r15 tables: the fixed
-    // BandPfxShift they were written with)
-    val idxPfxShift = idxProps.get(PfxShiftProp).map(_.toInt)
-      .getOrElse(BandPfxShift)
+    require(tablePropsOf(spark, indexTable).get(IndexKindProp)
+        .contains(g.kind),
+      s"$indexTable is not a batch_id-partitioned ${g.kind} index — " +
+        s"(re)create it with ${g.createdBy}")
     val idx = spark.table(indexTable)
     // fully-committed replay: the index partition (written last, never
     // empty thanks to the marker row) is the commit record
     if (!idx.filter(col("batch_id") === batchId).isEmpty) return
-    // cache the signed batch FIRST: the intra-batch collapse, the
-    // probe's duplicate-signature set, and the sink write are all plan
-    // branches over it, and decode is the expensive per-row step —
-    // batch-sized, dropped before return
-    val cached = sign(batch).persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val signed =
-        if (collapseIntraBatch)
-          collapseBySignature(cached, sigCol, maxHamming)
-        else cached
-      // pre-capped index (r14, verdict #2): candidates were capped at
-      // append/compaction time, so the probe plan has NO Window over
-      // the index — and the band_pfx partitions give the prefix-pruned
-      // read
-      val novel = (
-        if (cappedK.isDefined)
-          noveltyBandedJoin(signed, sigCol, idx, maxHamming,
-            maxBucket = Int.MaxValue, pfxShift = idxPfxShift)
-        else noveltyBandedJoin(signed, sigCol, idx, maxHamming,
-          pfxShift = idxPfxShift))
-        .withColumn("batch_id", lit(batchId))
+    def sinkSlice =
+      spark.table(sinkTable).filter(col("batch_id") === batchId)
+    g.staged(batch) { staged =>
+      val novel = g.probe(staged, idx).withColumn("batch_id", lit(batchId))
       if (!spark.catalog.tableExists(sinkTable))
         novel.write.partitionBy("batch_id").saveAsTable(sinkTable)
-      else if (spark.table(sinkTable).filter(col("batch_id") === batchId)
-          .isEmpty) {
+      else if (sinkSlice.isEmpty) {
         val cols = spark.table(sinkTable).columns
         novel.select(cols.map(col).toIndexedSeq: _*)
           .write.mode("append").insertInto(sinkTable)
       }
-      // index append reads the novel signatures BACK from the sink's
-      // batch partition (column- and partition-pruned — no second
-      // decode or join), band-explodes them, and commits the marker
-      // row with them — bucket-preserving append (same spec as the
-      // table, so the probe's shuffle-free plan survives growth)
-      val sigs = spark.table(sinkTable)
-        .filter(col("batch_id") === batchId)
-        .select(col(sigCol).cast(LongType).as("sig"))
-        .filter(col("sig").isNotNull).distinct()
-      val marker = spark.range(1).select(
-        lit(null).cast(LongType).as("band_key"),
-        lit(null).cast(LongType).as("sig"))
-      // the batch's contribution is its own bottom-k per band bucket —
-      // a window over BATCH-sized data, never over the index. Between
-      // compactions a bucket may hold up to k·batches candidates
-      // (decisions err strictly TOWARD the uncapped truth);
-      // compactBatchTable re-tightens the base to exactly bottom-k.
-      // The create-side tiny guard applies here too (r15, r14 verdict
-      // #5): a contribution with ≤ k banded rows IN TOTAL cannot
-      // overfill any bucket, so the window's shuffle is provably a
-      // no-op and a small batch — the trickle regime, where fixed
-      // per-batch cost IS the bill — skips it. Unlike the create's
-      // caller-supplied seed, the input here derives from the sink
-      // TABLE's committed batch partition (deterministic files), so
-      // the guard-count and the write may legally evaluate it twice —
-      // no persist needed.
-      val banded0 = graft.llm.Multimodal.bandIndexRows(sigs, "sig")
-      // an index created with the documented cap-disable value
-      // (Int.MaxValue) can never overfill a bucket — skip both the
-      // window AND the tiny-guard count (k + 1 would overflow limit()
-      // to a negative value; the create path clamps against this exact
-      // overflow and the append path must too — r15 ADVICE)
-      val capDisabled = cappedK.contains(Int.MaxValue)
-      val tinyAppend = !capDisabled && cappedK.exists(k =>
-        banded0.limit(k + 1).count() <= k)
-      val banded = cappedK match {
-        case Some(k) if !capDisabled && !tinyAppend =>
-          val wc = org.apache.spark.sql.expressions.Window
-            .partitionBy("band_key").orderBy("sig")
-          banded0.withColumn("__graft_rn", row_number().over(wc))
-            .filter(col("__graft_rn") <= k).drop("__graft_rn")
-        case _ => banded0
-      }
-      val rows = banded
-        .unionByName(marker)
-        .withColumn("band_pfx", sigBandPfx(col("band_key"), idxPfxShift))
-        .withColumn("batch_id", lit(batchId))
-      // a tiny contribution also writes single-task (the create-side
-      // trim): same files, no pre-write exchange
-      (if (tinyAppend) rows.coalesce(1)
-       else groupForPartitionedWrite(rows, "band_pfx"))
-        .write.mode("append").partitionBy("batch_id", "band_pfx")
+      val rows = g.indexRows(sinkSlice)
+      val marker = spark.range(1).select(rows.schema.fields.map(f =>
+        lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      g.group(rows.unionByName(marker)
+          .withColumn(g.pfxCol, g.pfx)
+          .withColumn("batch_id", lit(batchId)))
+        .write.mode("append").partitionBy("batch_id", g.pfxCol)
         .saveAsTable(indexTable)
-    } finally cached.unpersist()
+    }
   }
 
-  /** [[noveltyIngestBatch]] over image payloads: dHash signatures. */
-  def imageNoveltyIngestBatch(batch: DataFrame, batchId: Long,
-                              indexTable: String, sinkTable: String,
-                              maxHamming: Int = 3,
-                              collapseIntraBatch: Boolean = false): Unit =
-    noveltyIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
-      graft.llm.Multimodal.withDhash, "dhash", collapseIntraBatch)
-
-  /** [[noveltyIngestBatch]] over audio payloads: aFP fingerprints. */
-  def audioNoveltyIngestBatch(batch: DataFrame, batchId: Long,
-                              indexTable: String, sinkTable: String,
-                              maxHamming: Int = 3,
-                              collapseIntraBatch: Boolean = false): Unit =
-    noveltyIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
-      graft.llm.Multimodal.withAfp, "afp", collapseIntraBatch)
-
-  /** Streaming IMAGE novelty-ingest sink: each micro-batch runs
-    * [[imageNoveltyIngestBatch]] — novel arrivals land in `sinkTable`,
-    * their signatures join `indexTable` (create it first with
-    * [[createSignatureIndex]]), so the stream continuously dedups
-    * against its own history. */
-  def startImageNoveltyIngest(stream: DataFrame, checkpoint: String,
-                              indexTable: String, sinkTable: String,
-                              maxHamming: Int = 3,
-                              collapseIntraBatch: Boolean = false,
-                              compactEvery: Int = 0)
+  /** The streaming novelty-ingest sink: each micro-batch runs `ingest`,
+    * one of the `*NoveltyIngestBatch` entries over `indexTable` and
+    * `sinkTable` —
+    * {{{
+    * startNoveltyIngest(stream, "/ckpt", "img_idx", "img_sink")(
+    *   imageNoveltyIngestBatch(_, _, "img_idx", "img_sink"))
+    * }}}
+    * — so the stream continuously dedups against its own history
+    * (create the index first with the geometry's create function).
+    * Every `compactEvery` micro-batches (0 disables) the committed
+    * batch partitions of both tables fold ([[compactBatchTable]]), which
+    * keeps a continuous ingest's partition count bounded. */
+  def startNoveltyIngest(stream: DataFrame, checkpoint: String,
+                         indexTable: String, sinkTable: String,
+                         compactEvery: Int = 0)(
+                         ingest: (DataFrame, Long) => Unit)
       : StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        imageNoveltyIngestBatch(batch, batchId, indexTable, sinkTable,
-          maxHamming, collapseIntraBatch)
+        ingest(batch, batchId)
         maybeCompact(batch.sparkSession, batchId, compactEvery,
           indexTable, sinkTable)
       }
@@ -2250,10 +2231,83 @@ object Events {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** [[noveltyIngestBatch]] over text: SimHash60 signatures — the
-    * continuous near-duplicate-text guard (each micro-batch dedups
-    * against every document before it, the index is a growing table).
-    * Complements [[decontaminateStream]] (fixed benchmark set) and
+  /** [[ingestBatch]] over the signature geometry
+    * ([[createSignatureIndex]]): `sign` decodes arrivals to a 64-bit
+    * `sigCol`, probed by the banded hamming join
+    * ([[noveltyBandedJoin]]) against the band-exploded,
+    * prefix-partitioned, pre-capped index. */
+  private def signatureIngestBatch(batch: DataFrame, batchId: Long,
+                                   indexTable: String, sinkTable: String,
+                                   maxHamming: Int,
+                                   sign: DataFrame => DataFrame,
+                                   sigCol: String,
+                                   collapseIntraBatch: Boolean): Unit =
+    ingestBatch(batch, batchId, indexTable, sinkTable,
+      new IngestGeometry("signature", "createSignatureIndex", "band_pfx",
+          BandedProbeNames :+ "__graft_repsig") {
+        // the table's declared candidate cap k and prefix grain
+        private lazy val props = tablePropsOf(batch.sparkSession, indexTable)
+        private lazy val k = props(CappedKProp).toInt
+        private lazy val shift = props(PfxShiftProp).toInt
+        override def staged(b: DataFrame)(use: DataFrame => Unit): Unit =
+          persisted(sign(b)) { cached =>
+            use(if (collapseIntraBatch)
+              collapseBySignature(cached, sigCol, maxHamming) else cached)
+          }
+        // candidates were capped at append/compaction time: the probe
+        // plan has NO Window over the index, and band_pfx gives the
+        // prefix-pruned read
+        def probe(staged: DataFrame, idx: DataFrame): DataFrame =
+          noveltyBandedJoin(staged, sigCol, idx, maxHamming,
+            maxBucket = Int.MaxValue, pfxShift = shift)
+        def indexRows(slice: DataFrame): DataFrame =
+          graft.llm.Multimodal.bandIndexRows(slice, sigCol)
+        def pfx: Column = sigBandPfx(col("band_key"), shift)
+        // the batch's contribution is its own bottom-k per band bucket —
+        // a window over BATCH-sized data, never over the index. Between
+        // compactions a bucket may hold up to k·batches candidates
+        // (decisions err strictly TOWARD the uncapped truth);
+        // compactBatchTable re-tightens the base to exactly bottom-k. A
+        // contribution with ≤ k banded rows IN TOTAL cannot overfill any
+        // bucket, so a small batch — the trickle regime, where fixed
+        // per-batch cost IS the bill — skips the window's shuffle and
+        // writes single-task (same files, no pre-write exchange). The
+        // input is the sink TABLE's committed partition (deterministic
+        // files), so the guard count and the write may both evaluate
+        // it. A cap-disabled index (k = Int.MaxValue) can never
+        // overfill a bucket: no window and no count (k + 1 would
+        // overflow limit()).
+        override def group(rows: DataFrame): DataFrame =
+          if (k == Int.MaxValue) groupForPartitionedWrite(rows, pfxCol)
+          else if (rows.filter(col("sig").isNotNull).limit(k + 1).count()
+              <= k) rows.coalesce(1)
+          else groupForPartitionedWrite(
+            bottomK(rows, Seq("band_key"), k), pfxCol)
+      })
+
+  /** The novelty-ingest loop over image payloads: dHash signatures
+    * ([[ingestBatch]], signature geometry). */
+  def imageNoveltyIngestBatch(batch: DataFrame, batchId: Long,
+                              indexTable: String, sinkTable: String,
+                              maxHamming: Int = 3,
+                              collapseIntraBatch: Boolean = false): Unit =
+    signatureIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
+      graft.llm.Multimodal.withDhash, "dhash", collapseIntraBatch)
+
+  /** The novelty-ingest loop over audio payloads: aFP fingerprints
+    * ([[ingestBatch]], signature geometry). */
+  def audioNoveltyIngestBatch(batch: DataFrame, batchId: Long,
+                              indexTable: String, sinkTable: String,
+                              maxHamming: Int = 3,
+                              collapseIntraBatch: Boolean = false): Unit =
+    signatureIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
+      graft.llm.Multimodal.withAfp, "afp", collapseIntraBatch)
+
+  /** The novelty-ingest loop over text: SimHash60 signatures
+    * ([[ingestBatch]], signature geometry) — the continuous
+    * near-duplicate-text guard (each micro-batch dedups against every
+    * document before it, the index is a growing table). Complements
+    * [[decontaminateStream]] (fixed benchmark set) and
     * [[dedupStreamBySignature]] (intra-stream exact-signature state):
     * this one is cross-batch, near-duplicate, and unbounded-index. */
   def textNoveltyIngestBatch(batch: DataFrame, batchId: Long,
@@ -2261,47 +2315,10 @@ object Events {
                              textCol: String = "text",
                              maxHamming: Int = 3,
                              collapseIntraBatch: Boolean = false): Unit =
-    noveltyIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
+    signatureIngestBatch(batch, batchId, indexTable, sinkTable, maxHamming,
       df => df.withColumn("simhash",
         graft.functions.SimHash60(lower(col(textCol)))),
       "simhash", collapseIntraBatch)
-
-  /** [[startImageNoveltyIngest]]'s text twin. */
-  def startTextNoveltyIngest(stream: DataFrame, checkpoint: String,
-                             indexTable: String, sinkTable: String,
-                             textCol: String = "text",
-                             maxHamming: Int = 3,
-                             collapseIntraBatch: Boolean = false,
-                             compactEvery: Int = 0)
-      : StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        textNoveltyIngestBatch(batch, batchId, indexTable, sinkTable,
-          textCol, maxHamming, collapseIntraBatch)
-        maybeCompact(batch.sparkSession, batchId, compactEvery,
-          indexTable, sinkTable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[startImageNoveltyIngest]]'s audio twin. */
-  def startAudioNoveltyIngest(stream: DataFrame, checkpoint: String,
-                              indexTable: String, sinkTable: String,
-                              maxHamming: Int = 3,
-                              collapseIntraBatch: Boolean = false,
-                              compactEvery: Int = 0)
-      : StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        audioNoveltyIngestBatch(batch, batchId, indexTable, sinkTable,
-          maxHamming, collapseIntraBatch)
-        maybeCompact(batch.sparkSession, batchId, compactEvery,
-          indexTable, sinkTable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   // ------------------------------------------------------------------
   // maintained EMBEDDING novelty index — the semantic member of the
@@ -2361,47 +2378,28 @@ object Events {
     setTableProps(spark, table, Map(IndexKindProp -> "embedding"))
   }
 
-  /** One micro-batch of the EMBEDDING novelty-ingest loop — the
-    * [[noveltyIngestBatch]] machinery in cosine space:
+  /** The novelty-ingest loop over embeddings ([[ingestBatch]] in cosine
+    * space, index from [[createEmbeddingIndex]]):
     *
-    *  1. the batch's distinct non-null vectors are assigned map-only
-    *     to their `multiProbe` nearest cells (centroids reloaded from
-    *     `<indexTable>__cents` — model-sized);
-    *  2. the touched cells (metadata-sized, ≤ nlist·multiProbe
-    *     values) become LITERAL partition filters on the index read —
-    *     static partition pruning, only probed cells are read
-    *     (StreamingSpec pins the PartitionFilters) — and the cell
-    *     equi-join + exact cosine ≥ `threshold`
-    *     ([[graft.llm.Dedup.cosine]], 6-decimal grain) yields the
-    *     duplicate VECTORS, which anti-join the batch (vectors are
-    *     joinable values; the loop needs no row identity, exactly as
-    *     the signature loop anti-joins on the signature);
-    *  3. novel rows (+ `batch_id`) append to the sink; NULL-vector
-    *     rows are KEPT (absence of a vector is absence of duplicate
-    *     evidence) and never indexed;
-    *  4. the novel vectors are read BACK from the sink partition,
-    *     assigned to their single nearest cell (the index side is
-    *     single-assigned; `multiProbe` is the batch-side recall
-    *     lever — the standard IVF convention), and appended under
-    *     this `batch_id` together with the marker row (cell = -1,
-    *     vec = NULL) that commits the batch.
+    *  - stage: the centroids reload from `<indexTable>__cents`
+    *    (model-sized); `collapseIntraBatch` runs [[collapseByVector]]
+    *    first (same cells, same threshold, cells over `collapseCellCap`
+    *    distinct vectors take its guarded form);
+    *  - probe: the batch's distinct non-null vectors are assigned
+    *    map-only to their `multiProbe` nearest cells, the touched cells
+    *    become LITERAL partition filters on the index read (only probed
+    *    cells are read), and the cell equi-join + exact cosine ≥
+    *    `threshold` ([[graft.llm.Dedup.cosine]], 6-decimal grain)
+    *    yields the duplicate VECTORS, which anti-join the batch
+    *    (vectors are joinable values; the loop needs no row identity);
+    *  - index rows: the novel vectors, read back from the sink and
+    *    assigned to their single nearest cell (the index side is
+    *    single-assigned; `multiProbe` is the batch-side recall lever —
+    *    the standard IVF convention); the marker row takes cell -1.
     *
-    * Replay/crash safety, compaction ([[compactBatchTable]] folds
-    * committed `(batch_id, cell)` partitions; both tables auto-heal
-    * from a mid-compaction crash on entry here), and the intra-batch
-    * contract (history-only by default — same-batch near-dups pass
-    * together; `collapseIntraBatch` runs [[collapseByVector]] first,
-    * the signature loop's opt-in) are the signature loop's. Exact
-    * duplicates are ALWAYS found (identical vectors co-locate under
-    * the deterministic assignment); near-dups straddling unprobed
+    * Exact duplicates are ALWAYS found (identical vectors co-locate
+    * under the deterministic assignment); near-dups straddling unprobed
     * cell boundaries can be missed — raise `multiProbe`. */
-  /** Max touched-cell count the embedding probe turns into a literal
-    * IN partition filter — past this the filter list is itself a
-    * plan-size cost and the batch touches most cells anyway, so the
-    * probe falls back to the plain cell equi-join (prune nothing,
-    * decide identically). */
-  val MaxProbedCellFilters = 10000
-
   def embeddingNoveltyIngestBatch(batch: DataFrame, batchId: Long,
                                   indexTable: String, sinkTable: String,
                                   vecCol: String, threshold: Double,
@@ -2410,142 +2408,74 @@ object Events {
                                   collapseCellCap: Int =
                                     graft.llm.Dedup.MaxCellGroups)
       : Unit = {
-    require(batchId >= 0, s"batch_id must be >= 0 (got $batchId; -1 is " +
-      "reserved for the index seed)")
     require(multiProbe >= 1, s"multiProbe must be >= 1: $multiProbe")
-    checkTableName(indexTable)
-    checkTableName(sinkTable)
-    // the loop WRITES novel and batch_id — reject caller columns of
-    // those names instead of silently clobbering them (r13 ADVICE)
-    Seq("novel", "batch_id").filter(batch.columns.contains).foreach(c =>
-      throw new IllegalArgumentException(
-        s"column name $c is reserved by embeddingNoveltyIngestBatch"))
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    recoverCompacted(spark, indexTable)
-    recoverCompacted(spark, sinkTable)
-    val cents = spark.table(indexTable + "__cents")
-      .collect().sortBy(_.getInt(0))
-      .map(_.getSeq[Double](1).toArray)
-    val idx = spark.table(indexTable)
-    if (!idx.filter(col("batch_id") === batchId).isEmpty) return
-    Seq("__graft_bvec", "__graft_iv", "__graft_pv")
-      .filter(batch.columns.contains).foreach(c =>
-        throw new IllegalArgumentException(
-          s"column name $c is reserved by embeddingNoveltyIngestBatch"))
-    // opt-in INTRA-BATCH collapse (r14, verdict #5): the index probe
-    // tests arrivals against HISTORY only, so same-batch near-dup
-    // vectors would all pass together — collapse them to one
-    // representative vector each first (same cells, same threshold)
-    val work =
-      if (collapseIntraBatch)
-        collapseByVector(batch, vecCol, cents, threshold,
-          maxCellVectors = collapseCellCap)
-      else batch
-    val bvec = col("__graft_bvec")
-    val batchVecs = work.select(col(vecCol).as("__graft_bvec"))
-      .filter(bvec.isNotNull).distinct()
-      .localCheckpoint() // cells are both collected and joined below
-    val probed =
-      if (multiProbe <= 1)
-        batchVecs.withColumn("cell",
-          graft.llm.Similarity.nearestCell(bvec, cents))
-      else
-        graft.llm.Similarity.ivfAssign(
-            batchVecs.withColumn("__graft_pv", bvec),
-            "__graft_bvec", "__graft_pv", cents, multiProbe)
-          .select(bvec, col("cell"))
-    // touched cells → literal partition filters (metadata-sized —
-    // bounded by nlist·multiProbe, the PartitionScoped convention).
-    // Past the cap the IN-list itself becomes a plan-size cost and the
-    // batch is touching most cells anyway — fall back to the plain
-    // cell equi-join over the full index (correctness unchanged; the
-    // filter is purely a pruning hint)
-    val touched = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    val slice0 =
-      if (touched.isEmpty) idx.filter(lit(false))
-      else if (touched.length <= MaxProbedCellFilters)
-        idx.filter(col("cell").isin(touched.map(c => c: Any).toSeq: _*))
-      else idx
-    val slice = slice0.filter(col("vec").isNotNull)
-    // self-norms staged once per side (the dedupAssigned convention,
-    // r17); same doubles, same Round6 — bit-identical probe decisions
-    val dupVecs = probed
-      .withColumn("__graft_bn2", graft.functions.DotProduct(bvec, bvec))
-      .join(slice.select(col("cell"), col("vec").as("__graft_iv"),
-          graft.functions.DotProduct(col("vec"), col("vec"))
-            .as("__graft_in2")),
-        Seq("cell"))
-      .filter(graft.functions.Round6(try_divide(
-          graft.functions.DotProduct(bvec, col("__graft_iv")),
-          sqrt(col("__graft_bn2") * col("__graft_in2")))) >= threshold)
-      .select(bvec).distinct()
-    val novel = work.join(dupVecs, col(vecCol) === bvec, "left_anti")
-      .withColumn("novel", lit(true))
-      .withColumn("batch_id", lit(batchId))
-    if (!spark.catalog.tableExists(sinkTable))
-      novel.write.partitionBy("batch_id").saveAsTable(sinkTable)
-    else if (spark.table(sinkTable).filter(col("batch_id") === batchId)
-        .isEmpty) {
-      val cols = spark.table(sinkTable).columns
-      novel.select(cols.map(col).toIndexedSeq: _*)
-        .write.mode("append").insertInto(sinkTable)
-    }
-    // index append reads the novel vectors BACK from the sink's batch
-    // partition (column- and partition-pruned), assigns their single
-    // cell map-only, and commits the marker row with them. Zero-norm
-    // vectors are NOT indexed (r16 ADVICE): cosineZeroSafe makes
-    // their cosine NULL, so they pass no threshold — a recurring zero
-    // vector is novel on every batch and would otherwise re-append a
-    // duplicate (and probe-cost-bearing) index row each time, while
-    // as index state it can never mark anything a duplicate anyway
-    val vecs = spark.table(sinkTable)
-      .filter(col("batch_id") === batchId)
-      .select(col(vecCol).as("vec"))
-      .filter(col("vec").isNotNull)
-      .filter(graft.functions.DotProduct(col("vec"), col("vec"))
-        =!= lit(0.0))
-      .distinct()
-    val marker = spark.range(1).select(lit(-1).as("cell"),
-      lit(null).cast(idx.schema("vec").dataType).as("vec"))
-    vecs.withColumn("cell",
-        graft.llm.Similarity.nearestCell(col("vec"), cents))
-      .select(col("cell"), col("vec"))
-      .unionByName(marker)
-      .withColumn("batch_id", lit(batchId))
-      .select(idx.columns.map(col).toIndexedSeq: _*)
-      .write.mode("append").insertInto(indexTable)
+    ingestBatch(batch, batchId, indexTable, sinkTable,
+      new IngestGeometry("embedding", "createEmbeddingIndex", "cell",
+          Seq("__graft_bvec", "__graft_iv", "__graft_pv",
+            "__graft_repvec")) {
+        private lazy val cents = batch.sparkSession
+          .table(indexTable + "__cents")
+          .collect().sortBy(_.getInt(0))
+          .map(_.getSeq[Double](1).toArray)
+        override def staged(b: DataFrame)(use: DataFrame => Unit): Unit =
+          use(if (collapseIntraBatch)
+            collapseByVector(b, vecCol, cents, threshold,
+              maxCellVectors = collapseCellCap)
+          else b)
+        def probe(work: DataFrame, idx: DataFrame): DataFrame = {
+          val bvec = col("__graft_bvec")
+          val batchVecs = work.select(col(vecCol).as("__graft_bvec"))
+            .filter(bvec.isNotNull).distinct()
+            .localCheckpoint() // cells are both collected and joined below
+          val probed =
+            if (multiProbe <= 1)
+              batchVecs.withColumn("cell",
+                graft.llm.Similarity.nearestCell(bvec, cents))
+            else
+              graft.llm.Similarity.ivfAssign(
+                  batchVecs.withColumn("__graft_pv", bvec),
+                  "__graft_bvec", "__graft_pv", cents, multiProbe)
+                .select(bvec, col("cell"))
+          val slice = prunedToTouched(idx, "cell", probed.select(col("cell")))
+            .filter(col("vec").isNotNull)
+          // self-norms staged once per side (the dedupAssigned
+          // convention); same doubles, same Round6 — bit-identical
+          // probe decisions
+          val dupVecs = probed
+            .withColumn("__graft_bn2", graft.functions.DotProduct(bvec, bvec))
+            .join(slice.select(col("cell"), col("vec").as("__graft_iv"),
+                graft.functions.DotProduct(col("vec"), col("vec"))
+                  .as("__graft_in2")),
+              Seq("cell"))
+            .filter(graft.functions.Round6(try_divide(
+                graft.functions.DotProduct(bvec, col("__graft_iv")),
+                sqrt(col("__graft_bn2") * col("__graft_in2")))) >= threshold)
+            .select(bvec).distinct()
+          work.join(dupVecs, col(vecCol) === bvec, "left_anti")
+            .withColumn("novel", lit(true))
+        }
+        // zero-norm vectors are NOT indexed: cosineZeroSafe makes their
+        // cosine NULL, so they pass no threshold — a recurring zero
+        // vector is novel on every batch and would otherwise re-append
+        // a duplicate (and probe-cost-bearing) index row each time,
+        // while as index state it can never mark anything a duplicate
+        def indexRows(slice: DataFrame): DataFrame = slice
+          .select(col(vecCol).as("vec"))
+          .filter(col("vec").isNotNull)
+          .filter(graft.functions.DotProduct(col("vec"), col("vec"))
+            =!= lit(0.0))
+          .distinct()
+        def pfx: Column = when(col("vec").isNull, lit(-1))
+          .otherwise(graft.llm.Similarity.nearestCell(col("vec"), cents))
+        override def group(rows: DataFrame): DataFrame = rows
+      })
   }
 
-  /** [[startImageNoveltyIngest]]'s EMBEDDING sibling: each micro-batch
-    * runs [[embeddingNoveltyIngestBatch]] (create the index first with
-    * [[createEmbeddingIndex]]); `compactEvery` wires the same
-    * partition-growth maintenance. */
-  def startEmbeddingNoveltyIngest(stream: DataFrame, checkpoint: String,
-                                  indexTable: String, sinkTable: String,
-                                  vecCol: String, threshold: Double,
-                                  multiProbe: Int = 1,
-                                  collapseIntraBatch: Boolean = false,
-                                  compactEvery: Int = 0)
-      : StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        embeddingNoveltyIngestBatch(batch, batchId, indexTable,
-          sinkTable, vecCol, threshold, multiProbe, collapseIntraBatch)
-        maybeCompact(batch.sparkSession, batchId, compactEvery,
-          indexTable, sinkTable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
   // ------------------------------------------------------------------
-  // maintained MINHASH (Jaccard) novelty index — the 5th geometry of
-  // the ingest family: a document is a near-duplicate of history iff
-  // it SHARES AN LSH BAND with an indexed document (the
-  // Dedup.minhashNovelty rule), and novel documents' band keys join
-  // the index so the next batch dedups against them
+  // maintained MINHASH (Jaccard) novelty index: a document is a
+  // near-duplicate of history iff it SHARES AN LSH BAND with an indexed
+  // document (the Dedup.minhashNovelty rule), and novel documents' band
+  // keys join the index so the next batch dedups against them
   // ------------------------------------------------------------------
 
   /** Band-EXISTENCE novelty probe: a signed frame (carrying a band-key
@@ -2564,10 +2494,7 @@ object Events {
     * index streams off the pruned scan with no exchange. */
   def noveltyBandExistsJoin(signed: DataFrame, bandsCol: String,
                             index: DataFrame): DataFrame = {
-    Seq("__graft_barr", "__graft_band", "novel")
-      .filter(signed.columns.contains).foreach(c =>
-        throw new IllegalArgumentException(
-          s"column name $c is reserved by noveltyBandExistsJoin"))
+    rejectReserved(signed, BandExistsProbeNames, "noveltyBandExistsJoin")
     val barr = col("__graft_barr")
     val arrs0 = signed.select(col(bandsCol).as("__graft_barr"))
       .filter(barr.isNotNull).distinct()
@@ -2579,14 +2506,9 @@ object Events {
     val arrs = if (hasPfx) arrs0.localCheckpoint() else arrs0
     val idxSide =
       if (!hasPfx) index
-      else {
-        val pfx = arrs.select(explode(barr).as("b"))
-          .select(substring(col("b"), 1, 2).as("p"))
-          .distinct().collect().map(_.getString(0))
-        if (pfx.isEmpty) index.filter(lit(false))
-        else index
-          .filter(col("band_pfx").isin(pfx.map(p => p: Any).toSeq: _*))
-      }
+      else prunedToTouched(index, "band_pfx", arrs
+        .select(explode(barr).as("b"))
+        .select(substring(col("b"), 1, 2).as("p")))
     val dupArrs = arrs
       .select(barr, explode(barr).as("__graft_band"))
       .join(idxSide.select(col("band").as("__graft_band"))
@@ -2622,23 +2544,18 @@ object Events {
     setTableProps(spark, table, Map(IndexKindProp -> "band"))
   }
 
-  /** One micro-batch of the MINHASH novelty-ingest loop — the
-    * [[noveltyIngestBatch]] machinery under the Jaccard/LSH rule:
-    * arrivals are signed map-only (the native
-    * [[graft.functions.MinHashSig]] sliding window → `bands` md5 band
-    * keys, staged so the signature computes once per row), tested for
-    * a shared band against the index table ([[noveltyBandExistsJoin]]
-    * — prefix-pruned scan, no index-side exchange), and the novel rows'
-    * distinct band keys append under this `batch_id` with the NULL
-    * marker row. Rows keep every caller column plus `mh_bands` and
-    * `novel`; NULL-text rows carry NULL bands and are KEPT in the sink
-    * (absence of a signature is absence of duplicate evidence), never
-    * indexed. Replay safety, crash recovery, and
-    * [[compactBatchTable]] maintenance are the signature loop's,
-    * unchanged. Intra-batch near-dups pass together by default
-    * (history-only contract); `collapseIntraBatch` runs
-    * [[collapseByBands]] first — same-batch band-sharing arrays
-    * collapse to one representative each. */
+  /** The novelty-ingest loop under the Jaccard/LSH rule ([[ingestBatch]],
+    * index from [[createBandIndex]]): arrivals are signed map-only (the
+    * native [[graft.functions.MinHashSig]] sliding window → `mh_bands`
+    * md5 band keys, staged so the signature computes once per row),
+    * tested for a shared band against the index
+    * ([[noveltyBandExistsJoin]] — prefix-pruned scan, no index-side
+    * exchange), and the novel rows' distinct band keys append under
+    * this `batch_id`. Rows keep every caller column plus `mh_bands` and
+    * `novel`; NULL-text rows carry NULL bands and are KEPT in the sink,
+    * never indexed. `collapseIntraBatch` runs [[collapseByBands]]
+    * first — same-batch band-sharing arrays collapse to one
+    * representative each. */
   def minhashNoveltyIngestBatch(batch: DataFrame, batchId: Long,
                                 indexTable: String, sinkTable: String,
                                 textCol: String = "text",
@@ -2646,69 +2563,33 @@ object Events {
                                 bands: Int = 4,
                                 collapseIntraBatch: Boolean = false)
       : Unit = {
-    require(batchId >= 0, s"batch_id must be >= 0 (got $batchId; -1 is " +
-      "reserved for the index seed)")
     require(k % bands == 0, s"bands must divide k: k=$k bands=$bands")
-    checkTableName(indexTable)
-    checkTableName(sinkTable)
-    // the loop WRITES mh_bands and batch_id (`novel` is guarded inside
-    // the probe) — loud reject instead of silent clobber (r13 ADVICE)
-    Seq("mh_bands", "batch_id", "__graft_mharr")
-      .filter(batch.columns.contains).foreach(c =>
-        throw new IllegalArgumentException(
-          s"column name $c is reserved by minhashNoveltyIngestBatch"))
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    recoverCompacted(spark, indexTable)
-    recoverCompacted(spark, sinkTable)
-    require(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(indexTable))
-        .partitionColumnNames.contains("batch_id"),
-      s"$indexTable is not a batch_id-partitioned band index — " +
-        "(re)create it with createBandIndex")
-    val idx = spark.table(indexTable)
-    if (!idx.filter(col("batch_id") === batchId).isEmpty) return
-    // sign map-only: stage the raw signature array in its own
-    // projection (referenced once per band — CollapseProject keeps
-    // multi-referenced aliases staged, so MinHashSig runs once per row)
-    val signed = batch
-      .withColumn("__graft_mharr",
-        graft.functions.MinHashSig(lower(col(textCol)), n, k))
-      .withColumn("mh_bands", when(col(textCol).isNotNull,
-        graft.llm.Dedup.minhashBandArray(col("__graft_mharr"), k, bands)))
-      .drop("__graft_mharr")
-    val cached = signed.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // opt-in INTRA-BATCH collapse (r14, verdict #5): same-batch
-      // band-sharing near-dups collapse to one representative array
-      // each before the history probe
-      val work =
-        if (collapseIntraBatch) collapseByBands(cached, "mh_bands")
-        else cached
-      val novel = noveltyBandExistsJoin(work, "mh_bands", idx)
-        .withColumn("batch_id", lit(batchId))
-      if (!spark.catalog.tableExists(sinkTable))
-        novel.write.partitionBy("batch_id").saveAsTable(sinkTable)
-      else if (spark.table(sinkTable).filter(col("batch_id") === batchId)
-          .isEmpty) {
-        val cols = spark.table(sinkTable).columns
-        novel.select(cols.map(col).toIndexedSeq: _*)
-          .write.mode("append").insertInto(sinkTable)
-      }
-      val bandsNew = spark.table(sinkTable)
-        .filter(col("batch_id") === batchId)
-        .select(explode(col("mh_bands")).as("band"))
-        .filter(col("band").isNotNull).distinct()
-      val marker = spark.range(1).select(
-        lit(null).cast(StringType).as("band"))
-      val rows = bandsNew.unionByName(marker)
-        .withColumn("band_pfx", bandStrPfx(col("band")))
-        .withColumn("batch_id", lit(batchId))
-      groupForPartitionedWrite(rows, "band_pfx")
-        .write.mode("append").partitionBy("batch_id", "band_pfx")
-        .saveAsTable(indexTable)
-    } finally cached.unpersist()
+    ingestBatch(batch, batchId, indexTable, sinkTable,
+      new IngestGeometry("band", "createBandIndex", "band_pfx",
+          Seq("mh_bands", "__graft_mharr", "__graft_repbar") ++
+            BandExistsProbeNames) {
+        // the raw signature array is staged in its own projection
+        // (referenced once per band — CollapseProject keeps
+        // multi-referenced aliases staged, so MinHashSig runs once per
+        // row)
+        override def staged(b: DataFrame)(use: DataFrame => Unit): Unit =
+          persisted(b
+            .withColumn("__graft_mharr",
+              graft.functions.MinHashSig(lower(col(textCol)), n, k))
+            .withColumn("mh_bands", when(col(textCol).isNotNull,
+              graft.llm.Dedup.minhashBandArray(col("__graft_mharr"), k,
+                bands)))
+            .drop("__graft_mharr")) { cached =>
+            use(if (collapseIntraBatch) collapseByBands(cached, "mh_bands")
+              else cached)
+          }
+        def probe(staged: DataFrame, idx: DataFrame): DataFrame =
+          noveltyBandExistsJoin(staged, "mh_bands", idx)
+        def indexRows(slice: DataFrame): DataFrame = slice
+          .select(explode(col("mh_bands")).as("band"))
+          .filter(col("band").isNotNull).distinct()
+        def pfx: Column = bandStrPfx(col("band"))
+      })
   }
 
   // ------------------------------------------------------------------
@@ -2761,10 +2642,7 @@ object Events {
     * mark true duplicates novel — rejected loudly instead. */
   def noveltyKeyExistsJoin(frame: DataFrame, keyCol: String,
                            index: DataFrame): DataFrame = {
-    Seq("__graft_key", "novel")
-      .filter(frame.columns.contains).foreach(c =>
-        throw new IllegalArgumentException(
-          s"column name $c is reserved by noveltyKeyExistsJoin"))
+    rejectReserved(frame, KeyProbeNames, "noveltyKeyExistsJoin")
     val k = col("__graft_key")
     val hasPfx = index.columns.contains("key_pfx")
     if (hasPfx) {
@@ -2782,13 +2660,7 @@ object Events {
     val keys = if (hasPfx) keys0.localCheckpoint() else keys0
     val idxSide =
       if (!hasPfx) index
-      else {
-        val pfx = keys.select(keyPfx(k).as("p")).distinct()
-          .collect().map(_.getLong(0))
-        if (pfx.isEmpty) index.filter(lit(false))
-        else index
-          .filter(col("key_pfx").isin(pfx.map(p => p: Any).toSeq: _*))
-      }
+      else prunedToTouched(index, "key_pfx", keys.select(keyPfx(k).as("p")))
     val dupKeys = keys
       .join(idxSide.select(col("key").as("__graft_key"))
         .filter(col("__graft_key").isNotNull), Seq("__graft_key"),
@@ -2797,96 +2669,25 @@ object Events {
       .withColumn("novel", lit(true))
   }
 
-  /** One micro-batch of the EXACT-KEY novelty-ingest loop — the
-    * [[noveltyIngestBatch]] machinery under key equality: arrivals
-    * whose `keyCol` was seen in any prior batch (or the seed) are
-    * dropped, novel rows land in the sink, and their distinct keys
-    * append under this `batch_id` with the NULL marker row. NULL-key
-    * rows are KEPT in the sink and never indexed. Rows sharing a key
-    * pass together within one batch (history-only contract — for
+  /** The novelty-ingest loop under key equality ([[ingestBatch]], index
+    * from [[createKeyIndex]]): arrivals whose `keyCol` was seen in any
+    * prior batch (or the seed) are dropped, novel rows land in the
+    * sink, and their distinct keys append under this `batch_id`.
+    * NULL-key rows are KEPT in the sink and never indexed. Rows sharing
+    * a key pass together within one batch (history-only contract — for
     * exact keys an intra-batch collapse IS `dropDuplicates(keyCol)`
-    * upstream, which needs a row identity this loop doesn't). Replay
-    * safety, crash recovery, and [[compactBatchTable]] maintenance
-    * are the signature loop's, unchanged. */
+    * upstream, which needs a row identity this loop doesn't). */
   def keyNoveltyIngestBatch(batch: DataFrame, batchId: Long,
                             indexTable: String, sinkTable: String,
-                            keyCol: String): Unit = {
-    require(batchId >= 0, s"batch_id must be >= 0 (got $batchId; -1 is " +
-      "reserved for the index seed)")
-    checkTableName(indexTable)
-    checkTableName(sinkTable)
-    require(!batch.columns.contains("batch_id"),
-      "column name batch_id is reserved by the novelty-ingest loop")
-    if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    recoverCompacted(spark, indexTable)
-    recoverCompacted(spark, sinkTable)
-    require(spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(indexTable))
-        .partitionColumnNames.contains("batch_id"),
-      s"$indexTable is not a batch_id-partitioned key index — " +
-        "(re)create it with createKeyIndex")
-    val idx = spark.table(indexTable)
-    if (!idx.filter(col("batch_id") === batchId).isEmpty) return
-    val novel = noveltyKeyExistsJoin(batch, keyCol, idx)
-      .withColumn("batch_id", lit(batchId))
-    if (!spark.catalog.tableExists(sinkTable))
-      novel.write.partitionBy("batch_id").saveAsTable(sinkTable)
-    else if (spark.table(sinkTable).filter(col("batch_id") === batchId)
-        .isEmpty) {
-      val cols = spark.table(sinkTable).columns
-      novel.select(cols.map(col).toIndexedSeq: _*)
-        .write.mode("append").insertInto(sinkTable)
-    }
-    val keysNew = spark.table(sinkTable)
-      .filter(col("batch_id") === batchId)
-      .select(col(keyCol).as("key"))
-      .filter(col("key").isNotNull).distinct()
-    val marker = spark.range(1).select(
-      lit(null).cast(idx.schema("key").dataType).as("key"))
-    val rows = keysNew.unionByName(marker)
-      .withColumn("key_pfx", keyPfx(col("key")))
-      .withColumn("batch_id", lit(batchId))
-    groupForPartitionedWrite(rows, "key_pfx")
-      .write.mode("append").partitionBy("batch_id", "key_pfx")
-      .saveAsTable(indexTable)
-  }
-
-  /** [[startImageNoveltyIngest]]'s EXACT-KEY sibling (create the index
-    * first with [[createKeyIndex]]); `compactEvery` wires the same
-    * partition-growth maintenance. */
-  def startKeyNoveltyIngest(stream: DataFrame, checkpoint: String,
-                            indexTable: String, sinkTable: String,
-                            keyCol: String,
-                            compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        keyNoveltyIngestBatch(batch, batchId, indexTable, sinkTable,
-          keyCol)
-        maybeCompact(batch.sparkSession, batchId, compactEvery,
-          indexTable, sinkTable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[startImageNoveltyIngest]]'s MINHASH sibling (create the index
-    * first with [[createBandIndex]]); `compactEvery` wires the same
-    * partition-growth maintenance. */
-  def startMinhashNoveltyIngest(stream: DataFrame, checkpoint: String,
-                                indexTable: String, sinkTable: String,
-                                textCol: String = "text",
-                                n: Int = 3, k: Int = 16, bands: Int = 4,
-                                collapseIntraBatch: Boolean = false,
-                                compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        minhashNoveltyIngestBatch(batch, batchId, indexTable, sinkTable,
-          textCol, n, k, bands, collapseIntraBatch)
-        maybeCompact(batch.sparkSession, batchId, compactEvery,
-          indexTable, sinkTable)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+                            keyCol: String): Unit =
+    ingestBatch(batch, batchId, indexTable, sinkTable,
+      new IngestGeometry("key", "createKeyIndex", "key_pfx",
+          KeyProbeNames) {
+        def probe(staged: DataFrame, idx: DataFrame): DataFrame =
+          noveltyKeyExistsJoin(staged, keyCol, idx)
+        def indexRows(slice: DataFrame): DataFrame = slice
+          .select(col(keyCol).as("key"))
+          .filter(col("key").isNotNull).distinct()
+        def pfx: Column = keyPfx(col("key"))
+      })
 }

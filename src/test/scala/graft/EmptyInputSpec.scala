@@ -259,6 +259,17 @@ class EmptyInputSpec extends SparkSpec {
       .estimateAcross(emptyRollup, Seq("k"), Seq(0.5)).count() === 0)
   }
 
+  test("contaminationBloom over an empty benchmark set flags nothing") {
+    val noBench = Seq.empty[(Long, String)].toDF("id", "text")
+    val bloom = graft.llm.Dedup.contaminationBloom(noBench, "text")
+    val docs = Seq((1L, "the quick brown fox jumps over"),
+      (2L, "lorem ipsum dolor sit amet")).toDF("doc_id", "text")
+    val out = graft.llm.Dedup.decontaminateBloom(docs, "doc_id", "text",
+      bloom)
+    assert(out.count() === 2)
+    assert(out.filter($"contaminated").count() === 0)
+  }
+
   test("RP operators on empty inputs are empty, never throw") {
     val noVecs = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
     val someVecs = Seq(

@@ -1019,8 +1019,8 @@ class StreamingSpec extends SparkSpec {
         StructField("n_bytes", LongType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$tmp/in")
-    val q = Events.startImageNoveltyIngest(stream, s"$tmp/ckpt",
-      idxT, sinkT)
+    val q = Events.startNoveltyIngest(stream, s"$tmp/ckpt", idxT, sinkT)(
+      Events.imageNoveltyIngestBatch(_, _, idxT, sinkT))
     q.awaitTermination(120000)
     val kept = spark.table(sinkT).select($"media_id").as[Long]
       .collect().toSet
@@ -1066,8 +1066,8 @@ class StreamingSpec extends SparkSpec {
         StructField("n_bytes", LongType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$tmp/in")
-    val q = Events.startImageNoveltyIngest(stream, s"$tmp/ckpt",
-      idxT, sinkT, compactEvery = 1)
+    val q = Events.startNoveltyIngest(stream, s"$tmp/ckpt", idxT, sinkT,
+      compactEvery = 1)(Events.imageNoveltyIngestBatch(_, _, idxT, sinkT))
     q.awaitTermination(180000)
     // maintenance ran between batches: base + at most the last batch
     // (the index counts BATCH ids — its leaf partitions are
@@ -1258,8 +1258,9 @@ class StreamingSpec extends SparkSpec {
         StructField("embedding", elemT))))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$tmp/in")
-    val q = Events.startEmbeddingNoveltyIngest(stream, s"$tmp/ckpt",
-      idxT, sinkT, "embedding", 0.95, compactEvery = 1)
+    val q = Events.startNoveltyIngest(stream, s"$tmp/ckpt", idxT, sinkT,
+      compactEvery = 1)(Events.embeddingNoveltyIngestBatch(_, _, idxT,
+        sinkT, "embedding", 0.95))
     q.awaitTermination(120000)
     // sequential batch-mode twin
     Events.embeddingNoveltyIngestBatch(b0, 0L, idxB, sinkB,
@@ -1363,8 +1364,8 @@ class StreamingSpec extends SparkSpec {
         StructField("text", StringType))))
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$tmp/in")
-    val q = Events.startTextNoveltyIngest(stream, s"$tmp/ckpt",
-      idxT, sinkT)
+    val q = Events.startNoveltyIngest(stream, s"$tmp/ckpt", idxT, sinkT)(
+      Events.textNoveltyIngestBatch(_, _, idxT, sinkT))
     q.awaitTermination(120000)
     // ground truth via the signatures themselves: batch-1 copies of
     // ids 20..39 are dropped only because batch 0 grew the index
@@ -2186,30 +2187,24 @@ class StreamingSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS key_sink_ty")
   }
 
-  test("novelty ingest: crash between sink and index appends heals on replay") {
-    // the claimed crash contract (noveltyIngestBatch scaladoc): the
-    // index append (with its commit marker) is the LAST write, so a
-    // crash after the sink append re-runs the batch — the sink probe
-    // skips the committed append, and the index append derives from
-    // the sink READ-BACK, so the restored index equals the uncrashed
-    // one row-for-row
-    val idxT = "crash_idx"; val sinkT = "crash_sink"
-    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
-    val d = Tables.load(spark, sf, "documents").limit(120)
-      .select($"doc_id", $"text").localCheckpoint()
-    Events.createSignatureIndex(spark, idxT,
-      d.filter($"doc_id" < 40)
-        .select(graft.functions.SimHash60(lower($"text")).as("sig")),
-      "sig")
-    Events.textNoveltyIngestBatch(d.filter($"doc_id" >= 40 &&
-      $"doc_id" < 80), 0L, idxT, sinkT)
-    Events.textNoveltyIngestBatch(d.filter($"doc_id" >= 80), 1L,
-      idxT, sinkT)
-    val idxBefore = spark.table(idxT).filter($"batch_id" === 1L)
-      .select($"band_key", $"sig").as[(Option[Long], Option[Long])]
-      .collect().toSet
-    val sinkBefore = spark.table(sinkT).select($"doc_id", $"batch_id")
-      .as[(Long, Long)].collect().toSet
+  /** The crash contract of the ingest kernel (`Events.ingestBatch`
+    * scaladoc): the index append (with its commit marker) is the LAST
+    * write, so a crash after the sink append re-runs the batch — the
+    * sink probe skips the committed append, and the index append
+    * derives from the sink READ-BACK, so the restored index equals the
+    * uncrashed one row-for-row. `ingest` runs batches 0 and 1 against
+    * the freshly created `idxT`; batch 1 must index at least one row. */
+  private def assertCrashHeals(idxT: String, sinkT: String,
+      b0: org.apache.spark.sql.DataFrame, b1: org.apache.spark.sql.DataFrame,
+      ingest: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
+    ingest(b0, 0L)
+    ingest(b1, 1L)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def idxRows = rowsOf(spark.table(idxT).filter($"batch_id" === 1L))
+    val idxBefore = idxRows
+    val sinkBefore = rowsOf(spark.table(sinkT))
+    assert(idxBefore.length > 1, s"batch 1 indexed nothing: $idxBefore")
     // simulate the crash window: batch 1's sink append committed, its
     // index append (all sub-partitions) lost — datasource tables
     // discover partitions from the filesystem, so remove the directory
@@ -2226,14 +2221,76 @@ class StreamingSpec extends SparkSpec {
     spark.sql(s"REFRESH TABLE $idxT")
     assert(spark.table(idxT).filter($"batch_id" === 1L).count() == 0)
     // replay heals: sink untouched, index restored row-for-row
-    Events.textNoveltyIngestBatch(d.filter($"doc_id" >= 80), 1L,
-      idxT, sinkT)
-    assert(spark.table(sinkT).select($"doc_id", $"batch_id")
-      .as[(Long, Long)].collect().toSet == sinkBefore)
-    assert(spark.table(idxT).filter($"batch_id" === 1L)
-      .select($"band_key", $"sig").as[(Option[Long], Option[Long])]
-      .collect().toSet == idxBefore)
+    ingest(b1, 1L)
+    assert(rowsOf(spark.table(sinkT)) == sinkBefore)
+    assert(idxRows == idxBefore)
+  }
+
+  test("novelty ingest: crash between sink and index appends heals on replay") {
+    val idxT = "crash_idx"; val sinkT = "crash_sink"
     for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    val d = Tables.load(spark, sf, "documents").limit(120)
+      .select($"doc_id", $"text").localCheckpoint()
+    Events.createSignatureIndex(spark, idxT,
+      d.filter($"doc_id" < 40)
+        .select(graft.functions.SimHash60(lower($"text")).as("sig")),
+      "sig")
+    assertCrashHeals(idxT, sinkT, d.filter($"doc_id" >= 40 &&
+      $"doc_id" < 80), d.filter($"doc_id" >= 80),
+      Events.textNoveltyIngestBatch(_, _, idxT, sinkT))
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("key novelty ingest: crash between sink and index appends heals on replay") {
+    val idxT = "crash_key_idx"; val sinkT = "crash_key_sink"
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    val d = Tables.load(spark, sf, "documents").limit(120)
+      .select($"doc_id", $"text")
+      .withColumn("k", md5(lower($"text").cast("binary")))
+      .localCheckpoint()
+    Events.createKeyIndex(spark, idxT, d.filter($"doc_id" < 40), "k")
+    assertCrashHeals(idxT, sinkT, d.filter($"doc_id" >= 40 &&
+      $"doc_id" < 80), d.filter($"doc_id" >= 80),
+      Events.keyNoveltyIngestBatch(_, _, idxT, sinkT, "k"))
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("minhash novelty ingest: crash between sink and index appends heals on replay") {
+    val idxT = "crash_mh_idx"; val sinkT = "crash_mh_sink"
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    val d = Tables.load(spark, sf, "documents").limit(120)
+      .select($"doc_id", $"text").localCheckpoint()
+    Events.createBandIndex(spark, idxT, d.filter($"doc_id" < 40)
+      .select(graft.llm.Dedup.minhashBandArray(
+        graft.functions.MinHashSig(lower($"text"), 3, 16), 16, 4).as("b")),
+      "b")
+    assertCrashHeals(idxT, sinkT, d.filter($"doc_id" >= 40 &&
+      $"doc_id" < 80), d.filter($"doc_id" >= 80),
+      Events.minhashNoveltyIngestBatch(_, _, idxT, sinkT))
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("embedding novelty ingest: crash between sink and index appends heals on replay") {
+    val idxT = "crash_emb_idx"; val sinkT = "crash_emb_sink"
+    for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    val e = Tables.load(spark, sf, "embeddings")
+      .select($"vec_id", $"embedding").localCheckpoint()
+    val cents = graft.llm.Similarity.ivfTrain(e, "vec_id", "embedding", 8)
+    Events.createEmbeddingIndex(spark, idxT, e, "embedding", cents)
+    // batch 0: exact copies of %5 (duplicates) + negated %7 (novel);
+    // batch 1: negated %11 (novel where not already in batch 0)
+    val neg = (m: Int, off: Long) => e.filter(pmod($"vec_id", lit(m)) === 0)
+      .select(($"vec_id" + off).as("vec_id"),
+        transform($"embedding", x => -x).as("embedding"))
+    val b0 = e.filter(pmod($"vec_id", lit(5)) === 0)
+      .select(($"vec_id" + 200000).as("vec_id"), $"embedding")
+      .unionByName(neg(7, 300000L))
+    assertCrashHeals(idxT, sinkT, b0, neg(11, 400000L),
+      Events.embeddingNoveltyIngestBatch(_, _, idxT, sinkT, "embedding",
+        0.95))
+    for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   test("ingest loops loudly reject reserved output column names") {
@@ -2252,6 +2309,41 @@ class StreamingSpec extends SparkSpec {
         Seq((1L, true)).toDF("vec_id", "novel"), 0L, "rn_idx",
         "rn_sink", "vec", 0.9)
     }
+    intercept[IllegalArgumentException] {
+      Events.keyNoveltyIngestBatch(
+        Seq((1L, "k1", true)).toDF("doc_id", "k", "novel"), 0L, "rn_idx",
+        "rn_sink", "k")
+    }
+    intercept[IllegalArgumentException] {
+      Events.keyNoveltyIngestBatch(
+        Seq((1L, "k1", 0L)).toDF("doc_id", "k", "batch_id"), 0L, "rn_idx",
+        "rn_sink", "k")
+    }
+    // a RE-DELIVERED batch carrying a reserved name fails exactly like
+    // its first delivery: the checks run before the replay probe
+    val (tIdx, tSink) = ("rn_txt_idx", "rn_txt_sink")
+    val (eIdx, eSink) = ("rn_emb_idx", "rn_emb_sink")
+    for (t <- Seq(tIdx, tSink, eIdx, s"${eIdx}__cents", eSink))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    Events.createSignatureIndex(spark, tIdx,
+      spark.range(0).select($"id".as("sig")), "sig")
+    val texts = Seq((1L, "some text")).toDF("doc_id", "text")
+    Events.textNoveltyIngestBatch(texts, 0L, tIdx, tSink)
+    intercept[IllegalArgumentException] {
+      Events.textNoveltyIngestBatch(texts.withColumn("novel", lit(true)),
+        0L, tIdx, tSink)
+    }
+    Events.createEmbeddingIndex(spark, eIdx,
+      Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "vec"), "vec",
+      Array(Array(1.0, 0.0)))
+    val vecs = Seq((2L, Seq(0.0, 1.0))).toDF("vec_id", "vec")
+    Events.embeddingNoveltyIngestBatch(vecs, 0L, eIdx, eSink, "vec", 0.9)
+    intercept[IllegalArgumentException] {
+      Events.embeddingNoveltyIngestBatch(
+        vecs.withColumn("__graft_bvec", $"vec"), 0L, eIdx, eSink, "vec", 0.9)
+    }
+    for (t <- Seq(tIdx, tSink, eIdx, s"${eIdx}__cents", eSink))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
     intercept[IllegalArgumentException] {
       Events.noveltyBandedJoin(Seq((1L, true)).toDF("s", "novel"), "s",
         Seq((1L, 2L)).toDF("band_key", "sig"), 3)
