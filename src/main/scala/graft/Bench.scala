@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (the last stdout line —
@@ -119,8 +120,9 @@ object Bench {
     // rows above cannot represent shuffle- or codegen-heavy drift —
     // dd_semantic elevated ~1.3x across rounds on byte-identical code
     // while the map sentinels moved ~1.0x (mechanism measured in
-    // BoardOrderProbe: JIT-warmth/compile variance of codegen-heavy
-    // plans, spread 4.75–6.94 s on one box, one code). These two are
+    // test_archive/board_order_probe_r15.txt: JIT-warmth/compile
+    // variance of codegen-heavy plans, spread 4.75–6.94 s on one box,
+    // one code). These two are
     // FROZEN Bench-internal computations — they never share code with
     // any SparkEntry query, so they cannot drift with operator work —
     // timed like board rows (warm-up + min of 2) and reported in the
@@ -248,7 +250,8 @@ object Bench {
             ",\"normalized_total\":" + f"$normTotal%.1f")
         }
       }.getOrElse("")
-    } catch { case _: Throwable => "" })
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] adjudication failed: $e"); "" })
     // EFFECTIVE core count + master on both lines (r17 verdict #2):
     // the driver's r17 reduced-core scaling arm behaved like a 32-core
     // run — the $SPARK_GRAFT_CPUS env apparently never reached the
@@ -266,7 +269,8 @@ object Bench {
     try Files.writeString(Paths.get(
       if (only.isEmpty) "target/bench.json" else "target/bench_probe.json"),
       full)
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] bench.json write failed: $e") }
     // Per-round archive (VERDICT r4 #4): target/bench.json is overwritten
     // every run, so cross-round per-query regression diffs previously
     // depended on numbers quoted in old verdicts. bench_archive/ is NOT
@@ -286,7 +290,8 @@ object Bench {
       Files.createDirectories(Paths.get("bench_archive"))
       Files.writeString(
         Paths.get(f"bench_archive/bench_r$round%02d.json"), full)
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] archive write failed: $e") }
     spark.stop()
     // The driver tails stdout and parses the LAST line as JSON; at 73+
     // queries the per-query map is ~2.6 KB and overflows the tail window

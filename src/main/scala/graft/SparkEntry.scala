@@ -2412,29 +2412,6 @@ object SparkEntry {
         .orderBy(col("vec_id"))
     }),
 
-    "dd_semantic_coarse" -> ((s, dir) => {
-      // SemDeDup served through the TWO-LEVEL coarse quantizer (r12):
-      // assignment = nearest super-cell (ncoarse dots) then argmin
-      // among only that group's member centroids — the 100 TB lever
-      // for the n×nlist assignment term once nlist scales with the
-      // corpus. SAME global brute-force oracle as dd_semantic: the
-      // correctness construction is assignment-independent (all
-      // qualifying pairs are exact copies, which co-locate under ANY
-      // deterministic assignment; no natural pair reaches 0.95), so
-      // re-drawn cell boundaries cannot change the answer — only the
-      // per-row assignment cost.
-      val e = t(s, dir, "embeddings")
-      val doubled = e.select(col("vec_id"), col("embedding"))
-        .unionByName(e.select((col("vec_id") + 100000).as("vec_id"),
-          col("embedding")))
-        .localCheckpoint()
-      val cents = Similarity.ivfTrain(doubled, "vec_id", "embedding", 32)
-      Dedup.semanticDedupCoarse(doubled, "vec_id", "embedding", cents,
-          ncoarse = 6, threshold = 0.95)
-        .select(col("vec_id"), col("kept"))
-        .orderBy(col("vec_id"))
-    }),
-
     "dd_minhash_novelty_grow" -> ((s, dir) => {
       // the JACCARD member of the maintained-index ingest family
       // (r13 — the 5th geometry): arrivals are near-dups iff they
@@ -2557,7 +2534,8 @@ object SparkEntry {
       // oversized single cell at larger SFs, changing kept counts the
       // DuckDB replay can't mirror. Production shapes (real cents,
       // ~128 rows/cell) sit far below the cap; the guard itself is
-      // pinned in StreamingSpec and probed in HotCellProbe.
+      // pinned in StreamingSpec; its skew probe results are in
+      // test_archive/hot_cell_probe_r17.txt.
       graft.streaming.Events.embeddingNoveltyIngestBatch(batch, 0L,
         idxT, sinkT, "embedding", 0.95, collapseIntraBatch = true,
         collapseCellCap = Int.MaxValue)
@@ -2629,25 +2607,6 @@ object SparkEntry {
         .localCheckpoint()
       val cents = Similarity.ivfTrain(doubled, "vec_id", "embedding", 32)
       Dedup.semanticDedup(doubled, "vec_id", "embedding", cents, 0.95)
-        .select(col("vec_id"), col("kept"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "dd_semantic_rp" -> ((s, dir) => {
-      // assignment in the JL-PROJECTED space (r14 —
-      // Similarity.ivfAssignRp: nlist·16 + 16·64 multiplies per row
-      // instead of nlist·64): the same assignment-independent
-      // construction as dd_semantic_serve, so the SAME global
-      // brute-force oracle replays it — exact copies co-locate under
-      // ANY deterministic assignment (identical vectors project
-      // identically), and no natural pair reaches 0.95
-      val e = t(s, dir, "embeddings")
-      val doubled = e.select(col("vec_id"), col("embedding"))
-        .unionByName(e.select((col("vec_id") + 100000).as("vec_id"),
-          col("embedding")))
-        .localCheckpoint()
-      val cents = Similarity.ivfTrain(doubled, "vec_id", "embedding", 32)
-      Dedup.semanticDedupRp(doubled, "vec_id", "embedding", cents, 0.95)
         .select(col("vec_id"), col("kept"))
         .orderBy(col("vec_id"))
     }),
@@ -5103,18 +5062,6 @@ object SparkEntry {
 
     // GLOBAL brute-force drop rule — the cell-local SemDeDup result
     // must equal it (copies co-locate, no natural pair ≥ 0.95)
-    // identical oracle to dd_semantic — assignment-independent by
-    // construction (see the query comment)
-    "dd_semantic_coarse" ->
-      s"""WITH u AS (SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings),
-        |drp AS (SELECT DISTINCT b.vec_id
-        |  FROM u a JOIN u b ON a.vec_id < b.vec_id
-        |  WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.95)
-        |SELECT u.vec_id, d.vec_id IS NULL AS kept
-        |FROM u LEFT JOIN drp d ON u.vec_id = d.vec_id
-        |ORDER BY u.vec_id""".stripMargin,
-
     "dd_semantic" ->
       s"""WITH u AS (SELECT vec_id, embedding FROM embeddings
         |  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings),
@@ -5261,18 +5208,6 @@ object SparkEntry {
     // the centroids come from (pre-trained input vs inline training),
     // never the keep/drop answer (assignment-independent construction)
     "dd_semantic_serve" ->
-      s"""WITH u AS (SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings),
-        |drp AS (SELECT DISTINCT b.vec_id
-        |  FROM u a JOIN u b ON a.vec_id < b.vec_id
-        |  WHERE ${cosSql("a.embedding", "b.embedding")} >= 0.95)
-        |SELECT u.vec_id, d.vec_id IS NULL AS kept
-        |FROM u LEFT JOIN drp d ON u.vec_id = d.vec_id
-        |ORDER BY u.vec_id""".stripMargin,
-
-    // assignment-independent construction (see the query comment): the
-    // oracle is the same global brute-force replay as dd_semantic_serve
-    "dd_semantic_rp" ->
       s"""WITH u AS (SELECT vec_id, embedding FROM embeddings
         |  UNION ALL SELECT vec_id + 100000, embedding FROM embeddings),
         |drp AS (SELECT DISTINCT b.vec_id

@@ -46,24 +46,12 @@ import org.apache.spark.sql.types._
   * "Assigned to cell 0" is an arbitrary artifact of NaN ordering,
   * not a meaningful assignment, so NULL is the deliberate contract;
   * the LlmSpec cell-for-cell equality pin therefore covers NaN-free
-  * inputs only (the trained-embedding corpora it runs on). Same rule
-  * in [[TwoLevelNearestCentroid]]. */
-case class NearestCentroid(child: Expression,
-                           centroids: Seq[Seq[Double]],
-                           projection: Option[Seq[Seq[Double]]] = None)
+  * inputs only (the trained-embedding corpora it runs on). */
+case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
     extends UnaryExpression {
   require(centroids.nonEmpty, "centroid matrix is empty")
   require(centroids.forall(_.length == centroids.head.length),
     "centroid rows must share one dimension")
-  // with a projection, the centroids are in the PROJECTED space:
-  // row count of the projection = centroid dimension
-  projection.foreach { m =>
-    require(m.nonEmpty && m.forall(_.length == m.head.length),
-      "projection rows must share one dimension")
-    require(m.length == centroids.head.length,
-      s"projection emits ${m.length} dims but centroids have " +
-        s"${centroids.head.length}")
-  }
 
   private def elemType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
@@ -87,8 +75,6 @@ case class NearestCentroid(child: Expression,
     centroids.map(_.toArray).toArray
   @transient private lazy val c2s: Array[Double] =
     centroids.map(_.map(x => x * x).sum).toArray
-  @transient private lazy val projM: Array[Array[Double]] =
-    projection.map(_.map(_.toArray).toArray).orNull
 
   private def get(a: ArrayData, t: DataType, i: Int): Double = t match {
     case FloatType => a.getFloat(i).toDouble
@@ -103,39 +89,15 @@ case class NearestCentroid(child: Expression,
   override def nullSafeEval(v: Any): Any = {
     val a = v.asInstanceOf[ArrayData]
     val t = elemType
-    // with a fused projection, the INPUT dimension is the projection
-    // row length (the [[graft.llm.Similarity.rpProject]] rule: dot
-    // over the shorter of vector and projection row); without, the
-    // centroid dimension bounds the read
-    val inDim =
-      if (projM != null) projM(0).length else cents.head.length
-    val nIn = math.min(a.numElements(), inDim)
+    val n = math.min(a.numElements(), cents.head.length)
     var i = 0
-    while (i < nIn) {
+    while (i < n) {
       if (a.isNullAt(i)) return null
       i += 1
     }
-    val raw = new Array[Double](nIn)
+    val vec = new Array[Double](n)
     i = 0
-    while (i < nIn) { raw(i) = get(a, t, i); i += 1 }
-    // projected form: vec = M·raw (left-to-right double accumulation
-    // per component — bit-identical to rpProject's DotProduct rows)
-    val vec =
-      if (projM == null) raw
-      else {
-        val out = new Array[Double](projM.length)
-        var tIdx = 0
-        while (tIdx < projM.length) {
-          val row = projM(tIdx)
-          var acc = 0.0
-          var k = 0
-          while (k < nIn) { acc += raw(k) * row(k); k += 1 }
-          out(tIdx) = acc
-          tIdx += 1
-        }
-        out
-      }
-    val n = math.min(vec.length, cents.head.length)
+    while (i < n) { vec(i) = get(a, t, i); i += 1 }
     var best = Double.NaN
     var bestIdx = -1
     var j = 0
@@ -171,15 +133,10 @@ case class NearestCentroid(child: Expression,
       val centsRef = ctx.addReferenceObj("cents", cents,
         "double[][]")
       val c2Ref = ctx.addReferenceObj("c2s", c2s, "double[]")
-      val projRef =
-        if (projM == null) null
-        else ctx.addReferenceObj("projM", projM, "double[][]")
-      val nIn = ctx.freshName("nIn")
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val j = ctx.freshName("j")
       val k = ctx.freshName("k")
-      val raw = ctx.freshName("raw")
       val vec = ctx.freshName("vec")
       val acc = ctx.freshName("acc")
       val score = ctx.freshName("score")
@@ -187,35 +144,19 @@ case class NearestCentroid(child: Expression,
       val bestIdx = ctx.freshName("bestIdx")
       val c = ctx.freshName("c")
       val poisoned = ctx.freshName("poisoned")
-      val inDimExpr =
-        if (projRef == null) s"$centsRef[0].length"
-        else s"$projRef[0].length"
-      val project =
-        if (projRef == null) s"double[] $vec = $raw;\nint $n = $nIn;"
-        else
-          s"""double[] $vec = new double[$projRef.length];
-             |for (int $j = 0; $j < $projRef.length; $j++) {
-             |  double $acc = 0.0;
-             |  for (int $k = 0; $k < $nIn; $k++) {
-             |    $acc += $raw[$k] * $projRef[$j][$k];
-             |  }
-             |  $vec[$j] = $acc;
-             |}
-             |int $n = $vec.length;""".stripMargin
       s"""
-         |int $nIn = java.lang.Math.min($v.numElements(), $inDimExpr);
+         |int $n = java.lang.Math.min($v.numElements(), $centsRef[0].length);
          |boolean $poisoned = false;
-         |for (int $i = 0; $i < $nIn; $i++) {
+         |for (int $i = 0; $i < $n; $i++) {
          |  if ($v.isNullAt($i)) { $poisoned = true; break; }
          |}
          |if ($poisoned) {
          |  ${ev.isNull} = true;
          |} else {
-         |  double[] $raw = new double[$nIn];
-         |  for (int $i = 0; $i < $nIn; $i++) {
-         |    $raw[$i] = ${genGet(elemType, v, i)};
+         |  double[] $vec = new double[$n];
+         |  for (int $i = 0; $i < $n; $i++) {
+         |    $vec[$i] = ${genGet(elemType, v, i)};
          |  }
-         |  $project
          |  double $best = Double.NaN;
          |  int $bestIdx = -1;
          |  for (int $j = 0; $j < $centsRef.length; $j++) {
@@ -247,18 +188,4 @@ object NearestCentroid {
     GraftColumnBridge.column(NearestCentroid(
       GraftColumnBridge.expression(vec),
       centroids.map(_.toSeq).toSeq))
-
-  /** Argmin with the JL projection FUSED into the expression: the raw
-    * vector is read once, projected (`projection` rows ·raw, the
-    * [[graft.llm.Similarity.rpProject]] arithmetic, bit-identical),
-    * and scored against the PROJECTED `centroids` — no intermediate
-    * projected-array column exists in the plan at all (r15: the
-    * staged CreateArray-of-dots projection measured ~30 µs/row —
-    * 10× the fused argmin itself — once the argmin went native). */
-  def projected(vec: Column, centroids: Array[Array[Double]],
-                projection: Array[Array[Double]]): Column =
-    GraftColumnBridge.column(NearestCentroid(
-      GraftColumnBridge.expression(vec),
-      centroids.map(_.toSeq).toSeq,
-      Some(projection.map(_.toSeq).toSeq)))
 }

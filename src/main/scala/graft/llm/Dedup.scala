@@ -1778,11 +1778,19 @@ object Dedup {
     * mirrors the [[exactDedup]] canonical convention and needs no
     * iteration).
     *
+    * Assignment rule: every vector goes to its nearest centroid by
+    * one native flat argmin ([[Similarity.ivfAssign]] →
+    * [[graft.functions.NearestCentroid]]) at every nlist and every
+    * vector width — constant generated-code size, the input read once
+    * per row. There is no other assignment arm. For repeated passes,
+    * train once with [[Similarity.ivfTrain]], sized by
+    * [[Similarity.servingNlist]], and call the pre-trained overload.
+    *
     * Shape at scale: training is [[Similarity.ivfTrain]] (model-sized
-    * driver state), assignment is a map-only literal expression, the
-    * within-cell pair join shuffles on cell ids (nlist keys, sized so
-    * cells fit; raise nlist as the corpus grows), the drop set is one
-    * distinct on dropped ids. Output: (id, cell, kept). */
+    * driver state), assignment is map-only, the within-cell pair join
+    * shuffles on cell ids (nlist keys, sized so cells fit; raise nlist
+    * as the corpus grows), the drop set is one distinct on dropped
+    * ids. Output: (id, cell, kept). */
   def semanticDedup(emb: DataFrame, id: String, vec: String,
                     nlist: Int, threshold: Double): DataFrame = {
     // a corpus smaller than nlist needs fewer cells, not an exception
@@ -1797,139 +1805,16 @@ object Dedup {
   }
 
   /** [[semanticDedup]] with PRE-TRAINED centroids — the serving shape
-    * for incremental runs: train once offline ([[Similarity.ivfTrain]]),
-    * then every dedup pass is assignment (map-only literal expression) +
-    * the within-cell join; the corpus is never re-scanned to rebuild the
+    * for incremental runs: train once offline with
+    * [[Similarity.ivfTrain]] at [[Similarity.servingNlist]] cells, then
+    * every dedup pass is the native flat assignment + the within-cell
+    * join at any nlist; the corpus is never re-scanned to rebuild the
     * model (the [[Similarity.ivfTopK]] pre-trained convention, r9). */
   def semanticDedup(emb: DataFrame, id: String, vec: String,
                     cents: Array[Array[Double]],
                     threshold: Double): DataFrame =
     dedupAssigned(Similarity.ivfAssign(emb, id, vec, cents), id, vec,
       threshold)
-
-  /** [[semanticDedup]] (pre-trained form) through the TWO-LEVEL coarse
-    * quantizer ([[Similarity.ivfAssignTwoLevel]]) — the 100 TB serving
-    * shape once nlist has been scaled with the corpus: assignment costs
-    * ncoarse + nlist/ncoarse distance evaluations per row (2·√nlist at
-    * the balanced point) instead of nlist. Cell boundaries move
-    * (boundary-approximate, like any coarse quantizer), but the dedup
-    * guarantee that matters is preserved EXACTLY: identical vectors
-    * always co-locate (deterministic assignment), so exact duplicates
-    * are never missed; near-dup pairs straddling the re-drawn
-    * boundaries can be, the same caveat the flat cells already carry. */
-  def semanticDedupCoarse(emb: DataFrame, id: String, vec: String,
-                          cents: Array[Array[Double]], ncoarse: Int,
-                          threshold: Double): DataFrame =
-    dedupAssigned(
-      Similarity.ivfAssignTwoLevel(emb, id, vec, cents, ncoarse), id,
-      vec, threshold)
-
-  /** [[semanticDedup]] (pre-trained form) with assignment in the
-    * JL-PROJECTED space ([[Similarity.ivfAssignRp]]) — a ~dIn/dOut
-    * FLOP cut on the flat assignment term that composes with the
-    * serving-rule nlist sizing: cell boundaries move (JL noise
-    * ~1/√dOut — the same boundary-approximate class as the two-level
-    * coarse quantizer), but identical vectors still always co-locate,
-    * so exact duplicates are never missed; the WITHIN-cell pair filter
-    * stays exact cosine on the raw vectors. */
-  def semanticDedupRp(emb: DataFrame, id: String, vec: String,
-                      cents: Array[Array[Double]],
-                      threshold: Double,
-                      dOut: Int = Similarity.RpDim): DataFrame =
-    dedupAssigned(Similarity.ivfAssignRp(emb, id, vec, cents, dOut),
-      id, vec, threshold)
-
-  /** [[semanticDedupRp]] through the two-level coarse quantizer
-    * ([[Similarity.ivfAssignTwoLevelRp]]) — ~(ncoarse + nlist/ncoarse)
-    * projected dots per row; the measured floor of the assignment
-    * family at large nlist (0.93 s vs projected-flat 2.68 s and
-    * full-width two-level 3.72 s at nlist=3,200 on the sf0.1 probe
-    * corpus). Same contract: deterministic, exact duplicates always
-    * co-locate, boundaries approximate. */
-  def semanticDedupRpCoarse(emb: DataFrame, id: String, vec: String,
-                            cents: Array[Array[Double]], ncoarse: Int,
-                            threshold: Double,
-                            dOut: Int = Similarity.RpDim): DataFrame =
-    dedupAssigned(
-      Similarity.ivfAssignTwoLevelRp(emb, id, vec, cents, ncoarse, dOut),
-      id, vec, threshold)
-
-  /** The SERVING-MODE semantic dedup entry point (r13 verdict #4):
-    * pre-trained centroids sized by the
-    * [[graft.llm.Similarity.servingNlist]] rule, dispatched to the
-    * cheapest measured assignment for the regime. For vectors wider
-    * than [[graft.llm.Similarity.RpDim]], assignment runs in the
-    * JL-PROJECTED space at EVERY nlist (r14 verdict #2 — the exact
-    * flat arm was the weak scaler at sf1: per-row cost grows with
-    * nlist ∝ corpus, 3.1x on 10x data, and the exactness it paid for
-    * buys nothing the spec-pinned contract needs — pair co-location,
-    * which the projection preserves at 1.000 measured): projected
-    * FLAT assignment ([[semanticDedupRp]] — since r15 a native
-    * constant-code-size argmin, [[graft.functions.NearestCentroid]],
-    * measured 0.14 s vs the two-level composition's 0.80 s at
-    * nlist=3,200, with no janino wall at any nlist) up to
-    * [[MaxFlatServeCentroids]], and the two-level composition
-    * [[semanticDedupRpCoarse]] past it (2·√nlist projected dots per
-    * row — the asymptotic winner once the flat matrix itself is tens
-    * of MB of per-executor state). Narrow vectors (dIn ≤ RpDim,
-    * where projection can't cut FLOPs) take the same flat/two-level
-    * split at full width. All assignments are deterministic. Same
-    * keep/drop contract as [[semanticDedup]]: exact duplicates
-    * always co-locate; boundary near-dups are the standard
-    * coarse-quantizer trade (the JL projection moves cell
-    * boundaries — the same approximation class).
-    *
-    * Reproducibility pin (r14 ADVICE): the dispatch is a PERFORMANCE
-    * choice that can move which boundary-straddling near-dup pairs a
-    * given corpus keeps across library versions. Callers who must
-    * reproduce a prior run's exact keep/drop output should use the
-    * `fullWidth = true` overload, which pins the full-width
-    * assignment family (exact flat below [[MaxFlatServeCentroids]],
-    * plain two-level
-    * above it) regardless of vector width. */
-  def semanticDedupServe(emb: DataFrame, id: String, vec: String,
-                         cents: Array[Array[Double]],
-                         threshold: Double): DataFrame =
-    semanticDedupServe(emb, id, vec, cents, threshold, fullWidth = false)
-
-  /** Flat assignment is served natively
-    * ([[graft.functions.NearestCentroid]] — constant code size, child
-    * evaluated once) up to this many centroids; past it the two-level
-    * coarse quantizer takes over (per-row FLOPs 2·√nlist vs nlist —
-    * at the measured regimes the native flat loop wins on constants,
-    * 0.14 s vs 0.80 s at nlist=3,200 on the sf0.1 probe corpus, but
-    * the √nlist split must win asymptotically and 65,536 centroids ×
-    * 64 dims is where the flat matrix reaches ~32 MB of executor
-    * reference state). */
-  val MaxFlatServeCentroids = 65536
-
-  /** [[semanticDedupServe]] with the assignment family pinned:
-    * `fullWidth = true` never projects — exact FULL-WIDTH assignment,
-    * flat below [[MaxFlatServeCentroids]] and the full-width two-level
-    * quantizer past it (the same flat/two-level split as the default
-    * dispatch, just without the JL projection). The pin is the
-    * reproducibility escape hatch for callers whose keep/drop output
-    * must be stable across library versions — stable from r15 onward,
-    * when the flat bound became [[MaxFlatServeCentroids]]; pre-r15
-    * releases dispatched the two-level quantizer for nlist in
-    * (MaxUnrolledCentroids, 65536], so runs from THOSE versions at
-    * such nlist are not reproduced bit-for-bit by this overload.
-    * `fullWidth = false` is the default dispatch documented above. */
-  def semanticDedupServe(emb: DataFrame, id: String, vec: String,
-                         cents: Array[Array[Double]],
-                         threshold: Double,
-                         fullWidth: Boolean): DataFrame = {
-    val ncoarse = math.min(cents.length,
-      math.max(2, math.round(math.sqrt(cents.length)).toInt))
-    val project = !fullWidth &&
-      cents.headOption.exists(_.length > Similarity.RpDim)
-    val flat = cents.length <= MaxFlatServeCentroids
-    if (project)
-      if (flat) semanticDedupRp(emb, id, vec, cents, threshold)
-      else semanticDedupRpCoarse(emb, id, vec, cents, ncoarse, threshold)
-    else if (flat) semanticDedup(emb, id, vec, cents, threshold)
-    else semanticDedupCoarse(emb, id, vec, cents, ncoarse, threshold)
-  }
 
   /** Max DISTINCT (cell, vector) groups per cell before
     * [[dedupAssigned]] salt-splits the cell's pair join (r16 verdict
@@ -1958,7 +1843,7 @@ object Dedup {
   val PivotPeelWidth = 64
 
   /** Within-cell min-id greedy dedup over an ASSIGNED frame — the
-    * shared tail of the semanticDedup family.
+    * tail of [[semanticDedup]].
     *
     * The pair join runs over ONE REPRESENTATIVE per distinct
     * (cell, vector), not per row (r15 verdict #1 — the last unbounded
@@ -2127,10 +2012,11 @@ object Dedup {
     // count as a window INSIDE the checkpointed lineage — one extra
     // groups-sized exchange + sort on every call, and the over-cap
     // branches (pivot window, residual join, resolved distinct) stayed
-    // in the plan even when every cell was under cap, costing
-    // dd_semantic_coarse/rp ~0.3-0.4 s of steady-state premium at
-    // sf0.1 (the round's only real regressions). Now the over-cap
-    // cells are decided by ONE bounded aggregate over the checkpoint:
+    // in the plan even when every cell was under cap, costing the
+    // pre-trained semantic dedup rows ~0.3-0.4 s of steady-state
+    // premium at sf0.1 (the round's only real regressions). Now the
+    // over-cap cells are decided by ONE bounded aggregate over the
+    // checkpoint:
     // `oc` holds only cells whose group count exceeds the cap — at
     // most total_groups/maxCellGroups rows by construction (8192×
     // smaller than the corpus's distinct vectors), so the isEmpty

@@ -157,9 +157,9 @@ object Similarity {
     }
 
   /** Driver-side JL projection of a centroid matrix through
-    * [[rpMatrix]] — the model-sized twin of [[rpProject]], shared by
-    * the RP assignment paths (one matrix build, one projection loop —
-    * a fix to the projection arithmetic cannot miss a twin copy). */
+    * [[rpMatrix]] — the model-sized twin of [[rpProject]], used by
+    * [[ivfTopKRp]] to put the centroids in the space its rows are
+    * assigned in. */
   private def rpProjectCentroids(centroids: Array[Array[Double]],
                                  dOut: Int): Array[Array[Double]] = {
     val dIn = centroids.headOption.map(_.length).getOrElse(Dim)
@@ -302,8 +302,7 @@ object Similarity {
     * expression is replaced by the loop form
     * ([[centroidScoresLoop]]): the unrolled form's generated code
     * grows linearly with nlist — measured (Sf1Probe r13): ~20 s of
-    * janino compile time at nlist = 3,200 on the flat path, and a hard
-    * "Code grows beyond 64 KB" failure on the two-level path — while
+    * janino compile time at nlist = 3,200 on the flat path — while
     * the loop form's code size is CONSTANT in nlist (a runtime fold
     * over a centroid-array literal). Below the threshold the unrolled
     * form's whole-stage-codegen'd dots are faster per row; the switch
@@ -472,39 +471,6 @@ object Similarity {
     corpus.select(col(id), col(vec),
       nearestCell(col(vec), centroids).as("cell"))
 
-  /** [[ivfAssign]] with distances evaluated in the JL-PROJECTED space
-    * ([[rpMatrix]]/[[rpProject]]): rows and centroids go through the
-    * SAME deterministic ±1 projection, so the per-row assignment costs
-    * nlist·dOut + dOut·dIn multiplies instead of nlist·dIn — at the
-    * defaults (16/64) a ~4× FLOP cut that holds at ANY nlist, on top
-    * of (and composable with) the two-level √nlist switch. The sign
-    * matrix scales every projected squared distance by the same
-    * ~dOut/dIn factor in expectation, so the argmin is the flat
-    * argmin up to JL boundary noise (~1/√dOut): cell boundaries move
-    * — the standard coarse-quantizer trade the two-level form already
-    * carries — but assignment stays DETERMINISTIC and identical
-    * vectors always co-locate, the invariant the dedup contract
-    * rests on. */
-  def ivfAssignRp(corpus: DataFrame, id: String, vec: String,
-                  centroids: Array[Array[Double]],
-                  dOut: Int = RpDim): DataFrame = {
-    val dIn = centroids.headOption.map(_.length).getOrElse(Dim)
-    // the projection is FUSED into the native argmin (r15): the r14
-    // staged-column form (rpProject as a multiply-referenced alias)
-    // depended on the optimizer keeping the alias — and even staged,
-    // the CreateArray-of-dots projection measured ~30 µs/row, 10× the
-    // native argmin itself. The fused expression reads the raw vector
-    // once, projects into a stack array, and argmins — no projected
-    // column exists in the plan at all, so there is nothing for
-    // ColumnPruning to inline or re-evaluate. Bit-identical cells to
-    // the staged form (same left-to-right dots; LlmSpec pins the
-    // composition).
-    corpus.select(col(id), col(vec),
-      graft.functions.NearestCentroid.projected(col(vec),
-        rpProjectCentroids(centroids, dOut),
-        rpMatrix(dOut, dIn)).as("cell"))
-  }
-
   /** Serving-mode nlist SIZING RULE (r13 verdict #4 — previously SURVEY
     * prose, now the callable default): size cells to a constant mean
     * population `targetCell`, i.e. nlist = n / targetCell (clamped to
@@ -512,241 +478,16 @@ object Similarity {
     * = n·targetCell comparisons — CORPUS-LINEAR as the corpus grows
     * (the fixed-nlist form measured 3.7–4.8× on 10× data; this rule's
     * probe arm measures ~linear). The flat assignment term n·nlist
-    * then grows quadratically in total — which is exactly why
-    * [[nearestCellTwoLevel]] / the loop-form auto-switch past
-    * [[MaxUnrolledCentroids]] exists: serving callers past that
-    * threshold should assign two-level (ncoarse ≈ √nlist — see
-    * [[graft.llm.Dedup.semanticDedupServe]], which wires the switch).
-    * Training cost (ivfTrain is O(n·nlist) per iteration) is the
-    * train-ONCE offline step of the serving convention, not a
-    * per-pass cost. */
+    * then grows quadratically in total; [[nearestCell]]'s native
+    * argmin keeps it one constant-code-size loop at any nlist. Serving
+    * convention: train once with [[ivfTrain]] at this nlist, then pass
+    * the centroids to the pre-trained
+    * [[graft.llm.Dedup.semanticDedup]] on every dedup pass. Training
+    * cost (ivfTrain is O(n·nlist) per iteration) is that offline step,
+    * not a per-pass cost. */
   def servingNlist(n: Long, targetCell: Int = 128): Int = {
     require(targetCell > 0, s"targetCell must be positive: $targetCell")
     math.max(1L, math.min(n, n / targetCell)).toInt
-  }
-
-  // ------------------------------------------------------------------
-  // two-level (coarse-quantized) assignment — the flat-assignment term
-  // is n × nlist distance evaluations, and with the SemDeDup guidance
-  // "nlist ∝ corpus" that term grows quadratically in total compute;
-  // grouping the centroids under ~√nlist super-centroids cuts the
-  // per-row work to ncoarse + nlist/ncoarse evaluations (2√nlist at
-  // the balanced point) at the cost of boundary-approximate assignment
-  // — the standard IVF lever (the coarse quantizer of IVFADC)
-  // ------------------------------------------------------------------
-
-  /** Group trained centroids under `ncoarse` super-centroids: a
-    * driver-side Lloyd's k-means over the CENTROIDS (model-sized — no
-    * data pass), deterministic farthest-point init like [[ivfTrain]].
-    * Returns (super-centroid matrix, member GLOBAL-index lists);
-    * super-cells that lose all members are dropped, so every returned
-    * group is non-empty. */
-  def coarseCentroids(centroids: Array[Array[Double]], ncoarse: Int,
-                      iters: Int = 5)
-      : (Array[Array[Double]], Array[Array[Int]]) = {
-    require(ncoarse >= 1 && ncoarse <= centroids.length,
-      s"ncoarse must be in [1, ${centroids.length}]: $ncoarse")
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    // deterministic farthest-point seed over the centroids
-    val minD = Array.fill(centroids.length)(Double.MaxValue)
-    val chosen = Array.ofDim[Int](ncoarse)
-    var n = 1
-    while (n < ncoarse) {
-      val last = centroids(chosen(n - 1))
-      var best = -1; var bestD = -1.0
-      var i = 0
-      while (i < centroids.length) {
-        val d = math.min(minD(i), d2(centroids(i), last))
-        minD(i) = d
-        if (d > bestD) { bestD = d; best = i }
-        i += 1
-      }
-      chosen(n) = best
-      n += 1
-    }
-    var coarse = chosen.map(centroids)
-    var assign = Array.ofDim[Int](centroids.length)
-    for (_ <- 0 until iters) {
-      var i = 0
-      while (i < centroids.length) {
-        var best = 0; var bestD = Double.MaxValue
-        var g = 0
-        while (g < coarse.length) {
-          val d = d2(centroids(i), coarse(g))
-          if (d < bestD) { bestD = d; best = g }
-          g += 1
-        }
-        assign(i) = best
-        i += 1
-      }
-      coarse = coarse.indices.map { g =>
-        val mem = centroids.indices.filter(assign(_) == g)
-        if (mem.isEmpty) coarse(g)
-        else {
-          val dim = centroids.head.length
-          val acc = new Array[Double](dim)
-          mem.foreach(m => (0 until dim).foreach(d =>
-            acc(d) += centroids(m)(d)))
-          acc.map(_ / mem.length)
-        }
-      }.toArray
-    }
-    val groups = coarse.indices.map(g =>
-      centroids.indices.filter(assign(_) == g).toArray)
-    val keep = groups.indices.filter(groups(_).nonEmpty)
-    (keep.map(coarse).toArray, keep.map(groups).toArray)
-  }
-
-  // (r15: the unrolled when-ladder second level — cellWithinSuper —
-  // is gone; the native TwoLevelNearestCentroid is the serving form
-  // and the loop composition ivfAssignTwoLevelLoop remains as the
-  // reference semantics for its equality pin. The ladder's measured
-  // lessons — no cross-branch subexpression hoisting, null-guard
-  // placement — are recorded in SURVEY §8.19/§8.22.)
-
-  /** Two-level nearest-cell id as one Column — convenience form;
-    * prefer [[ivfAssignTwoLevel]], which stages the super-cell in its
-    * own projection so it is computed ONCE per row (see
-    * [[cellWithinSuper]]'s caveat). The returned id is the GLOBAL
-    * centroid index, so downstream cell semantics are unchanged.
-    * Boundary-approximate: a vector whose true nearest centroid lives
-    * in a different super-cell gets its group-local argmin instead —
-    * identical vectors still always land in the same cell
-    * (deterministic), which is the property
-    * [[graft.llm.Dedup.semanticDedup]]'s exactness construction
-    * needs. */
-  def nearestCellTwoLevel(vec: Column, centroids: Array[Array[Double]],
-                          coarse: Array[Array[Double]],
-                          members: Array[Array[Int]]): Column =
-    // one native expression (r15) — same cells as the column
-    // compositions (the equality pins), constant code size, input
-    // evaluated once in every plan position
-    graft.functions.TwoLevelNearestCentroid(vec, coarse, members,
-      centroids)
-
-  /** The group-local argmin in LOOP form: the member groups live in
-    * one literal array-of-arrays of (global cell id, weights, |c|²)
-    * structs; the super-cell id picks its group with `element_at` (one
-    * lookup, not an ncoarse-branch when-ladder) and a `transform` fold
-    * scores only that group's centroids. Identical score arithmetic
-    * and first-min tie rule as [[cellWithinSuper]] (LlmSpec pins
-    * assignment equality); generated code size is CONSTANT in nlist,
-    * where the unrolled when-ladder hard-fails janino's 64 KB method
-    * limit near nlist ≈ 3,000 (measured, Sf1Probe r13). A NULL
-    * super-cell (null embedding) null-propagates to a NULL cell like
-    * the flat path. `grp` must be the already-materialized group
-    * column (the staged-projection caveat of [[cellWithinSuper]]
-    * applies to the element_at lookup the same way). */
-  private def cellInGroupLoop(vec: Column, grp: Column): Column = {
-    val scores = transform(grp, g =>
-      graft.functions.DotProduct(vec, g.getField("_2")) * -2.0 +
-        g.getField("_3"))
-    element_at(grp,
-      array_position(scores, array_min(scores)).cast(IntegerType))
-      .getField("_1")
-  }
-
-  private def memberGroupsLit(centroids: Array[Array[Double]],
-                              members: Array[Array[Int]]): Column =
-    typedLit(members.map(mem => mem.map(m =>
-      (m, centroids(m).toSeq,
-        centroids(m).map(x => x * x).sum)).toSeq).toSeq)
-
-  /** [[ivfAssign]] through the two-level quantizer — the serving shape
-    * when nlist has been scaled with the corpus and the flat
-    * assignment's n × nlist term is the bottleneck. The super-cell is
-    * a separate projection (an alias used `ncoarse` times —
-    * CollapseProject keeps it staged, so the `ncoarse`-dot argmin runs
-    * once per row, not once per when-branch). Past
-    * [[MaxUnrolledCentroids]] the group argmin switches to the loop
-    * form ([[cellInGroupLoop]]) — the unrolled when-ladder's generated
-    * code grows with nlist and hard-fails at ≈ 3,000 centroids. */
-  def ivfAssignTwoLevel(corpus: DataFrame, id: String, vec: String,
-                        centroids: Array[Array[Double]],
-                        ncoarse: Int): DataFrame = {
-    val (coarse, members) = coarseCentroids(centroids, ncoarse)
-    // one native expression (r15 — TwoLevelNearestCentroid): super
-    // argmin + group argmin in a single codegen'd pass, constant code
-    // size in ncoarse and nlist, child evaluated once in every plan
-    // position. Bit-identical cells to the staged column composition
-    // (kept as ivfAssignTwoLevelLoop for the LlmSpec pin).
-    corpus.select(col(id), col(vec),
-      graft.functions.TwoLevelNearestCentroid(col(vec), coarse,
-        members, centroids).as("cell"))
-  }
-
-  /** [[ivfAssignTwoLevel]] COMPOSED with the JL projection
-    * ([[ivfAssignRp]]): the super-cell argmin, the group lookup, and
-    * the group-local argmin all run in the dOut-dim projected space —
-    * ~(ncoarse + nlist/ncoarse)·dOut + dOut·dIn multiplies per row,
-    * the 100 TB serving shape where nlist has grown to the hundreds of
-    * thousands and even 2√nlist full-width dots bind. The coarse
-    * k-means groups the PROJECTED centroids (the same space the row
-    * argmin runs in, so group shapes match the probe geometry).
-    * Deterministic; identical vectors co-locate — the dedup contract's
-    * invariant — and boundary approximation now stacks JL noise on the
-    * coarse-quantizer trade (both measured benign for the exact-dup
-    * construction; near-dup pairs project together). */
-  def ivfAssignTwoLevelRp(corpus: DataFrame, id: String, vec: String,
-                          centroids: Array[Array[Double]],
-                          ncoarse: Int,
-                          dOut: Int = RpDim): DataFrame = {
-    val dIn = centroids.headOption.map(_.length).getOrElse(Dim)
-    val pcents = rpProjectCentroids(centroids, dOut)
-    val (coarse, members) = coarseCentroids(pcents, ncoarse)
-    // the full 100 TB serving shape — project, super argmin, group
-    // argmin — as ONE native expression (r15): no staged columns, no
-    // interpreted HOF loops, nothing for join pruning to re-inline;
-    // bit-identical cells to the staged column composition (the
-    // ivfAssignTwoLevelLoop pin).
-    corpus.select(col(id), col(vec),
-      graft.functions.TwoLevelNearestCentroid.projected(col(vec),
-        coarse, members, pcents, rpMatrix(dOut, dIn)).as("cell"))
-  }
-
-  /** The pre-r15 STAGED COLUMN composition of [[ivfAssignTwoLevelRp]]
-    * — kept as the reference semantics for the native expression's
-    * equality pin (LlmSpec: native == staged cell-for-cell). */
-  private[graft] def ivfAssignTwoLevelRpStaged(corpus: DataFrame,
-                                               id: String, vec: String,
-                                               centroids: Array[Array[Double]],
-                                               ncoarse: Int,
-                                               dOut: Int = RpDim)
-      : DataFrame = {
-    val dIn = centroids.headOption.map(_.length).getOrElse(Dim)
-    val pcents = rpProjectCentroids(centroids, dOut)
-    val (coarse, members) = coarseCentroids(pcents, ncoarse)
-    corpus
-      .withColumn("__graft_rp", rpProject(col(vec), dOut, dIn))
-      .select(col(id), col(vec), col("__graft_rp"),
-        nearestCellLoop(col("__graft_rp"), coarse).as("__graft_super"))
-      .select(col(id), col(vec), col("__graft_rp"),
-        element_at(memberGroupsLit(pcents, members),
-          col("__graft_super") + 1).as("__graft_grp"))
-      .select(col(id), col(vec),
-        cellInGroupLoop(col("__graft_rp"), col("__graft_grp"))
-          .as("cell"))
-  }
-
-  /** [[ivfAssignTwoLevel]] forced onto the loop forms (exposed for the
-    * equality pin below the auto threshold). */
-  private[graft] def ivfAssignTwoLevelLoop(corpus: DataFrame, id: String,
-                                           vec: String,
-                                           centroids: Array[Array[Double]],
-                                           ncoarse: Int): DataFrame = {
-    val (coarse, members) = coarseCentroids(centroids, ncoarse)
-    corpus
-      .select(col(id), col(vec),
-        nearestCellLoop(col(vec), coarse).as("__graft_super"))
-      .select(col(id), col(vec),
-        element_at(memberGroupsLit(centroids, members),
-          col("__graft_super") + 1).as("__graft_grp"))
-      .select(col(id), col(vec),
-        cellInGroupLoop(col(vec), col("__graft_grp")).as("cell"))
   }
 
   /** Corpus-side MULTIPLE ASSIGNMENT: each vector is indexed under its
@@ -818,9 +559,8 @@ object Similarity {
     ivfTopK(corpus, queries, id, vec, k,
       ivfTrain(corpus, id, vec, nlist, iters), nprobe)
 
-  /** [[ivfTopK]] COMPOSED with the JL projection (r14 verdict #4 —
-    * [[ivfAssignRp]]'s 3–8× assignment win applied to the SERVING
-    * path): corpus cell assignment, query probe selection, AND
+  /** [[ivfTopK]] COMPOSED with the JL projection (r14 verdict #4):
+    * corpus cell assignment, query probe selection, AND
     * candidate scoring all run in the dOut-dim projected space (rows,
     * queries, and centroids through the same deterministic ±1 matrix),
     * so the per-row corpus cost is nlist·dOut + dOut·dIn multiplies
@@ -831,8 +571,8 @@ object Similarity {
     * vectors are read for |queries|·shortlist rows, not the corpus).
     * The probe geometry is self-consistent: queries probe the cells of
     * the SAME projected space the corpus was assigned in, so JL
-    * boundary noise moves corpus row and probe together (the
-    * [[ivfAssignRp]] pair co-location property). Recall stacks the
+    * boundary noise moves corpus row and probe together (near-dup
+    * pairs project almost identically, so they co-locate). Recall stacks the
     * IVF cell-boundary trade with the JL shortlist trade — both
     * measured in LlmSpec; raise `nprobe`/`shortlist` to buy it back.
     * The rank window ships only (query_id, vec_id, pcos) — the lean
@@ -871,9 +611,9 @@ object Similarity {
     def maybeBroadcast(df: DataFrame): DataFrame =
       if (big) df else broadcast(df)
     // the projection is staged as its own multiply-referenced alias
-    // (the ivfAssignRp plan pin — inlined, every per-centroid distance
-    // term re-evaluates the dOut-dot projection) and the raw vector is
-    // DROPPED before the candidate join: the cell scan carries
+    // (inlined, every per-centroid distance term re-evaluates the
+    // dOut-dot projection) and the raw vector is DROPPED before the
+    // candidate join: the cell scan carries
     // (vec_id, cell, cp, cn2) only
     val c = corpus.select(col(id).as("vec_id"), col(vec).as("cv"))
       .withColumn("__graft_rp", rpProject(col("cv"), dOut, dIn))

@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.StringType
   * the column's own values, and a column-pruned parquet scan, so the
   * N scans together read the same bytes the single Expand scan did.
   * The concurrent jobs back-fill each other's stage tails (actions
-  * are only serial when the driver calls them serially). `approx =
+  * are only serial when the driver calls them serially). The first
+  * column whose job fails fails the call: its error is rethrown at
+  * once and the other columns' jobs are cancelled. `approx =
   * true` swaps in HyperLogLog++ `approx_count_distinct` and stays one
   * un-expanded single-pass aggregation — the 100 TB default, and
   * exactly what ANALYZE TABLE ... COMPUTE STATISTICS collects. Driver
@@ -57,27 +59,54 @@ object Profile {
         }
       } else {
         import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
+        import scala.concurrent.duration._
+        import scala.util.{Success, Try}
+        // every per-column job carries one call-unique tag: the first
+        // failure cancels the siblings by tag and is rethrown at once,
+        // instead of surfacing only after every earlier column finished
+        val sc = spark.sparkContext
+        val tag = s"graft-profile-${java.util.UUID.randomUUID()}"
+        val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
         // a small pool is plenty: enough in flight to back-fill stage
         // tails, not so many the jobs fight for executors (guide §2.6)
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(4, cs.size))
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
+        val jobs = ExecutionContext.fromExecutorService(pool)
+        // completion callbacks run where the future completes: none is
+        // ever submitted to the pool after its shutdown
+        implicit val callbacks: ExecutionContext = ExecutionContext.parasitic
         try {
           val futs = cs.map { c =>
             Future {
-              val r = df.agg(count(lit(1)).as("__total"),
-                count(col(c)).as("__n"),
-                countDistinct(col(c)).as("__ndv"),
-                min(col(c)).cast(StringType).as("__min"),
-                max(col(c)).cast(StringType).as("__max")).head()
-              (c, r.getLong(0), r.getLong(1), r.getLong(2),
-                if (r.isNullAt(3)) null else r.getString(3),
-                if (r.isNullAt(4)) null else r.getString(4))
-            }
+              if (stop.get()) throw new java.util.concurrent
+                .CancellationException(s"profile of $c cancelled")
+              sc.addJobTag(tag)
+              try {
+                val r = df.agg(count(lit(1)).as("__total"),
+                  count(col(c)).as("__n"),
+                  countDistinct(col(c)).as("__ndv"),
+                  min(col(c)).cast(StringType).as("__min"),
+                  max(col(c)).cast(StringType).as("__max")).head()
+                (c, r.getLong(0), r.getLong(1), r.getLong(2),
+                  if (r.isNullAt(3)) null else r.getString(3),
+                  if (r.isNullAt(4)) null else r.getString(4))
+              } finally sc.removeJobTag(tag)
+            }(jobs)
           }
-          futs.map(Await.result(_, Duration.Inf))
+          // Future.sequence fails as soon as any column fails (2.13's
+          // zipWith is fail-fast), not after the columns before it
+          try Await.result(Future.sequence(futs), Duration.Inf)
+          catch { case e: Throwable =>
+            // cancel until every column has settled: a job submitted
+            // just before `stop` was seen is caught by the next round
+            stop.set(true)
+            val settled = Future.sequence(futs.map(_.transform(Success(_))))
+            while (!settled.isCompleted) {
+              sc.cancelJobsWithTag(tag)
+              Try(Await.ready(settled, 100.millis))
+            }
+            throw e
+          }
         } finally pool.shutdown()
       }
     rows.toDF("col_name", "n_rows", "n_nonnull", "ndv", "min_val",

@@ -276,19 +276,12 @@ class EmptyInputSpec extends SparkSpec {
         (1L, Seq.fill(64)(0.5)), (2L, Seq.fill(64)(-0.25)))
       .toDF("vec_id", "embedding")
     val cents = Array(Array.fill(64)(0.1), Array.fill(64)(-0.1))
-    import graft.llm.{Similarity, Dedup}
+    import graft.llm.Similarity
     // empty corpus / empty queries through the JL top-k
     assert(Similarity.rpTopK(noVecs, someVecs, "vec_id", "embedding",
       10).count() === 0)
     assert(Similarity.rpTopK(someVecs, noVecs, "vec_id", "embedding",
       10).count() === 0)
-    // empty corpus through both RP assignments and the dedup wrapper
-    assert(Similarity.ivfAssignRp(noVecs, "vec_id", "embedding", cents)
-      .count() === 0)
-    assert(Similarity.ivfAssignTwoLevelRp(noVecs, "vec_id", "embedding",
-      cents, 2).count() === 0)
-    assert(Dedup.semanticDedupRp(noVecs, "vec_id", "embedding", cents,
-      0.95).count() === 0)
     // r15: the composed IVF×JL top-k, both sides
     assert(Similarity.ivfTopKRp(noVecs, someVecs, "vec_id", "embedding",
       10, cents, 2).count() === 0)

@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
   * measured 1.26–1.38× their r15 archive values in BOTH r16 board runs
   * while sentinel_shuffle / sentinel_codegen / src_csv_roundtrip were
   * clean (0.96–0.98×) in the second. Solo steady state (6 repeats, one
-  * JVM, the BoardOrderProbe convention) against the clean src_csv row
-  * separates box/systemic from board-position effects. Run:
+  * JVM, the convention of test_archive/board_order_probe_r15.txt)
+  * against the clean src_csv row separates box/systemic from
+  * board-position effects. Run:
   * `sbt "Test/runMain graft.FnSentProbe"` */
 object FnSentProbe {
   def main(args: Array[String]): Unit = {

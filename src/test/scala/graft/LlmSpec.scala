@@ -189,68 +189,17 @@ class LlmSpec extends SparkSpec {
     assert(inlineNov == servedNov)
   }
 
-  test("two-level IVF assignment: exact within the chosen super-cell") {
-    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", 32)
-    val (coarse, members) = Similarity.coarseCentroids(cents, 6)
-    // every centroid belongs to exactly one non-empty group
-    assert(members.forall(_.nonEmpty))
-    assert(members.flatten.sorted.toSeq == (0 until 32))
-    val assigned = Similarity
-      .ivfAssignTwoLevel(emb, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"embedding", $"cell")
-      .as[(Long, Seq[Double], Int)].collect()
-    assert(assigned.map(_._3).forall(c => c >= 0 && c < 32))
-    // NULL embedding → NULL cell, matching the flat path (no -1
-    // sentinel quietly co-locating every null vector in one cell)
-    val withNull = emb.select($"vec_id", $"embedding").limit(5)
-      .unionByName(Seq((999999L, Option.empty[Seq[Double]]))
-        .toDF("vec_id", "embedding"))
-    val nullCells = Similarity
-      .ivfAssignTwoLevel(withNull, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Option[Int])].collect().toMap
-    assert(nullCells(999999L).isEmpty)
-    assert(nullCells.collect {
-      case (id, c) if id != 999999L => c }.forall(_.nonEmpty))
-    // brute-force the definition per row: nearest super-cell, then
-    // argmin among ONLY that group's members (first index on ties)
-    def d2(a: Seq[Double], b: Array[Double]): Double =
-      a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
-    for ((_, v, cell) <- assigned.take(200)) {
-      val g = coarse.indices.minBy(gi => d2(v, coarse(gi)))
-      val want = members(g).minBy(m => d2(v, cents(m)))
-      assert(cell == want, s"cell $cell != $want")
-    }
-    // identical vectors co-locate (the semanticDedup exactness hook):
-    // a duplicated corpus assigns each copy to its original's cell
-    val doubled = emb.select($"vec_id", $"embedding").unionByName(
-      emb.select(($"vec_id" + 100000).as("vec_id"), $"embedding"))
-    val cells = Similarity
-      .ivfAssignTwoLevel(doubled, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    assert(cells.forall { case (id, c) =>
-      id >= 100000 || cells(id + 100000) == c })
-    // and the coarse dedup keeps/drops exactly like the flat one on
-    // the duplicated corpus (assignment-independent construction)
-    val flat = Dedup.semanticDedup(doubled, "vec_id", "embedding",
-        cents, 0.95)
-      .select($"vec_id", $"kept").as[(Long, Boolean)].collect().toSet
-    val coarseD = Dedup.semanticDedupCoarse(doubled, "vec_id",
-        "embedding", cents, 6, 0.95)
-      .select($"vec_id", $"kept").as[(Long, Boolean)].collect().toSet
-    assert(flat == coarseD)
-  }
-
-  test("semanticDedupServe: sizing rule values and flat/two-level dispatch parity") {
+  test("servingNlist sizing rule and large-nlist semanticDedup keeps min ids") {
     // the rule: constant mean cell population, clamped to [1, n]
     assert(Similarity.servingNlist(1000) == 7)
     assert(Similarity.servingNlist(50) == 1)
     assert(Similarity.servingNlist(1280000) == 10000)
     assert(Similarity.servingNlist(1000, targetCell = 100) == 10)
-    // dispatch: since r15 the native argmin serves flat assignment up
-    // to MaxFlatServeCentroids at any width — on an exact-copy corpus
-    // (copies co-locate under ANY deterministic assignment; the
-    // far-apart bases never reach 0.95) every dispatch arm keeps
-    // exactly the min id per copy group
+    // past MaxUnrolledCentroids the native flat argmin still serves
+    // semanticDedup (constant code size at any nlist): on an
+    // exact-copy corpus (copies co-locate under ANY deterministic
+    // assignment; the far-apart bases never reach 0.95) every copy
+    // group keeps exactly its min id, as it does at 32 centroids
     val dim = 8
     val bases = (0 until 6).map(b =>
       Array.tabulate(dim)(d => if (d == b) 1.0 else 0.0))
@@ -260,51 +209,25 @@ class LlmSpec extends SparkSpec {
     val bigCents = Array.tabulate(
       Similarity.MaxUnrolledCentroids + 1)(i =>
         Array.tabulate(dim)(d => math.sin(i * dim + d)))
-    val served = Dedup.semanticDedupServe(corpus, "vec_id", "embedding",
+    val big = Dedup.semanticDedup(corpus, "vec_id", "embedding",
         bigCents, 0.95)
       .select($"vec_id", $"kept").as[(Long, Boolean)].collect().toMap
     val flat = Dedup.semanticDedup(corpus, "vec_id", "embedding",
         bigCents.take(32), 0.95)
       .select($"vec_id", $"kept").as[(Long, Boolean)].collect().toMap
-    assert(served == flat)
-    assert((0 until 6).forall(i => served(i.toLong) && !served(i + 100L)))
-    // r14: vectors WIDER than RpDim take the JL-projected path above
-    // the wall (dim 8 above can't profit from a 16-dim projection and
-    // stays two-level) — exact copies still drop exactly the high id
+    assert(big == flat)
+    assert((0 until 6).forall(i => big(i.toLong) && !big(i + 100L)))
+    // the same at full embedding width: exact copies drop exactly the
+    // high id
     val bigCents64 = Array.tabulate(
       Similarity.MaxUnrolledCentroids + 1)(i =>
         Array.tabulate(64)(d => math.sin(i * 64 + d)))
     val doubled = emb.select($"vec_id", $"embedding").unionByName(
       emb.select(($"vec_id" + 100000).as("vec_id"), $"embedding"))
-    val servedRp = Dedup.semanticDedupServe(doubled, "vec_id",
-        "embedding", bigCents64, 0.95)
-    assert(servedRp.filter(!$"kept").count() == emb.count())
-    assert(servedRp.filter(!$"kept" && $"vec_id" < 100000).count() == 0)
-    // r15 (r14 verdict #2): wide vectors project at EVERY nlist —
-    // serve dispatches to the projected FLAT assignment (native
-    // NearestCentroid argmin — constant code size, so no janino wall;
-    // the r15 first cut dispatched the UNROLLED projected column form
-    // and the sf1 rule arm at 781 centroids failed codegen outright),
-    // cell-identical to semanticDedupRp, while the fullWidth pin
-    // reproduces the exact flat cells; keep/drop agrees across all of
-    // them on the assignment-independent doubled corpus
-    def cellsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      df.select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    val cents32 = Similarity.ivfTrain(doubled, "vec_id", "embedding", 32)
-    val servedBelow = Dedup.semanticDedupServe(doubled, "vec_id",
-      "embedding", cents32, 0.95)
-    val rpBelow = Dedup.semanticDedupRp(doubled, "vec_id",
-      "embedding", cents32, 0.95)
-    val flatBelow = Dedup.semanticDedup(doubled, "vec_id", "embedding",
-      cents32, 0.95)
-    val pinnedBelow = Dedup.semanticDedupServe(doubled, "vec_id",
-      "embedding", cents32, 0.95, fullWidth = true)
-    assert(cellsOf(servedBelow) == cellsOf(rpBelow))
-    assert(cellsOf(pinnedBelow) == cellsOf(flatBelow))
-    def keptOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Boolean)] =
-      df.select($"vec_id", $"kept").as[(Long, Boolean)].collect().toSet
-    assert(keptOf(servedBelow) == keptOf(flatBelow))
-    assert(keptOf(pinnedBelow) == keptOf(flatBelow))
+    val wide = Dedup.semanticDedup(doubled, "vec_id", "embedding",
+        bigCents64, 0.95)
+    assert(wide.filter(!$"kept").count() == emb.count())
+    assert(wide.filter(!$"kept" && $"vec_id" < 100000).count() == 0)
   }
 
   test("dedupAssigned rep-collapse: randomized keep/drop parity sweep") {
@@ -578,8 +501,8 @@ class LlmSpec extends SparkSpec {
     // the forms share the exact score arithmetic (same DotProduct
     // expression per element, same first-min tie rule), so the
     // assignment must be BIT-equal — this is what lets the native
-    // expression (r15) / ivfAssignTwoLevel's auto-switch stand in for
-    // the unrolled form without changing any caller's semantics.
+    // expression (r15) stand in for the unrolled form without changing
+    // any caller's semantics.
     // Three-way: native (nearestCell) == unrolled column form ==
     // loop column form.
     val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", 32)
@@ -594,34 +517,13 @@ class LlmSpec extends SparkSpec {
         Similarity.nearestCellLoop($"embedding", cents).as("cell"))
       .as[(Long, Int)].collect().toMap
     assert(flatCells == loopCells)
-    val tl = Similarity
-      .ivfAssignTwoLevel(emb, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    val tlLoop = Similarity
-      .ivfAssignTwoLevelLoop(emb, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    assert(tl == tlLoop)
-    // r15: the native PROJECTED two-level expression equals the staged
-    // column composition cell-for-cell (same projection dots, same
-    // two argmins, same global-id mapping)
-    val tlRp = Similarity
-      .ivfAssignTwoLevelRp(emb, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    val tlRpStaged = Similarity
-      .ivfAssignTwoLevelRpStaged(emb, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Int)].collect().toMap
-    assert(tlRp == tlRpStaged)
-    // NULL embedding → NULL cell on the loop paths too
+    // NULL embedding → NULL cell on the loop path too
     val withNull = emb.select($"vec_id", $"embedding").limit(3)
       .unionByName(Seq((999999L, Option.empty[Seq[Double]]))
         .toDF("vec_id", "embedding"))
     assert(withNull.select($"vec_id",
         Similarity.nearestCellLoop($"embedding", cents).as("c"))
       .as[(Long, Option[Int])].collect().toMap.apply(999999L).isEmpty)
-    assert(Similarity
-      .ivfAssignTwoLevelLoop(withNull, "vec_id", "embedding", cents, 6)
-      .select($"vec_id", $"cell").as[(Long, Option[Int])]
-      .collect().toMap.apply(999999L).isEmpty)
   }
 
   test("tokenDrift: ppm math integer-exact, top-k tie-broken by token") {
@@ -822,71 +724,11 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  test("RP-projected IVF assignment: exact dups co-locate, flat agreement, dedup parity on copies") {
-    val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", 32)
-    val flat = Similarity.ivfAssign(emb, "vec_id", "embedding", cents)
-      .select($"vec_id", $"cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val rp = Similarity.ivfAssignRp(emb, "vec_id", "embedding", cents)
-      .select($"vec_id", $"cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    // cell IDENTITY is boundary-approximate on random vectors (nearly
-    // equidistant from every centroid, so JL noise ~1/√16 swings the
-    // argmin freely — agreement measured 0.334 on sf0.01, far above
-    // the 1/32 chance floor but low by construction of the data); the
-    // gate only pins it isn't degenerate
-    val agree = flat.keys.count(k => flat(k) == rp(k)).toDouble / flat.size
-    assert(agree > 0.15, s"agreement=$agree")
-    // the invariant the DEDUP contract rests on is pair co-location,
-    // not cell identity: a near-dup pair projects almost identically,
-    // so it moves cells TOGETHER — perturbed twins (first float ×1.01,
-    // the established near-dup plant) measured 1.000 co-location under
-    // RP assignment on sf0.01 (same as flat)
-    val twin = emb.select($"vec_id",
-      transform($"embedding",
-        (x, i) => when(i === 0, x * 1.01f).otherwise(x)).as("embedding"))
-    val rpTwin = Similarity.ivfAssignRp(twin, "vec_id", "embedding",
-        cents).select($"vec_id", $"cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val colocate = rp.keys.count(k => rp(k) == rpTwin(k)).toDouble / rp.size
-    assert(colocate > 0.95, s"pair co-location=$colocate")
-    // the two-level composed form keeps the same pair invariant (and
-    // NULL handling: a null vector gets a null cell, not a sentinel)
-    val rp2l = Similarity.ivfAssignTwoLevelRp(emb, "vec_id", "embedding",
-        cents, 6).select($"vec_id", $"cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val rp2lTwin = Similarity.ivfAssignTwoLevelRp(twin, "vec_id",
-        "embedding", cents, 6).select($"vec_id", $"cell").collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toMap
-    val co2l = rp2l.keys.count(k => rp2l(k) == rp2lTwin(k)).toDouble /
-      rp2l.size
-    assert(co2l > 0.95, s"2lrp pair co-location=$co2l")
-    val withNull = emb.select($"vec_id", $"embedding").limit(3)
-      .unionByName(Seq((999999L, Option.empty[Seq[Float]]))
-        .toDF("vec_id", "embedding"))
-    assert(Similarity.ivfAssignTwoLevelRp(withNull, "vec_id",
-        "embedding", cents, 6)
-      .filter($"vec_id" === 999999L)
-      .select($"cell").collect().head.isNullAt(0))
-    // the dedup contract survives the moved boundaries: exact copies
-    // co-locate under ANY deterministic assignment, so the doubled
-    // corpus drops exactly one of each pair at 0.95 (no natural pair
-    // reaches it — dd_semantic's construction)
-    val doubled = emb.select($"vec_id", $"embedding").unionByName(
-      emb.select(($"vec_id" + 100000).as("vec_id"), $"embedding"))
-    val out = Dedup.semanticDedupRp(doubled, "vec_id", "embedding",
-      cents, 0.95)
-    assert(out.count() == 2 * emb.count())
-    assert(out.filter(!$"kept").count() == emb.count())
-    // dropped = exactly the high-id copy of every pair (min-id greedy)
-    assert(out.filter(!$"kept").filter($"vec_id" < 100000).count() == 0)
-  }
-
   test("RP plan pins: lean rank window, staged projection survives CollapseProject") {
     val old = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // (a) rpTopK's candidate rank window must not carry the 256-byte
+      // rpTopK's candidate rank window must not carry the 256-byte
       // raw vectors through its exchange — only (query_id, vec_id, pcos)
       import org.apache.spark.sql.execution.window.WindowExec
       import org.apache.spark.sql.types.ArrayType
@@ -901,25 +743,6 @@ class LlmSpec extends SparkSpec {
       assert(pcosWindow.forall(_.child.output.forall(a =>
         !a.dataType.isInstanceOf[ArrayType])),
         "raw vector columns leaked into the rank-window exchange")
-      // (b) ivfAssignRp's argmin must be the NATIVE expression (r15):
-      // the column forms depended on the staged __graft_rp alias
-      // surviving CollapseProject, and under join column-pruning the
-      // optimizer re-inlined it into the interpreted HOF loop —
-      // per-centroid re-evaluation (the measured 30× ivfTopKRp join
-      // stage). The native NearestCentroid evaluates its child once
-      // in every plan position, so the pin is its presence.
-      val cents = Similarity.ivfTrain(emb, "vec_id", "embedding", 32)
-      val assignPlan = Similarity.ivfAssignRp(emb, "vec_id", "embedding",
-        cents).queryExecution.executedPlan.toString
-      assert(assignPlan.contains("graft_nearest_centroid"),
-        "flat RP assignment is not the native argmin expression")
-      // ... and the two-level composed form is likewise the native
-      // expression (r15) — the staged column composition's aliases
-      // are gone from the plan entirely
-      val plan2l = Similarity.ivfAssignTwoLevelRp(emb, "vec_id",
-        "embedding", cents, 6).queryExecution.executedPlan.toString
-      assert(plan2l.contains("graft_nearest_centroid_2l"),
-        "two-level RP assignment is not the native expression")
     } finally old match {
       case Some(o) => spark.conf.set("spark.sql.adaptive.enabled", o)
       case None => spark.conf.unset("spark.sql.adaptive.enabled")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.llm.{Dedup, TextAnalysis}
 import graft.mat.Profile
 import graft.operators.WeightedSample
@@ -34,6 +35,50 @@ class PipelineOpsSpec extends SparkSpec {
     val row = Profile.profile(df, Seq("b")).collect().head
     assert(row.getLong(2) === 0L && row.getLong(3) === 0L
       && row.isNullAt(4) && row.isNullAt(5))
+  }
+
+  test("profile: a failing column fails the call and cancels its siblings") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.contains("graft-profile-")))
+          started.add(js.jobId)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        ended.add(je.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // one partition, so each column's scan is one task on its own
+      // core: the slow column needs 400 x 25 ms = 10 s, the bad one
+      // fails on its first row
+      val slow = udf((x: Long) => { Thread.sleep(25); x })
+      val boom = udf((x: Long) =>
+        if (x >= 0) throw new IllegalStateException("profile-boom") else x)
+      val df = spark.range(0, 400, 1, 1).toDF("a")
+        .withColumn("slow", slow($"a"))
+        .withColumn("bad", boom($"a"))
+      val t0 = System.nanoTime()
+      val err = intercept[Exception](Profile.profile(df).collect())
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      val chain = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(String.valueOf).mkString(" / ")
+      assert(chain.contains("profile-boom"), chain)
+      // the failure surfaced without waiting for the slow column
+      assert(elapsed < 6.0, s"profile took $elapsed s to fail")
+      // and the slow column's job was cancelled, not left running
+      eventually(timeout(3.seconds), interval(50.millis)) {
+        assert(!started.isEmpty)
+        assert(started.asScala.forall(ended.contains),
+          s"tagged jobs still active: ${started.asScala -- ended.asScala}")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   // ---- WeightedSample ----------------------------------------------

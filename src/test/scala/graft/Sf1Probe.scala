@@ -223,22 +223,9 @@ object Sf1Probe {
       "vec_id", "embedding", 32)
     lazy val centsDst = graft.llm.Similarity.ivfTrain(doubledEmb(dst),
       "vec_id", "embedding", 320)
-    // r13 crossover regime: nlist scaled past the point where the
-    // two-level FLOP win must pay (ncoarse 56 ~ sqrt(3200))
+    // large-nlist regime: 3,200 cells on the sf1 corpus
     lazy val centsBig = graft.llm.Similarity.ivfTrain(doubledEmb(dst),
       "vec_id", "embedding", 3200)
-    // r14 (r13 verdict #4): centroids sized by the SHIPPED serving
-    // rule (constant mean cell population) per corpus
-    lazy val centsRuleSrc = {
-      val e = doubledEmb(src).localCheckpoint()
-      graft.llm.Similarity.ivfTrain(e, "vec_id", "embedding",
-        graft.llm.Similarity.servingNlist(e.count()))
-    }
-    lazy val centsRuleDst = {
-      val e = doubledEmb(dst).localCheckpoint()
-      graft.llm.Similarity.ivfTrain(e, "vec_id", "embedding",
-        graft.llm.Similarity.servingNlist(e.count()))
-    }
     // the fixed audio index: built ONCE from the sf0.1 corpus, so the
     // *_fixedidx arm excludes per-run index construction entirely
     lazy val fixedAudioIdx: Seq[Long] = {
@@ -276,53 +263,14 @@ object Sf1Probe {
             cents, 0.95)
           .select(col("vec_id"), col("kept")).orderBy(col("vec_id"))
       }),
-      // r14: the serving-mode rule AS SHIPPED — servingNlist sizing +
-      // semanticDedupServe's flat/two-level auto-switch, centroids
-      // pre-trained per corpus (lazy vals force on the untimed warm-up)
-      "dd_semantic_serve_rule" -> ((dir, m) => {
-        val cents = if (m == 1) centsRuleSrc else centsRuleDst
-        graft.llm.Dedup.semanticDedupServe(doubledEmb(dir), "vec_id",
-            "embedding", cents, 0.95)
-          .select(col("vec_id"), col("kept")).orderBy(col("vec_id"))
-      }),
-      // dd_semantic serving through the TWO-LEVEL coarse quantizer
-      // (r12): same pre-trained centroids as dd_semantic_serve, but
-      // assignment costs ncoarse + nlist/ncoarse dots instead of nlist
-      // — the measured form of the "assignment term" mitigation
-      "dd_semantic_coarse2l" -> ((dir, m) => {
-        val cents = if (m == 1) centsSrc else centsDst
-        Dedup.semanticDedupCoarse(doubledEmb(dir), "vec_id",
-            "embedding", cents, ncoarse = if (m == 1) 6 else 18, 0.95)
-          .select(col("vec_id"), col("kept")).orderBy(col("vec_id"))
-      }),
-      // assignment COST isolated (no within-cell join): flat nlist-dot
-      // argmin vs the two-level form — attributes where the coarse2l
-      // row's time goes
+      // assignment COST isolated (no within-cell join): the native
+      // flat nlist-dot argmin that semanticDedup runs
       "dd_assign_flat" -> ((dir, m) => {
         val cents = if (m == 1) centsSrc else centsDst
         graft.llm.Similarity.ivfAssign(doubledEmb(dir), "vec_id",
             "embedding", cents)
           .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       }),
-      "dd_assign_2l" -> ((dir, m) => {
-        val cents = if (m == 1) centsSrc else centsDst
-        graft.llm.Similarity.ivfAssignTwoLevel(doubledEmb(dir), "vec_id",
-            "embedding", cents, if (m == 1) 6 else 18)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      }),
-      // r14: assignment in the JL-projected space — nlist·16 + 16·64
-      // multiplies per row instead of nlist·64; the ~4× FLOP cut that
-      // holds at any nlist (composable with the two-level switch)
-      "dd_assign_rp" -> ((dir, m) => {
-        val cents = if (m == 1) centsSrc else centsDst
-        graft.llm.Similarity.ivfAssignRp(doubledEmb(dir), "vec_id",
-            "embedding", cents)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      }),
-      "dd_assign_rp_3200" -> ((dir, _) =>
-        graft.llm.Similarity.ivfAssignRp(doubledEmb(dir), "vec_id",
-            "embedding", centsBig)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))),
       // r15 (r14 verdict #4): the composed IVF×JL TOP-K at large nlist
       // vs the full-width form — same centroids, same probe budget; the
       // RP form assigns and scores in 16 dims (nlist·16 + 16·64 vs
@@ -335,31 +283,12 @@ object Sf1Probe {
         graft.llm.Similarity.ivfTopK(doubledEmb(dir),
           doubledEmb(dir).filter(col("vec_id") < 5),
           "vec_id", "embedding", 10, centsBig, 16)),
-      // r14: two-level COMPOSED with the projection — 2√nlist dots at
-      // 16 dims; the regime where even projected flat dots bind
-      "dd_assign_2lrp_3200" -> ((dir, _) =>
-        graft.llm.Similarity.ivfAssignTwoLevelRp(doubledEmb(dir),
-            "vec_id", "embedding", centsBig, 56)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))),
-      "dd_assign_2lrp" -> ((dir, m) => {
-        val cents = if (m == 1) centsSrc else centsDst
-        graft.llm.Similarity.ivfAssignTwoLevelRp(doubledEmb(dir),
-            "vec_id", "embedding", cents, if (m == 1) 6 else 18)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))
-      }),
-      // r13 (r12 verdict #6): the two-level crossover probe — at
-      // nlist=320 the isolated FLOP win did NOT pay (codegen branch
-      // overhead); these arms measure the nlist=3200 regime where the
-      // flat form's n x nlist term must lose. Both scales use the same
+      // flat assignment at nlist=3200. Both scales use the same
       // sf1-trained centroids: the assignment cost under test depends
       // on nlist, not on where the corpus came from.
       "dd_assign_flat_3200" -> ((dir, _) =>
         graft.llm.Similarity.ivfAssign(doubledEmb(dir), "vec_id",
             "embedding", centsBig)
-          .groupBy(col("cell")).agg(count(lit(1)).as("n"))),
-      "dd_assign_2l_3200" -> ((dir, _) =>
-        graft.llm.Similarity.ivfAssignTwoLevel(doubledEmb(dir), "vec_id",
-            "embedding", centsBig, 56)
           .groupBy(col("cell")).agg(count(lit(1)).as("n"))),
       // r16 (r15 verdict #5): corpus×corpus retrieval — |Q| = |corpus|,
       // the kNN-graph shape the large-query dispatch exists for. At

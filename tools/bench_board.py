@@ -96,7 +96,7 @@ def main(cur_path: str, prev_path: str) -> None:
         # r15 (r14 verdict #1): per-CLASS drift. The three map-only
         # sentinels cannot see shuffle- or codegen-heavy drift —
         # dd_semantic moved ~1.3x across rounds on byte-identical code
-        # while they moved ~1.0x (BoardOrderProbe r15: JIT-warmth/
+        # while they moved ~1.0x (board_order_probe_r15.txt: JIT-warmth/
         # compile variance spreads a codegen-heavy row 4.75–6.94 s on
         # one box and one code). Bench now times two FROZEN
         # bench-internal rows of the missing classes; print each class
