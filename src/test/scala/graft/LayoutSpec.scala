@@ -37,6 +37,24 @@ class LayoutSpec extends SparkSpec {
       s"no partition pruning in:\n$scan")
     // pruned read returns exactly that cell's rows
     assert(probe.count() == assigned.filter($"cell" === 3).count())
+    // the novelty ingest's probe shape: a set filter on the cell widened
+    // to BIGINT (an INT set compiles to a switch over its values) still
+    // prunes statically — only the probed cell's partition is read
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      import org.apache.spark.sql.GraftColumnBridge
+      import org.apache.spark.sql.catalyst.expressions.InSet
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      val widened = spark.table("ivf_cells").filter(GraftColumnBridge.column(
+        InSet(GraftColumnBridge.expression($"cell".cast("long")),
+          Set[Any](3L))))
+      assert(widened.collect().length ==
+        assigned.filter($"cell" === 3).count())
+      val scan = widened.queryExecution.executedPlan.collectFirst {
+        case f: FileSourceScanExec => f }.get
+      assert(scan.partitionFilters.exists(
+        _.references.exists(_.name == "cell")), s"no cell filter on:\n$scan")
+      assert(scan.metrics("numPartitions").value == 1)
+    }
   }
 
   test("zValue interleaves bits (Morton order)") {

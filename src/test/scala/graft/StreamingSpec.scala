@@ -1138,13 +1138,10 @@ class StreamingSpec extends SparkSpec {
         pmod($"vec_id", lit(7)) =!= 0)
       .select($"vec_id").as[Long].collect().map(_ + 500000).toSet
     assert(kept1 == want1 && want1.nonEmpty)
-    // the probe's index read is PARTITION-PRUNED to the touched cells
-    // (the exact filter shape the ingest builds)
-    val slicePlan = spark.table(idxT)
-      .filter($"cell".isin(0, 1) && $"vec".isNotNull)
-      .queryExecution.executedPlan.toString
-    assert(slicePlan.contains("PartitionFilters") &&
-      slicePlan.contains("cell"), s"no cell pruning in:\n$slicePlan")
+    // the probe's index read is PARTITION-PRUNED to the probed cells
+    // (the probe the ingest runs)
+    assertPrunedScan(Events.noveltyCellJoin(b1.limit(3), "embedding",
+      spark.table(idxT), cents, 0.95, 1).get._1, idxT, "cell")
     // multiProbe (the recall lever) cannot change this construction's
     // decisions — exact copies co-locate under any probe width
     Events.createEmbeddingIndex(spark, idxM, e, "embedding", cents)
@@ -1528,6 +1525,45 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The prefix-pruning pin of the batch-form novelty probes: build and
+    * run `probe` (AQE off, so each executed plan is the one planned) and
+    * check that its read of `idxT` carries a partition filter on
+    * `pfxCol` and read some, but (when `skips`) not all, of the table's
+    * partitions. */
+  private def assertPrunedScan(probe: => org.apache.spark.sql.DataFrame,
+                               idxT: String, pfxCol: String,
+                               skips: Boolean = true): Unit =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+      val scans = new java.util.concurrent.ConcurrentLinkedQueue[
+        FileSourceScanExec]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          qe.executedPlan.foreach {
+            case s: FileSourceScanExec
+                if s.tableIdentifier.exists(_.table == idxT) => scans.add(s)
+            case _ =>
+          }
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        probe.collect()
+        val deadline = System.nanoTime() + 10000000000L
+        while (scans.isEmpty && System.nanoTime() < deadline)
+          Thread.sleep(20)
+      } finally spark.listenerManager.unregister(listener)
+      assert(scans.size == 1, s"expected one index read, got ${scans.size}")
+      val scan = scans.peek()
+      assert(scan.partitionFilters.exists(
+          _.references.exists(_.name == pfxCol)),
+        s"no $pfxCol partition filter on the index scan:\n$scan")
+      val total = spark.sql(s"SHOW PARTITIONS $idxT").count()
+      val read = scan.metrics("numPartitions").value
+      assert(read > 0 && (read < total || !skips),
+        s"index scan read $read of $total partitions:\n$scan")
+    }
+
   test("cap-disabled index: create AND append run uncapped, no overflow") {
     // r16 (r15 ADVICE): an index created with maxBucket = Int.MaxValue
     // stores k = 2147483647 in CappedKProp; the APPEND path's tiny
@@ -1595,13 +1631,6 @@ class StreamingSpec extends SparkSpec {
             if idxScans(e.child).nonEmpty && joins(e.child).isEmpty => e }
       assert(shuffledIdx.isEmpty,
         s"index side of the novelty probe shuffles:\n$plan")
-      // r14 (verdict #1): the probe pushes the batch's touched band
-      // prefixes as LITERAL partition filters — static partition
-      // pruning on the index scan, the sub-O(index) read
-      val scan = idxScans(plan).head
-      assert(scan.partitionFilters.exists(
-          _.references.exists(_.name == "band_pfx")),
-        s"no band_pfx partition filter on the index scan:\n$plan")
       // and the decisions equal the plan-literal form's
       val sigs = spark.range(20000).select(xxhash64($"id").as("sig"))
         .as[Long].collect().toSeq
@@ -1609,14 +1638,18 @@ class StreamingSpec extends SparkSpec {
         .select($"media_id").as[Long].collect().toSet
       assert(probe.select($"media_id").as[Long].collect().toSet == lit0)
     }
+    // the probe reads only the batch's band prefixes — the sub-O(index)
+    // read
+    assertPrunedScan(Events.noveltyBandedJoin(
+      graft.llm.Multimodal.withDhash(media.filter($"media_id" < 5)), "dhash",
+      spark.table(idxT), 3, maxBucket = Int.MaxValue), idxT, "band_pfx")
     spark.sql(s"DROP TABLE IF EXISTS $idxT")
   }
 
   test("minhash band probe: touched prefixes become partition filters") {
-    // the string-geometry twin of the band_pfx pin above: a SMALL batch
-    // touches few first-hex prefixes, and the index scan carries them
-    // as partition filters (reads a fraction of the 16 prefix
-    // partitions) while deciding exactly like an unpartitioned index
+    // the string-geometry twin of the band_pfx pin above: the index
+    // scan carries the batch's prefixes as partition filters while
+    // deciding exactly like an unpartitioned index
     val idxT = "mh_pfx_idx"
     spark.sql(s"DROP TABLE IF EXISTS $idxT")
     val d = Tables.load(spark, sf, "documents").limit(200)
@@ -1632,17 +1665,11 @@ class StreamingSpec extends SparkSpec {
     val batch = bandsOf(d.filter($"doc_id" >= 150 && $"doc_id" < 155))
     val probe = Events.noveltyBandExistsJoin(batch, "mh_bands",
       spark.table(idxT))
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      val probeP = Events.noveltyBandExistsJoin(batch, "mh_bands",
-        spark.table(idxT))
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      val scans = probeP.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec
-            if f.tableIdentifier.exists(_.table == idxT) => f }
-      assert(scans.nonEmpty)
-      assert(scans.head.partitionFilters.exists(
-        _.references.exists(_.name == "band_pfx")))
-    }
+    // (every MinHash band key starts with its band number, "0:" to
+    // "3:", so any document touches all four prefixes of this index: the
+    // filter is pinned, skipping is not)
+    assertPrunedScan(Events.noveltyBandExistsJoin(batch, "mh_bands",
+      spark.table(idxT)), idxT, "band_pfx", skips = false)
     // decisions equal the raw (unpartitioned DataFrame) index's
     val rawIdx = spark.table(idxT).select($"band", $"batch_id")
     val rawKeep = Events.noveltyBandExistsJoin(batch, "mh_bands", rawIdx)
@@ -2134,17 +2161,9 @@ class StreamingSpec extends SparkSpec {
       d.select(($"doc_id" + 10000).as("doc_id"), $"text", $"k"), 1L,
       idxT, sinkT, "k")
     assert(spark.table(sinkT).count() == sn)
-    // the probe prunes by key_pfx partition filters
-    withConf("spark.sql.adaptive.enabled" -> "false") {
-      val probe = Events.noveltyKeyExistsJoin(
-        d.filter($"doc_id" >= 195), "k", spark.table(idxT))
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      val scans = probe.queryExecution.executedPlan.collect {
-        case f: FileSourceScanExec
-            if f.tableIdentifier.exists(_.table == idxT) => f }
-      assert(scans.nonEmpty && scans.head.partitionFilters.exists(
-        _.references.exists(_.name == "key_pfx")))
-    }
+    // the probe reads only the batch's key_pfx partitions
+    assertPrunedScan(Events.noveltyKeyExistsJoin(
+      d.filter($"doc_id" >= 195), "k", spark.table(idxT)), idxT, "key_pfx")
     // compaction folds to base + max batch; keys preserved, markers of
     // folded batches dropped (the declared "key" geometry)
     val keysBefore = spark.table(idxT).filter($"key".isNotNull)
@@ -2190,9 +2209,10 @@ class StreamingSpec extends SparkSpec {
   /** The crash contract of the ingest kernel (`Events.ingestBatch`
     * scaladoc): the index append (with its commit marker) is the LAST
     * write, so a crash after the sink append re-runs the batch — the
-    * sink probe skips the committed append, and the index append
-    * derives from the sink READ-BACK, so the restored index equals the
-    * uncrashed one row-for-row. `ingest` runs batches 0 and 1 against
+    * sink's batch partition skips the committed append, and the probe,
+    * deterministic given the index as of batch start, rebuilds the same
+    * index rows, so the restored index equals the uncrashed one
+    * row-for-row. `ingest` runs batches 0 and 1 against
     * the freshly created `idxT`; batch 1 must index at least one row. */
   private def assertCrashHeals(idxT: String, sinkT: String,
       b0: org.apache.spark.sql.DataFrame, b1: org.apache.spark.sql.DataFrame,
@@ -2291,6 +2311,114 @@ class StreamingSpec extends SparkSpec {
         0.95))
     for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
       spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a steady ingest call compiles no new classes") {
+    // Spark caches generated classes by source text, so a batch id or a
+    // touched-prefix set inlined into a plan made every ingest call
+    // compile afresh. Three key-ingest calls on fresh arrivals with new
+    // batch ids (the first creates the sink, the second warms the
+    // append): the third compiles nothing. Each batch holds 20 fresh
+    // keys and 5 seen ones, so every call's plans have the same shape.
+    val idxT = "steady_key_idx"; val sinkT = "steady_key_sink"
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    val keys = spark.range(0, 200)
+      .select($"id".as("doc_id"), md5($"id".cast("string")).as("k"))
+      .localCheckpoint()
+    Events.createKeyIndex(spark, idxT, keys.filter($"doc_id" < 100), "k")
+    val batches = (0 until 3).map(b => keys.filter(
+        ($"doc_id" >= 100 + 20 * b && $"doc_id" < 120 + 20 * b) ||
+          ($"doc_id" >= 5 * b && $"doc_id" < 5 * b + 5))
+      .localCheckpoint())
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    Events.keyNoveltyIngestBatch(batches(0), 0L, idxT, sinkT, "k")
+    Events.keyNoveltyIngestBatch(batches(1), 1L, idxT, sinkT, "k")
+    val c0 = compiles
+    Events.keyNoveltyIngestBatch(batches(2), 2L, idxT, sinkT, "k")
+    assert(compiles == c0, s"the third call compiled ${compiles - c0} classes")
+    assert(spark.table(sinkT).filter($"batch_id" === 2L)
+      .select($"doc_id").as[Long].collect().toSet == (140L until 160L).toSet)
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("every geometry: a re-delivered batch writes nothing, also after compaction") {
+    import org.apache.spark.sql.DataFrame
+    import graft.llm.{Dedup, Multimodal}
+    val docs = Tables.load(spark, sf, "documents").limit(90).localCheckpoint()
+    val texts = docs.select($"doc_id", $"text")
+    val keyed = texts.withColumn("k", md5(lower($"text").cast("binary")))
+    val images = Multimodal.syntheticContentImages(docs).localCheckpoint()
+    val audio = Multimodal.syntheticContentAudio(docs).localCheckpoint()
+    val emb = Tables.load(spark, sf, "embeddings")
+      .select($"vec_id", $"embedding").limit(90).localCheckpoint()
+    val cents = graft.llm.Similarity.ivfTrain(emb, "vec_id", "embedding", 4)
+    // rows with id < 30 seed the index; [30, 60) and [60, 90) arrive as
+    // batches 0 and 1
+    def split(df: DataFrame, id: String) = (df.filter(col(id) < 30),
+      Seq(df.filter(col(id) >= 30 && col(id) < 60), df.filter(col(id) >= 60)))
+    type Ingest = (DataFrame, Long, String, String) => Unit
+    val geometries: Seq[(String, Seq[DataFrame], String => Unit, Ingest)] = {
+      val (imgSeed, imgs) = split(images, "media_id")
+      val (audSeed, auds) = split(audio, "media_id")
+      val (txtSeed, txts) = split(texts, "doc_id")
+      val (keySeed, keys) = split(keyed, "doc_id")
+      val (embSeed, embs) = split(emb, "vec_id")
+      Seq(
+        ("image", imgs, idx => Events.createSignatureIndex(spark, idx,
+            Multimodal.dhashSignatures(imgSeed).select($"dhash".as("sig")),
+            "sig"),
+          Events.imageNoveltyIngestBatch(_, _, _, _)),
+        ("audio", auds, idx => Events.createSignatureIndex(spark, idx,
+            Multimodal.audioFingerprints(audSeed).select($"afp".as("sig")),
+            "sig"),
+          Events.audioNoveltyIngestBatch(_, _, _, _)),
+        ("text", txts, idx => Events.createSignatureIndex(spark, idx,
+            txtSeed.select(graft.functions.SimHash60(lower($"text"))
+              .as("sig")), "sig"),
+          Events.textNoveltyIngestBatch(_, _, _, _)),
+        ("embedding", embs, idx => Events.createEmbeddingIndex(spark, idx,
+            embSeed, "embedding", cents),
+          Events.embeddingNoveltyIngestBatch(_, _, _, _, "embedding", 0.95)),
+        ("minhash", txts, idx => Events.createBandIndex(spark, idx,
+            txtSeed.select(Dedup.minhashBandArray(graft.functions.MinHashSig(
+              lower($"text"), 3, 16), 16, 4).as("b")), "b"),
+          Events.minhashNoveltyIngestBatch(_, _, _, _)),
+        ("key", keys, idx => Events.createKeyIndex(spark, idx, keySeed, "k"),
+          Events.keyNoveltyIngestBatch(_, _, _, _, "k")))
+    }
+    for ((name, batches, create, ingest) <- geometries) {
+      val idxT = s"replay_${name}_idx"; val sinkT = s"replay_${name}_sink"
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+      create(idxT)
+      def rows(t: String) =
+        if (spark.catalog.tableExists(t)) spark.table(t).count() else 0L
+      def counts() = (rows(sinkT), rows(idxT))
+      def deliverTwice(b: Int): Unit = {
+        val before = counts()
+        ingest(batches(b), b.toLong, idxT, sinkT)
+        val once = counts()
+        assert(once._2 > before._2, s"$name batch $b indexed nothing")
+        ingest(batches(b), b.toLong, idxT, sinkT)
+        assert(counts() == once, s"$name: replay of batch $b wrote rows")
+      }
+      deliverTwice(0)
+      deliverTwice(1)
+      Events.compactBatchTable(spark, idxT)
+      Events.compactBatchTable(spark, sinkT)
+      val folded = counts()
+      ingest(batches(1), 1L, idxT, sinkT)
+      assert(counts() == folded,
+        s"$name: replay of the latest batch after compaction wrote rows")
+      for (t <- Seq(sinkT, idxT)) {
+        val rows = spark.table(t).drop("batch_id")
+        assert(rows.count() == rows.distinct().count(),
+          s"$name: duplicate rows in $t")
+      }
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   test("ingest loops loudly reject reserved output column names") {
