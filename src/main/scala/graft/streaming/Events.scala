@@ -375,47 +375,70 @@ object Events {
       .filter(col("__graft_rn") <= k).drop("__graft_rn")
 
   /** `c IN values`, with `values` held as a set in the plan's references
-    * (converted from the external type `t`): the generated code is the
-    * same whatever the values — a Column `isin` keeps up to 10 values as
-    * literals, inlined into the generated source when numeric — so a
-    * steady ingest reuses its compiled classes. On a partition column it
-    * is a static partition filter: the catalog prunes the partitions
-    * before any file is listed. `c` must not be INT-typed (an INT set
-    * compiles to a switch over its values; widen it to BIGINT). */
-  private def inSet(c: Column, t: DataType, values: Iterable[Any]): Column = {
-    val toCatalyst =
-      org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(t)
-    GraftColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.InSet(
-        GraftColumnBridge.expression(c), values.map(toCatalyst).toSet))
-  }
+    * (converted from the external type `t`, the type of `c`): the
+    * generated code is the same whatever the values — a Column `isin`
+    * keeps up to 10 values as literals, inlined into the generated source
+    * when numeric — so a steady ingest reuses its compiled classes. A
+    * BYTE, SHORT or INT `c` is widened to BIGINT (a set of those compiles
+    * to a switch over its values). Array and binary values compare by
+    * content. On a partition column it is a static partition filter: the
+    * catalog prunes the partitions before any file is listed. */
+  private def inSet(c: Column, t: DataType, values: Iterable[Any]): Column =
+    t match {
+      case ByteType | ShortType | IntegerType =>
+        inSet(c.cast(LongType), LongType, values.map {
+          case v: Number => v.longValue
+          case v => v
+        })
+      case _ =>
+        val toCatalyst =
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .createToCatalystConverter(t)
+        GraftColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.InSet(
+            GraftColumnBridge.expression(c), values.map(toCatalyst).toSet))
+    }
 
   /** `index` restricted to the `pfxCol` partitions in `touched` — a
-    * batch's prefixes or cells, already on the driver. Static partition
-    * pruning: a small batch lists and reads only its fraction of the
-    * index (StreamingSpec pins the partitions read). Spark's dynamic
-    * partition pruning would spare the caller the touched set, but it
-    * prunes only after listing every partition of the index — measured,
-    * a parallel listing job per probe whose task count grows with the
-    * index's partitions. No touched value reads nothing. */
+    * batch's prefixes or cells, on the driver (at most 64 key or 256 band
+    * prefixes, or the index's cells). Static partition pruning: a small
+    * batch lists and reads only its fraction of the index (StreamingSpec
+    * pins the partitions read). The set is held by reference
+    * ([[inSet]]), so its size costs no generated code and needs no bound.
+    * Spark's dynamic partition pruning would spare the caller the touched
+    * set, but it prunes only after listing every partition of the index —
+    * measured, a parallel listing job per probe whose task count grows
+    * with the index's partitions. No touched value reads nothing. */
   private def prunedToTouched(index: DataFrame, pfxCol: String,
-                              touched: Iterable[Any]): DataFrame = {
-    val t = index.schema(pfxCol).dataType
+                              touched: Iterable[Any]): DataFrame =
     if (touched.isEmpty) index.filter(lit(false))
-    else if (t == IntegerType)
-      index.filter(inSet(col(pfxCol).cast(LongType), LongType,
-        touched.map(_.asInstanceOf[Int].toLong)))
-    else index.filter(inSet(col(pfxCol), t, touched))
-  }
+    else index.filter(inSet(col(pfxCol), index.schema(pfxCol).dataType,
+      touched))
 
-  /** An array literal of `values` (external form, element type `t`): a
-    * non-primitive literal sits in the plan's references, so its values
-    * never enter generated code. */
-  private def arrayOf(t: DataType, values: Seq[Any]): Column =
-    GraftColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(values,
-        ArrayType(t)))
+  /** Most probe values (keys, band arrays or vectors) an ingest probe
+    * decides on the driver. Up to this many, the batch's values are
+    * collected in one job, the index is read in their partitions for
+    * exactly those values, and the duplicates filter the batch as a set
+    * held by reference — no join, no exchange, and the index rows are
+    * built on the driver. Past it (a backlog or catch-up batch) the probe
+    * takes the join form, whose work stays on the executors and scales
+    * with the batch: more jobs per call (the join's and the distinct's
+    * stages), and the driver holds only the touched prefixes or cells. */
+  val MaxCollectedProbeRows = 10000
+
+  /** The rows of `df` on the driver if there are at most `max`, else
+    * None — one job, in which a task ships back at most `max` + 1 rows, so
+    * the driver never holds more than that per partition. */
+  private def collectUpTo(df: DataFrame, max: Int): Option[Seq[Row]] = {
+    val rows = df.queryExecution.toRdd
+      .mapPartitions(_.take(max + 1).map(_.copy())).collect()
+    if (rows.length > max) None
+    else {
+      val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+        .createToScalaConverter(df.schema)
+      Some(rows.toSeq.map(r => toRow(r).asInstanceOf[Row]))
+    }
+  }
 
   /** A one-column frame of driver-side `values` (batch-sized). */
   private def localFrame(spark: SparkSession, name: String, t: DataType,
@@ -2142,16 +2165,16 @@ object Events {
     def staged(batch: DataFrame): DataFrame = batch
     /** The staged rows that are novel against `idx` — the index as of
       * batch start — plus `novel`; and this batch's index data rows,
-      * distinct, derived from the same novel rows. None when the batch
-      * has no rows. */
+      * distinct, derived from the same novel rows (no second probe, no
+      * sink read-back). None when the batch has no rows. */
     def probe(staged: DataFrame, idx: DataFrame)
         : Option[(DataFrame, DataFrame)]
     /** `pfxCol` of an index data row; an all-NULL row (the commit
       * marker) lands in a partition no probe selects. */
     def pfx: Column
     /** Pre-write grouping of the index append (marker included): the
-      * rows are distinct and batch-sized (built on the driver), so one
-      * task writes one file per touched prefix. */
+      * rows are distinct and batch-sized, so one task writes one file
+      * per touched prefix. */
     def group(rows: DataFrame): DataFrame = rows.coalesce(1)
   }
 
@@ -2170,8 +2193,9 @@ object Events {
     * directory name here, never a plan value — no per-batch literal in
     * generated code, no sort on it — and the directory is overwritten,
     * so a re-run after a crash between the write and the registration
-    * converges. `rows` carries the table's other columns in table order
-    * (cast by position, as `insertInto` would). */
+    * converges. `rows` must carry the table's other columns by name (in
+    * any order, cast to the table's types; extra columns are dropped) —
+    * a missing one fails analysis, as the table-append it replaces did. */
   private def writeBatch(spark: SparkSession, table: String, batchId: Long,
                          rows: DataFrame): Unit = {
     val catalog = spark.sessionState.catalog
@@ -2180,14 +2204,10 @@ object Events {
     val sub = meta.partitionColumnNames.filterNot(_ == "batch_id")
     require(sub.length <= 1, s"$table: one partition column besides " +
       s"batch_id at most, got ${sub.mkString(", ")}")
-    val fields = meta.schema.filterNot(_.name == "batch_id")
-    require(rows.columns.length == fields.length,
-      s"$table has ${fields.length} columns besides batch_id; the batch " +
-        s"has ${rows.columns.length}")
     val dir = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(meta.location), s"batch_id=$batchId")
-    val w = rows.select(rows.columns.zip(fields).map { case (c, f) =>
-        col(c).cast(f.dataType).as(f.name) }.toIndexedSeq: _*)
+    val w = rows.select(meta.schema.filterNot(_.name == "batch_id").map(f =>
+        col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
       .write.mode("overwrite").format(meta.provider.get)
       .options(meta.storage.properties - "path")
     (if (sub.isEmpty) w else w.partitionBy(sub: _*)).save(dir.toString)
@@ -2241,14 +2261,23 @@ object Events {
     * `collapseIntraBatch` is set.
     *
     * Per-batch cost: the commit-record checks are catalog metadata; the
-    * probe collects the batch's probe values (keys, bands or vectors —
-    * batch-sized; an empty collect ends the call) and reads the index
-    * only in their prefix partitions ([[prunedToTouched]]); then the sink
-    * append, and the index append of rows built on the driver. That is
-    * 4 Spark jobs per fresh key or MinHash call and 5 per embedding call
-    * (its cosine join) on the perfbench `novelty_ingest` run, plus a
+    * probe reads the index only in the batch's prefix partitions or
+    * cells ([[prunedToTouched]]); then the sink append and the index
+    * append. A batch of at most [[MaxCollectedProbeRows]] probe values
+    * (keys, band arrays or vectors — the trickle regime a steady stream
+    * runs in) is decided on the driver: one job collects the values (an
+    * empty collect ends the call), one reads their index rows, and the
+    * index rows are built on the driver. That is 4 Spark jobs per fresh
+    * key or MinHash call and 6 per embedding call (its centroid read and
+    * cosine join) on the perfbench `novelty_ingest` run, plus a
     * file-listing job when the touched partitions exceed Spark's
-    * parallel-listing threshold; a replay runs none. No batch-dependent
+    * parallel-listing threshold; a replay runs none. A larger batch (a
+    * backlog, or the first batch after a restart) takes the geometry's
+    * join form instead: its work runs on the executors and scales with
+    * the batch, the novel rows are checkpointed as the sink append
+    * computes them, and the index rows derive from them; the driver
+    * holds only the touched prefixes or cells. The signature geometries
+    * always take the join form ([[noveltyBandedJoin]]). No batch-dependent
     * value enters generated code (batch sets and literals are held by
     * reference, and `batch_id` is only a directory name — [[writeBatch]]),
     * so a steady stream of batches reuses its compiled classes. Prior
@@ -2477,76 +2506,70 @@ object Events {
   /** The embedding geometry's batch-form probe: the rows of `work` whose
     * `vecCol` has no index vector at cosine ≥ `threshold`
     * ([[graft.llm.Dedup.cosine]], 6-decimal grain) in its probed cells,
-    * plus `novel`; and the distinct novel vectors. None when `work` has
-    * no rows. The vectors are collected (batch-sized) and assigned to
-    * their `multiProbe` nearest cells; the index is read only in those
+    * plus `novel`; and the distinct novel vectors, as column `vec`. None
+    * when `work` has no rows. The batch's distinct vectors are assigned to
+    * their `multiProbe` nearest cells, the index is read only in those
     * cells ([[prunedToTouched]]), and the cell equi-join + exact cosine
-    * yields the duplicate VECTORS, collected and applied to `work` as a
-    * set (vectors are values; the loop needs no row identity). */
+    * yields the duplicate VECTORS (vectors are values; the loop needs no
+    * row identity). Up to [[MaxCollectedProbeRows]] vectors this runs on
+    * the driver's copy of them and the duplicates filter `work` as a set;
+    * past it the vectors stay on the executors and the duplicates
+    * anti-join `work`. */
   private[graft] def noveltyCellJoin(work: DataFrame, vecCol: String,
                                      index: DataFrame,
                                      cents: Array[Array[Double]],
                                      threshold: Double, multiProbe: Int)
-      : Option[(DataFrame, Seq[Any])] = {
+      : Option[(DataFrame, DataFrame)] = {
     val spark = work.sparkSession
     val t = work.schema(vecCol).dataType
-    val all = work.select(col(vecCol)).collect()
-    if (all.isEmpty) return None
-    val vecs = all.map(_.get(0)).filter(_ != null).distinct.toSeq
     val bvec = col("__graft_bvec")
-    val local = localFrame(spark, "__graft_bvec", t, vecs)
-    val probed =
+    def withCells(vecs: DataFrame): DataFrame =
       if (multiProbe <= 1)
-        local.withColumn("cell", graft.llm.Similarity.nearestCell(bvec, cents))
+        vecs.withColumn("cell", graft.llm.Similarity.nearestCell(bvec, cents))
       else
-        local.withColumn("cell", explode(graft.llm.Similarity.probeCells(
+        vecs.withColumn("cell", explode(graft.llm.Similarity.probeCells(
           bvec, cents, multiProbe)))
-    val pairs = probed.collect()
-    val dups: Set[Any] =
-      if (pairs.isEmpty) Set.empty
-      else
-        // self-norms staged once per side (the dedupAssigned convention);
-        // same doubles, same Round6 — bit-identical probe decisions
-        probed.withColumn("__graft_bn2", graft.functions.DotProduct(bvec, bvec))
-          .join(prunedToTouched(index, "cell", pairs.map(_.get(1)).distinct)
-              .filter(col("vec").isNotNull)
-              .select(col("cell"), col("vec").as("__graft_iv"),
-                graft.functions.DotProduct(col("vec"), col("vec"))
-                  .as("__graft_in2")),
-            Seq("cell"))
-          .filter(graft.functions.Round6(try_divide(
-              graft.functions.DotProduct(bvec, col("__graft_iv")),
-              sqrt(col("__graft_bn2") * col("__graft_in2")))) >= threshold)
-          .select(bvec).collect().map(_.get(0)).toSet
-    Some((work.filter(col(vecCol).isNull ||
-        !array_contains(arrayOf(t, dups.toSeq), col(vecCol)))
-      .withColumn("novel", lit(true)), vecs.filterNot(dups)))
-  }
-
-  /** Trained centroids of the embedding indexes, by `__cents` location: a
-    * steady ingest would otherwise read the same model back every batch,
-    * one Spark job each. An entry holds while the table's data files are
-    * the ones it was read from — every write makes new part files, so a
-    * recreated index never reuses a stale model. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Array[Array[Double]])]()
-
-  private def centroidsOf(spark: SparkSession, indexTable: String)
-      : Array[Array[Double]] = {
-    val table = indexTable + "__cents"
-    val dir = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser
-        .parseTableIdentifier(table)).location)
-    val files = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dir).toSeq.filter(_.isFile)
-      .map(f => s"${f.getPath.getName}:${f.getLen}").sorted
-    Option(centroidCache.get(dir.toString)).filter(_._1 == files)
-      .map(_._2).getOrElse {
-        val cents = spark.table(table).collect().sortBy(_.getInt(0))
-          .map(_.getSeq[Double](1).toArray)
-        centroidCache.put(dir.toString, (files, cents))
-        cents
-      }
+    // the vectors of `probed` with an index vector in `cells` at
+    // cosine ≥ threshold; self-norms staged once per side (the
+    // dedupAssigned convention) — same doubles, same Round6, bit-identical
+    // probe decisions in either form
+    def dupVecs(probed: DataFrame, cells: Seq[Any]): DataFrame =
+      probed.withColumn("__graft_bn2", graft.functions.DotProduct(bvec, bvec))
+        .join(prunedToTouched(index, "cell", cells)
+            .filter(col("vec").isNotNull)
+            .select(col("cell"), col("vec").as("__graft_iv"),
+              graft.functions.DotProduct(col("vec"), col("vec"))
+                .as("__graft_in2")),
+          Seq("cell"))
+        .filter(graft.functions.Round6(try_divide(
+            graft.functions.DotProduct(bvec, col("__graft_iv")),
+            sqrt(col("__graft_bn2") * col("__graft_in2")))) >= threshold)
+        .select(bvec)
+    collectUpTo(work.select(col(vecCol)), MaxCollectedProbeRows) match {
+      case Some(all) if all.isEmpty => None
+      case Some(all) =>
+        val vecs = all.map(_.get(0)).filter(_ != null).distinct
+        val probed = withCells(localFrame(spark, "__graft_bvec", t, vecs))
+        val cells = probed.collect().map(_.get(1)).distinct.toSeq
+        val dups: Set[Any] =
+          if (cells.isEmpty) Set.empty
+          else dupVecs(probed, cells).collect().map(_.get(0)).toSet
+        Some((work.filter(col(vecCol).isNull || !inSet(col(vecCol), t, dups))
+            .withColumn("novel", lit(true)),
+          localFrame(spark, "vec", t, vecs.filterNot(dups))))
+      case None =>
+        // cells are both collected and joined
+        val probed = withCells(work.select(col(vecCol).as("__graft_bvec"))
+          .filter(bvec.isNotNull).distinct()).localCheckpoint()
+        val cells = probed.select(col("cell")).distinct().collect()
+          .map(_.get(0)).toSeq
+        val novel = checkpointed(
+          work.join(dupVecs(probed, cells).distinct(), col(vecCol) === bvec,
+              "left_anti")
+            .withColumn("novel", lit(true)))
+        Some((novel, novel.select(col(vecCol).as("vec"))
+          .filter(col("vec").isNotNull).distinct()))
+    }
   }
 
   /** The novelty-ingest loop over embeddings ([[ingestBatch]] in cosine
@@ -2579,7 +2602,10 @@ object Events {
       new IngestGeometry("embedding", "createEmbeddingIndex", "cell",
           Seq("__graft_bvec", "__graft_iv", "__graft_pv",
             "__graft_repvec")) {
-        private lazy val cents = centroidsOf(batch.sparkSession, indexTable)
+        private lazy val cents = batch.sparkSession
+          .table(indexTable + "__cents")
+          .collect().sortBy(_.getInt(0))
+          .map(_.getSeq[Double](1).toArray)
         override def staged(b: DataFrame): DataFrame =
           if (collapseIntraBatch)
             collapseByVector(b, vecCol, cents, threshold,
@@ -2594,10 +2620,8 @@ object Events {
             : Option[(DataFrame, DataFrame)] =
           noveltyCellJoin(work, vecCol, idx, cents, threshold, multiProbe)
             .map { case (novel, vecs) =>
-              (novel, localFrame(work.sparkSession, "vec",
-                  work.schema(vecCol).dataType, vecs)
-                .filter(graft.functions.DotProduct(col("vec"), col("vec"))
-                  =!= lit(0.0)))
+              (novel, vecs.filter(
+                graft.functions.DotProduct(col("vec"), col("vec")) =!= lit(0.0)))
             }
         def pfx: Column = when(col("vec").isNull, lit(-1))
           .otherwise(graft.llm.Similarity.nearestCell(col("vec"), cents))
@@ -2621,50 +2645,67 @@ object Events {
     * there is no candidate list and no verify step — band equality IS
     * the decision — so no bucket cap is needed: a hot band costs join
     * rows (AQE-splittable), never memory. On a `band_pfx`-partitioned
-    * index ([[createBandIndex]]'s layout) the batch's bands are
-    * collected and the index scan reads only their prefix partitions
-    * ([[prunedToTouched]] — spec-pinned) for only their bands. */
+    * index ([[createBandIndex]]'s layout) the batch's touched prefixes
+    * (≤ 256) are collected when the probe is built, and the index scan
+    * reads only their partitions ([[prunedToTouched]] — spec-pinned);
+    * the join itself stays lazy and batch-scaled. */
   def noveltyBandExistsJoin(signed: DataFrame, bandsCol: String,
                             index: DataFrame): DataFrame = {
     rejectReserved(signed, BandExistsProbeNames, "noveltyBandExistsJoin")
-    if (index.columns.contains("band_pfx"))
-      return bandProbe(signed, bandsCol, index).map(_._1)
-        .getOrElse(signed.withColumn("novel", lit(true)))
     val barr = col("__graft_barr")
-    val dupArrs = signed.select(col(bandsCol).as("__graft_barr"))
+    val arrs0 = signed.select(col(bandsCol).as("__graft_barr"))
       .filter(barr.isNotNull).distinct()
+    val hasPfx = index.columns.contains("band_pfx")
+    val arrs = if (hasPfx) arrs0.localCheckpoint() else arrs0
+    val idxSide =
+      if (!hasPfx) index
+      else prunedToTouched(index, "band_pfx", arrs
+        .select(explode(barr).as("__graft_band"))
+        .filter(col("__graft_band").isNotNull)
+        .select(bandStrPfx(col("__graft_band"))).distinct()
+        .collect().map(_.get(0)).toSeq)
+    val dupArrs = arrs
       .select(barr, explode(barr).as("__graft_band"))
-      .join(index.select(col("band").as("__graft_band"))
+      .join(idxSide.select(col("band").as("__graft_band"))
         .filter(col("__graft_band").isNotNull), Seq("__graft_band"))
       .select(barr).distinct()
     signed.join(dupArrs, col(bandsCol) === barr, "left_anti")
       .withColumn("novel", lit(true))
   }
 
-  /** [[noveltyBandExistsJoin]] on a `band_pfx`-partitioned index, plus the
-    * novel arrays' distinct bands; None when `signed` has no rows. The
-    * batch's band arrays are collected (batch-sized), the index is read
-    * in their prefix partitions for exactly their bands, and the
-    * duplicate bands filter `signed` as a set — no join, no exchange. */
-  private def bandProbe(signed: DataFrame, bandsCol: String,
-                        index: DataFrame): Option[(DataFrame, Seq[String])] = {
-    val all = signed.select(col(bandsCol)).collect()
-    if (all.isEmpty) return None
-    val arrs = all.filterNot(_.isNullAt(0)).map(_.getSeq[String](0))
-    val bands = arrs.flatten.filter(_ != null).distinct
-    val dups: Set[String] =
-      if (bands.isEmpty) Set.empty
-      else prunedToTouched(index, "band_pfx", bands.map(b =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(b)
-            .substringSQL(1, 2).toString).distinct)
-        .filter(inSet(col("band"), StringType, bands))
-        .select(col("band")).collect().map(_.getString(0)).toSet
-    Some((signed.filter(!coalesce(arrays_overlap(col(bandsCol),
-        arrayOf(StringType, dups.toSeq)), lit(false)))
-      .withColumn("novel", lit(true)),
-      arrs.filterNot(_.exists(dups)).flatten.filter(_ != null).distinct
-        .toSeq))
-  }
+  /** The MinHash ingest's probe: [[noveltyBandExistsJoin]] on a
+    * `band_pfx`-partitioned index, plus the novel arrays' distinct bands
+    * as column `band`; None when `signed` has no rows. Up to
+    * [[MaxCollectedProbeRows]] band arrays are collected, the index is
+    * read in their prefix partitions for exactly their bands, and the
+    * duplicate arrays filter `signed` as a set — no join, no exchange.
+    * Past it the probe is [[noveltyBandExistsJoin]] itself. */
+  private[graft] def bandProbe(signed: DataFrame, bandsCol: String,
+                               index: DataFrame)
+      : Option[(DataFrame, DataFrame)] =
+    collectUpTo(signed.select(col(bandsCol)), MaxCollectedProbeRows) match {
+      case Some(all) if all.isEmpty => None
+      case Some(all) =>
+        val arrs = all.filterNot(_.isNullAt(0)).map(_.getSeq[String](0))
+        val bands = arrs.flatten.filter(_ != null).distinct
+        val dups: Set[String] =
+          if (bands.isEmpty) Set.empty
+          else prunedToTouched(index, "band_pfx", bands.map(b =>
+              org.apache.spark.unsafe.types.UTF8String.fromString(b)
+                .substringSQL(1, 2).toString).distinct)
+            .filter(inSet(col("band"), StringType, bands))
+            .select(col("band")).collect().map(_.getString(0)).toSet
+        val (dupArrs, novelArrs) = arrs.partition(_.exists(dups))
+        Some((signed.filter(col(bandsCol).isNull || !inSet(col(bandsCol),
+              signed.schema(bandsCol).dataType, dupArrs.distinct))
+            .withColumn("novel", lit(true)),
+          localFrame(signed.sparkSession, "band", StringType,
+            novelArrs.flatten.filter(_ != null).distinct)))
+      case None =>
+        val novel = checkpointed(noveltyBandExistsJoin(signed, bandsCol, index))
+        Some((novel, novel.select(explode(col(bandsCol)).as("band"))
+          .filter(col("band").isNotNull).distinct()))
+    }
 
   /** Create (replacing) a BAND-KEY index table for the MinHash ingest:
     * schema `(band STRING, band_pfx STRING, batch_id BIGINT)` — one
@@ -2734,9 +2775,7 @@ object Events {
         }
         def probe(staged: DataFrame, idx: DataFrame)
             : Option[(DataFrame, DataFrame)] =
-          bandProbe(staged, "mh_bands", idx).map { case (novel, bands) =>
-            (novel, localFrame(staged.sparkSession, "band", StringType, bands))
-          }
+          bandProbe(staged, "mh_bands", idx)
         def pfx: Column = bandStrPfx(col("band"))
       })
   }
@@ -2780,10 +2819,11 @@ object Events {
     * key are duplicates and dropped; NULL keys pass through novel
     * (absence of a key is absence of duplicate evidence — the family
     * convention). On a `key_pfx`-partitioned index
-    * ([[createKeyIndex]]'s layout) the batch's keys are collected and
-    * the index scan reads only their prefix partitions
-    * ([[prunedToTouched]]) for only those keys — pruned, exchange-free,
-    * no state.
+    * ([[createKeyIndex]]'s layout) the batch's touched prefixes (≤ 64)
+    * are collected when the probe is built, and the index scan reads
+    * only their partitions ([[prunedToTouched]]); the batch-sized
+    * distinct key set builds the join's hash side — pruned,
+    * exchange-free, no state, and the join stays lazy.
     *
     * The probe's key type must EQUAL the index key type: `key_pfx`
     * was computed from `xxhash64` of the INDEX's representation, and
@@ -2793,16 +2833,34 @@ object Events {
   def noveltyKeyExistsJoin(frame: DataFrame, keyCol: String,
                            index: DataFrame): DataFrame = {
     rejectReserved(frame, KeyProbeNames, "noveltyKeyExistsJoin")
-    if (index.columns.contains("key_pfx"))
-      return keyProbe(frame, keyCol, index).map(_._1)
-        .getOrElse(frame.withColumn("novel", lit(true)))
     val k = col("__graft_key")
-    val dupKeys = frame.select(col(keyCol).as("__graft_key"))
+    val hasPfx = index.columns.contains("key_pfx")
+    if (hasPfx) requireKeyType(frame, keyCol, index)
+    val keys0 = frame.select(col(keyCol).as("__graft_key"))
       .filter(k.isNotNull).distinct()
-      .join(index.select(col("key").as("__graft_key"))
-        .filter(k.isNotNull), Seq("__graft_key"), "left_semi")
+    val keys = if (hasPfx) keys0.localCheckpoint() else keys0
+    val idxSide =
+      if (!hasPfx) index
+      else prunedToTouched(index, "key_pfx", keys.select(keyPfx(k))
+        .distinct().collect().map(_.get(0)).toSeq)
+    val dupKeys = keys
+      .join(idxSide.select(col("key").as("__graft_key"))
+        .filter(col("__graft_key").isNotNull), Seq("__graft_key"),
+        "left_semi")
     frame.join(dupKeys, col(keyCol) === k, "left_anti")
       .withColumn("novel", lit(true))
+  }
+
+  private def requireKeyType(frame: DataFrame, keyCol: String,
+                             index: DataFrame): Unit = {
+    val frameType = frame.schema(keyCol).dataType
+    val idxType = index.schema("key").dataType
+    require(frameType == idxType,
+      s"noveltyKeyExistsJoin: batch key '$keyCol' is $frameType but " +
+        s"the key index was built over $idxType — xxhash64 prefix " +
+        "pruning is type-dependent, so a coerced join would silently " +
+        "false-novel true duplicates; cast the batch key to the " +
+        "index's type (or rebuild the index) first")
   }
 
   /** Driver-side identity of a key value: binary keys compare by content. */
@@ -2811,34 +2869,40 @@ object Events {
     case other => other
   }
 
-  /** [[noveltyKeyExistsJoin]] on a `key_pfx`-partitioned index, plus the
-    * novel rows' distinct keys; None when `frame` has no rows. The
-    * batch's keys and prefixes are collected (batch-sized), the index is
-    * read in their prefix partitions for exactly those keys, and the
-    * duplicates filter `frame` as a set — no join, no exchange. */
-  private def keyProbe(frame: DataFrame, keyCol: String,
-                       index: DataFrame): Option[(DataFrame, Seq[Any])] = {
+  /** The key ingest's probe: [[noveltyKeyExistsJoin]] on a
+    * `key_pfx`-partitioned index, plus the novel rows' distinct keys as
+    * column `key`; None when `frame` has no rows. Up to
+    * [[MaxCollectedProbeRows]] keys are collected with their prefixes,
+    * the index is read in their prefix partitions for exactly those
+    * keys, and the duplicates filter `frame` as a set — no join, no
+    * exchange. Past it the probe is [[noveltyKeyExistsJoin]] itself. */
+  private[graft] def keyProbe(frame: DataFrame, keyCol: String,
+                              index: DataFrame)
+      : Option[(DataFrame, DataFrame)] = {
+    requireKeyType(frame, keyCol, index)
     val t = frame.schema(keyCol).dataType
-    val idxType = index.schema("key").dataType
-    require(t == idxType,
-      s"noveltyKeyExistsJoin: batch key '$keyCol' is $t but " +
-        s"the key index was built over $idxType — xxhash64 prefix " +
-        "pruning is type-dependent, so a coerced join would silently " +
-        "false-novel true duplicates; cast the batch key to the " +
-        "index's type (or rebuild the index) first")
-    val all = frame.select(col(keyCol), keyPfx(col(keyCol))).collect()
-    if (all.isEmpty) return None
-    val batch = all.filterNot(_.isNullAt(0))
-    val keys = batch.map(_.get(0)).distinctBy(keyIdentity).toSeq
-    val dups: Seq[Any] =
-      if (keys.isEmpty) Nil
-      else prunedToTouched(index, "key_pfx", batch.map(_.getLong(1)).distinct)
-        .filter(inSet(col("key"), t, keys))
-        .select(col("key")).collect().map(_.get(0)).toSeq
-    val dupIds = dups.map(keyIdentity).toSet
-    Some((frame.filter(col(keyCol).isNull || !inSet(col(keyCol), t, dups))
-      .withColumn("novel", lit(true)),
-      keys.filterNot(k => dupIds(keyIdentity(k)))))
+    collectUpTo(frame.select(col(keyCol), keyPfx(col(keyCol))),
+        MaxCollectedProbeRows) match {
+      case Some(all) if all.isEmpty => None
+      case Some(all) =>
+        val batch = all.filterNot(_.isNullAt(0))
+        val keys = batch.map(_.get(0)).distinctBy(keyIdentity)
+        val dups: Seq[Any] =
+          if (keys.isEmpty) Nil
+          else prunedToTouched(index, "key_pfx",
+              batch.map(_.getLong(1)).distinct)
+            .filter(inSet(col("key"), t, keys))
+            .select(col("key")).collect().map(_.get(0)).toSeq
+        val dupIds = dups.map(keyIdentity).toSet
+        Some((frame.filter(col(keyCol).isNull || !inSet(col(keyCol), t, dups))
+            .withColumn("novel", lit(true)),
+          localFrame(frame.sparkSession, "key", t,
+            keys.filterNot(k => dupIds(keyIdentity(k))))))
+      case None =>
+        val novel = checkpointed(noveltyKeyExistsJoin(frame, keyCol, index))
+        Some((novel, novel.select(col(keyCol).as("key"))
+          .filter(col("key").isNotNull).distinct()))
+    }
   }
 
   /** The novelty-ingest loop under key equality ([[ingestBatch]], index
@@ -2857,10 +2921,7 @@ object Events {
           KeyProbeNames) {
         def probe(staged: DataFrame, idx: DataFrame)
             : Option[(DataFrame, DataFrame)] =
-          keyProbe(staged, keyCol, idx).map { case (novel, keys) =>
-            (novel, localFrame(staged.sparkSession, "key",
-              staged.schema(keyCol).dataType, keys))
-          }
+          keyProbe(staged, keyCol, idx)
         def pfx: Column = keyPfx(col("key"))
       })
 }

@@ -2185,7 +2185,7 @@ class StreamingSpec extends SparkSpec {
     // partitions and silently false-novel true duplicates — the probe
     // must fail loudly instead
     val idxT = "key_idx_ty"
-    spark.sql(s"DROP TABLE IF EXISTS $idxT")
+    for (t <- Seq(idxT, "key_sink_ty")) spark.sql(s"DROP TABLE IF EXISTS $t")
     Events.createKeyIndex(spark, idxT,
       Seq("5", "7").toDF("k"), "k")
     val intBatch = Seq(5L, 6L).toDF("k")
@@ -2202,6 +2202,13 @@ class StreamingSpec extends SparkSpec {
     val ok = Events.noveltyKeyExistsJoin(
       Seq("5", "6").toDF("k"), "k", spark.table(idxT))
     assert(ok.select($"k").as[String].collect().toSet == Set("6"))
+    // and lazily: a key indexed after the probe is built, before it runs,
+    // counts
+    val later = Events.noveltyKeyExistsJoin(
+      Seq("5", "6", "8").toDF("k"), "k", spark.table(idxT))
+    Events.keyNoveltyIngestBatch(Seq("6").toDF("k"), 0L, idxT, "key_sink_ty",
+      "k")
+    assert(later.select($"k").as[String].collect().toSet == Set("8"))
     spark.sql(s"DROP TABLE IF EXISTS $idxT")
     spark.sql(s"DROP TABLE IF EXISTS key_sink_ty")
   }
@@ -2416,6 +2423,97 @@ class StreamingSpec extends SparkSpec {
         assert(rows.count() == rows.distinct().count(),
           s"$name: duplicate rows in $t")
       }
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  test("an ingest append matches the sink's columns by name") {
+    // a later batch with its columns in another order lands in the right
+    // columns (two of them share a type), and a renamed column fails the
+    // call before anything is written
+    val idxT = "byname_key_idx"; val sinkT = "byname_key_sink"
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    Events.createKeyIndex(spark, idxT, Seq("a").toDF("k"), "k")
+    Events.keyNoveltyIngestBatch(Seq(("b", "note-b", 1L)).toDF("k", "note", "n"),
+      0L, idxT, sinkT, "k")
+    Events.keyNoveltyIngestBatch(Seq(("note-c", "c", 2L), ("note-a", "a", 3L))
+      .toDF("note", "k", "n"), 1L, idxT, sinkT, "k")
+    assert(spark.table(sinkT).select($"k", $"note", $"n", $"batch_id")
+      .as[(String, String, Long, Long)].collect().toSet ==
+      Set(("b", "note-b", 1L, 0L), ("c", "note-c", 2L, 1L)))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Events.keyNoveltyIngestBatch(Seq(("d", "note-d", 4L))
+        .toDF("k", "label", "n"), 2L, idxT, sinkT, "k")
+    }
+    for (t <- Seq(idxT, sinkT))
+      assert(spark.table(t).filter($"batch_id" === 2L).isEmpty)
+    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a batch past MaxCollectedProbeRows takes the join form, same decisions") {
+    // Up to MaxCollectedProbeRows probe values the ingest decides on the
+    // driver; a larger batch takes the join form. Each geometry ingests
+    // one batch past the bound and must keep exactly the rows, and index
+    // exactly the values, that the driver form finds for its two halves
+    // against the same index (decisions are against the index as of
+    // batch start, so halving the batch changes none).
+    import org.apache.spark.sql.DataFrame
+    val n = Events.MaxCollectedProbeRows + 500L
+    val half = (n + 1) / 2
+    assert(half <= Events.MaxCollectedProbeRows)
+    val ids = spark.range(0, n).select($"id".as("doc_id")).localCheckpoint()
+    val keyed = ids.withColumn("k", md5($"doc_id".cast("string")))
+    val texts = ids.withColumn("text", concat_ws(" ", lit("crawl"),
+      ($"doc_id" % 7).cast("string"), $"doc_id".cast("string"),
+      ($"doc_id" * 7919 % 10007).cast("string")))
+    def banded(df: DataFrame) = df.withColumn("mh_bands",
+      graft.llm.Dedup.minhashBandArray(graft.functions.MinHashSig(
+        lower($"text"), 3, 16), 16, 4))
+    val vecs = ids.withColumn("embedding", array((1 to 32).map(j =>
+      (pmod(xxhash64($"doc_id", lit(j)), lit(2001L)) - 1000) / 1000.0): _*))
+    val seedOf = (df: DataFrame) => df.filter($"doc_id" % 3 === 0)
+    val cents = graft.llm.Similarity.ivfTrain(seedOf(vecs), "doc_id",
+      "embedding", 4)
+    type Probe = (DataFrame, DataFrame) => Option[(DataFrame, DataFrame)]
+    val geometries: Seq[(String, DataFrame, String, String => Unit, Probe,
+        (DataFrame, String, String) => Unit)] = Seq(
+      ("key", keyed, "key",
+        idx => Events.createKeyIndex(spark, idx, seedOf(keyed), "k"),
+        (b, idx) => Events.keyProbe(b, "k", idx),
+        (b, idx, sink) => Events.keyNoveltyIngestBatch(b, 0L, idx, sink, "k")),
+      ("minhash", texts, "band",
+        idx => Events.createBandIndex(spark, idx,
+          banded(seedOf(texts)).select($"mh_bands".as("b")), "b"),
+        (b, idx) => Events.bandProbe(banded(b), "mh_bands", idx),
+        (b, idx, sink) => Events.minhashNoveltyIngestBatch(b, 0L, idx, sink)),
+      ("embedding", vecs, "vec",
+        idx => Events.createEmbeddingIndex(spark, idx, seedOf(vecs),
+          "embedding", cents),
+        (b, idx) => Events.noveltyCellJoin(b, "embedding", idx, cents, 0.95, 1),
+        (b, idx, sink) => Events.embeddingNoveltyIngestBatch(b, 0L, idx, sink,
+          "embedding", 0.95)))
+    for ((name, batch, idxCol, create, probe, ingest) <- geometries) {
+      val idxT = s"big_${name}_idx"; val sinkT = s"big_${name}_sink"
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+      create(idxT)
+      val halves = Seq(batch.filter($"doc_id" < half),
+        batch.filter($"doc_id" >= half))
+      val driverForm = halves.map(h => probe(h, spark.table(idxT)).get)
+      val wantKept = driverForm.flatMap(_._1.select($"doc_id").as[Long]
+        .collect()).toSet
+      val wantIndexed = driverForm.flatMap(_._2.filter(col(idxCol).isNotNull)
+        .select(col(idxCol)).collect().map(_.get(0))).toSet
+      assert(wantKept.nonEmpty && wantKept.size < n, s"$name: kept $wantKept")
+      ingest(batch, idxT, sinkT)
+      assert(spark.table(sinkT).select($"doc_id").as[Long].collect().toSet ==
+        wantKept, s"$name: the join form kept other rows")
+      val indexed = spark.table(idxT)
+        .filter($"batch_id" === 0L && col(idxCol).isNotNull)
+        .select(col(idxCol)).collect().map(_.get(0))
+      assert(indexed.length == indexed.distinct.length &&
+        indexed.toSet == wantIndexed, s"$name: the join form indexed others")
       for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
         spark.sql(s"DROP TABLE IF EXISTS $t")
     }
