@@ -594,6 +594,24 @@ object Dedup {
           (col("sz_a") + col("sz_b") - col("inter"))).as("jaccard"))
   }
 
+  // -------------------------------------------------------------------
+  // exact set-similarity family: Jaccard, containment, tf-idf cosine
+  //
+  // Six public entries (self and cross form of each measure), one
+  // private kernel per measure. Every kernel is one front (token table,
+  // frequencies, the arm probe), one arm — the shared dense signature
+  // sweep ([[denseSweep]]) or the measure's prefix join — and one
+  // output projection over the arm-neutral pair frame (a, b, p_a, p_b,
+  // x, n_a, n_b): ids, per-side payload p (set size or squared norm),
+  // exact integer score x (intersection or dot), clique sizes. The self
+  // form is the cross form with one side ([[SimSides]]); it differs in
+  // exactly four places: frequencies/idf come from the one side, the
+  // self pair predicate ([[pairPred]]) applies before scoring, clique
+  // rows are added (member pairs when expanded, [[cliqueRows]] when
+  // not), and the expanded symmetric form orders each pair a < b,
+  // swapping the payloads with the ids.
+  // -------------------------------------------------------------------
+
   /** EXACT set-similarity self-join: every pair of documents whose
     * word-token sets have Jaccard ≥ `threshold` — no LSH, no
     * probabilistic recall; the exact complement to
@@ -601,7 +619,7 @@ object Dedup {
     * above t survives" (licensing audits, eval-set isolation).
     *
     * ADAPTIVE between two exact plans, dispatched on measured vocabulary
-    * size (the frequency table is computed either way):
+    * size by the family's shared front ([[setFront]]):
     *
     *   - **Large vocab** (the real-corpus regime): AllPairs/PPJoin
     *     prefix filtering (Bayardo et al., WWW'07; Xiao et al., WWW'08;
@@ -619,14 +637,20 @@ object Dedup {
     *     prefix filtering is provably useless — every token is frequent,
     *     so prefix buckets approach corpus size and candidate volume
     *     approaches n² with fat per-candidate work. Instead each token
-    *     set becomes a DENSE BITSET (`ceil(V/64)` longs); documents
-    *     collapse to DISTINCT bitsets (dedup corpora are exactly where
-    *     exact-set duplicates abound), the distinct-signature pairs are
-    *     compared by codegen'd `bit_count(a&b)` popcounts under a
-    *     broadcast nested-loop join (D signatures ≪ n docs, and D² wins
-    *     over candidate machinery precisely because the true result is
+    *     set becomes a DENSE BITSET (`ceil(V/64)` longs) and the family's
+    *     one signature sweep ([[denseSweep]]) runs: documents collapse
+    *     to DISTINCT bitsets (dedup corpora are exactly where exact-set
+    *     duplicates abound), the distinct-signature pairs are compared
+    *     by codegen'd `bit_count(a&b)` popcounts under a broadcast
+    *     nested-loop join (D signatures ≪ n docs, and D² wins over
+    *     candidate machinery precisely because the true result is
     *     itself dense), and qualifying signature pairs expand back to
     *     doc pairs — output-bound, like every exact join must be.
+    *
+    * Every decision is integer-exact: the threshold is an exact
+    * parts-per-million rational ([[ppm]]) and size, positional and
+    * final filters compare integer products, so J-exactly-t pairs are
+    * always kept.
     *
     * Output: (doc_a, doc_b, inter, uni, jaccard), doc_a < doc_b.
     * With `expandCliques = false` — the clique-representative product
@@ -659,128 +683,209 @@ object Dedup {
                threshold: Double,
                denseVocabMax: Long = AllPairsDenseVocabMax,
                denseSigMax: Long = AllPairsDenseSigMax,
-               expandCliques: Boolean = true): DataFrame = {
+               expandCliques: Boolean = true): DataFrame =
+    jaccardKernel(simSides(df, None, id, text), threshold, denseVocabMax,
+      denseSigMax, expandCliques)
+
+  /** EXACT cross-corpus set-similarity JOIN: every (left, right) pair
+    * whose word-token sets have Jaccard ≥ `threshold` — the exact
+    * complement to [[fuzzyJoin]] (LSH, probabilistic recall), for when
+    * the match set must be certified complete: eval-set decontamination
+    * with a similarity bar rather than exact n-gram hits, licensing
+    * audits of a new crawl against an owned corpus, cross-snapshot
+    * reconciliation. [[allPairs]]'s kernel and dispatch (see its
+    * scaladoc) with two sides: the global token-frequency order — and
+    * hence the prefixes the AllPairs lemma reasons about — is computed
+    * over the UNION of both corpora, which the lemma requires (a shared
+    * total order); the dense arm keeps per-side distinct-signature
+    * collapse and sweeps the D_L × D_R product, broadcasting the right
+    * side.
+    *
+    * Both inputs use the same `id`/`text` column names (the
+    * [[fuzzyJoin]] convention). Output: (id_a from left, id_b from
+    * right, inter, uni, jaccard) — ids are independent namespaces, no
+    * ordering constraint between them. With `expandCliques = false`
+    * each SIDE collapses to its distinct token sets (reps + clique
+    * sizes as n_a/n_b); identical cross-side sets meet as a regular
+    * J = 1 candidate, so there are no self rows. '''At scale set
+    * `expandCliques = false`''' — uniform family guidance, see
+    * [[allPairs]]. */
+  def allPairsJoin(left: DataFrame, right: DataFrame, id: String,
+                   text: String, threshold: Double,
+                   denseVocabMax: Long = AllPairsDenseVocabMax,
+                   denseSigMax: Long = AllPairsDenseSigMax,
+                   expandCliques: Boolean = true)
+      : DataFrame =
+    jaccardKernel(simSides(left, Some(right), id, text), threshold,
+      denseVocabMax, denseSigMax, expandCliques)
+
+  /** The Jaccard kernel behind [[allPairs]] and [[allPairsJoin]]. */
+  private def jaccardKernel(in: SimSides, threshold: Double,
+                            denseVocabMax: Long, denseSigMax: Long,
+                            expandCliques: Boolean): DataFrame = {
+    val tN = ppm(threshold)
+    val self = in.n == 1
+    // size bound: min·1e6 ≥ t·max, else J < t regardless
+    def bound(pa: Column, pb: Column) =
+      least(pa, pb) * 1000000L >= lit(tN) * greatest(pa, pb)
+    def keep(x: Column, pa: Column, pb: Column) =
+      x * 1000000L >= lit(tN) * (pa + pb - x)
+    val (toks, freq, dense) = setFront(in, denseVocabMax, denseSigMax)
+    val pairs = dense match {
+      case Some((sides, score)) =>
+        denseSweep(sides, score, ordered = false, bound, keep, expandCliques)
+      case None =>
+        // PPJoin shape: each doc becomes ONE row carrying its whole
+        // token set as a rank-ordered array (farr); prefix tokens (the
+        // RAREST) are re-exploded as join keys with their 1-based rank.
+        // Three filters run inside the join projection — no candidate
+        // materialization, no .distinct(), no re-join against the token
+        // table, so the only shuffles are the doc-array build and the
+        // prefix-token equi-join:
+        //   (a) the size bound above.
+        //   (b) positional filter: at a shared token with ranks (i, j),
+        //       no shared token can precede it in either list (both
+        //       lists sort by the same global rarest-first order), so
+        //       overlap ≤ 1 + min(sz_a-i, sz_b-j); prune when that
+        //       misses the required overlap ⌈t/(1+t)·(sz_a+sz_b)⌉.
+        //       Dropping a pair at its FIRST shared occurrence is safe:
+        //       the bound is valid for the whole pair there.
+        //   (c) first-shared-token dedup: a pair surfaces once per
+        //       shared prefix token; emit ONLY at the globally-smallest
+        //       shared token — head of array_intersect(farr_a, farr_b)
+        //       (both arrays sort by the same total order, Spark
+        //       preserves left-array order, and the smallest shared
+        //       token is always inside both prefixes, since prefixes
+        //       hold each doc's rank-smallest tokens).
+        // The SAME array_intersect then yields the exact intersection
+        // size (tokens are distinct within a doc), so verification is a
+        // map-side size() — the exact count never crosses an exchange.
+        val tabs = (0 until in.n).map(s =>
+          docArrTab(in.of(toks, s), freq, collapse = !expandCliques))
+        val pre = tabs.map(prefixExplodeTab(_, tN))
+        val cross = pre.head.alias("pa").join(pre.last.alias("pb"),
+            col("pa.tok") === col("pb.tok") &&
+              pairPred(self, ordered = false, col("pa.doc"), col("pb.doc")))
+          .filter(bound(col("pa.sz"), col("pb.sz")))
+          // ubound ≥ ⌈tN·(sz_a+sz_b) / (1e6+tN)⌉ ⟺ ubound·(1e6+tN) ≥
+          // tN·(sz_a+sz_b) — exact in integers, no float boundary lies
+          .filter((lit(1L) + least(col("pa.sz") - col("pa.rnk"),
+              col("pb.sz") - col("pb.rnk"))) * lit(1000000L + tN) >=
+            lit(tN) * (col("pa.sz") + col("pb.sz")))
+          .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
+          .filter(element_at(col("ix"), 1) === col("pa.tok"))
+          .select(pairCols(col("pa.doc"), col("pb.doc"), col("pa.sz"),
+            col("pb.sz"), size(col("ix")).cast(LongType), col("pa.n"),
+            col("pb.n")): _*)
+          .filter(keep(col("x"), col("p_a"), col("p_b")))
+        if (self && !expandCliques)
+          cross.unionByName(cliqueRows(tabs.head, "doc", "sz", keep))
+        else cross
+    }
+    val (a, b) = if (self) ("doc_a", "doc_b") else ("id_a", "id_b")
+    val uni = col("p_a") + col("p_b") - col("x")
+    val out = pairs.select(col("a").as(a), col("b").as(b),
+      col("x").as("inter"), uni.as("uni"),
+      (col("x").cast(DoubleType) / uni).as("jaccard"), col("n_a"),
+      col("n_b"))
+    if (expandCliques) out.drop("n_a", "n_b") else out
+  }
+
+  /** The self or cross input of a set-similarity kernel as ONE frame
+    * (doc, __t), `n` sides. A self call is the one-sided form: doc is
+    * the id and every row is side 0. A cross call tags each row with
+    * its side — doc = struct(s, i) — so the frequency/idf aggregates
+    * and the arm probe run once over the union (the shared total order
+    * the prefix filters require), and [[of]] splits a derived table
+    * back into one side with plain ids. */
+  private final case class SimSides(docs: DataFrame, n: Int) {
+    def of(df: DataFrame, s: Int): DataFrame =
+      if (n == 1) df
+      else df.filter(col("doc").getField("s") === s)
+        .withColumn("doc", col("doc").getField("i"))
+  }
+
+  private def simSides(left: DataFrame, right: Option[DataFrame],
+                       id: String, text: String): SimSides = right match {
+    case None =>
+      SimSides(left.select(col(id).as("doc"), col(text).as("__t")), 1)
+    case Some(r) =>
+      def tag(df: DataFrame, s: Int) = df.select(
+        struct(lit(s).as("s"), col(id).as("i")).as("doc"),
+        col(text).as("__t"))
+      SimSides(tag(left, 0).unionByName(tag(r, 1)), 2)
+  }
+
+  /** Threshold as an EXACT parts-per-million rational: float math at
+    * the boundary lies (IEEE 0.8·5 = 4.0000000000000002, whose ceil
+    * shortens the prefix below what the AllPairs lemma requires and
+    * silently drops J-exactly-t pairs), so all pruning of the set
+    * measures is integer. */
+  private def ppm(threshold: Double): Long = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1]: $threshold")
-    // threshold as an EXACT parts-per-million rational: float math at
-    // the boundary lies (IEEE 0.8·5 = 4.0000000000000002, whose ceil
-    // shortens the prefix below what the AllPairs lemma requires and
-    // silently drops J-exactly-t pairs). All pruning below is integer.
     val tN = math.round(threshold * 1000000)
     require(math.abs(tN / 1e6 - threshold) < 1e-12,
       s"threshold must have at most 6 decimal places: $threshold")
-    val toks = df.select(col(id).as("doc"),
-        explode(array_distinct(TextAnalysis.tokens(lower(col(text)))))
-          .as("tok"))
-    // checkpoint BEFORE the probe: the probe job materializes the
-    // (vocab-sized) frequency table once, and every later consumer —
-    // either arm — reads the blocks instead of re-running the
-    // token-scan aggregation (the r8 advice: the probe used to compute
-    // freq, then the prefix arm's checkpoint computed it again)
-    val freqC = toks.groupBy("tok").agg(count(lit(1)).as("gf"))
+    tN
+  }
+
+  /** The self form's pair predicate, applied before scoring: unordered
+    * measures (Jaccard, cosine) emit each pair once as a < b, ordered
+    * containment emits both orders a ≠ b. A cross form pairs all. */
+  private def pairPred(self: Boolean, ordered: Boolean, a: Column,
+                       b: Column): Column =
+    if (!self) lit(true) else if (ordered) a =!= b else a < b
+
+  /** Pair-frame columns (a, b, p_a, p_b, x, n_a, n_b). */
+  private def pairCols(a: Column, b: Column, pa: Column, pb: Column,
+                       x: Column, na: Column, nb: Column): Seq[Column] =
+    Seq(a.as("a"), b.as("b"), pa.as("p_a"), pb.as("p_b"), x.as("x"),
+      na.as("n_a"), nb.as("n_b"))
+
+  /** One self row per clique of ≥ 2 identical members (the self form's
+    * representative output): the pair of the representative with
+    * itself, scored as x = p — the same `keep` test and output op
+    * sequence as every other pair (never a literal 1.0). */
+  private def cliqueRows(tab: DataFrame, id: String, p: String,
+                         keep: (Column, Column, Column) => Column)
+      : DataFrame =
+    tab.filter(col("n") >= 2)
+      .select(pairCols(col(id), col(id), col(p), col(p), col(p), col("n"),
+        col("n")): _*)
+      .filter(keep(col("x"), col("p_a"), col("p_b")))
+
+  /** Front of the set measures (Jaccard, containment): distinct token
+    * table, the frequency table — checkpointed BEFORE the probe, so the
+    * (vocab-sized) token-frequency shuffle runs once and every later
+    * consumer, either arm, reads its blocks — and the arm probe.
+    * Returns the tokens, the frequencies and, when the dense arm
+    * dispatches, its per-side tables with their popcount score. */
+  private def setFront(in: SimSides, denseVocabMax: Long,
+                       denseSigMax: Long)
+      : (DataFrame, DataFrame, Option[(Seq[DataFrame], Column)]) = {
+    val toks = in.docs.select(col("doc"),
+      explode(array_distinct(TextAnalysis.tokens(lower(col("__t")))))
+        .as("tok"))
+    val freq = toks.groupBy("tok").agg(count(lit(1)).as("gf"))
       .localCheckpoint()
     // vocab probe: ONE bounded job over the (already-needed) frequency
     // table — limit(max+1) both decides the arm exactly and, when the
-    // dense arm wins, IS the vocabulary (the bit codebook), so no
-    // second count/collect pass. Model-sized driver action, same family
-    // as the centroid/codebook collects.
-    val vocabProbe = probeVocab(freqC, denseVocabMax)
-    vocabProbe match {
-      case Some(vocab) if vocab.nonEmpty =>
-        // The dense arm broadcasts ALL distinct signatures and sweeps
-        // the D² product — bounded by distinct-SIGNATURE count, which a
-        // small-vocab corpus can still push toward min(n, 2^V) (the r8
-        // verdict's one latent 100×-scale hazard: a forced broadcast
-        // overrides size thresholds, so unguarded this OOMs or goes
-        // quadratic with no fallback). Measure D over the (checkpointed,
-        // doc-count-sized) bitset table; take the dense arm only when
-        // the sweep AND its broadcast stay bounded, else fall through to
-        // the prefix arm — degraded on small vocabs but shuffle-based
-        // and spillable, the survivable plan.
+    // dense arm wins, IS the vocabulary (the bit codebook)
+    val dense = probeVocab(freq, denseVocabMax).filter(_.nonEmpty)
+      .flatMap { vocab =>
         val nWords = (vocab.length + 63) / 64
-        val docWords = denseDocWords(toks, denseBits(toks.sparkSession,
-            vocab), nWords)
-          .localCheckpoint()
-        val d = docWords.select(col("words")).distinct().count()
-        if (d <= denseSigMax && d * nWords * 8L <= AllPairsDenseBroadcastCap)
-          return allPairsDense(docWords, nWords, tN, expandCliques)
-      case _ => ()
-    }
-    // prefix arm: freqC feeds BOTH sides of the self-join below —
-    // already materialized by the probe above, so the token-frequency
-    // shuffle ran exactly once
-    // PPJoin shape (r8): each doc becomes ONE row carrying its whole
-    // token set as a rank-ordered array (farr); prefix tokens (the first
-    // |d| - ceil(t·|d|) + 1, i.e. the RAREST) are re-exploded as join
-    // keys with their 1-based rank ([[prefixSide]]). Three filters run
-    // inside the join projection — no candidate materialization, no
-    // .distinct(), no re-join against the token table (the r7 form paid
-    // a full exchange for the pair set plus two verify joins and a
-    // groupBy: 103.9 s at sf0.1; this form's only shuffles are the
-    // doc-array build and the prefix-token equi-join):
-    //   (a) size filter: min·1e6 ≥ t·max, else J < t regardless.
-    //   (b) positional filter: at a shared token with ranks (i, j), no
-    //       shared token can precede it in either list (both lists sort
-    //       by the same global rarest-first order), so overlap ≤
-    //       1 + min(sz_a-i, sz_b-j); prune when that misses the
-    //       required overlap ⌈t/(1+t)·(sz_a+sz_b)⌉. Dropping a pair at
-    //       its FIRST shared occurrence is safe: the bound is valid for
-    //       the whole pair there.
-    //   (c) first-shared-token dedup: a pair surfaces once per shared
-    //       prefix token; emit ONLY at the globally-smallest shared
-    //       token — head of array_intersect(farr_a, farr_b) (both
-    //       arrays sort by the same total order, Spark preserves
-    //       left-array order, and the smallest shared token is always
-    //       inside both prefixes, since prefixes hold each doc's
-    //       rank-smallest tokens).
-    // The SAME array_intersect then yields the exact intersection size
-    // (tokens are distinct within a doc), so verification is a
-    // map-side size() — the exact count never crosses an exchange.
-    val docTab = docArrTab(toks, freqC, collapse = !expandCliques)
-    val prefix = prefixExplodeTab(docTab, tN)
-    val cross = prefix.alias("pa").join(prefix.alias("pb"),
-        col("pa.tok") === col("pb.tok") && col("pa.doc") < col("pb.doc"))
-      .filter(least(col("pa.sz"), col("pb.sz")) * 1000000L >=
-        lit(tN) * greatest(col("pa.sz"), col("pb.sz")))
-      // ubound ≥ ⌈tN·(sz_a+sz_b) / (1e6+tN)⌉ ⟺ ubound·(1e6+tN) ≥
-      // tN·(sz_a+sz_b) — exact in integers, no float boundary lies
-      .filter((lit(1L) + least(col("pa.sz") - col("pa.rnk"),
-          col("pb.sz") - col("pb.rnk"))) * lit(1000000L + tN) >=
-        lit(tN) * (col("pa.sz") + col("pb.sz")))
-      .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
-      .filter(element_at(col("ix"), 1) === col("pa.tok"))
-      .withColumn("inter", size(col("ix")).cast(LongType))
-      .withColumn("uni", col("pa.sz") + col("pb.sz") - col("inter"))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("uni"))
-      .select(col("pa.doc").as("doc_a"), col("pb.doc").as("doc_b"),
-        col("inter"), col("uni"),
-        (col("inter").cast(DoubleType) / col("uni")).as("jaccard"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques) cross.drop("n_a", "n_b")
-    else {
-      // one self row per n ≥ 2 identical-set clique at J = 1
-      val intra = docTab.filter(col("n") >= 2)
-        .select(col("doc").as("doc_a"), col("doc").as("doc_b"),
-          col("sz").as("inter"), col("sz").as("uni"),
-          (col("sz").cast(DoubleType) / col("sz")).as("jaccard"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      cross.unionByName(intra)
-    }
+        val bits = denseBits(toks.sparkSession, vocab)
+        // one bitset checkpoint PER SIDE: the sides' sweep stages then
+        // read plain ids and compile to one shared class each (a side
+        // literal in the sweep plan doubles its generated classes)
+        val dws = (0 until in.n).map(s =>
+          denseDocWords(in.of(toks, s), bits, nWords).localCheckpoint())
+        denseGuard(dws, lit(0L), nWords * 8L, denseSigMax)
+          .map(_ -> denseInterCol(nWords))
+      }
+    (toks, freq, dense)
   }
-
-  /** Prefix-side builder for [[allPairsJoin]]'s per-side tables
-    * ([[allPairs]] composes [[docArrTab]] + [[prefixExplodeTab]]
-    * directly because it also needs the doc table for intra rows):
-    * ranks each doc's tokens rarest-first under `freq`'s GLOBAL (gf,
-    * tok) order, assembles the rank-ordered full token array (farr),
-    * and re-explodes the first `|d| - ceil(t·|d|) + 1` tokens as join
-    * keys; with `collapse`, identical token sets group to their
-    * representative first. Output columns:
-    * (doc, sz, farr, n, tok, rnk). */
-  private def prefixSide(toks: DataFrame, freq: DataFrame,
-                         tN: Long,
-                         collapse: Boolean = false): DataFrame =
-    prefixExplodeTab(docArrTab(toks, freq, collapse), tN)
 
   /** Per-doc rank-ordered token-array table: (doc, farr, sz, n). With
     * `collapse`, docs with IDENTICAL token sets group to their
@@ -805,8 +910,8 @@ object Dedup {
   }
 
   /** Prefix-key explosion over a [[docArrTab]] — ONE copy of the
-    * ppm-integer prefix-length math (the self- and cross-join forms
-    * must never diverge on it). Output: (doc, sz, farr, n, tok, rnk). */
+    * ppm-integer prefix-length math (every set-measure form keys its
+    * prefix side through it). Output: (doc, sz, farr, n, tok, rnk). */
   private def prefixExplodeTab(docTab: DataFrame, tN: Long): DataFrame =
     docTab
       .withColumn("plen", expr(
@@ -816,7 +921,7 @@ object Dedup {
         posexplode(expr("slice(farr, 1, plen)")).as(Seq("pos0", "tok")))
       .withColumn("rnk", (col("pos0") + 1).cast(LongType)).drop("pos0")
 
-  /** Vocabulary ceiling for [[allPairs]]'s dense-bitset plan. Below it,
+  /** Vocabulary ceiling for the family's dense-signature plan. Below it,
     * every token is frequent (prefix filtering can't prune) and bitsets
     * stay narrow (≤ 64 words); above it rare tokens exist and the
     * prefix plan regains selectivity. The dense plan additionally
@@ -826,7 +931,7 @@ object Dedup {
   val AllPairsDenseVocabMax = 4096L
 
   /** Distinct-signature ceiling for the dense arm (r8 verdict #1): the
-    * D² popcount sweep and the forced signature broadcast are bounded by
+    * D² sweep and the forced signature broadcast are bounded by
     * distinct-signature count, not vocabulary — a small-vocab corpus can
     * still carry up to min(n, 2^V) distinct sets. At the ceiling the
     * sweep is ≤ ~2·10⁹ pairs of ≤64-word popcounts (bounded minutes on
@@ -836,7 +941,7 @@ object Dedup {
   val AllPairsDenseSigMax = 65536L
 
   /** Hard byte cap on the dense arm's signature broadcast
-    * (D · ceil(V/64) · 8 bytes must stay under it — a broadcast() hint
+    * (D · signature bytes must stay under it — a broadcast() hint
     * overrides Spark's own size thresholds, so the cap is enforced at
     * dispatch). */
   val AllPairsDenseBroadcastCap: Long = 64L << 20
@@ -869,10 +974,10 @@ object Dedup {
   }
 
   /** Per-doc dense bitset build: bit_or per 64-bit word, zero-filled to
-    * `nWords` width, plus the popcount size. Single-word vocabs (≤64
-    * tokens) take pure-builtin popcounts — the higher-order
-    * aggregate/zip_with lambdas evaluate interpreted, outside
-    * whole-stage codegen; bit_count on a long stays inside. */
+    * `nWords` width (sig), plus its popcount — the set size p.
+    * Single-word vocabs (≤64 tokens) take pure-builtin popcounts — the
+    * higher-order aggregate/zip_with lambdas evaluate interpreted,
+    * outside whole-stage codegen; bit_count on a long stays inside. */
   private def denseDocWords(toks: DataFrame, bits: DataFrame,
                             nWords: Int): DataFrame =
     toks.join(broadcast(bits), Seq("tok"))
@@ -882,220 +987,121 @@ object Dedup {
       .agg(map_from_entries(collect_list(struct(col("wi"), col("wv"))))
         .as("m"))
       .select(col("doc"), transform(sequence(lit(0), lit(nWords - 1)),
-        i => coalesce(element_at(col("m"), i), lit(0L))).as("words"))
-      .withColumn("sz", if (nWords == 1)
-        expr("CAST(bit_count(words[0]) AS BIGINT)")
+        i => coalesce(element_at(col("m"), i), lit(0L))).as("sig"))
+      .withColumn("p", if (nWords == 1)
+        expr("CAST(bit_count(sig[0]) AS BIGINT)")
       else expr(
-        "aggregate(words, 0L, (acc, x) -> acc + CAST(bit_count(x) AS BIGINT))"))
+        "aggregate(sig, 0L, (acc, x) -> acc + CAST(bit_count(x) AS BIGINT))"))
 
-  /** Codegen-friendly popcount of `wa & wb` (see [[denseDocWords]]). */
+  /** Codegen-friendly popcount of `sig_a & sig_b` (see
+    * [[denseDocWords]]). */
   private def denseInterCol(nWords: Int): Column =
-    if (nWords == 1) expr("CAST(bit_count(wa[0] & wb[0]) AS BIGINT)")
-    else expr("aggregate(zip_with(wa, wb, " +
+    if (nWords == 1) expr("CAST(bit_count(sig_a[0] & sig_b[0]) AS BIGINT)")
+    else expr("aggregate(zip_with(sig_a, sig_b, " +
       "(x, y) -> CAST(bit_count(x & y) AS BIGINT)), 0L, " +
       "(acc, v) -> acc + v)")
 
-  /** Dense-bitset exact Jaccard self-join — the small-vocabulary arm of
-    * [[allPairs]] (see its scaladoc for when and why). `docWords` is the
-    * per-doc bitset table ([[denseDocWords]], built and
-    * signature-guarded at the dispatch site), `tN` the threshold in
-    * ppm. */
-  private def allPairsDense(docWords: DataFrame, nWords: Int,
-                            tN: Long,
-                            expandCliques: Boolean = true): DataFrame = {
-    // collapse to distinct signatures by ONE aggregate on the bitset
-    // itself (r18 — the former per-doc min-window + second aggregation
-    // paid an array-keyed exchange + sort for the same table); sid =
-    // smallest member (unique), sz a pure function of words so first()
-    // is exact
-    val sigs = docWords.groupBy(col("words"))
-      .agg(min(col("doc")).as("sid"), first(col("sz")).as("sz"),
-        count(lit(1)).as("n"))
-    // D² popcount sweep under a broadcast nested-loop join: distinct
-    // signatures only, size-filtered before the popcounts
-    val sigPairs = sigs.select(col("sid").as("sid_a"),
-        col("words").as("wa"), col("sz").as("sz_a"), col("n").as("n_a"))
-      .join(broadcast(sigs.select(col("sid").as("sid_b"),
-        col("words").as("wb"), col("sz").as("sz_b"), col("n").as("n_b"))),
-        col("sid_a") < col("sid_b"))
-      .filter(least(col("sz_a"), col("sz_b")) * 1000000L >=
-        lit(tN) * greatest(col("sz_a"), col("sz_b")))
-      .withColumn("inter", denseInterCol(nWords))
-      .withColumn("uni", col("sz_a") + col("sz_b") - col("inter"))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("uni"))
-      .select(col("sid_a"), col("sid_b"), col("inter"), col("uni"),
-        col("n_a"), col("n_b"))
-    if (!expandCliques) {
-      // representative form: signature-level rows only — the
-      // member-expansion joins never run
-      val crossR = sigPairs.select(col("sid_a").as("doc_a"),
-        col("sid_b").as("doc_b"), col("inter"), col("uni"),
-        (col("inter").cast(DoubleType) / col("uni")).as("jaccard"),
-        col("n_a"), col("n_b"))
-      val intraR = sigs.filter(col("n") >= 2)
-        .select(col("sid").as("doc_a"), col("sid").as("doc_b"),
-          col("sz").as("inter"), col("sz").as("uni"),
-          (col("sz").cast(DoubleType) / col("sz")).as("jaccard"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      return crossR.unionByName(intraR)
-    }
-    // expand qualifying signature pairs back to doc pairs (output-bound)
-    // via one join against the signature table (the window's per-doc
-    // sid column, without the window)
-    val members = docWords.select(col("doc"), col("words"))
-      .join(sigs.select(col("words"), col("sid"), col("sz").as("__ssz")),
-        Seq("words"))
-      .select(col("sid"), col("doc"), col("__ssz").as("sz"))
-    val cross = sigPairs
-      .join(members.select(col("sid").as("sid_a"), col("doc").as("da")),
-        Seq("sid_a"))
-      .join(members.select(col("sid").as("sid_b"), col("doc").as("db")),
-        Seq("sid_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        col("inter"), col("uni"))
-    // identical-set pairs: J = 1 ≥ any valid threshold by definition
-    val intra = members.alias("x").join(members.alias("y"),
-        col("x.sid") === col("y.sid") && col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
-        col("x.sz").as("inter"), col("x.sz").as("uni"))
-    cross.unionByName(intra)
-      .withColumn("jaccard", col("inter").cast(DoubleType) / col("uni"))
-      .select("doc_a", "doc_b", "inter", "uni", "jaccard")
+  /** Dense-arm guard, shared by both fronts: ONE probe job over the
+    * checkpointed per-side dense tables `dws` (doc, sig, p, …) measures
+    * each side's distinct-signature count D and the max of `wmx`. The dense
+    * arm runs only when every side's D ≤ `denseSigMax`, `wmx` fits an
+    * int (the weighted front's overflow guard; the set front passes 0)
+    * and the broadcast (right or only) side's D · `sigBytes` ≤
+    * [[AllPairsDenseBroadcastCap]] — the sweep is D_a × D_b and a
+    * forced broadcast overrides size thresholds, so unguarded a
+    * small-vocab corpus with many distinct sets would OOM or go
+    * quadratic with no fallback. Returns the per-side (doc, sig, p)
+    * tables, or None for the prefix arm — degraded on small vocabs but
+    * shuffle-based and spillable, the survivable plan. */
+  private def denseGuard(dws: Seq[DataFrame], wmx: Column,
+                         sigBytes: Long, denseSigMax: Long)
+      : Option[Seq[DataFrame]] = {
+    val pr = dws.zipWithIndex
+      .map { case (dw, s) => dw.select(lit(s).as("s"), col("sig"),
+        wmx.as("wmx")) }
+      .reduce(_ unionByName _)
+      .groupBy("s").agg(countDistinct(col("sig")), max(col("wmx")))
+      .collect().map(r => r.getInt(0) ->
+        ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
+    val ds = dws.indices.map(pr.getOrElse(_, (0L, 0L)))
+    if (ds.forall { case (d, w) => d <= denseSigMax && w <= Int.MaxValue } &&
+        ds.last._1 * sigBytes <= AllPairsDenseBroadcastCap)
+      Some(dws.map(_.select("doc", "sig", "p")))
+    else None
   }
 
-  /** EXACT cross-corpus set-similarity JOIN: every (left, right) pair
-    * whose word-token sets have Jaccard ≥ `threshold` — the exact
-    * complement to [[fuzzyJoin]] (LSH, probabilistic recall), for when
-    * the match set must be certified complete: eval-set decontamination
-    * with a similarity bar rather than exact n-gram hits, licensing
-    * audits of a new crawl against an owned corpus, cross-snapshot
-    * reconciliation. Same adaptive dispatch as [[allPairs]] (see its
-    * scaladoc): the global token-frequency order — and hence the
-    * prefixes the AllPairs lemma reasons about — is computed over the
-    * UNION of both corpora, which the lemma requires (a shared total
-    * order); the dense arm keeps per-side distinct-signature collapse
-    * and sweeps the D_L × D_R product.
+  /** The family's ONE dense signature sweep (every measure's
+    * small-vocabulary arm). `sides` holds one (self) or two (cross)
+    * per-doc tables (doc, sig, p) from [[denseGuard]]; `score` is the
+    * exact integer score over (sig_a, sig_b) — a popcount or a dot.
     *
-    * Both inputs use the same `id`/`text` column names (the
-    * [[fuzzyJoin]] convention). Output: (id_a from left, id_b from
-    * right, inter, uni, jaccard) — ids are independent namespaces, no
-    * ordering constraint between them. With `expandCliques = false`
-    * each SIDE collapses to its distinct token sets (reps + clique
-    * sizes as n_a/n_b); identical cross-side sets meet as a regular
-    * J = 1 candidate, so there are no self rows. '''At scale set
-    * `expandCliques = false`''' — uniform family guidance, see
-    * [[allPairs]]. */
-  def allPairsJoin(left: DataFrame, right: DataFrame, id: String,
-                   text: String, threshold: Double,
-                   denseVocabMax: Long = AllPairsDenseVocabMax,
-                   denseSigMax: Long = AllPairsDenseSigMax,
-                   expandCliques: Boolean = true)
-      : DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1]: $threshold")
-    val tN = math.round(threshold * 1000000)
-    require(math.abs(tN / 1e6 - threshold) < 1e-12,
-      s"threshold must have at most 6 decimal places: $threshold")
-    def toksOf(df: DataFrame) = df.select(col(id).as("doc"),
-      explode(array_distinct(TextAnalysis.tokens(lower(col(text)))))
-        .as("tok"))
-    val toksL = toksOf(left)
-    val toksR = toksOf(right)
-    // checkpoint before the probe — same rationale as [[allPairs]]
-    val freqC = toksL.unionByName(toksR)
-      .groupBy("tok").agg(count(lit(1)).as("gf"))
-      .localCheckpoint()
-    probeVocab(freqC, denseVocabMax) match {
-      case Some(vocab) if vocab.nonEmpty =>
-        // same distinct-signature guard as [[allPairs]], per side: the
-        // sweep is D_L × D_R and the broadcast carries the RIGHT side's
-        // signatures
-        val nWords = (vocab.length + 63) / 64
-        val bits = denseBits(left.sparkSession, vocab)
-        val dwL = denseDocWords(toksL, bits, nWords).localCheckpoint()
-        val dwR = denseDocWords(toksR, bits, nWords).localCheckpoint()
-        val dL = dwL.select(col("words")).distinct().count()
-        val dR = dwR.select(col("words")).distinct().count()
-        if (dL <= denseSigMax && dR <= denseSigMax &&
-            dR * nWords * 8L <= AllPairsDenseBroadcastCap)
-          return allPairsJoinDense(dwL, dwR, nWords, tN, expandCliques)
-      case _ => ()
+    *  1. Collapse: ONE aggregate on the signature itself, sid = smallest
+    *     member (unique), p a pure function of sig so first() is exact.
+    *  2. Sweep: the D_a × D_b signature pairs under a broadcast
+    *     nested-loop join (the self form behind [[pairPred]]), the
+    *     cheap size `bound` before the score, then the exact `keep`.
+    *  3. Output: with `expand`, qualifying signature pairs expand back
+    *     to member docs (output-bound) and the self form adds the
+    *     member pairs inside each clique; without it, signature-level
+    *     rows (representative, clique size) and, in the self form, one
+    *     [[cliqueRows]] row per clique of ≥ 2 — the member-expansion
+    *     joins never run.
+    *
+    * Output: the pair frame (a, b, p_a, p_b, x, n_a, n_b); expanded
+    * rows carry n = 1. */
+  private def denseSweep(sides: Seq[DataFrame], score: Column,
+                         ordered: Boolean,
+                         bound: (Column, Column) => Column,
+                         keep: (Column, Column, Column) => Column,
+                         expand: Boolean): DataFrame = {
+    val self = sides.size == 1
+    val sigs = sides.map(_.groupBy(col("sig"))
+      .agg(min(col("doc")).as("sid"), first(col("p")).as("p"),
+        count(lit(1)).as("n")))
+    def sideOf(s: DataFrame, k: String) = s.select(col("sid").as(s"sid_$k"),
+      col("sig").as(s"sig_$k"), col("p").as(s"p_$k"), col("n").as(s"n_$k"))
+    val sigPairs = sideOf(sigs.head, "a")
+      .join(broadcast(sideOf(sigs.last, "b")),
+        pairPred(self, ordered, col("sid_a"), col("sid_b")))
+      .filter(bound(col("p_a"), col("p_b")))
+      .withColumn("x", score)
+      .filter(keep(col("x"), col("p_a"), col("p_b")))
+      .select(pairCols(col("sid_a"), col("sid_b"), col("p_a"), col("p_b"),
+        col("x"), col("n_a"), col("n_b")): _*)
+    if (!expand)
+      return if (self) sigPairs.unionByName(cliqueRows(sigs.head, "sid",
+        "p", keep)) else sigPairs
+    // (sid, doc, p) per member via one join against the signature table
+    val members = sides.zip(sigs).map { case (dw, s) =>
+      dw.select(col("doc"), col("sig"))
+        .join(s.select(col("sig"), col("sid"), col("p")), Seq("sig"))
+        .select(col("sid"), col("doc"), col("p"))
     }
-    // prefix arm: the shared-order frequency table feeds both sides —
-    // already materialized by the probe's checkpoint
-    // prefix arm: per-side [[prefixSide]] under the SHARED rarest-first
-    // order; filters identical to the self-join, minus the doc_a <
-    // doc_b constraint (sides are distinct namespaces). With
-    // expandCliques=false each side collapses to distinct token sets
-    // first; identical cross-side sets meet as a regular J = 1
-    // candidate (reps differ across namespaces), so no intra rows.
-    val cross = prefixSide(toksL, freqC, tN, collapse = !expandCliques)
-      .alias("pa")
-      .join(prefixSide(toksR, freqC, tN, collapse = !expandCliques)
-        .alias("pb"),
-        col("pa.tok") === col("pb.tok"))
-      .filter(least(col("pa.sz"), col("pb.sz")) * 1000000L >=
-        lit(tN) * greatest(col("pa.sz"), col("pb.sz")))
-      .filter((lit(1L) + least(col("pa.sz") - col("pa.rnk"),
-          col("pb.sz") - col("pb.rnk"))) * lit(1000000L + tN) >=
-        lit(tN) * (col("pa.sz") + col("pb.sz")))
-      .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
-      .filter(element_at(col("ix"), 1) === col("pa.tok"))
-      .withColumn("inter", size(col("ix")).cast(LongType))
-      .withColumn("uni", col("pa.sz") + col("pb.sz") - col("inter"))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("uni"))
-      .select(col("pa.doc").as("id_a"), col("pb.doc").as("id_b"),
-        col("inter"), col("uni"),
-        (col("inter").cast(DoubleType) / col("uni")).as("jaccard"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques) cross.drop("n_a", "n_b") else cross
-  }
-
-  /** Dense-bitset arm of [[allPairsJoin]]: per-side signature collapse,
-    * D_L × D_R popcount sweep, output-bound expansion. `dwL`/`dwR` are
-    * the per-side bitset tables ([[denseDocWords]], built and
-    * signature-guarded at the dispatch site). */
-  private def allPairsJoinDense(dwL: DataFrame, dwR: DataFrame,
-                                nWords: Int, tN: Long,
-                                expandCliques: Boolean = true): DataFrame = {
-    // signature collapse by one aggregate on the bitset (the
-    // [[allPairsDense]] r18 form — no per-doc window)
-    def sigs(dw: DataFrame) = dw.groupBy(col("words"))
-      .agg(min(col("doc")).as("sid"), first(col("sz")).as("sz"),
-        count(lit(1)).as("n"))
-    val sigsL = sigs(dwL)
-    val sigsR = sigs(dwR)
-    def members(dw: DataFrame, s: DataFrame) = dw
-      .select(col("doc"), col("words"))
-      .join(s.select(col("words"), col("sid")), Seq("words"))
-      .select(col("sid"), col("doc"))
-    val sigPairs = sigsL.select(col("sid").as("sid_a"),
-        col("words").as("wa"), col("sz").as("sz_a"), col("n").as("n_a"))
-      .crossJoin(broadcast(sigsR.select(col("sid").as("sid_b"),
-        col("words").as("wb"), col("sz").as("sz_b"), col("n").as("n_b"))))
-      .filter(least(col("sz_a"), col("sz_b")) * 1000000L >=
-        lit(tN) * greatest(col("sz_a"), col("sz_b")))
-      .withColumn("inter", denseInterCol(nWords))
-      .withColumn("uni", col("sz_a") + col("sz_b") - col("inter"))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("uni"))
-      .select(col("sid_a"), col("sid_b"), col("inter"), col("uni"),
-        col("n_a"), col("n_b"))
-    if (!expandCliques)
-      return sigPairs
-        .select(col("sid_a").as("id_a"), col("sid_b").as("id_b"),
-          col("inter"), col("uni"),
-          (col("inter").cast(DoubleType) / col("uni")).as("jaccard"),
-          col("n_a"), col("n_b"))
-    sigPairs
-      .join(members(dwL, sigsL)
-        .select(col("sid").as("sid_a"), col("doc").as("id_a")),
-        Seq("sid_a"))
-      .join(members(dwR, sigsR)
-        .select(col("sid").as("sid_b"), col("doc").as("id_b")),
-        Seq("sid_b"))
-      .withColumn("jaccard", col("inter").cast(DoubleType) / col("uni"))
-      .select("id_a", "id_b", "inter", "uni", "jaccard")
+    val crossed = sigPairs
+      .join(members.head.select(col("sid").as("a"), col("doc").as("da")),
+        Seq("a"))
+      .join(members.last.select(col("sid").as("b"), col("doc").as("db")),
+        Seq("b"))
+    val one = lit(1L)
+    if (!self)
+      return crossed.select(pairCols(col("da"), col("db"), col("p_a"),
+        col("p_b"), col("x"), one, one): _*)
+    // unordered self form: members of a < b signatures can pair either
+    // way round — emit a < b, the payloads follow the id swap
+    val sw = if (ordered) lit(false) else col("da") > col("db")
+    def pick(x: String, y: String) = when(sw, col(y)).otherwise(col(x))
+    val cross = crossed.select(pairCols(pick("da", "db"), pick("db", "da"),
+      pick("p_a", "p_b"), pick("p_b", "p_a"), col("x"), one, one): _*)
+    // identical-signature member pairs: x = p, the clique's own score
+    // (members stays one subtree in all four joins, so its exchange is
+    // reused)
+    val m = members.head
+    val intra = m.alias("u").join(m.alias("v"), col("u.sid") === col("v.sid")
+        && pairPred(self, ordered, col("u.doc"), col("v.doc")))
+      .select(pairCols(col("u.doc"), col("v.doc"), col("u.p"), col("v.p"),
+        col("u.p"), one, one): _*)
+      .filter(keep(col("x"), col("p_a"), col("p_b")))
+    cross.unionByName(intra)
   }
 
   // -------------------------------------------------------------------
@@ -2401,33 +2407,86 @@ object Dedup {
     * prefix holds the same few tokens, so the equi-join approaches n²
     * rows each CARRYING its doc's full weight map. The same cure
     * applies, weighted: vocab ≤ `denseVocabMax` → per-doc DENSE int
-    * weight vectors, docs collapse to DISTINCT vectors, and the D²
-    * sweep runs the codegen'd [[graft.functions.DotProduct]] loop
-    * under a broadcast nested-loop join — guarded, as [[allPairs]]'s
-    * arm is, on a measured distinct-signature count and a broadcast
-    * byte cap, falling back to the prefix arm above either. (The
-    * dense table is doc-count × V ints and is localCheckpointed
-    * before the D probe — the same materialization shape as
-    * [[allPairs]]'s bitset table.) Output: (doc_a, doc_b, dot, n2_a,
-    * n2_b, cos) with doc_a < doc_b, cos rounded to 6 places. With
-    * `expandCliques = false`, docs with identical weighted-token
-    * MULTISETS (same tokens and tf under the shared corpus idf)
-    * collapse to (representative, clique size) before pairing: one
-    * row per qualifying distinct-vector pair with (n_a, n_b)
-    * appended, plus one self row (doc_a == doc_b) per ≥ 2-member
-    * clique. '''At scale set `expandCliques = false`''' — uniform
+    * weight vectors, and the family's one signature sweep
+    * ([[denseSweep]]) collapses docs to DISTINCT vectors and runs the
+    * codegen'd [[graft.functions.DotProduct]] loop under a broadcast
+    * nested-loop join — guarded, as [[allPairs]]'s arm is, on a
+    * measured distinct-signature count and a broadcast byte cap, plus
+    * an int-overflow guard on the weights, falling back to the prefix
+    * arm above any of them. (The dense table is doc-count × V ints and
+    * is localCheckpointed before the guard probe — the same
+    * materialization shape as [[allPairs]]'s bitset table.) Output:
+    * (doc_a, doc_b, dot, n2_a, n2_b, cos) with doc_a < doc_b, cos
+    * rounded to 6 places. With `expandCliques = false`, docs with
+    * identical weighted-token MULTISETS (same tokens and tf under the
+    * shared corpus idf) collapse to (representative, clique size)
+    * before pairing: one row per qualifying distinct-vector pair with
+    * (n_a, n_b) appended, plus one self row (doc_a == doc_b) per ≥
+    * 2-member clique, its cos computed and filtered by the same op
+    * sequence as every pair (never a literal 1.0 — at n2 beyond 2²⁶
+    * the product rounds and n2/√(n2·n2) can dip below an exact-1.0
+    * threshold). '''At scale set `expandCliques = false`''' — uniform
     * family guidance, see [[allPairs]]. */
   def tfidfPairs(df: DataFrame, id: String, text: String,
                  threshold: Double,
                  denseVocabMax: Long = AllPairsDenseVocabMax,
                  denseSigMax: Long = AllPairsDenseSigMax,
-                 expandCliques: Boolean = true): DataFrame = {
+                 expandCliques: Boolean = true): DataFrame =
+    cosineKernel(simSides(df, None, id, text), threshold, denseVocabMax,
+      denseSigMax, expandCliques)
+
+  /** EXACT cross-corpus weighted-cosine JOIN — [[tfidfPairs]]'s
+    * two-sided form, completing the family symmetry with
+    * [[allPairsJoin]] (sets) and [[fuzzyJoin]] (LSH): every (left,
+    * right) pair with tf·idf cosine ≥ `threshold`. Use cases mirror
+    * the Jaccard join's (decontamination with a weighted bar,
+    * cross-crawl audit) when stopword overlap must not count toward
+    * the similarity the way raw Jaccard counts it.
+    *
+    * One similarity space for both sides: document frequencies, N,
+    * and hence the integer idf quantization are computed over the
+    * UNION of both corpora (the shared-total-order requirement, same
+    * as [[allPairsJoin]]'s union frequency table), so a string that
+    * appears in both corpora has ONE weight. The sides travel as one
+    * tagged frame ([[SimSides]]), so the count, the frequency
+    * checkpoint, the dense checkpoint and the guard probe each run
+    * once for both. Same kernel and dispatch as [[tfidfPairs]]: small
+    * shared vocab → per-side dense int vectors, per-side
+    * distinct-signature collapse, D_L × D_R sweep broadcasting the
+    * RIGHT side; otherwise the maxweight prefix arm with the
+    * corpus-max normalized weights taken over BOTH sides. Output:
+    * (id_a from left, id_b from right, dot, n2_a, n2_b, cos). With
+    * `expandCliques = false` each side collapses to distinct
+    * weighted-token multisets (reps + n_a/n_b); no self rows. '''At
+    * scale set `expandCliques = false`''' — uniform family guidance,
+    * see [[allPairs]]. */
+  def tfidfJoin(left: DataFrame, right: DataFrame, id: String,
+                text: String, threshold: Double,
+                denseVocabMax: Long = AllPairsDenseVocabMax,
+                denseSigMax: Long = AllPairsDenseSigMax,
+                expandCliques: Boolean = true): DataFrame =
+    cosineKernel(simSides(left, Some(right), id, text), threshold,
+      denseVocabMax, denseSigMax, expandCliques)
+
+  /** The tf-idf cosine kernel behind [[tfidfPairs]] and [[tfidfJoin]]:
+    * the weighted front (count, tf, document frequency, w, n2, the
+    * dense `wvec` table and its guard probe), then [[denseSweep]] or
+    * the weighted prefix join. */
+  private def cosineKernel(in: SimSides, threshold: Double,
+                           denseVocabMax: Long, denseSigMax: Long,
+                           expandCliques: Boolean): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0,1]: $threshold")
-    val n = df.count()
-    val toks = df.select(col(id).as("doc"),
-      explode(TextAnalysis.tokens(lower(col(text)))).as("tok"))
-    val tf = toks.groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
+    val self = in.n == 1
+    val n = in.docs.count()
+    val tf0 = in.docs.select(col("doc"),
+        explode(TextAnalysis.tokens(lower(col("__t")))).as("tok"))
+      .groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
+    // a cross call stages the union's tf: its frequency, dense and guard
+    // jobs would each re-run the union's token explode and aggregation,
+    // measured as most of dd_tfidf_join's construction time; the self
+    // form keeps its three-job budget
+    val tf = if (self) tf0 else tf0.localCheckpoint()
     // vocab-sized; checkpointed before the probe job so the document-
     // frequency aggregation runs once, not once per consumer
     val dfc = tf.groupBy("tok").agg(count(lit(1)).as("dfd"))
@@ -2437,180 +2496,89 @@ object Dedup {
         // `div`, not `/`: Spark's Divide on longs is DOUBLE division
         (col("tf") * (lit(1L) +
           floorLog2(expr(s"CAST($n AS BIGINT) div dfd")))).as("w"))
-    // wmx rides along for the dense arm's overflow guard below; the
-    // prefix arm ignores it
+    // wmx rides along for the dense arm's overflow guard
     val n2 = w.groupBy("doc").agg(sum(col("w") * col("w")).as("n2"),
       max(col("w")).as("wmx"))
-    probeVocab(dfc, denseVocabMax) match {
-      case Some(vocab) if vocab.nonEmpty =>
+    // every cosine — pairs and clique rows, both arms — is this one op
+    // sequence over the exact integers
+    def cos(x: Column, pa: Column, pb: Column) = x.cast(DoubleType) /
+      sqrt(pa.cast(DoubleType) * pb.cast(DoubleType))
+    def keep(x: Column, pa: Column, pb: Column) = cos(x, pa, pb) >= threshold
+    val dense = probeVocab(dfc, denseVocabMax).filter(_.nonEmpty)
+      .flatMap { vocab =>
+        // w is a LONG (tf·idf of a pathological one-token doc can exceed
+        // 2³¹) and the IntegerType cast below would wrap SILENTLY,
+        // corrupting dots while n2 stays right: the guard's wmx check
+        // sends such a corpus to the prefix arm, whose merge kernel
+        // stays in long arithmetic
         val dw = w
-          .join(broadcast(denseBits(df.sparkSession, vocab)), Seq("tok"))
+          .join(broadcast(denseBits(w.sparkSession, vocab)), Seq("tok"))
           .groupBy("doc").agg(map_from_entries(collect_list(
             struct(col("bit"), col("w").cast(IntegerType)))).as("m"))
           .join(n2, Seq("doc"))
-          .select(col("doc"), col("n2"), col("wmx"),
+          .select(col("doc"), col("n2").as("p"), col("wmx"),
             transform(sequence(lit(0), lit(vocab.length - 1)),
-              i => coalesce(element_at(col("m"), i), lit(0))).as("wvec"))
+              i => coalesce(element_at(col("m"), i), lit(0))).as("sig"))
           .localCheckpoint()
-        // ONE probe job over the checkpointed table decides both dense
-        // guards: the distinct-signature count AND the int-overflow
-        // guard — w is a LONG (tf·idf of a pathological one-token doc
-        // can exceed 2³¹), and the IntegerType cast above would wrap
-        // SILENTLY, corrupting dots while n2 (computed from longs)
-        // stays right. Such a corpus falls back to the prefix arm,
-        // whose merge kernel stays in long arithmetic.
-        val pr = dw.agg(countDistinct(col("wvec")).as("d"),
-          max(col("wmx")).as("wmx")).first()
-        val d = pr.getLong(0)
-        val wmax = if (pr.isNullAt(1)) 0L else pr.getLong(1)
-        if (d <= denseSigMax && wmax <= Int.MaxValue &&
-            d * vocab.length * 4L <= AllPairsDenseBroadcastCap)
-          return tfidfPairsDense(dw.drop("wmx"), threshold, expandCliques)
-      case _ => ()
+        denseGuard((0 until in.n).map(in.of(dw, _)), col("wmx"),
+          vocab.length * 4L, denseSigMax)
+      }
+    val pairs = dense match {
+      case Some(sides) =>
+        // the dot is exact in double below 2⁵³; x carries it as the long
+        denseSweep(sides, graft.functions.DotProduct(col("sig_a"),
+            col("sig_b")).cast(LongType), ordered = false,
+          (_, _) => lit(true), keep, expandCliques)
+      case None =>
+        val wn = w.join(n2.drop("wmx"), Seq("doc"))
+          .withColumn("wh", col("w").cast(DoubleType) /
+            sqrt(col("n2").cast(DoubleType)))
+        // corpus-max normalized weights over every side keep the suffix
+        // bound valid for cross-side partners
+        val mx = wn.groupBy("tok").agg(max(col("wh")).as("mx"))
+        // conservative float slack: prune only when the bound is clearly
+        // below t — a ulp of window-sum noise must never drop a true pair
+        val tSlack = threshold * (1 - 1e-9)
+        // rank and collapse PER SIDE (a left doc must never collapse
+        // into a right rep) under the shared order
+        val tabs = (0 until in.n).map(s => weightedDocTab(
+          weightedRanked(in.of(wn, s), mx), tSlack,
+          collapse = !expandCliques))
+        val pre = tabs.map(weightedPrefixTab)
+        val cross = pre.head.alias("pa").join(pre.last.alias("pb"),
+            col("pa.hk") === col("pb.hk") &&
+              pairPred(self, ordered = false, col("pa.doc"), col("pb.doc")))
+          // positional filter (Cauchy-Schwarz): at a shared token with
+          // ranks (i, j), every shared token sits at rank ≥ i in a and
+          // ≥ j in b, so dot ≤ ‖â suffix(i)‖·‖b̂ suffix(j)‖. Valid as a
+          // PAIR filter at the globally-first shared row (where i, j are
+          // minimal); earlier rows it may drop were doomed to the dedup
+          // filter anyway. Two array reads — runs BEFORE the merge
+          // verify, which is the point.
+          .filter(element_at(col("pa.rbn"), col("pa.rnk")) *
+            element_at(col("pb.rbn"), col("pb.rnk")) >= tSlack)
+          // fused first-shared dedup + exact integer dot: one codegen'd
+          // two-pointer merge over the rank-sorted arrays (null = this
+          // candidate row is not the pair's globally-first shared token,
+          // checked by BOTH sides' ordinals — the b-ordinal is what
+          // makes a 64-bit hash collision reject instead of
+          // double-emitting)
+          .withColumn("dot", graft.functions.PrefixMergeDot(
+            col("pa.earr"), col("pb.earr"), col("pa.rnk"), col("pb.rnk")))
+          .filter(col("dot").isNotNull)
+          .select(pairCols(col("pa.doc"), col("pb.doc"), col("pa.n2"),
+            col("pb.n2"), col("dot"), col("pa.n"), col("pb.n")): _*)
+          .filter(keep(col("x"), col("p_a"), col("p_b")))
+        if (self && !expandCliques)
+          cross.unionByName(cliqueRows(tabs.head, "doc", "n2", keep))
+        else cross
     }
-    val wn = w.join(n2.drop("wmx"), Seq("doc"))
-      .withColumn("wh", col("w").cast(DoubleType) /
-        sqrt(col("n2").cast(DoubleType)))
-    val mx = wn.groupBy("tok").agg(max(col("wh")).as("mx"))
-    val tl = weightedRanked(wn, mx)
-    // conservative float slack: prune only when the bound is clearly
-    // below t — a ulp of window-sum noise must never drop a true pair
-    val tSlack = threshold * (1 - 1e-9)
-    val docTab = weightedDocTab(tl, tSlack, collapse = !expandCliques)
-    val prefix = weightedPrefixTab(docTab)
-    val cross = prefix.alias("pa").join(prefix.alias("pb"),
-        col("pa.hk") === col("pb.hk") && col("pa.doc") < col("pb.doc"))
-      // positional filter (Cauchy-Schwarz): at a shared token with
-      // ranks (i, j), every shared token sits at rank ≥ i in a and
-      // ≥ j in b, so dot ≤ ‖â suffix(i)‖·‖b̂ suffix(j)‖. Valid as a
-      // PAIR filter at the globally-first shared row (where i, j are
-      // minimal); earlier rows it may drop were doomed to the dedup
-      // filter anyway. Two array reads — runs BEFORE the merge verify,
-      // which is the point.
-      .filter(element_at(col("pa.rbn"), col("pa.rnk")) *
-        element_at(col("pb.rbn"), col("pb.rnk")) >= tSlack)
-      // fused first-shared dedup + exact integer dot: one codegen'd
-      // two-pointer merge over the rank-sorted arrays (null = this
-      // candidate row is not the pair's globally-first shared token,
-      // checked by BOTH sides' ordinals — the b-ordinal is what makes
-      // a 64-bit hash collision reject instead of double-emitting).
-      // Replaces array_intersect + element_at + an interpreted
-      // aggregate() whose per-element map probes were the weighted
-      // arm's residual 2.5× vs the Jaccard arm (r9 verdict #3).
-      .withColumn("dot", graft.functions.PrefixMergeDot(
-        col("pa.earr"), col("pb.earr"), col("pa.rnk"), col("pb.rnk")))
-      .filter(col("dot").isNotNull)
-      .withColumn("cos", col("dot").cast(DoubleType) /
-        sqrt(col("pa.n2").cast(DoubleType) * col("pb.n2").cast(DoubleType)))
-      .filter(col("cos") >= threshold)
-      .select(col("pa.doc").as("doc_a"), col("pb.doc").as("doc_b"),
-        col("dot"), col("pa.n2").as("n2_a"), col("pb.n2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques) cross.drop("n_a", "n_b")
-    else {
-      // self rows: dot = n2 by definition; cos computed AND filtered by
-      // the SAME op sequence as everywhere (never a literal 1.0 — at n2
-      // beyond 2²⁶ the product rounds and n2/√(n2·n2) can dip below an
-      // exact-1.0 threshold; both arms must agree on that edge)
-      val intra = docTab.filter(col("n") >= 2)
-        .withColumn("cosx", col("n2").cast(DoubleType) /
-          sqrt(col("n2").cast(DoubleType) * col("n2").cast(DoubleType)))
-        .filter(col("cosx") >= threshold)
-        .select(col("doc").as("doc_a"), col("doc").as("doc_b"),
-          col("n2").as("dot"), col("n2").as("n2_a"), col("n2").as("n2_b"),
-          graft.functions.Round6(col("cosx")).as("cos"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      cross.unionByName(intra)
-    }
-  }
-
-  /** Dense-vector arm of [[tfidfPairs]] (see its scaladoc). `dw` is
-    * (doc, n2, wvec) with wvec the dense int weight vector, built and
-    * signature-guarded at the dispatch site. Every cosine — including
-    * the identical-vector intra-signature pairs — is computed by the
-    * same `dot / sqrt(double(n2_a)·double(n2_b))` op sequence, never
-    * shortcut to a literal 1.0: at n2 beyond 2²⁶ the product rounds,
-    * and an engine comparing its own rounded value must see ours. */
-  private def tfidfPairsDense(dw: DataFrame,
-                              threshold: Double,
-                              expandCliques: Boolean = true): DataFrame = {
-    // signature collapse by ONE aggregate on the vector itself (r18):
-    // the former per-doc window (min(doc) over partitionBy(wvec)) +
-    // groupBy(sid) paid an array-keyed exchange + sort + a second
-    // aggregation for the same (sid, wvec, n2, n) table; n2 is a pure
-    // function of wvec, so first() is exact
-    val sigs = dw.groupBy(col("wvec"))
-      .agg(min(col("doc")).as("sid"), first(col("n2")).as("n2"),
-        count(lit(1)).as("n"))
-    def cosCol = col("dotd") /
-      sqrt(col("na2").cast(DoubleType) * col("nb2").cast(DoubleType))
-    val sigPairs = sigs.select(col("sid").as("sid_a"),
-        col("wvec").as("wa"), col("n2").as("na2"), col("n").as("n_a"))
-      .join(broadcast(sigs.select(col("sid").as("sid_b"),
-        col("wvec").as("wb"), col("n2").as("nb2"), col("n").as("n_b"))),
-        col("sid_a") < col("sid_b"))
-      .withColumn("dotd", graft.functions.DotProduct(col("wa"), col("wb")))
-      .withColumn("cos", cosCol)
-      .filter(col("cos") >= threshold)
-      .select(col("sid_a"), col("sid_b"), col("dotd"),
-        col("na2"), col("nb2"), col("cos"), col("n_a"), col("n_b"))
-    if (!expandCliques) {
-      val crossR = sigPairs.select(col("sid_a").as("doc_a"),
-        col("sid_b").as("doc_b"), col("dotd").cast(LongType).as("dot"),
-        col("na2").as("n2_a"), col("nb2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"), col("n_a"), col("n_b"))
-      // identical-vector cliques: dot = n2 — emitted as the EXACT
-      // long (the double dotd is only for cos: beyond 2⁵³ the
-      // double round-trip would diverge from the prefix arm's exact
-      // intra dot, and the exact value is already in the row)
-      val intraR = sigs.filter(col("n") >= 2)
-        .select(col("sid"), col("n2").cast(DoubleType).as("dotd"),
-          col("n2").as("na2"), col("n2").as("nb2"), col("n"))
-        .withColumn("cos", cosCol)
-        .filter(col("cos") >= threshold)
-        .select(col("sid").as("doc_a"), col("sid").as("doc_b"),
-          col("na2").as("dot"),
-          col("na2").as("n2_a"), col("nb2").as("n2_b"),
-          graft.functions.Round6(col("cos")).as("cos"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      return crossR.unionByName(intraR)
-    }
-    // (sid, doc, n2) per member via one join against the signature
-    // table — the window's per-doc sid column, without the window
-    val members = dw.select(col("doc"), col("wvec"))
-      .join(sigs.select(col("wvec"), col("sid"), col("n2").as("__sn2")),
-        Seq("wvec"))
-      .select(col("sid"), col("doc"), col("__sn2").as("n2"))
-    val cross = sigPairs
-      .join(members.select(col("sid").as("sid_a"), col("doc").as("da")),
-        Seq("sid_a"))
-      .join(members.select(col("sid").as("sid_b"), col("doc").as("db")),
-        Seq("sid_b"))
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"),
-        col("dotd").cast(LongType).as("dot"),
-        // n2 columns follow the id swap
-        when(col("da") < col("db"), col("na2")).otherwise(col("nb2"))
-          .as("n2_a"),
-        when(col("da") < col("db"), col("nb2")).otherwise(col("na2"))
-          .as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"))
-    // identical-vector pairs: dot = n2 (emitted as the EXACT long —
-    // dotd only feeds cos, see the non-expand branch), same filter,
-    // same op sequence
-    val intra = members.alias("x").join(members.alias("y"),
-        col("x.sid") === col("y.sid") && col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
-        col("x.n2").cast(DoubleType).as("dotd"),
-        col("x.n2").as("na2"), col("y.n2").as("nb2"))
-      .withColumn("cos", cosCol)
-      .filter(col("cos") >= threshold)
-      .select(col("doc_a"), col("doc_b"),
-        col("na2").as("dot"),
-        col("na2").as("n2_a"), col("nb2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"))
-    cross.unionByName(intra)
+    val (a, b) = if (self) ("doc_a", "doc_b") else ("id_a", "id_b")
+    val out = pairs.select(col("a").as(a), col("b").as(b),
+      col("x").as("dot"), col("p_a").as("n2_a"), col("p_b").as("n2_b"),
+      graft.functions.Round6(cos(col("x"), col("p_a"), col("p_b")))
+        .as("cos"), col("n_a"), col("n_b"))
+    if (expandCliques) out.drop("n_a", "n_b") else out
   }
 
   /** EXACT containment self-join: every ORDERED pair (a, b), a ≠ b,
@@ -2626,20 +2594,20 @@ object Dedup {
     * the global rarest-first order at least one shared token sits in
     * a's first |T_a| − ⌈t·|T_a|⌉ + 1 tokens — a's PREFIX keys the
     * join, while the b side indexes ALL its tokens (containment puts
-    * no bound on |T_b|, so there is no b-prefix to exploit — the
-    * candidate volume is driven by a's RARE prefix tokens against b's
-    * full posting lists, which is exactly an inverted-index probe).
-    * First-shared-token dedup and the exact `array_intersect` verify
-    * are the [[allPairs]] machinery; the final filter is
-    * inter·10⁶ ≥ t·10⁶·|T_a|.
+    * no bound on |T_b| beyond |T_b| ≥ t·|T_a|, so there is no b-prefix
+    * to exploit — the candidate volume is driven by a's RARE prefix
+    * tokens against b's full posting lists, which is exactly an
+    * inverted-index probe). First-shared-token dedup and the exact
+    * `array_intersect` verify are the [[allPairs]] machinery; the
+    * final filter is inter·10⁶ ≥ t·10⁶·|T_a|.
     *
     * Small vocabularies degrade the prefix arm the same way they
-    * degrade [[allPairs]]'s — and the same dense-bitset arm applies
-    * verbatim (containment = popcount(a&b) against sz_a), dispatched
-    * on the identical measured vocabulary/signature/broadcast guards;
-    * the sweep covers ordered signature pairs (2× the Jaccard sweep)
-    * and identical-set signatures expand to both orders at
-    * containment 1.
+    * degrade [[allPairs]]'s — and the same front and dense signature
+    * sweep apply verbatim (containment = popcount(a&b) against sz_a),
+    * dispatched on the identical measured vocabulary/signature/
+    * broadcast guards; the sweep covers ordered signature pairs (2×
+    * the Jaccard sweep) and identical-set signatures expand to both
+    * orders at containment 1.
     *
     * Output: (id_a, id_b, inter, sz_a, containment) — containment =
     * inter / sz_a as the double both engines derive from the same two
@@ -2654,124 +2622,9 @@ object Dedup {
                       denseVocabMax: Long = AllPairsDenseVocabMax,
                       denseSigMax: Long = AllPairsDenseSigMax,
                       expandCliques: Boolean = true)
-      : DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1]: $threshold")
-    val tN = math.round(threshold * 1000000)
-    require(math.abs(tN / 1e6 - threshold) < 1e-12,
-      s"threshold must have at most 6 decimal places: $threshold")
-    val toks = df.select(col(id).as("doc"),
-      explode(array_distinct(TextAnalysis.tokens(lower(col(text)))))
-        .as("tok"))
-    val freqC = toks.groupBy("tok").agg(count(lit(1)).as("gf"))
-      .localCheckpoint()
-    probeVocab(freqC, denseVocabMax) match {
-      case Some(vocab) if vocab.nonEmpty =>
-        val nWords = (vocab.length + 63) / 64
-        val docWords = denseDocWords(toks, denseBits(toks.sparkSession,
-            vocab), nWords)
-          .localCheckpoint()
-        val d = docWords.select(col("words")).distinct().count()
-        if (d <= denseSigMax && d * nWords * 8L <= AllPairsDenseBroadcastCap)
-          return containmentDense(docWords, nWords, tN, expandCliques)
-      case _ => ()
-    }
-    // expandCliques=false: the 100 TB product shape — collapse docs
-    // with IDENTICAL token sets to (representative = min id, clique
-    // size n) BEFORE the quadratic join, emit one row per qualifying
-    // set pair plus one self row per n ≥ 2 clique. 10 copies of a
-    // boilerplate doc stop costing 100 output pairs; the prefix join
-    // itself also shrinks to distinct-set space. ONE copy of the
-    // rank/collapse semantics — [[docArrTab]], shared with allPairs.
-    val docTab = docArrTab(toks, freqC, collapse = !expandCliques)
-    // a-side: prefix keys only (⌈t·sz⌉ exact in integers); b-side:
-    // every token — the inverted index
-    val prefA = docTab
-      .withColumn("plen", expr(
-        s"CAST(sz + 1 - ((CAST($tN AS BIGINT) * sz + 999999) div " +
-          "CAST(1000000 AS BIGINT)) AS INT)"))
-      .select(col("doc"), col("sz"), col("farr"), col("n"),
-        explode(expr("slice(farr, 1, plen)")).as("tok"))
-    val indexB = docTab.select(col("doc"), col("farr"), col("n"),
-      explode(col("farr")).as("tok"))
-    val cross = prefA.alias("pa").join(indexB.alias("pb"),
-        col("pa.tok") === col("pb.tok") && col("pa.doc") =!= col("pb.doc"))
-      .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
-      .filter(element_at(col("ix"), 1) === col("pa.tok"))
-      .withColumn("inter", size(col("ix")).cast(LongType))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("pa.sz"))
-      .select(col("pa.doc").as("id_a"), col("pb.doc").as("id_b"),
-        col("inter"), col("pa.sz").as("sz_a"),
-        (col("inter").cast(DoubleType) / col("pa.sz")).as("containment"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques)
-      cross.drop("n_a", "n_b")
-    else {
-      val intra = docTab.filter(col("n") >= 2)
-        .select(col("doc").as("id_a"), col("doc").as("id_b"),
-          col("sz").as("inter"), col("sz").as("sz_a"),
-          (col("sz").cast(DoubleType) / col("sz")).as("containment"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      cross.unionByName(intra)
-    }
-  }
-
-  /** Dense-bitset arm of [[containmentJoin]]: ordered signature pairs
-    * under the broadcast popcount sweep; with `expandCliques` the
-    * identical-signature cliques expand to both orders at containment
-    * 1, without it the output stays in signature space — one row per
-    * qualifying set pair carrying (representative, clique size), plus
-    * one self row per n ≥ 2 clique (the member-expansion joins never
-    * run). */
-  private def containmentDense(docWords: DataFrame, nWords: Int,
-                               tN: Long,
-                               expandCliques: Boolean): DataFrame = {
-    // signature collapse by one aggregate on the bitset (the
-    // [[allPairsDense]] r18 form — no per-doc window)
-    val sigs = docWords.groupBy(col("words"))
-      .agg(min(col("doc")).as("sid"), first(col("sz")).as("sz"),
-        count(lit(1)).as("n"))
-    val sigPairs = sigs.select(col("sid").as("sid_a"),
-        col("words").as("wa"), col("sz").as("sz_a"), col("n").as("n_a"))
-      .join(broadcast(sigs.select(col("sid").as("sid_b"),
-        col("words").as("wb"), col("sz").as("sz_b"), col("n").as("n_b"))),
-        col("sid_a") =!= col("sid_b"))
-      // cheap bound: inter ≤ min(sz_a, sz_b), so sz_b must reach t·sz_a
-      .filter(col("sz_b") * 1000000L >= lit(tN) * col("sz_a"))
-      .withColumn("inter", denseInterCol(nWords))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("sz_a"))
-      .select(col("sid_a"), col("sid_b"), col("inter"), col("sz_a"),
-        col("n_a"), col("n_b"))
-    if (!expandCliques) {
-      val crossR = sigPairs.select(col("sid_a").as("id_a"),
-        col("sid_b").as("id_b"), col("inter"), col("sz_a"),
-        (col("inter").cast(DoubleType) / col("sz_a")).as("containment"),
-        col("n_a"), col("n_b"))
-      val intraR = sigs.filter(col("n") >= 2)
-        .select(col("sid").as("id_a"), col("sid").as("id_b"),
-          col("sz").as("inter"), col("sz").as("sz_a"),
-          (col("sz").cast(DoubleType) / col("sz")).as("containment"),
-          col("n").as("n_a"), col("n").as("n_b"))
-      return crossR.unionByName(intraR)
-    }
-    val members = docWords.select(col("doc"), col("words"))
-      .join(sigs.select(col("words"), col("sid"), col("sz").as("__ssz")),
-        Seq("words"))
-      .select(col("sid"), col("doc"), col("__ssz").as("sz"))
-    val cross = sigPairs
-      .join(members.select(col("sid").as("sid_a"), col("doc").as("id_a")),
-        Seq("sid_a"))
-      .join(members.select(col("sid").as("sid_b"), col("doc").as("id_b")),
-        Seq("sid_b"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"))
-    val intra = members.alias("x").join(members.alias("y"),
-        col("x.sid") === col("y.sid") && col("x.doc") =!= col("y.doc"))
-      .select(col("x.doc").as("id_a"), col("y.doc").as("id_b"),
-        col("x.sz").as("inter"), col("x.sz").as("sz_a"))
-    cross.unionByName(intra)
-      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"),
-        (col("inter").cast(DoubleType) / col("sz_a")).as("containment"))
-  }
+      : DataFrame =
+    containmentKernel(simSides(df, None, id, text), threshold,
+      denseVocabMax, denseSigMax, expandCliques)
 
   /** EXACT cross-corpus containment JOIN — [[containmentJoin]]'s
     * two-sided form: every (left, right) pair with |T_a ∩ T_b| /
@@ -2780,8 +2633,8 @@ object Dedup {
     * (mostly) inside ANY training document" catches truncated,
     * quoted, and re-wrapped leakage that exact n-gram hits
     * ([[decontaminate]]) undercount and Jaccard ([[allPairsJoin]])
-    * misses outright when the containing side is long. Same
-    * integer-ppm decision chain as the self form; the global
+    * misses outright when the containing side is long. Same kernel
+    * and integer-ppm decision chain as the self form; the global
     * rarest-first order is computed over the UNION of both corpora
     * (the shared-total-order requirement); the LEFT side keys the
     * join on its prefix, the RIGHT side is the full inverted index.
@@ -2797,287 +2650,56 @@ object Dedup {
                        denseVocabMax: Long = AllPairsDenseVocabMax,
                        denseSigMax: Long = AllPairsDenseSigMax,
                        expandCliques: Boolean = true)
-      : DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1]: $threshold")
-    val tN = math.round(threshold * 1000000)
-    require(math.abs(tN / 1e6 - threshold) < 1e-12,
-      s"threshold must have at most 6 decimal places: $threshold")
-    def toksOf(df: DataFrame) = df.select(col(id).as("doc"),
-      explode(array_distinct(TextAnalysis.tokens(lower(col(text)))))
-        .as("tok"))
-    val toksL = toksOf(left)
-    val toksR = toksOf(right)
-    val freqC = toksL.unionByName(toksR)
-      .groupBy("tok").agg(count(lit(1)).as("gf"))
-      .localCheckpoint()
-    probeVocab(freqC, denseVocabMax) match {
-      case Some(vocab) if vocab.nonEmpty =>
-        val nWords = (vocab.length + 63) / 64
-        val bits = denseBits(left.sparkSession, vocab)
-        val dwL = denseDocWords(toksL, bits, nWords).localCheckpoint()
-        val dwR = denseDocWords(toksR, bits, nWords).localCheckpoint()
-        val dL = dwL.select(col("words")).distinct().count()
-        val dR = dwR.select(col("words")).distinct().count()
-        if (dL <= denseSigMax && dR <= denseSigMax &&
-            dR * nWords * 8L <= AllPairsDenseBroadcastCap)
-          return containmentCrossDense(dwL, dwR, nWords, tN, expandCliques)
-      case _ => ()
+      : DataFrame =
+    containmentKernel(simSides(left, Some(right), id, text), threshold,
+      denseVocabMax, denseSigMax, expandCliques)
+
+  /** The containment kernel behind [[containmentJoin]] and
+    * [[containmentCross]]. */
+  private def containmentKernel(in: SimSides, threshold: Double,
+                                denseVocabMax: Long, denseSigMax: Long,
+                                expandCliques: Boolean): DataFrame = {
+    val tN = ppm(threshold)
+    val self = in.n == 1
+    // cheap bound: inter ≤ min(sz_a, sz_b), so sz_b must reach t·sz_a
+    def bound(pa: Column, pb: Column) = pb * 1000000L >= lit(tN) * pa
+    def keep(x: Column, pa: Column, pb: Column) =
+      x * 1000000L >= lit(tN) * pa
+    val (toks, freq, dense) = setFront(in, denseVocabMax, denseSigMax)
+    val pairs = dense match {
+      case Some((sides, score)) =>
+        denseSweep(sides, score, ordered = true, bound, keep, expandCliques)
+      case None =>
+        // expandCliques=false: docs with IDENTICAL token sets collapse
+        // to (representative = min id, clique size n) BEFORE the
+        // quadratic join — 10 copies of a boilerplate doc stop costing
+        // 100 output pairs, and the prefix join itself shrinks to
+        // distinct-set space
+        val tabs = (0 until in.n).map(s =>
+          docArrTab(in.of(toks, s), freq, collapse = !expandCliques))
+        // a-side: prefix keys only; b-side: every token — the inverted
+        // index
+        val index = tabs.last.select(col("doc"), col("sz"), col("farr"),
+          col("n"), explode(col("farr")).as("tok"))
+        val cross = prefixExplodeTab(tabs.head, tN).alias("pa")
+          .join(index.alias("pb"), col("pa.tok") === col("pb.tok") &&
+            pairPred(self, ordered = true, col("pa.doc"), col("pb.doc")))
+          .filter(bound(col("pa.sz"), col("pb.sz")))
+          .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
+          .filter(element_at(col("ix"), 1) === col("pa.tok"))
+          .select(pairCols(col("pa.doc"), col("pb.doc"), col("pa.sz"),
+            col("pb.sz"), size(col("ix")).cast(LongType), col("pa.n"),
+            col("pb.n")): _*)
+          .filter(keep(col("x"), col("p_a"), col("p_b")))
+        if (self && !expandCliques)
+          cross.unionByName(cliqueRows(tabs.head, "doc", "sz", keep))
+        else cross
     }
-    import org.apache.spark.sql.expressions.Window
-    // per-side identical-set collapse under expandCliques=false (reps
-    // + clique sizes); identical cross-side sets meet as a regular
-    // containment-1 candidate, so no intra rows. ONE copy of the
-    // rank/collapse semantics — [[docArrTab]], shared with allPairs.
-    def docTabOf(toks: DataFrame) =
-      docArrTab(toks, freqC, collapse = !expandCliques)
-    val prefA = docTabOf(toksL)
-      .withColumn("plen", expr(
-        s"CAST(sz + 1 - ((CAST($tN AS BIGINT) * sz + 999999) div " +
-          "CAST(1000000 AS BIGINT)) AS INT)"))
-      .select(col("doc"), col("sz"), col("farr"), col("n"),
-        explode(expr("slice(farr, 1, plen)")).as("tok"))
-    val indexB = docTabOf(toksR).select(col("doc"), col("farr"), col("n"),
-      explode(col("farr")).as("tok"))
-    val cross = prefA.alias("pa").join(indexB.alias("pb"),
-        col("pa.tok") === col("pb.tok"))
-      .withColumn("ix", array_intersect(col("pa.farr"), col("pb.farr")))
-      .filter(element_at(col("ix"), 1) === col("pa.tok"))
-      .withColumn("inter", size(col("ix")).cast(LongType))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("pa.sz"))
-      .select(col("pa.doc").as("id_a"), col("pb.doc").as("id_b"),
-        col("inter"), col("pa.sz").as("sz_a"),
-        (col("inter").cast(DoubleType) / col("pa.sz")).as("containment"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques) cross.drop("n_a", "n_b") else cross
-  }
-
-  /** Dense-bitset arm of [[containmentCross]]: all D_L × D_R ordered
-    * signature pairs (right side broadcast), popcount against the
-    * LEFT size. */
-  private def containmentCrossDense(dwL: DataFrame, dwR: DataFrame,
-                                    nWords: Int, tN: Long,
-                                    expandCliques: Boolean = true)
-      : DataFrame = {
-    // signature collapse by one aggregate on the bitset (the
-    // [[allPairsDense]] r18 form — no per-doc window)
-    def sigs(dw: DataFrame) = dw.groupBy(col("words"))
-      .agg(min(col("doc")).as("sid"), first(col("sz")).as("sz"),
-        count(lit(1)).as("n"))
-    val sigsL = sigs(dwL)
-    val sigsR = sigs(dwR)
-    def members(dw: DataFrame, s: DataFrame) = dw
-      .select(col("doc"), col("words"))
-      .join(s.select(col("words"), col("sid")), Seq("words"))
-      .select(col("sid"), col("doc"))
-    val sigPairs = sigsL.select(col("sid").as("sid_a"),
-        col("words").as("wa"), col("sz").as("sz_a"), col("n").as("n_a"))
-      .crossJoin(broadcast(sigsR.select(col("sid").as("sid_b"),
-        col("words").as("wb"), col("sz").as("sz_b"), col("n").as("n_b"))))
-      .filter(col("sz_b") * 1000000L >= lit(tN) * col("sz_a"))
-      .withColumn("inter", denseInterCol(nWords))
-      .filter(col("inter") * 1000000L >= lit(tN) * col("sz_a"))
-      .select(col("sid_a"), col("sid_b"), col("inter"), col("sz_a"),
-        col("n_a"), col("n_b"))
-    if (!expandCliques)
-      return sigPairs.select(col("sid_a").as("id_a"),
-        col("sid_b").as("id_b"), col("inter"), col("sz_a"),
-        (col("inter").cast(DoubleType) / col("sz_a")).as("containment"),
-        col("n_a"), col("n_b"))
-    sigPairs
-      .join(members(dwL, sigsL)
-        .select(col("sid").as("sid_a"), col("doc").as("id_a")),
-        Seq("sid_a"))
-      .join(members(dwR, sigsR)
-        .select(col("sid").as("sid_b"), col("doc").as("id_b")),
-        Seq("sid_b"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"),
-        (col("inter").cast(DoubleType) / col("sz_a")).as("containment"))
-  }
-
-  /** EXACT cross-corpus weighted-cosine JOIN — [[tfidfPairs]]'s
-    * two-sided form, completing the family symmetry with
-    * [[allPairsJoin]] (sets) and [[fuzzyJoin]] (LSH): every (left,
-    * right) pair with tf·idf cosine ≥ `threshold`. Use cases mirror
-    * the Jaccard join's (decontamination with a weighted bar,
-    * cross-crawl audit) when stopword overlap must not count toward
-    * the similarity the way raw Jaccard counts it.
-    *
-    * One similarity space for both sides: document frequencies, N,
-    * and hence the integer idf quantization are computed over the
-    * UNION of both corpora (the shared-total-order requirement, same
-    * as [[allPairsJoin]]'s union frequency table), so a string that
-    * appears in both corpora has ONE weight. Same adaptive dispatch
-    * as [[tfidfPairs]]: small shared vocab → per-side dense int
-    * vectors, per-side distinct-signature collapse, D_L × D_R sweep
-    * broadcasting the RIGHT side under the same measured-D and byte
-    * caps; otherwise the maxweight prefix arm with the corpus-max
-    * normalized weights taken over BOTH sides. Output: (id_a from
-    * left, id_b from right, dot, n2_a, n2_b, cos). With
-    * `expandCliques = false` each side collapses to distinct
-    * weighted-token multisets (reps + n_a/n_b); no self rows. '''At scale set `expandCliques =
-    * false`''' — uniform family guidance, see [[allPairs]]. */
-  def tfidfJoin(left: DataFrame, right: DataFrame, id: String,
-                text: String, threshold: Double,
-                denseVocabMax: Long = AllPairsDenseVocabMax,
-                denseSigMax: Long = AllPairsDenseSigMax,
-                expandCliques: Boolean = true): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must be in (0,1]: $threshold")
-    // ONE tagged pipeline for both sides (r18, guide §1.2/§2.6): the
-    // per-side spelling ran eight eager actions during construction
-    // (two counts, the dfc checkpoint, the vocab probe, two dense
-    // checkpoints, two guard probes), each re-executing the token
-    // explode + tf aggregation for its side — at sf0.1 that action
-    // fan-out WAS the row (construction 2.7 s vs a 0.8 s sweep,
-    // TfJoinProbe). The doc key becomes struct(side, id) — the shared
-    // weighted helpers treat `doc` opaquely, id values never collide
-    // across sides through the tag, and the union corpus is exactly
-    // what the shared-idf semantics already used (n, dfd, mx were all
-    // union aggregates). One count, one tf checkpoint, one dense
-    // checkpoint, one guard probe.
-    val both = left.select(struct(lit(0).as("s"), col(id).as("i"))
-        .as("doc"), col(text).as("__t"))
-      .unionByName(right.select(struct(lit(1).as("s"), col(id).as("i"))
-        .as("doc"), col(text).as("__t")))
-    val n = both.count()
-    val tf = both.select(col("doc"),
-        explode(TextAnalysis.tokens(lower(col("__t")))).as("tok"))
-      .groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val dfc = tf.groupBy("tok").agg(count(lit(1)).as("dfd"))
-      .localCheckpoint()
-    val w = tf.join(broadcast(dfc), Seq("tok"))
-      .select(col("doc"), col("tok"),
-        (col("tf") * (lit(1L) +
-          floorLog2(expr(s"CAST($n AS BIGINT) div dfd")))).as("w"))
-    // wmx rides along for the dense arm's overflow guard; the prefix
-    // arm drops it
-    val n2 = w.groupBy("doc").agg(sum(col("w") * col("w")).as("n2"),
-      max(col("w")).as("wmx"))
-    val sideCol = col("doc").getField("s")
-    probeVocab(dfc, denseVocabMax) match {
-      case Some(vocab) if vocab.nonEmpty =>
-        val bits = denseBits(left.sparkSession, vocab)
-        val dw = w
-          .join(broadcast(bits), Seq("tok"))
-          .groupBy("doc").agg(map_from_entries(collect_list(
-            struct(col("bit"), col("w").cast(IntegerType)))).as("m"))
-          .join(n2, Seq("doc"))
-          .select(col("doc"), col("n2"), col("wmx"),
-            transform(sequence(lit(0), lit(vocab.length - 1)),
-              i => coalesce(element_at(col("m"), i), lit(0))).as("wvec"))
-          .localCheckpoint()
-        // ONE probe job decides both sides' dense guards (distinct-
-        // signature counts + the int-overflow guard — see
-        // [[tfidfPairs]]: a long weight beyond 2³¹ would have wrapped
-        // in the IntegerType cast above, silently corrupting dots)
-        val pr = dw.groupBy(sideCol.as("s"))
-          .agg(countDistinct(col("wvec")).as("d"), max(col("wmx")).as("wmx"))
-          .collect().map(r => r.getInt(0) ->
-            ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
-        val (dL, wmxL) = pr.getOrElse(0, (0L, 0L))
-        val (dR, wmxR) = pr.getOrElse(1, (0L, 0L))
-        def sideOf(s: Int) = dw.filter(sideCol === s)
-          .select(col("doc").getField("i").as("doc"), col("n2"),
-            col("wvec"))
-        if (dL <= denseSigMax && dR <= denseSigMax &&
-            math.max(wmxL, wmxR) <= Int.MaxValue &&
-            dR * vocab.length * 4L <= AllPairsDenseBroadcastCap)
-          return tfidfJoinDense(sideOf(0), sideOf(1),
-            threshold, expandCliques)
-      case _ => ()
-    }
-    // prefix arm: corpus-max normalized weights over BOTH sides keep
-    // the suffix bound valid for cross-side partners
-    val wh = w.join(n2.drop("wmx"), Seq("doc"))
-      .withColumn("wh", col("w").cast(DoubleType) /
-        sqrt(col("n2").cast(DoubleType)))
-    val mx = wh.groupBy("tok").agg(max(col("wh")).as("mx"))
-      .localCheckpoint()
-    val tSlack = threshold * (1 - 1e-9)
-    // rank/collapse/prefix via the SHARED weighted helpers (one copy
-    // of the semantics with [[tfidfPairs]]). expandCliques=true (the
-    // output-expanded default) builds ONE prefix table over the tagged
-    // union — the cross join's side split replaces the per-side
-    // tables. expandCliques=false needs the identical-vector collapse
-    // to stay PER SIDE (a left doc must never collapse into a right
-    // rep), so it keeps the two-table form, filtered from the shared
-    // upstream.
-    def prefixOf(whSide: DataFrame, collapse: Boolean) =
-      weightedPrefixTab(weightedDocTab(weightedRanked(whSide, mx),
-        tSlack, collapse = collapse))
-    val (pa, pb) =
-      if (expandCliques) {
-        val p = prefixOf(wh, collapse = false)
-        (p.filter(col("doc").getField("s") === 0),
-          p.filter(col("doc").getField("s") === 1))
-      } else
-        (prefixOf(wh.filter(sideCol === 0), collapse = true),
-          prefixOf(wh.filter(sideCol === 1), collapse = true))
-    val cross = pa.alias("pa").join(pb.alias("pb"),
-        col("pa.hk") === col("pb.hk"))
-      // Cauchy-Schwarz positional filter — see [[tfidfPairs]]
-      .filter(element_at(col("pa.rbn"), col("pa.rnk")) *
-        element_at(col("pb.rbn"), col("pb.rnk")) >= tSlack)
-      // fused first-shared dedup + exact integer dot — see [[tfidfPairs]]
-      .withColumn("dot", graft.functions.PrefixMergeDot(
-        col("pa.earr"), col("pb.earr"), col("pa.rnk"), col("pb.rnk")))
-      .filter(col("dot").isNotNull)
-      .withColumn("cos", col("dot").cast(DoubleType) /
-        sqrt(col("pa.n2").cast(DoubleType) * col("pb.n2").cast(DoubleType)))
-      .filter(col("cos") >= threshold)
-      .select(col("pa.doc").getField("i").as("id_a"),
-        col("pb.doc").getField("i").as("id_b"),
-        col("dot"), col("pa.n2").as("n2_a"), col("pb.n2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"),
-        col("pa.n").as("n_a"), col("pb.n").as("n_b"))
-    if (expandCliques) cross.drop("n_a", "n_b") else cross
-  }
-
-  /** Dense-vector arm of [[tfidfJoin]]: per-side signature collapse,
-    * D_L × D_R DotProduct sweep (right side broadcast), output-bound
-    * expansion — [[allPairsJoinDense]]'s shape with weights. */
-  private def tfidfJoinDense(dwL: DataFrame, dwR: DataFrame,
-                             threshold: Double,
-                             expandCliques: Boolean = true): DataFrame = {
-    // signature collapse by one aggregate on the vector (the
-    // [[tfidfPairsDense]] r18 form — no per-doc window)
-    def sigs(dw: DataFrame) = dw.groupBy(col("wvec"))
-      .agg(min(col("doc")).as("sid"), first(col("n2")).as("n2"),
-        count(lit(1)).as("n"))
-    val sigsL = sigs(dwL)
-    val sigsR = sigs(dwR)
-    val sigPairs = sigsL.select(col("sid").as("sid_a"),
-        col("wvec").as("wa"), col("n2").as("na2"), col("n").as("n_a"))
-      .crossJoin(broadcast(sigsR.select(col("sid").as("sid_b"),
-        col("wvec").as("wb"), col("n2").as("nb2"), col("n").as("n_b"))))
-      .withColumn("dotd", graft.functions.DotProduct(col("wa"), col("wb")))
-      .withColumn("cos", col("dotd") /
-        sqrt(col("na2").cast(DoubleType) * col("nb2").cast(DoubleType)))
-      .filter(col("cos") >= threshold)
-      .select(col("sid_a"), col("sid_b"), col("dotd"),
-        col("na2"), col("nb2"), col("cos"), col("n_a"), col("n_b"))
-    if (!expandCliques)
-      return sigPairs.select(col("sid_a").as("id_a"),
-        col("sid_b").as("id_b"), col("dotd").cast(LongType).as("dot"),
-        col("na2").as("n2_a"), col("nb2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"), col("n_a"), col("n_b"))
-    def members(dw: DataFrame, s: DataFrame) = dw
-      .select(col("doc"), col("wvec"))
-      .join(s.select(col("wvec"), col("sid")), Seq("wvec"))
-      .select(col("sid"), col("doc"))
-    sigPairs
-      .join(members(dwL, sigsL)
-        .select(col("sid").as("sid_a"), col("doc").as("id_a")),
-        Seq("sid_a"))
-      .join(members(dwR, sigsR)
-        .select(col("sid").as("sid_b"), col("doc").as("id_b")),
-        Seq("sid_b"))
-      .select(col("id_a"), col("id_b"),
-        col("dotd").cast(LongType).as("dot"),
-        col("na2").as("n2_a"), col("nb2").as("n2_b"),
-        graft.functions.Round6(col("cos")).as("cos"))
+    val out = pairs.select(col("a").as("id_a"), col("b").as("id_b"),
+      col("x").as("inter"), col("p_a").as("sz_a"),
+      (col("x").cast(DoubleType) / col("p_a")).as("containment"),
+      col("n_a"), col("n_b"))
+    if (expandCliques) out.drop("n_a", "n_b") else out
   }
 
   // -------------------------------------------------------------------

@@ -29,6 +29,16 @@ import org.apache.spark.sql.types.StringType
   * state is one aggregate row per column (5 values) — model-sized by
   * construction.
   *
+  * Consistency caveat of the exact path: its per-column jobs each read
+  * `df` on their own. On a plain file scan that is the same bytes; on
+  * a derived input (a join, a view, any non-scan plan) every column's
+  * job re-runs the whole upstream, once per column, and the output rows
+  * are not one snapshot — if the source changes while the profile runs,
+  * n_rows can differ between rows. Stage such an input first
+  * (`localCheckpoint()` or a written table) when one consistent,
+  * single-evaluation profile matters; `approx = true` is one pass and
+  * one snapshot.
+  *
   * Output: (col_name, n_rows, n_nonnull, ndv, min_val, max_val),
   * ordered by col_name; min/max are NULL for all-null columns.
   */

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Degenerate-input behavior of the round-7 operators: empty sides must
@@ -108,31 +109,42 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("allPairs / allPairsJoin degenerate inputs are empty, never throw") {
+    import graft.llm.Dedup
     val noDocs = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val one = Seq((1L, "only one document here")).toDF("doc_id", "text")
     val blank = Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text")
-    for (gate <- Seq(graft.llm.Dedup.AllPairsDenseVocabMax, 0L)) {
-      assert(graft.llm.Dedup.allPairs(noDocs, "doc_id", "text", 0.8,
-        denseVocabMax = gate).count() === 0)
-      assert(graft.llm.Dedup.allPairs(one, "doc_id", "text", 0.8,
-        denseVocabMax = gate).count() === 0)
-      assert(graft.llm.Dedup.allPairs(blank, "doc_id", "text", 0.8,
-        denseVocabMax = gate).count() === 0)
-      assert(graft.llm.Dedup.allPairsJoin(noDocs, one, "doc_id", "text",
-        0.8, denseVocabMax = gate).count() === 0)
-      assert(graft.llm.Dedup.allPairsJoin(one, noDocs, "doc_id", "text",
-        0.8, denseVocabMax = gate).count() === 0)
-      // reps mode on the same degenerate inputs: no cliques, no self
-      // rows, never a throw (the collapse groupBy over an empty /
-      // token-less corpus must behave like the expanded form)
-      assert(graft.llm.Dedup.allPairs(noDocs, "doc_id", "text", 0.8,
-        denseVocabMax = gate, expandCliques = false).count() === 0)
-      assert(graft.llm.Dedup.allPairs(blank, "doc_id", "text", 0.8,
-        denseVocabMax = gate, expandCliques = false).count() === 0)
-      assert(graft.llm.Dedup.containmentJoin(noDocs, "doc_id", "text",
-        0.8, denseVocabMax = gate, expandCliques = false).count() === 0)
-      assert(graft.llm.Dedup.tfidfPairs(blank, "doc_id", "text", 0.8,
-        denseVocabMax = gate, expandCliques = false).count() === 0)
+    val corpora = Seq(noDocs, one, blank)
+    // every entry of the exact set-similarity family × both arms × both
+    // output forms: no pairs, no clique self rows, never a throw (the
+    // collapse groupBy over an empty / token-less corpus must behave
+    // like the expanded form). The cross forms pair the one-row corpus
+    // with an empty and a whitespace-only side, in both orders — an
+    // empty side broadcasts an empty signature table.
+    type Self = (DataFrame, Long, Boolean) => DataFrame
+    type Cross = (DataFrame, DataFrame, Long, Boolean) => DataFrame
+    val selfs: Seq[(String, Self)] = Seq(
+      "allPairs" -> ((d, g, e) => Dedup.allPairs(d, "doc_id", "text", 0.8,
+        denseVocabMax = g, expandCliques = e)),
+      "containmentJoin" -> ((d, g, e) => Dedup.containmentJoin(d, "doc_id",
+        "text", 0.8, denseVocabMax = g, expandCliques = e)),
+      "tfidfPairs" -> ((d, g, e) => Dedup.tfidfPairs(d, "doc_id", "text",
+        0.8, denseVocabMax = g, expandCliques = e)))
+    val crosses: Seq[(String, Cross)] = Seq(
+      "allPairsJoin" -> ((l, r, g, e) => Dedup.allPairsJoin(l, r, "doc_id",
+        "text", 0.8, denseVocabMax = g, expandCliques = e)),
+      "containmentCross" -> ((l, r, g, e) => Dedup.containmentCross(l, r,
+        "doc_id", "text", 0.8, denseVocabMax = g, expandCliques = e)),
+      "tfidfJoin" -> ((l, r, g, e) => Dedup.tfidfJoin(l, r, "doc_id",
+        "text", 0.8, denseVocabMax = g, expandCliques = e)))
+    for (gate <- Seq(Dedup.AllPairsDenseVocabMax, 0L);
+         ex <- Seq(true, false)) {
+      for ((name, op) <- selfs; (d, i) <- corpora.zipWithIndex)
+        assert(op(d, gate, ex).count() === 0,
+          s"$name corpus=$i gate=$gate expandCliques=$ex")
+      for ((name, op) <- crosses; d <- Seq(0, 2);
+           (i, j) <- Seq((d, 1), (1, d)))
+        assert(op(corpora(i), corpora(j), gate, ex).count() === 0,
+          s"$name sides=($i,$j) gate=$gate expandCliques=$ex")
     }
     // jw reps on empty/whitespace-only names: no cliques (jw('','')
     // is 0 by the pinned definition), no throw

@@ -1738,36 +1738,47 @@ class LlmSpec extends SparkSpec {
   }
 
   test("tfidfPairs: brute-force parity on the real corpus") {
-    val n = docs.count()
-    val toks = docs.select($"doc_id".as("doc"),
-      explode(TextAnalysis.tokens(lower($"text"))).as("tok"))
-    val tf = toks.groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
-    val dfc = tf.groupBy("tok").agg(count(lit(1)).as("dfd"))
-    // independent weight derivation: float log2+floor (exact at these
-    // magnitudes) instead of the operator's comparison ladder
-    val w = tf.join(dfc, Seq("tok")).select($"doc", $"tok",
-      ($"tf" * (lit(1L) +
-        floor(log2(expr(s"CAST($n AS BIGINT) div dfd"))).cast("long")))
-        .as("w"))
-    val n2 = w.groupBy("doc").agg(sum($"w" * $"w").as("n2"))
-    val brute = w.alias("a").join(w.alias("b"),
-        col("a.tok") === col("b.tok") && col("a.doc") < col("b.doc"))
-      .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
-      .agg(sum(col("a.w") * col("b.w")).as("dot"))
-      .join(n2.select($"doc".as("doc_a"), $"n2".as("n2_a")), Seq("doc_a"))
-      .join(n2.select($"doc".as("doc_b"), $"n2".as("n2_b")), Seq("doc_b"))
-      .filter($"dot".cast("double") >=
-        lit(0.8) * sqrt($"n2_a".cast("double") * $"n2_b".cast("double")))
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    // the 31-token corpus dispatches the dense arm; denseVocabMax = 0
-    // forces the prefix arm over the same corpus — both must equal the
-    // brute force
-    for (vmax <- Seq(Dedup.AllPairsDenseVocabMax, 0L)) {
-      val got = Dedup.tfidfPairs(docs, "doc_id", "text", 0.8,
-          denseVocabMax = vmax)
-        .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-      assert(got == brute, s"denseVocabMax=$vmax")
-      assert(got.nonEmpty)
+    // second input: the corpus plus a copy of every 3rd doc under a
+    // larger id — identical-vector cliques whose member pairs can run
+    // against the signature order, so the expanded dense arm must swap
+    // n2_a/n2_b along with the ids (pinned by comparing whole rows)
+    val base = docs.select($"doc_id", $"text")
+    val withCopies = base.unionByName(base.filter($"doc_id" % 3 === 0)
+      .select(($"doc_id" + 100000).as("doc_id"), $"text"))
+    for (corpus <- Seq(base, withCopies)) {
+      val n = corpus.count()
+      val toks = corpus.select($"doc_id".as("doc"),
+        explode(TextAnalysis.tokens(lower($"text"))).as("tok"))
+      val tf = toks.groupBy("doc", "tok").agg(count(lit(1)).as("tf"))
+      val dfc = tf.groupBy("tok").agg(count(lit(1)).as("dfd"))
+      // independent weight derivation: float log2+floor (exact at these
+      // magnitudes) instead of the operator's comparison ladder
+      val w = tf.join(dfc, Seq("tok")).select($"doc", $"tok",
+        ($"tf" * (lit(1L) +
+          floor(log2(expr(s"CAST($n AS BIGINT) div dfd"))).cast("long")))
+          .as("w"))
+      val n2 = w.groupBy("doc").agg(sum($"w" * $"w").as("n2"))
+      val brute = w.alias("a").join(w.alias("b"),
+          col("a.tok") === col("b.tok") && col("a.doc") < col("b.doc"))
+        .groupBy(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
+        .agg(sum(col("a.w") * col("b.w")).as("dot"))
+        .join(n2.select($"doc".as("doc_a"), $"n2".as("n2_a")), Seq("doc_a"))
+        .join(n2.select($"doc".as("doc_b"), $"n2".as("n2_b")), Seq("doc_b"))
+        .filter($"dot".cast("double") >=
+          lit(0.8) * sqrt($"n2_a".cast("double") * $"n2_b".cast("double")))
+        .select($"doc_a", $"doc_b", $"dot", $"n2_a", $"n2_b")
+        .as[(Long, Long, Long, Long, Long)].collect().toSet
+      // the 31-token corpus dispatches the dense arm; denseVocabMax = 0
+      // forces the prefix arm over the same corpus — both must equal the
+      // brute force
+      for (vmax <- Seq(Dedup.AllPairsDenseVocabMax, 0L)) {
+        val got = Dedup.tfidfPairs(corpus, "doc_id", "text", 0.8,
+            denseVocabMax = vmax)
+          .select($"doc_a", $"doc_b", $"dot", $"n2_a", $"n2_b")
+          .as[(Long, Long, Long, Long, Long)].collect().toSet
+        assert(got == brute, s"denseVocabMax=$vmax n=$n")
+        assert(got.nonEmpty)
+      }
     }
   }
 

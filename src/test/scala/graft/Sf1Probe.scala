@@ -166,7 +166,8 @@ object Sf1Probe {
     // auto-annotates with its measured OUTPUT ratio, so pair-output
     // rows (dd_containment_join's 6.7x debuted unadjudicated in r16)
     // carry their output-bound evidence in the same artifact instead
-    // of waiting for a hand-run ApCountProbe.
+    // of a hand-run count (the r17 counts are archived in
+    // test_archive/apcount_r17.txt).
     // r18 (r17 verdict #7): SPARK_GRAFT_SF1_COUNTS=a,b forces the
     // output-count annotation for named rows regardless of ratio, so
     // carried adjudications (dd_key_novelty_grow) get their counts in

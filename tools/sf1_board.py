@@ -41,7 +41,7 @@ EXCLUDE = {"dd_semantic_novelty_collapse",
            "dd_tfidf_pairs",
            # measured r16 (test_archive/sf1_board_r16.txt tail): the
            # pair-output forms first made the cut this round at
-           # 32.8x/30.3x — output counts recomputed (ApCountProbe):
+           # 32.8x/30.3x — output counts (test_archive/apcount_r17.txt):
            # 791k -> 79.2M (100.1x) and 1.17M -> 117.2M (100.2x) pairs
            # on the 10x-duplicated corpus, sub-linear per output row;
            # the _reps siblings are the scale path
