@@ -6,8 +6,8 @@ import graft.model.{ColumnModel, Relation, RelationType}
 
 /** The reference adapter's top-level operators — the materialization state
   * machines of `dbt/include/extrica/macros/materializations/` — driven
-  * against the Spark catalog (`saveAsTable` + `spark.catalog` +
-  * `ALTER TABLE … RENAME TO`).
+  * against the Spark catalog (`saveAsTable` + `spark.catalog`; every
+  * rewrite commits and heals through [[PartitionScoped]]).
   *
   * All writes are distributed (`df.write`); the state machine itself is
   * pure catalog orchestration (metadata ops), so nothing here caps scale.
@@ -46,12 +46,7 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     * so they are set immediately after the write — same end state. */
   private def setProperties(rel: Relation,
                             props: Map[String, String]): Unit =
-    if (props.nonEmpty) {
-      def esc(s: String) = s.replace("'", "''")
-      val kvs = props.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'${esc(k)}' = '${esc(v)}'" }.mkString(", ")
-      spark.sql(s"ALTER TABLE ${rel.render} SET TBLPROPERTIES ($kvs)")
-    }
+    PartitionScoped.setProperties(spark, rel.render, props)
 
   /** Every TBLPROPERTIES entry, including the graft.* metadata keys the
     * MV/view machinery persists (the reference keeps this state in
@@ -128,15 +123,8 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     } else if (mode == "drop") {
       dropRelation(rel)
       writer(df).saveAsTable(name)
-    } else {
-      val tmp = rel.suffixed("__dbt_tmp")
-      val backup = rel.suffixed("__dbt_backup")
-      dropRelation(tmp); dropRelation(backup)
-      writer(df).saveAsTable(tmp.render)
-      PartitionScoped.renameTable(spark, name, backup.render)
-      PartitionScoped.renameTable(spark, tmp.render, name)
-      dropRelation(backup)
-    }
+    } else PartitionScoped.swap(spark, name, PartitionScoped.Dbt,
+      carry = false)(writer(df).saveAsTable)
     if (existed) catalog.clearGrants(rel) // grants never copy on replace
     setProperties(rel, config.properties)
     persistDocs(rel, config) // table.sql:62
@@ -189,7 +177,7 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     spark.sql(s"CREATE OR REPLACE VIEW ${rel.render} AS $sql")
     // the recorded security mode lives on the view itself (the reference
     // keeps it in engine metadata) — any session can read it back
-    setViewProperties(rel, Map(ViewSecurityKey -> sec))
+    setProperties(rel, Map(ViewSecurityKey -> sec))
     applyGrantsCfg(rel, config, revoke = true) // adapters.sql:290
     runHooks(config.postHooks) // adapters.sql:292
     persistDocs(rel, config) // view.sql:5
@@ -198,16 +186,6 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
   def securityOf(rel: Relation): Option[String] =
     if (!spark.catalog.tableExists(rel.render)) None
     else rawProperties(rel).get(ViewSecurityKey)
-
-  /** TBLPROPERTIES on a VIEW take the ALTER VIEW form. */
-  private def setViewProperties(rel: Relation,
-                                props: Map[String, String]): Unit =
-    if (props.nonEmpty) {
-      def esc(s: String) = s.replace("'", "''")
-      val kvs = props.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"'${esc(k)}' = '${esc(v)}'" }.mkString(", ")
-      spark.sql(s"ALTER VIEW ${rel.render} SET TBLPROPERTIES ($kvs)")
-    }
 
   // ------------------------------------------------------------------
   // materialized view (materialized_view.sql:1-35)
@@ -388,81 +366,10 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     * else stage → schema-change handling → strategy → rewrite.
     *
     * On vanilla parquet the delete+insert/merge strategies rewrite the
-    * whole table; the write goes to a tmp table then swaps (never
-    * overwrite a table from a plan that reads it — SURVEY §7.3 caution).
+    * whole table (or, partitioned, the touched partitions); the write
+    * commits through [[PartitionScoped.rewrite]] (never overwrite a table
+    * from a plan that reads it — SURVEY §7.3 caution).
     */
-  // ------------------------------------------------------------------
-  // physical-write helpers shared by the incremental and snapshot
-  // materializations (and their crash-recovery contracts)
-  // ------------------------------------------------------------------
-
-  /** The catalog's partition columns for a table (Nil when
-    * unpartitioned or the name doesn't resolve — a missing table or an
-    * unparseable identifier only; any OTHER metadata failure
-    * propagates. Swallowing a transient catalog error here would
-    * silently degrade a partitioned table to the unpartitioned swap
-    * path — layout loss that costs every later run its partition
-    * scoping). */
-  private def tablePartColsOf(name: String): Seq[String] =
-    try spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(name))
-      .partitionColumnNames
-    catch {
-      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
-           _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
-           _: org.apache.spark.sql.catalyst.parser.ParseException => Nil
-    }
-
-  /** Restore a crash-parked swap: a missing target with a surviving
-    * `__dbt_backup` (pre-rewrite history) or `__dbt_tmp` (fully
-    * rewritten result) is renamed back BEFORE any exists decision, so a
-    * re-run re-merges into recovered history instead of rebuilding the
-    * table from one staged batch. Scoped commits use a different
-    * suffix (`__dbt_scoped_tmp`) precisely so a PARTIAL result can
-    * never be promoted here. */
-  private def recoverSwap(rel: Relation): Unit =
-    if (!spark.catalog.tableExists(rel.render)) {
-      val backup0 = rel.suffixed("__dbt_backup")
-      val tmp0 = rel.suffixed("__dbt_tmp")
-      if (spark.catalog.tableExists(backup0.render))
-        PartitionScoped.renameTable(spark, backup0.render, rel.render)
-      else if (spark.catalog.tableExists(tmp0.render))
-        PartitionScoped.renameTable(spark, tmp0.render, rel.render)
-    }
-
-  /** Full rewrite + tmp/backup swap: materialize the result before
-    * replacing its own input, preserving the table's partition layout
-    * across the swap (a schema-changing run may carry columns the old
-    * table lacks, so the result's OWN schema is written — never
-    * projected to the old one; partitionBy places partition columns
-    * last itself; a sync_all_columns run that removed a partition
-    * column rewrites unpartitioned). */
-  private def swapRewrite(rel: Relation, result: DataFrame,
-                          tablePartCols: Seq[String]): Unit = {
-    val tmp = rel.suffixed("__dbt_tmp")
-    dropRelation(tmp)
-    val keepParts = tablePartCols.filter(c =>
-      result.columns.exists(_.equalsIgnoreCase(c)))
-    val w = if (keepParts.nonEmpty)
-      result.write.partitionBy(keepParts: _*)
-    else result.write
-    w.saveAsTable(tmp.render)
-    val backup = rel.suffixed("__dbt_backup")
-    dropRelation(backup)
-    PartitionScoped.renameTable(spark, rel.render, backup.render)
-    PartitionScoped.renameTable(spark, tmp.render, rel.render)
-    dropRelation(backup)
-  }
-
-  /** Commit a partition-scoped rewrite through the scoped tmp (its own
-    * suffix — see [[recoverSwap]]) and dynamic partition overwrite.
-    * `result` must already be aligned to the table's physical column
-    * order. */
-  private def scopedOverwrite(rel: Relation, result: DataFrame): Unit =
-    PartitionScoped.overwriteTouched(spark, rel.render,
-      rel.suffixed("__dbt_scoped_tmp").render, result,
-      t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-
   def incremental(
       rel: Relation,
       model: DataFrame,
@@ -474,17 +381,8 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
       config: ModelConfig = ModelConfig.empty,
       partitionCols: Seq[String] = Nil): Unit = {
     val name = rel.render
-    // crash recovery (the same hole the streaming upsert sink closed,
-    // r11): the tmp/backup swap below is not atomic — a crash between
-    // the two RENAMEs leaves the target missing with its accumulated
-    // history parked in __dbt_backup (or the fully rewritten result in
-    // __dbt_tmp). Unlike the `table` materialization (whose re-run
-    // rebuilds the same full model — nothing irreplaceable), an
-    // incremental model's history is NOT derivable from one staged
-    // batch: without restoring first, the exists check below takes the
-    // CREATE path on the re-run and silently rebuilds the table from
-    // this run's batch alone.
-    recoverSwap(rel)
+    // crash recovery before the exists decision: PartitionScoped's contract
+    PartitionScoped.heal(spark, name, PartitionScoped.Dbt)
     val exists = spark.catalog.tableExists(name)
     runHooks(config.preHooks) // incremental.sql:46
     // incremental's tail order differs from table's: post-hooks →
@@ -547,7 +445,7 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     //  - anything else (schema-changing run, unpartitioned keyed
     //    strategies, over-cap batches): full rewrite + tmp/backup swap,
     //    preserving the table's partition layout across the swap.
-    val tablePartCols: Seq[String] = tablePartColsOf(name)
+    val tablePartCols = PartitionScoped.partitionColumns(spark, name)
     val cur = spark.table(name)
     def sig(st: StructType) =
       st.fields.map(f => (f.name.toLowerCase, f.dataType)).toSeq.sortBy(_._1)
@@ -558,24 +456,21 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
       df.select(cur.columns.map(org.apache.spark.sql.functions.col)
         .toIndexedSeq: _*)
 
-    def fullRewrite(result: DataFrame): Unit =
-      swapRewrite(rel, result, tablePartCols)
-    def scopedCommit(result: DataFrame): Unit =
-      scopedOverwrite(rel, aligned(result))
-    // scoped path: rewrite only the touched partitions; empty batch →
-    // no-op (the strategies are identities on an empty staged frame)
-    def scoped(rewrite: DataFrame => DataFrame): Unit =
-      if (!staged.isEmpty)
-        PartitionScoped.touchedPredicate(staged, tablePartCols) match {
-          case Some(pred) => scopedCommit(rewrite(target.filter(pred)))
-          case None => fullRewrite(rewrite(target)) // over the cap
-        }
+    def write(scope: Seq[String])(f: DataFrame => DataFrame): Unit =
+      PartitionScoped.rewrite(spark, name, PartitionScoped.Dbt, target,
+        staged, scope)(f)
+    def fullRewrite(f: DataFrame => DataFrame): Unit = write(Nil)(f)
+    // scoped path: rewrite only the touched partitions (the full rewrite
+    // over the cap); empty batch → no-op (the strategies are identities
+    // on an empty staged frame)
+    def scoped(f: DataFrame => DataFrame): Unit =
+      if (!staged.isEmpty) write(tablePartCols)(f)
 
     val scopable = tablePartCols.nonEmpty && schemaUnchanged
     def fastAppend(): Unit =
       if (schemaUnchanged)
         aligned(staged).write.mode("append").insertInto(name)
-      else fullRewrite(Incremental.append(target, staged))
+      else fullRewrite(Incremental.append(_, staged))
     strategy match {
       case "append" => fastAppend()
       case "delete+insert" =>
@@ -607,15 +502,14 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
           scoped(t => Incremental.deleteInsert(t, staged, uniqueKeys,
             predicates))
         else fullRewrite(
-          Incremental.deleteInsert(target, staged, uniqueKeys, predicates))
+          Incremental.deleteInsert(_, staged, uniqueKeys, predicates))
       case "merge" =>
         if (uniqueKeys.isEmpty) fastAppend() // incremental.sql:198-204
         else if (scopable)
           scoped(t => Incremental.merge(t, staged, uniqueKeys,
             predicates = predicates))
         else fullRewrite(
-          Incremental.merge(target, staged, uniqueKeys,
-            predicates = predicates))
+          Incremental.merge(_, staged, uniqueKeys, predicates = predicates))
       case "insert_overwrite" => // extension beyond impl.py:80-81 — the
         // partitioned-warehouse strategy (see Incremental.insertOverwrite)
         if (scopable &&
@@ -628,7 +522,7 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
             aligned(staged).write.mode("overwrite").insertInto(name)
           }
         else fullRewrite(
-          Incremental.insertOverwrite(target, staged, partitionCols))
+          Incremental.insertOverwrite(_, staged, partitionCols))
       case other =>
         throw new IllegalArgumentException(
           s"invalid incremental strategy: $other") // impl.py:80-81
@@ -645,8 +539,8 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     * first run → build the initial SCD2 table ([[Snapshot.initial]]);
     * later runs → stage changes against the CURRENT table
     * ([[Snapshot.stage]] — timestamp strategy) and apply them
-    * ([[Snapshot.applyChanges]]). Crash recovery and hook/grant/docs
-    * order follow the incremental materialization.
+    * ([[Snapshot.applyChanges]]). Crash recovery ([[PartitionScoped]])
+    * and hook/grant/docs order follow the incremental materialization.
     *
     * '''Unbucketed''' (`buckets` = 0): each run rewrites the whole
     * history table through the tmp/backup swap — O(|history|) per run,
@@ -685,7 +579,7 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     def bucketOf(n: Int) = pmod(xxhash64(keys.map(col): _*), lit(n))
     // an SCD2 history is the least re-derivable table of all — restore
     // a crash-parked swap before the exists decision
-    recoverSwap(rel)
+    PartitionScoped.heal(spark, name, PartitionScoped.Dbt)
     val exists = spark.catalog.tableExists(name)
     runHooks(config.preHooks)
     def tail(): Unit = {
@@ -728,8 +622,8 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     // every staged row carries its key columns (hard-delete rows come
     // from the snapshot's own open rows), so the bucket column is one
     // map-side projection for all change types
-    val tablePartCols = tablePartColsOf(name)
-    val bucketed = tablePartCols == Seq(BucketCol)
+    val bucketed =
+      PartitionScoped.partitionColumns(spark, name) == Seq(BucketCol)
     // derive the bucket count from the table, not the call: the count
     // was fixed at create time (persisted as TBLPROPERTIES) and every
     // later run MUST bucket staged rows with the same modulus or the
@@ -769,20 +663,10 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     val staged = (if (bucketed)
       staged0.withColumn(BucketCol, bucketOf(effBuckets))
     else staged0).localCheckpoint()
-    def aligned(df: DataFrame) =
-      df.select(snap.columns.map(col).toIndexedSeq: _*)
     if (staged.isEmpty) { tail(); return } // nothing changed: no-op
-    if (bucketed)
-      PartitionScoped.touchedPredicate(staged, Seq(BucketCol)) match {
-        case Some(pred) =>
-          scopedOverwrite(rel, aligned(
-            Snapshot.applyChanges(snap.filter(pred), staged)))
-        case None => // over the metadata cap
-          swapRewrite(rel, aligned(Snapshot.applyChanges(snap, staged)),
-            tablePartCols)
-      }
-    else
-      swapRewrite(rel, Snapshot.applyChanges(snap, staged), tablePartCols)
+    PartitionScoped.rewrite(spark, name, PartitionScoped.Dbt, snap, staged,
+      if (bucketed) Seq(BucketCol) else Nil)(
+      Snapshot.applyChanges(_, staged))
     tail()
   }
 
@@ -791,17 +675,12 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
   // ------------------------------------------------------------------
 
   /** drop {table|view} if exists (adapters.sql:156-159). */
-  def dropRelation(rel: Relation): Unit = {
-    if (spark.catalog.tableExists(rel.render)) {
-      val t = spark.catalog.getTable(rel.render)
-      if (t.tableType == "VIEW") spark.sql(s"DROP VIEW IF EXISTS ${rel.render}")
-      else spark.sql(s"DROP TABLE IF EXISTS ${rel.render}")
-    }
-  }
+  def dropRelation(rel: Relation): Unit =
+    PartitionScoped.drop(spark, rel.render)
 
   /** alter {type} x rename to y (adapters.sql:188-193). */
   def renameRelation(from: Relation, to: Relation): Unit =
-    PartitionScoped.renameTable(spark, from.render, to.render)
+    PartitionScoped.rename(spark, from.render, to.render)
 }
 
 object Materializer {

@@ -1,26 +1,73 @@
 package graft.mat
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
 import org.apache.spark.sql.functions._
 
-/** Partition-scoped rewrite machinery shared by the streaming upsert sink
-  * ([[graft.streaming.Events.upsertBatch]]) and the incremental
-  * materialization driver ([[Materializer.incremental]]) — the 100 TB
-  * incremental shape on a partitioned vanilla-parquet table: per-run cost
-  * tracks the partitions the staged batch touches, never the accumulated
-  * table size.
+/** How a rewrite reaches the catalog, and how a crashed one heals — the
+  * one commit path of the table, incremental and snapshot
+  * materializations ([[Materializer]]) and of the streaming upsert sink
+  * and compaction ([[graft.streaming.Events]]).
   *
-  * Three pieces, each metadata-sized on the driver:
-  *  1. [[touchedPredicate]] — the staged batch's distinct partition tuples
-  *     become literal, null-safe partition filters (static pruning: the
-  *     target read never opens untouched partitions);
-  *  2. the caller runs its keyed rewrite (merge / delete+insert) against
-  *     the SCOPED target read;
-  *  3. [[overwriteTouched]] — the scoped result is materialized to a tmp
-  *     table (never overwrite partitions of a table from a plan that
-  *     reads it), then committed via dynamic partition overwrite, which
-  *     rewrites exactly the partitions present in the result — the
-  *     touched set.
+  * A rewrite commits one of two ways ([[rewrite]]):
+  *  - '''scoped''' (the 100 TB incremental shape on a partitioned
+  *    vanilla-parquet table: per-run cost tracks the partitions the
+  *    staged batch touches, never the accumulated table size):
+  *     1. [[touchedPredicate]] — the staged batch's distinct partition
+  *        tuples become literal, null-safe partition filters (static
+  *        pruning: the target read never opens untouched partitions);
+  *     2. the caller's keyed rewrite (merge / delete+insert / SCD2
+  *        apply) runs against the SCOPED target read;
+  *     3. [[overwriteTouched]] — the scoped result is materialized to the
+  *        scoped tmp (never overwrite partitions of a table from a plan
+  *        that reads it), then committed via dynamic partition overwrite,
+  *        which rewrites exactly the partitions present in the result —
+  *        the touched set;
+  *  - '''full''' ([[swap]], the reference's rename swap, table.sql:34-48,
+  *    materialized_view.sql:11-21): the result is written to
+  *    `<table>__<tag>_tmp`, the target renamed to `<table>__<tag>_backup`,
+  *    the tmp renamed into place and the backup dropped. Unpartitioned
+  *    tables, schema-changing runs and batches over
+  *    [[MaxTouchedPartitions]] take it; the table's partition layout is
+  *    kept across it.
+  *
+  * '''Recovery contract.''' The swap is two renames, not atomic. A crash
+  * leaves one of three states: the tmp written but nothing renamed
+  * (target intact); the target renamed away (old content in the backup,
+  * new in the tmp); or the tmp renamed in but the backup not yet dropped.
+  * [[heal]] — run on entry by every caller whose table holds history
+  * (incremental, snapshot, upsert, the ingest loop and compaction) —
+  * applies one rule: a missing target is restored from the backup, or
+  * else promoted from the tmp; a present target gets its scratch tables
+  * dropped. The backup comes first because it is the state the re-run is
+  * computed against: restoring it and re-running converges for every
+  * caller, also for a non-idempotent rewrite (an append's full rewrite),
+  * which promoting the tmp and re-running would apply twice. `table()`
+  * does not heal: its re-run rebuilds the whole model.
+  *
+  * Scratch names per caller (a constant [[Tag]] each; the names are the
+  * ones tables crash-parked by earlier versions carry):
+  *  - [[Dbt]] — table, incremental, snapshot: `__dbt_tmp`,
+  *    `__dbt_backup`, scoped tmp `__dbt_scoped_tmp`;
+  *  - [[Upsert]] — [[graft.streaming.Events.upsertBatch]]:
+  *    `__upsert_tmp`, `__upsert_backup`; its scoped commit stages in
+  *    `__upsert_tmp` too;
+  *  - [[Compact]] — [[graft.streaming.Events.compactBatchTable]]:
+  *    `__compact_tmp`, `__compact_backup` (never scoped).
+  *
+  * The scoped tmp is never promoted. It holds only the touched
+  * partitions, and a scoped commit never removes the target (it
+  * overwrites partitions of the existing table), so no crash of it leaves
+  * the target missing; [[heal]] drops it as a scratch table whenever the
+  * target is present. The dbt callers also stage it under a suffix of its
+  * own, which [[heal]] never promotes from.
+  *
+  * `graft.*` TBLPROPERTIES (the snapshot's bucket count, an ingest
+  * index's geometry and cap) live on the catalog entry, which the tmp's
+  * `saveAsTable` writes fresh: [[swap]] carries them onto the tmp for
+  * incremental, snapshot, upsert and compaction. `table()` does not
+  * carry them — a replaced model starts from its config (a materialized
+  * view re-writes its own keys after the swap).
   *
   * CONTRACT (all scoped callers): a key's partition values must be stable
   * across versions — derive them from the key, not from mutable
@@ -31,6 +78,9 @@ import org.apache.spark.sql.functions._
   * index, i.e. a different engine). The contract is verifiable after the
   * fact: [[verifyPartitionKeys]] detects keys that leaked across
   * partitions — run it offline as a data test on any scoped target.
+  *
+  * Table names are plain `[db.]table` identifiers; the generated SQL
+  * quotes them.
   */
 object PartitionScoped {
 
@@ -42,14 +92,101 @@ object PartitionScoped {
     * full-table write anyway. */
   val MaxTouchedPartitions = 10000
 
+  /** One caller's scratch-table suffixes (see the recovery contract). */
+  private[graft] final case class Tag(tmp: String, backup: String,
+                                      scopedTmp: String) {
+    def scratch: Seq[String] = Seq(tmp, backup, scopedTmp).distinct
+  }
+  private[graft] val Dbt = Tag("__dbt_tmp", "__dbt_backup", "__dbt_scoped_tmp")
+  private[graft] val Upsert =
+    Tag("__upsert_tmp", "__upsert_backup", "__upsert_tmp")
+  private[graft] val Compact =
+    Tag("__compact_tmp", "__compact_backup", "__compact_tmp")
+
+  /** Restore a crash-parked rewrite of `table` (the recovery contract's
+    * one rule): a missing target is restored from the backup, or else
+    * promoted from the tmp; a present target gets its scratch tables
+    * dropped. Metadata only; idempotent. */
+  private[graft] def heal(spark: SparkSession, table: String,
+                          tag: Tag): Unit = {
+    def exists(t: String) = spark.catalog.tableExists(t)
+    val present = exists(table) ||
+      Seq(tag.backup, tag.tmp).map(table + _).find(exists).exists { parked =>
+        rename(spark, parked, table); true
+      }
+    if (present) tag.scratch.foreach(s => drop(spark, table + s))
+  }
+
+  /** Full rewrite: `writeTmp` writes the new table under the tmp name it
+    * is given; with `carry` the target's `graft.*` TBLPROPERTIES the tmp
+    * does not set itself are copied onto it; then the rename pair and the
+    * backup drop. */
+  private[graft] def swap(spark: SparkSession, table: String, tag: Tag,
+                          carry: Boolean)(writeTmp: String => Unit): Unit = {
+    val tmp = table + tag.tmp
+    val backup = table + tag.backup
+    drop(spark, tmp); drop(spark, backup)
+    writeTmp(tmp)
+    if (carry) {
+      def props(t: String) = metadata(spark, t).map(_.properties)
+        .getOrElse(Map.empty)
+      val own = props(tmp)
+      setProperties(spark, tmp, props(table).filter { case (k, _) =>
+        k.startsWith(Materializer.GraftKeyPrefix) && !own.contains(k) })
+    }
+    rename(spark, table, backup)
+    rename(spark, tmp, table)
+    drop(spark, backup)
+  }
+
+  /** Commit `f(target)` — the caller's rewrite of the current `target`
+    * read against the `staged` batch — into `table`. With `partCols` the
+    * table's own partition columns and at most [[MaxTouchedPartitions]]
+    * touched partition tuples, `f` sees only the touched partitions and
+    * the result is
+    * committed by [[overwriteTouched]] (aligned to the table's physical
+    * column order); otherwise `f` sees the whole target and the result
+    * goes through [[swap]], written with the table's partition columns
+    * that the result still carries (a schema-changing run may add
+    * columns, so the result's own schema is written; a sync_all_columns
+    * run that removed a partition column rewrites unpartitioned). Other
+    * `partCols` take the full swap: dynamic overwrite replaces whole
+    * table partitions, so a scope on other columns (an upsert batch
+    * passing `partitionCols` to a table created without them) would
+    * replace them with part of their rows. A scoped call needs a
+    * non-empty `staged`: an empty batch has no touched set, and the
+    * caller no-ops instead. */
+  private[graft] def rewrite(spark: SparkSession, table: String, tag: Tag,
+                             target: DataFrame, staged: DataFrame,
+                             partCols: Seq[String])(
+                             f: DataFrame => DataFrame): Unit = {
+    val tableParts = partitionColumns(spark, table)
+    val scopable = partCols.nonEmpty &&
+      partCols.map(_.toLowerCase).toSet == tableParts.map(_.toLowerCase).toSet
+    (if (scopable) touchedPredicate(staged, partCols) else None) match {
+      case Some(pred) =>
+        overwriteTouched(spark, table, table + tag.scopedTmp,
+          f(target.filter(pred))
+            .select(spark.table(table).columns.map(col).toIndexedSeq: _*))
+      case None =>
+        val result = f(target)
+        val keepParts = tableParts.filter(c =>
+          result.columns.exists(_.equalsIgnoreCase(c)))
+        swap(spark, table, tag, carry = true) { tmp =>
+          (if (keepParts.nonEmpty) result.write.partitionBy(keepParts: _*)
+           else result.write).saveAsTable(tmp)
+        }
+    }
+  }
+
   /** The staged batch's distinct partition tuples as one literal, null-safe
     * filter (`<=>` — a NULL partition value is a real partition and must
     * scope like any other). `None` when the batch touches more than
     * [[MaxTouchedPartitions]] partitions (caller falls back to the
     * full-table rewrite). The staged frame must be non-empty — an empty
     * batch has no touched set and the caller should no-op instead. */
-  def touchedPredicate(staged: DataFrame,
-                       partitionCols: Seq[String]): Option[Column] = {
+  private def touchedPredicate(staged: DataFrame,
+                               partitionCols: Seq[String]): Option[Column] = {
     val parts: Array[Row] = staged.select(partitionCols.map(col): _*)
       .distinct().limit(MaxTouchedPartitions + 1).collect()
     require(parts.nonEmpty,
@@ -75,48 +212,86 @@ object PartitionScoped {
 
   /** Commit a scoped rewrite: materialize `result` to `tmpTable`, then
     * dynamic-partition-overwrite it into `table` (position-based
-    * `insertInto`; the caller aligns columns to the target's physical
-    * order, partition columns last). Only partitions PRESENT in the
-    * result — exactly the touched set — are rewritten; every other
-    * partition's files are untouched. The overwrite-mode conf is set for
-    * the write and restored after. */
-  def overwriteTouched(spark: SparkSession, table: String,
-                       tmpTable: String, result: DataFrame,
-                       dropTmpSql: String => Unit): Unit = {
-    dropTmpSql(tmpTable)
+    * `insertInto`; `result` is aligned to the target's physical order,
+    * partition columns last). Only partitions PRESENT in the result —
+    * exactly the touched set — are rewritten; every other partition's
+    * files are untouched. */
+  private def overwriteTouched(spark: SparkSession, table: String,
+                               tmpTable: String, result: DataFrame): Unit = {
+    drop(spark, tmpTable)
     result.write.saveAsTable(tmpTable)
     dynamicOverwrite(spark) {
       spark.table(tmpTable).write.mode("overwrite").insertInto(table)
     }
-    dropTmpSql(tmpTable)
+    drop(spark, tmpTable)
   }
 
-  /** `ALTER TABLE … RENAME TO …` + partition-metadata repair. The session
-    * catalog's rename moves the data directory but DROPS a partitioned
-    * table's partition metadata (probed: `SHOW PARTITIONS` comes back
-    * empty and the table reads as 0 rows after a rename); `MSCK REPAIR`
-    * re-registers the partitions from the filesystem, including NULL
-    * partition values. No repair for unpartitioned tables. Every
-    * tmp/backup swap and crash-recovery promotion must rename through
-    * this, or a partitioned table silently empties on the swap. Names
-    * are interpolated as given — callers quote if needed. */
-  def renameTable(spark: SparkSession, from: String, to: String): Unit = {
-    spark.sql(s"ALTER TABLE $from RENAME TO $to")
-    // only the identifier-shaped failures may degrade to "no partition
-    // columns" (a VIEW rename lands here — views have none); a transient
-    // metadata error must propagate, or the MSCK repair the swap depends
-    // on is silently skipped and the renamed table reads as 0 rows
-    val partCols =
-      try spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(to))
-        .partitionColumnNames
-      catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
-             _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
-             _: org.apache.spark.sql.catalyst.parser.ParseException => Nil
-      }
-    if (partCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $to")
+  /** `ALTER {TABLE|VIEW} … RENAME TO …` — the `alter {type}` form of
+    * dbt's rename_relation (Spark rejects `ALTER TABLE` on a view) — plus
+    * partition-metadata repair. The session catalog's rename moves the
+    * data directory but DROPS a partitioned table's partition metadata
+    * (probed: `SHOW PARTITIONS` comes back empty and the table reads as 0
+    * rows after a rename); `MSCK REPAIR` re-registers the partitions from
+    * the filesystem, including NULL partition values. Every rename in the
+    * project goes through here, or a partitioned table silently empties
+    * on the swap. */
+  def rename(spark: SparkSession, from: String, to: String): Unit = {
+    val meta = metadata(spark, from)
+    val view = meta.exists(_.tableType == CatalogTableType.VIEW)
+    spark.sql(s"ALTER ${if (view) "VIEW" else "TABLE"} ${quote(from)} " +
+      s"RENAME TO ${quote(to)}")
+    if (meta.exists(_.partitionColumnNames.nonEmpty))
+      spark.sql(s"MSCK REPAIR TABLE ${quote(to)}")
   }
+
+  /** `DROP {TABLE|VIEW} IF EXISTS`, by the relation's own type. */
+  private[graft] def drop(spark: SparkSession, name: String): Unit =
+    if (spark.catalog.tableExists(name)) {
+      val view = spark.catalog.getTable(name).tableType == "VIEW"
+      spark.sql(s"DROP ${if (view) "VIEW" else "TABLE"} IF EXISTS " +
+        quote(name))
+    }
+
+  /** `ALTER {TABLE|VIEW} … SET TBLPROPERTIES`, keys and values escaped as
+    * string literals; no-op for an empty map. */
+  private[graft] def setProperties(spark: SparkSession, name: String,
+                                   props: Map[String, String]): Unit =
+    if (props.nonEmpty) {
+      def quoted(s: String) =
+        "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+      val view =
+        metadata(spark, name).exists(_.tableType == CatalogTableType.VIEW)
+      val kvs = props.toSeq.sortBy(_._1)
+        .map { case (k, v) => s"${quoted(k)} = ${quoted(v)}" }.mkString(", ")
+      spark.sql(s"ALTER ${if (view) "VIEW" else "TABLE"} ${quote(name)} " +
+        s"SET TBLPROPERTIES ($kvs)")
+    }
+
+  /** The catalog entry of `name`; `None` only when the name does not
+    * resolve — a missing table or database, or an identifier the
+    * table-identifier parser rejects. Any OTHER metadata failure
+    * propagates: swallowing a transient catalog error would silently
+    * degrade a partitioned table to the unpartitioned swap (layout loss
+    * that costs every later run its partition scoping) or skip the MSCK
+    * repair a rename depends on (the renamed table reads as 0 rows). */
+  private[graft] def metadata(spark: SparkSession,
+                              name: String): Option[CatalogTable] =
+    try Some(spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(name)))
+    catch {
+      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
+           _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
+           _: org.apache.spark.sql.catalyst.parser.ParseException => None
+    }
+
+  /** The catalog's partition columns of `name` (Nil when unpartitioned or
+    * the name does not resolve, see [[metadata]]). */
+  private[graft] def partitionColumns(spark: SparkSession,
+                                      name: String): Seq[String] =
+    metadata(spark, name).map(_.partitionColumnNames).getOrElse(Nil)
+
+  private def quote(name: String): String =
+    name.split('.').map(p => s"`$p`").mkString(".")
 
   /** Partition-stability VERIFIER for the scoped-rewrite contract (see
     * the object scaladoc): returns the keys whose rows span MORE THAN

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSes
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.mat.PartitionScoped
 
 /** Streaming analytics over the `events` table (additive scope — the
   * reference is batch-only, SURVEY §2.5).
@@ -1486,14 +1487,10 @@ object Events {
   private def checkTableName(table: String): Unit = {
     require(SimpleIdent.findFirstIn(table).isDefined,
       s"upsert table name must be a simple [db.]table identifier: $table")
-    require(!table.endsWith("__upsert_tmp") &&
-      !table.endsWith("__upsert_backup"),
-      s"names ending in __upsert_tmp/__upsert_backup are reserved " +
-        s"by the upsert sink's swap: $table")
-    require(!table.endsWith("__compact_tmp") &&
-      !table.endsWith("__compact_backup"),
-      s"names ending in __compact_tmp/__compact_backup are reserved " +
-        s"by compactBatchTable's swap: $table")
+    for (tag <- Seq(PartitionScoped.Upsert, PartitionScoped.Compact);
+         suffix <- tag.scratch)
+      require(!table.endsWith(suffix), s"names ending in $suffix are " +
+        s"reserved by the upsert and compaction swaps: $table")
     require(!table.endsWith("__cents"),
       s"names ending in __cents are reserved for the embedding " +
         s"index's centroid sidecar: $table")
@@ -1514,12 +1511,6 @@ object Events {
     * = not an index (sink tables, user tables): plain fold, no rows
     * dropped. */
   val IndexKindProp = "graft.index.kind"
-
-  private def setTableProps(spark: SparkSession, table: String,
-                            props: Map[String, String]): Unit =
-    if (props.nonEmpty)
-      spark.sql(s"ALTER TABLE ${quoted(table)} SET TBLPROPERTIES (" +
-        props.map { case (k, v) => s"'$k'='$v'" }.mkString(", ") + ")")
 
   private def tablePropsOf(spark: SparkSession, table: String)
       : Map[String, String] =
@@ -1548,12 +1539,6 @@ object Events {
     }
   }
 
-  /** Max touched partitions before falling back to the full merge —
-    * shared with the batch incremental materializer, see
-    * [[graft.mat.PartitionScoped.MaxTouchedPartitions]]. */
-  private def MaxTouchedPartitions: Int =
-    graft.mat.PartitionScoped.MaxTouchedPartitions
-
   /** One micro-batch of the streaming upsert sink ([[startUpsertQuery]]):
     * collapse the batch to its LAST version per unique key — `orderCol`
     * desc, whole-row hash as the deterministic tiebreak — then MERGE
@@ -1575,13 +1560,15 @@ object Events {
     * created `partitionBy(partitionCols)` and each subsequent batch
     * rewrites ONLY the partitions containing staged keys — the batch's
     * distinct partition tuples (metadata-sized, capped at
-    * [[MaxTouchedPartitions]]) become literal partition filters on the
-    * target read (static partition pruning: untouched partitions are
-    * never READ), the scoped merge is materialized to a tmp table, and
-    * dynamic partition overwrite (`partitionOverwriteMode=dynamic` +
-    * `insertInto`) commits it (only partitions present in the merged
-    * result — exactly the touched set — are REWRITTEN). Per-batch cost
-    * is O(touched partitions), not O(|table|).
+    * [[PartitionScoped.MaxTouchedPartitions]]) become literal partition
+    * filters on the target read (static partition pruning: untouched
+    * partitions are never READ), the scoped merge is materialized to a
+    * tmp table, and dynamic partition overwrite
+    * (`partitionOverwriteMode=dynamic` + `insertInto`) commits it (only
+    * partitions present in the merged result — exactly the touched set —
+    * are REWRITTEN). Per-batch cost is O(touched partitions), not
+    * O(|table|). A table created with other partition columns than
+    * `partitionCols` takes the full merge.
     *
     * Partition-scoped CONTRACT: a key's partition values must be stable
     * across versions (derive them from the key, not from mutable
@@ -1591,16 +1578,9 @@ object Events {
     * standard constraint of partition-local upserts (a global key index
     * is the alternative, and a different engine).
     *
-    * Crash recovery (replay safety): the unpartitioned swap is not
-    * atomic — a crash between the two RENAMEs leaves the target missing
-    * and its content parked in `<table>__upsert_backup` (or fully
-    * merged in `<table>__upsert_tmp`). On entry, a missing target with
-    * a surviving backup/tmp is renamed back BEFORE the
-    * create-vs-merge decision, so a foreachBatch replay re-merges into
-    * the recovered history instead of rebuilding the table from the
-    * replayed batch alone. The partition-scoped path commits through
-    * the file commit protocol (staging dir, per-job commit) and its
-    * re-merge is idempotent, so replay after any crash point converges. */
+    * Crash recovery (replay safety): a crash-parked swap is healed on
+    * entry, before the create-vs-merge decision — see
+    * [[graft.mat.PartitionScoped]]'s recovery contract. */
   def upsertBatch(batch: DataFrame, table: String,
                   uniqueKeys: Seq[String], orderCol: String,
                   partitionCols: Seq[String] = Nil): Unit = {
@@ -1617,21 +1597,9 @@ object Events {
     val collapsed = batch.filter(keysNotNull)
       .withColumn(rn, row_number().over(w))
       .filter(col(rn) === 1).drop(rn)
-    val tmp = s"${table}__upsert_tmp"
-    val backup = s"${table}__upsert_backup"
-    // crash recovery: a missing target with a surviving backup (old
-    // history, pre-merge) or tmp (fully merged) is restored first —
-    // without this, the tableExists check below would take the CREATE
-    // path on replay and rebuild the table from this batch alone,
-    // silently losing all previously merged history
-    if (!spark.catalog.tableExists(table)) {
-      if (spark.catalog.tableExists(backup))
-        graft.mat.PartitionScoped.renameTable(spark, quoted(backup),
-          quoted(table))
-      else if (spark.catalog.tableExists(tmp))
-        graft.mat.PartitionScoped.renameTable(spark, quoted(tmp),
-          quoted(table))
-    }
+    // without the heal, the tableExists check below would take the
+    // CREATE path on replay and rebuild the table from this batch alone
+    PartitionScoped.heal(spark, table, PartitionScoped.Upsert)
     if (!spark.catalog.tableExists(table)) {
       // first batch: create — possibly EMPTY when every row was
       // null-keyed (the schema is still known and downstream readers
@@ -1649,42 +1617,11 @@ object Events {
     // swap if the table is partitioned. The isEmpty probe is a limit-1
     // job on an already-collapsed micro-batch — negligible per batch.
     if (collapsed.isEmpty) return
-    val target = spark.table(table)
-    // touched partitions of THIS batch (null-safe literal tuples); None
-    // when unpartitioned or over the metadata cap → full-table merge
-    val touched: Option[org.apache.spark.sql.Column] =
-      if (partitionCols.isEmpty) None
-      else graft.mat.PartitionScoped.touchedPredicate(collapsed,
-        partitionCols)
-    touched match {
-      case Some(touchedPred) =>
-        // scoped read: literal partition filters → static pruning, so
-        // untouched partitions are never read. The commit materializes
-        // to tmp first (never overwrite partitions of a table from a
-        // plan that reads it), then dynamic-partition-overwrites —
-        // insertInto is position-based; merged carries the target's
-        // column order (partition cols last in catalog tables), which
-        // Incremental.merge preserves
-        val merged = graft.mat.Incremental.merge(
-          target.filter(touchedPred), collapsed, uniqueKeys)
-        graft.mat.PartitionScoped.overwriteTouched(spark, table, tmp,
-          merged, t => spark.sql(s"DROP TABLE IF EXISTS ${quoted(t)}"))
-      case None =>
-        val merged = graft.mat.Incremental.merge(target, collapsed,
-          uniqueKeys)
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(tmp)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-        val writer =
-          if (partitionCols.nonEmpty)
-            merged.write.partitionBy(partitionCols: _*)
-          else merged.write
-        writer.saveAsTable(tmp)
-        graft.mat.PartitionScoped.renameTable(spark, quoted(table),
-          quoted(backup))
-        graft.mat.PartitionScoped.renameTable(spark, quoted(tmp),
-          quoted(table))
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-    }
+    // scoped (touched partitions, when partitioned and under the cap) or
+    // full merge — Incremental.merge keeps the target's column order
+    PartitionScoped.rewrite(spark, table, PartitionScoped.Upsert,
+      spark.table(table), collapsed, partitionCols)(
+      graft.mat.Incremental.merge(_, collapsed, uniqueKeys))
   }
 
   /** Streaming UPSERT sink: each micro-batch MERGEs into a catalog
@@ -1894,7 +1831,7 @@ object Events {
         .saveAsTable(table)
       shift
     } finally pinned.unpersist()
-    setTableProps(spark, table,
+    PartitionScoped.setProperties(spark, table,
       Map(IndexKindProp -> "signature",
         CappedKProp -> maxBucket.toString,
         PfxShiftProp -> pfxShift.toString))
@@ -1919,38 +1856,6 @@ object Events {
   // batch_id-partitioned table maintenance (compaction)
   // ------------------------------------------------------------------
 
-  /** Restore a `batch_id`-partitioned table from a crash mid-
-    * [[compactBatchTable]] swap: a missing target with a surviving
-    * `__compact_tmp` (the COMPLETE compacted result — the first swap
-    * rename only runs after the tmp write committed) or
-    * `__compact_backup` (the pre-compaction original) is renamed back;
-    * leftover scratch from a completed or abandoned swap is dropped.
-    * Idempotent; called on entry by [[compactBatchTable]] AND by the
-    * ingest loop, so a batch replay arriving after a compaction crash
-    * heals the table before probing it. */
-  def recoverCompacted(spark: SparkSession, table: String): Unit = {
-    val tmp = s"${table}__compact_tmp"
-    val backup = s"${table}__compact_backup"
-    if (!spark.catalog.tableExists(table)) {
-      if (spark.catalog.tableExists(tmp)) {
-        graft.mat.PartitionScoped.renameTable(spark, quoted(tmp),
-          quoted(table))
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-      } else if (spark.catalog.tableExists(backup))
-        graft.mat.PartitionScoped.renameTable(spark, quoted(backup),
-          quoted(table))
-    } else {
-      if (spark.catalog.tableExists(tmp) &&
-          !spark.catalog.tableExists(backup))
-        // pre-swap crash: tmp may be partial — the re-run rewrites it
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(tmp)}")
-      else if (spark.catalog.tableExists(backup) &&
-          !spark.catalog.tableExists(tmp))
-        // post-swap crash: target is the compacted table, drop leftovers
-        spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
-    }
-  }
-
   /** Fold a `batch_id`-partitioned ingest table's COMMITTED batch
     * partitions into the base partition (batch_id = -1), bounding
     * partition growth: without maintenance the novelty-ingest loop
@@ -1973,7 +1878,7 @@ object Events {
     * exists), grouped so the rewrite also FOLDS the per-append file
     * fragmentation, then rename-swapped in via
     * `__compact_backup` (never overwrite a table from a plan that
-    * reads it); every crash window is healed by [[recoverCompacted]].
+    * reads it); crash recovery: [[graft.mat.PartitionScoped]]'s contract.
     * The fold rewrites O(table) once per maintenance run — the
     * amortized answer to unbounded partition growth, not a per-batch
     * cost. Sink rows keep their content but their `batch_id` coarsens
@@ -1987,7 +1892,7 @@ object Events {
     * partitions after). */
   def compactBatchTable(spark: SparkSession, table: String): (Int, Int) = {
     checkTableName(table)
-    recoverCompacted(spark, table)
+    PartitionScoped.heal(spark, table, PartitionScoped.Compact)
     require(spark.catalog.tableExists(table),
       s"compactBatchTable: no such table $table (and no crash-parked " +
         "__compact_tmp/__compact_backup to recover)")
@@ -2061,10 +1966,6 @@ object Events {
           Map(PfxShiftProp -> shift.toString))
       case _ => (folded, Map.empty[String, String])
     }
-    val tmp = s"${table}__compact_tmp"
-    val backup = s"${table}__compact_backup"
-    spark.sql(s"DROP TABLE IF EXISTS ${quoted(tmp)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
     val meta = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
     val bspec = bucketSpecOf(spark, table)
@@ -2090,18 +1991,13 @@ object Events {
         else wb
       case None => w0
     }
-    w.saveAsTable(tmp)
-    // the swap must not strip the graft.* table properties (the
-    // geometry declaration above, the capped index's k) — saveAsTable
-    // writes a fresh catalog entry, so carry them onto tmp explicitly
-    setTableProps(spark, tmp,
-      tablePropsOf(spark, table).filter(_._1.startsWith("graft.")) ++
-        propOverride)
-    graft.mat.PartitionScoped.renameTable(spark, quoted(table),
-      quoted(backup))
-    graft.mat.PartitionScoped.renameTable(spark, quoted(tmp),
-      quoted(table))
-    spark.sql(s"DROP TABLE IF EXISTS ${quoted(backup)}")
+    // the swap carries the other graft.* properties (the geometry
+    // declaration, the capped index's k) across
+    PartitionScoped.swap(spark, table, PartitionScoped.Compact,
+      carry = true) { tmp =>
+      w.saveAsTable(tmp)
+      PartitionScoped.setProperties(spark, tmp, propOverride)
+    }
     (parts.length,
       spark.sql(s"SHOW PARTITIONS ${quoted(table)}").count().toInt)
   }
@@ -2295,8 +2191,8 @@ object Events {
     rejectReserved(batch, Seq("batch_id", "novel") ++ g.reserved,
       s"the ${g.kind} novelty-ingest loop")
     val spark = batch.sparkSession
-    recoverCompacted(spark, indexTable)
-    recoverCompacted(spark, sinkTable)
+    PartitionScoped.heal(spark, indexTable, PartitionScoped.Compact)
+    PartitionScoped.heal(spark, sinkTable, PartitionScoped.Compact)
     val replay = hasBatch(spark, indexTable, batchId)
     val declared = spark.catalog.tableExists(indexTable) &&
       tablePropsOf(spark, indexTable).get(IndexKindProp).contains(g.kind)
@@ -2500,7 +2396,7 @@ object Events {
       .withColumn("batch_id", lit(-1L))
       .select(col("cell"), col("vec"), col("batch_id"))
       .write.partitionBy("batch_id", "cell").saveAsTable(table)
-    setTableProps(spark, table, Map(IndexKindProp -> "embedding"))
+    PartitionScoped.setProperties(spark, table, Map(IndexKindProp -> "embedding"))
   }
 
   /** The embedding geometry's batch-form probe: the rows of `work` whose
@@ -2731,7 +2627,7 @@ object Events {
     groupForPartitionedWrite(rows, "band_pfx")
       .write.partitionBy("batch_id", "band_pfx")
       .saveAsTable(table)
-    setTableProps(spark, table, Map(IndexKindProp -> "band"))
+    PartitionScoped.setProperties(spark, table, Map(IndexKindProp -> "band"))
   }
 
   /** The novelty-ingest loop under the Jaccard/LSH rule ([[ingestBatch]],
@@ -2812,7 +2708,7 @@ object Events {
     groupForPartitionedWrite(rows, "key_pfx")
       .write.partitionBy("batch_id", "key_pfx")
       .saveAsTable(table)
-    setTableProps(spark, table, Map(IndexKindProp -> "key"))
+    PartitionScoped.setProperties(spark, table, Map(IndexKindProp -> "key"))
   }
 
   /** Exact-KEY novelty probe: rows whose `keyCol` equals ANY indexed

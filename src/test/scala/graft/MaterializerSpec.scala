@@ -301,6 +301,49 @@ class MaterializerSpec extends SparkSpec {
     assert(spark.catalog.tableExists("rn_b") && !spark.catalog.tableExists("rn_a"))
   }
 
+  test("rename relation moves a view (alter view … rename)") {
+    for (v <- Seq("rnv_a", "rnv_b")) spark.sql(s"DROP VIEW IF EXISTS $v")
+    spark.sql("CREATE VIEW rnv_a AS SELECT 1 AS x")
+    mat.renameRelation(Relation("rnv_a"), Relation("rnv_b"))
+    assert(!spark.catalog.tableExists("rnv_a"))
+    assert(spark.catalog.getTable("rnv_b").tableType == "VIEW")
+    assert(spark.table("rnv_b").collect().map(_.getInt(0)).toSeq == Seq(1))
+    spark.sql("DROP VIEW rnv_b")
+  }
+
+  test("table model replaces an existing view through the swap") {
+    for (s <- Seq("tv_swap__dbt_tmp", "tv_swap__dbt_backup"))
+      spark.sql(s"DROP TABLE IF EXISTS $s")
+    mat.dropRelation(Relation("tv_swap"))
+    spark.sql("CREATE VIEW tv_swap AS SELECT 1 AS id")
+    mat.table(Relation("tv_swap"), Seq((2, "b"), (3, "c")).toDF("id", "v"))
+    assert(spark.catalog.getTable("tv_swap").tableType != "VIEW")
+    assert(spark.table("tv_swap").orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq == Seq((2, "b"), (3, "c")))
+    assert(!spark.catalog.tableExists("tv_swap__dbt_tmp"))
+    assert(!spark.catalog.tableExists("tv_swap__dbt_backup"))
+    mat.dropRelation(Relation("tv_swap"))
+  }
+
+  test("a graft.* property survives the full-rewrite swap") {
+    val rel = Relation("inc_props")
+    for (s <- Seq("inc_props", "inc_props__dbt_tmp", "inc_props__dbt_backup"))
+      spark.sql(s"DROP TABLE IF EXISTS $s")
+    mat.incremental(rel, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      strategy = "delete+insert", uniqueKeys = Seq("id"))
+    spark.sql("ALTER TABLE inc_props SET TBLPROPERTIES ('graft.keep' = 'yes')")
+    mat.incremental(rel, Seq((2L, "B")).toDF("id", "v"),
+      strategy = "delete+insert", uniqueKeys = Seq("id"))
+    assert(spark.table("inc_props").orderBy("id").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((1L, "a"), (2L, "B")))
+    val props = spark.sql("SHOW TBLPROPERTIES inc_props").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(props.get("graft.keep").contains("yes"),
+      s"graft.* property lost in the swap: $props")
+    spark.sql("DROP TABLE inc_props")
+  }
+
   test("grants diff matrix: should_revoke on/off, replace wipes (apply_grants.sql)") {
     val c = new CatalogOps(spark)
     val rel = Relation("g_matrix")

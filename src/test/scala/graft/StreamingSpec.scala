@@ -1828,9 +1828,9 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id").as[Long].collect().toSet
     assert(batch4(sinkT) == batch4(sinkU))
     // mid-swap crash: target gone, backup holds the original — heals
-    graft.mat.PartitionScoped.renameTable(spark, s"`$idxT`",
-      s"`${idxT}__compact_backup`")
-    Events.recoverCompacted(spark, idxT)
+    graft.mat.PartitionScoped.rename(spark, idxT, s"${idxT}__compact_backup")
+    graft.mat.PartitionScoped.heal(spark, idxT,
+      graft.mat.PartitionScoped.Compact)
     assert(spark.catalog.tableExists(idxT) &&
       !spark.catalog.tableExists(s"${idxT}__compact_backup"))
     for (t <- Seq(idxT, sinkT, idxU, sinkU))
