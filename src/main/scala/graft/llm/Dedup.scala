@@ -126,18 +126,6 @@ object Dedup {
   def signature(shingleArr: Column, k: Int): Seq[Column] =
     (0 until k).map(i => minhash(shingleArr, i))
 
-  /** LSH band keys: the k signature values in b bands of r = k/b rows;
-    * band key = "<band>:" + md5 of the concatenated band slice. */
-  def bandKeys(shingleArr: Column, k: Int, bands: Int): Column = {
-    val sig = signature(shingleArr, k)
-    val r = k / bands
-    array((0 until bands).map { b =>
-      concat(lit(s"$b:"),
-        md5(concat_ws("|",
-          sig.slice(b * r, (b + 1) * r).map(_.cast(StringType)): _*)))
-    }: _*)
-  }
-
   /** One row per (document, shingle string): word n-grams built
     * RELATIONALLY — posexplode tokens, lead() over a per-document
     * window, codegen'd concat — instead of the array-HOF form

@@ -356,15 +356,14 @@ object Events {
       throw new IllegalArgumentException(
         s"column name $c is reserved by $owner"))
 
-  /** Scratch and output column names of the three table probes
-    * ([[noveltyBandedJoin]], [[noveltyBandExistsJoin]],
-    * [[noveltyKeyExistsJoin]]): each probe rejects its own, and the
-    * ingest loops reject them up front, before the replay probe. */
+  /** Scratch and output column names the table probes add beside a
+    * batch's columns ([[noveltyBandedJoin]]; [[probeJoin]], under
+    * [[noveltyBandExistsJoin]] and [[noveltyKeyExistsJoin]]): each probe
+    * rejects its own, and the ingest loops reject them up front, before
+    * the replay probe. */
   private val BandedProbeNames = Seq("__graft_bsig", "novel") ++
     (0 until 4).flatMap(b => Seq(s"__graft_bk$b", s"__graft_sigs$b"))
-  private val BandExistsProbeNames =
-    Seq("__graft_barr", "__graft_band", "novel")
-  private val KeyProbeNames = Seq("__graft_key", "novel")
+  private val ProbeNames = Seq("__graft_pv", "novel")
 
   /** The exact bottom-`k` rows by `sig` per `keys` group — the
     * deterministic per-bucket candidate cap ([[DefaultMaxBandBucket]]).
@@ -380,17 +379,17 @@ object Events {
     * generated code is the same whatever the values — a Column `isin`
     * keeps up to 10 values as literals, inlined into the generated source
     * when numeric — so a steady ingest reuses its compiled classes. A
-    * BYTE, SHORT or INT `c` is widened to BIGINT (a set of those compiles
-    * to a switch over its values). Array and binary values compare by
+    * BYTE, SHORT or INT `c` is compared as a string: a set of those
+    * compiles to a switch over its values, and the optimizer unwraps a
+    * widening cast to BIGINT (UnwrapCastInBinaryComparison) — measured,
+    * the embedding probe's `cell` partition filter compiled a new
+    * predicate per touched cell set. Array and binary values compare by
     * content. On a partition column it is a static partition filter: the
     * catalog prunes the partitions before any file is listed. */
   private def inSet(c: Column, t: DataType, values: Iterable[Any]): Column =
     t match {
       case ByteType | ShortType | IntegerType =>
-        inSet(c.cast(LongType), LongType, values.map {
-          case v: Number => v.longValue
-          case v => v
-        })
+        inSet(c.cast(StringType), StringType, values.map(String.valueOf))
       case _ =>
         val toCatalyst =
           org.apache.spark.sql.catalyst.CatalystTypeConverters
@@ -401,8 +400,8 @@ object Events {
     }
 
   /** `index` restricted to the `pfxCol` partitions in `touched` — a
-    * batch's prefixes or cells, on the driver (at most 64 key or 256 band
-    * prefixes, or the index's cells). Static partition pruning: a small
+    * batch's prefixes or cells, on the driver (each geometry's entry
+    * says how many it has). Static partition pruning: a small
     * batch lists and reads only its fraction of the index (StreamingSpec
     * pins the partitions read). The set is held by reference
     * ([[inSet]]), so its size costs no generated code and needs no bound.
@@ -416,15 +415,37 @@ object Events {
     else index.filter(inSet(col(pfxCol), index.schema(pfxCol).dataType,
       touched))
 
-  /** Most probe values (keys, band arrays or vectors) an ingest probe
-    * decides on the driver. Up to this many, the batch's values are
-    * collected in one job, the index is read in their partitions for
-    * exactly those values, and the duplicates filter the batch as a set
-    * held by reference — no join, no exchange, and the index rows are
-    * built on the driver. Past it (a backlog or catch-up batch) the probe
-    * takes the join form, whose work stays on the executors and scales
-    * with the batch: more jobs per call (the join's and the distinct's
-    * stages), and the driver holds only the touched prefixes or cells. */
+  // ------------------------------------------------------------------
+  // the novelty probe: one driver-or-join kernel for the key, MinHash
+  // and embedding geometries; a geometry supplies only what differs
+  // ------------------------------------------------------------------
+
+  /** What one index geometry plugs into the probe ([[probeBatch]],
+    * [[probeJoin]]).
+    *
+    * @param valueCol the batch's probe value column: a key, a band array
+    *                 or a vector
+    * @param matches  a value's match keys, as an array: the key, the
+    *                 array's bands, or the vector's probed cells
+    * @param pfxOf    a match key's index prefix
+    * @param pfxCol   the index's prefix partition column
+    * @param indexCol the index column a novel value fills: with its match
+    *                 keys, which a duplicate equals; or, with `verify`,
+    *                 with itself
+    * @param verify   for match keys that only locate candidates: the
+    *                 test a candidate must also pass */
+  private[graft] final case class ProbeGeometry(valueCol: String,
+      matches: Column => Column, pfxOf: Column => Column, pfxCol: String,
+      indexCol: String, verify: Option[Verify] = None)
+
+  /** A verify step: index rows whose `matchCol` equals a value's match key
+    * are duplicates where `dup(value, stage(value), row, stage(row))`
+    * holds, `row` being their `indexCol`; `stage` (a self-norm) is
+    * computed once per side, not once per pair. */
+  private[graft] final case class Verify(matchCol: String,
+      stage: Column => Column, dup: (Column, Column, Column, Column) => Column)
+
+  /** Most batch rows the probe decides on the driver ([[probeBatch]]). */
   val MaxCollectedProbeRows = 10000
 
   /** The rows of `df` on the driver if there are at most `max`, else
@@ -441,12 +462,165 @@ object Events {
     }
   }
 
-  /** A one-column frame of driver-side `values` (batch-sized). */
-  private def localFrame(spark: SparkSession, name: String, t: DataType,
-                         values: Seq[Any]): DataFrame =
-    spark.createDataFrame(
-      java.util.Arrays.asList(values.map(Row(_)): _*),
-      StructType(Seq(StructField(name, t))))
+  /** Driver-side identity of a probe value: binary values compare by
+    * content. */
+  private def keyIdentity(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case other => other
+  }
+
+  /** A frame of driver-side `rows` (batch-sized). */
+  private def localFrame(spark: SparkSession, schema: Seq[(String, DataType)],
+                         rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(schema.map { case (n, t) => StructField(n, t) }))
+
+  /** The prefixes of the match keys `__graft_pm` of `ms`. */
+  private def prefixes(g: ProbeGeometry, ms: DataFrame): DataFrame =
+    ms.select(g.pfxOf(col("__graft_pm")))
+
+  /** The values of `df`'s one column, for a projection of a driver-side
+    * frame: the optimizer folds it into a local relation (evaluated
+    * interpreted — no job, no generated class), whose rows are read
+    * here; any other plan is collected. */
+  private def driverValues(df: DataFrame): Seq[Any] = {
+    val t = df.schema.head.dataType
+    df.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toScala = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(t)
+        r.data.map(row => toScala(row.get(0, t)))
+      case _ => df.collect().map(_.get(0)).toSeq
+    }
+  }
+
+  /** `index` in the `touched` prefixes, when it carries the prefix;
+    * `touched` is evaluated only then. */
+  private def probedIndex(g: ProbeGeometry, index: DataFrame,
+                          touched: => Seq[Any]): DataFrame =
+    if (index.columns.contains(g.pfxCol))
+      prunedToTouched(index, g.pfxCol, touched)
+    else index
+
+  /** The `__graft_pv` of `probed` (`__graft_pv`, `__graft_pm` pairs) with
+    * a duplicate in `idx`, one row per matching pair. */
+  private def duplicates(g: ProbeGeometry, probed: DataFrame,
+                         idx: DataFrame): DataFrame = {
+    val pv = col("__graft_pv")
+    val row = col(g.indexCol)
+    g.verify match {
+      case None => probed.join(idx.select(row.as("__graft_pm")),
+          Seq("__graft_pm"), "left_semi")
+        .select(pv)
+      case Some(vf) =>
+        probed.withColumn("__graft_pn", vf.stage(pv))
+          .join(idx.filter(row.isNotNull).select(
+            col(vf.matchCol).as("__graft_pm"), row.as("__graft_iv"),
+            vf.stage(row).as("__graft_in")), Seq("__graft_pm"))
+          .filter(vf.dup(pv, col("__graft_pn"), col("__graft_iv"),
+            col("__graft_in")))
+          .select(pv)
+    }
+  }
+
+  /** The novelty probe of the ingest: the rows of `frame` with no
+    * duplicate of their `g.valueCol` in `index`, plus `novel`; and the
+    * novel values' index rows, distinct, as column `g.indexCol` — their
+    * match keys, or with `g.verify` the values. None when `frame` has no
+    * rows. A value's duplicate is an index row that equals one of its
+    * match keys, or with `g.verify` shares one and passes the test; a
+    * NULL value has none, so its row is kept. On an index carrying
+    * `g.pfxCol` only the partitions of the match keys' prefixes are read
+    * ([[prunedToTouched]]).
+    *
+    * Up to [[MaxCollectedProbeRows]] rows — the trickle regime a steady
+    * stream runs in — the probe is decided on the driver: one job
+    * collects every row's value and match keys (an empty collect ends
+    * the call); the prefixes come from `g.pfxOf` over a driver-side
+    * frame of the match keys ([[driverValues]]); one job reads the index
+    * in the touched partitions — the match keys as a set held by
+    * reference, or, with a verify predicate, joined to the value/match
+    * key pairs — and the duplicate values filter `frame` as a set. No
+    * exchange, and the index rows are built on the driver. Past it (a
+    * backlog, or the first batch after a restart) the probe takes the
+    * join form ([[probeJoin]]): its work runs on the executors and
+    * scales with the batch, the novel rows are checkpointed as the sink
+    * append computes them, the index rows derive from them, and the
+    * driver holds only the touched prefixes. Both forms decide alike
+    * (StreamingSpec pins it). The prefixes are not computed in the
+    * collect job: a band array's would need a higher-order function
+    * there, which takes the projection out of whole-stage codegen
+    * (measured, one more generated class). */
+  private[graft] def probeBatch(frame: DataFrame, index: DataFrame,
+                                g: ProbeGeometry)
+      : Option[(DataFrame, DataFrame)] = {
+    val spark = frame.sparkSession
+    val v = col(g.valueCol)
+    val sel = frame.select(v, g.matches(v))
+    collectUpTo(sel, MaxCollectedProbeRows) match {
+      case Some(all) if all.isEmpty => None
+      case Some(all) =>
+        val Seq(vt, ArrayType(mt, _)) = sel.schema.map(_.dataType)
+        val rows = all.filterNot(_.isNullAt(0))
+          .distinctBy(r => keyIdentity(r.get(0)))
+        val values = rows.map(_.get(0))
+        // (value, match key) of every pair
+        val pairs = rows.flatMap(r =>
+          r.getSeq[Any](1).filter(_ != null).map((r.get(0), _)))
+        val ms = pairs.map(_._2).distinctBy(keyIdentity)
+        lazy val idx = probedIndex(g, index, driverValues(prefixes(g,
+          localFrame(spark, Seq("__graft_pm" -> mt), ms.map(Row(_))))).distinct)
+        val dupIds: Set[Any] =
+          if (pairs.isEmpty) Set.empty
+          else if (g.verify.isEmpty) {
+            val found = idx.filter(inSet(col(g.indexCol), mt, ms))
+              .select(col(g.indexCol)).collect()
+              .map(r => keyIdentity(r.get(0))).toSet
+            pairs.collect { case (pv, m) if found(keyIdentity(m)) =>
+              keyIdentity(pv) }.toSet
+          } else
+            duplicates(g, localFrame(spark,
+                Seq("__graft_pv" -> vt, "__graft_pm" -> mt),
+                pairs.map { case (pv, m) => Row(pv, m) }), idx)
+              .collect().map(r => keyIdentity(r.get(0))).toSet
+        val isDup = (pv: Any) => dupIds(keyIdentity(pv))
+        val (idxT, idxRows) =
+          if (g.verify.isEmpty) (mt, pairs.collect {
+            case (pv, m) if !isDup(pv) => m }.distinctBy(keyIdentity))
+          else (vt, values.filterNot(isDup))
+        Some((frame.filter(v.isNull || !inSet(v, vt, values.filter(isDup)))
+            .withColumn("novel", lit(true)),
+          localFrame(spark, Seq(g.indexCol -> idxT), idxRows.map(Row(_)))))
+      case None =>
+        val novel = checkpointed(probeJoin(frame, index, g))
+        val rows = if (g.verify.isEmpty) explode(g.matches(v)) else v
+        Some((novel, novel.select(rows.as(g.indexCol))
+          .filter(col(g.indexCol).isNotNull).distinct()))
+    }
+  }
+
+  /** The join form of [[probeBatch]]'s novel rows, lazy: the batch's
+    * distinct values explode to their match keys, the pairs join the
+    * index on the match key (verified, if the geometry says so), and the
+    * duplicate values anti-join `frame`. On an index carrying
+    * `g.pfxCol` the pairs are checkpointed and their prefixes collected
+    * when the probe is built, and the index scan reads only those
+    * partitions; the index itself is read when the probe runs. */
+  private def probeJoin(frame: DataFrame, index: DataFrame,
+                        g: ProbeGeometry): DataFrame = {
+    val pv = col("__graft_pv")
+    val pairs = frame.select(col(g.valueCol).as("__graft_pv"))
+      .filter(pv.isNotNull).distinct()
+      .select(pv, explode(g.matches(pv)).as("__graft_pm"))
+      .filter(col("__graft_pm").isNotNull)
+    val probed =
+      if (index.columns.contains(g.pfxCol)) pairs.localCheckpoint() else pairs
+    val idx = probedIndex(g, index,
+      prefixes(g, probed).distinct().collect().map(_.get(0)).toSeq)
+    frame.join(duplicates(g, probed, idx), col(g.valueCol) === pv,
+        "left_anti")
+      .withColumn("novel", lit(true))
+  }
 
   /** Count of band buckets in a band-exploded index whose population
     * exceeds `maxBucket` — the LOUD metric for the novelty-probe cap:
@@ -949,23 +1123,6 @@ object Events {
                        maxHamming: Int = 3): DataFrame =
     noveltySigJoin(graft.llm.Multimodal.withAfp(stream), "afp",
       index, idxSigCol, maxHamming)
-
-  /** TEXT novelty against a SimHash index table — the text member of
-    * the join-form family ([[imageNoveltyJoin]]): arrivals are
-    * SimHash60-signed (native codegen expression, map-only, all caller
-    * columns kept) and probed via the same banded join — a 60-bit
-    * signature splits into the identical 4×16-bit bands (the top band
-    * just carries constant-zero high bits on both sides), so
-    * pigeonhole completeness for maxHamming < 4 holds unchanged.
-    * Token-less/NULL texts have no signature and are KEPT (absence of
-    * a signature is absence of duplicate evidence). */
-  def textNoveltyJoin(stream: DataFrame, index: DataFrame,
-                      textCol: String = "text",
-                      idxSigCol: String = "sig",
-                      maxHamming: Int = 3): DataFrame =
-    noveltySigJoin(stream.withColumn("simhash",
-        graft.functions.SimHash60(lower(col(textCol)))),
-      "simhash", index, idxSigCol, maxHamming)
 
   /** Streaming benchmark decontamination: drop documents sharing any
     * word n-gram with a fixed contamination set as they ARRIVE — the
@@ -1663,7 +1820,7 @@ object Events {
 
   /** Right-shift that maps a signature-index `band_key` (∈ [0, 2¹⁸):
     * band·2¹⁶ + 16-bit value) to its `band_pfx` partition value —
-    * 2¹⁸⁻¹⁰ = 256 prefix partitions per batch_id. The prefix is the r14
+    * 2¹⁸⁻¹² = 64 prefix partitions per batch_id. The prefix is the r14
     * sub-O(index) lever (verdict #1): the per-batch probe reads only the
     * batch's touched prefix partitions ([[prunedToTouched]]), so a batch
     * reads only |touched prefixes|/64 of the index — the
@@ -1678,9 +1835,9 @@ object Events {
     * trickles harder but every append writes one file per touched
     * prefix — 256 prefixes cost the signature rows +1.7–2.6 s each on
     * the sf0.1 board (4 band rows per signature touch most prefixes),
-    * 64 is the sweet spot; the one-row-per-band MinHash index takes
-    * 256 (two hex chars) at no measured cost. Appends are grouped by
-    * the partition column and folded by [[compactBatchTable]] on the
+    * 64 is the sweet spot (the MinHash band index's string prefix has
+    * its own count: [[bandGeometry]]). Appends are grouped by the
+    * partition column and folded by [[compactBatchTable]] on the
     * maintenance cadence. */
   val BandPfxShift = 12
 
@@ -1721,9 +1878,9 @@ object Events {
     when(bandKey.isNull, lit(-1L))
       .otherwise(shiftright(bandKey, shift))
 
-  /** `band_pfx` of a MinHash band index's md5-hex band key: the first
-    * TWO hex characters — 256 prefix partitions (the string geometry's
-    * [[sigBandPfx]]); NULL markers land in "-". */
+  /** `band_pfx` of a MinHash band index's band key: its first TWO
+    * characters (the string geometry's [[sigBandPfx]]; how many prefixes
+    * that makes: [[bandGeometry]]); NULL markers land in "-". */
   private def bandStrPfx(band: Column): Column =
     when(band.isNull, lit("-")).otherwise(substring(band, 1, 2))
 
@@ -1731,7 +1888,8 @@ object Events {
     * write task emits one file per partition directory it happens to
     * hold (tasks × prefixes tiny files per batch — measured 5–10×
     * slower purely in file commits); grouped, the file count is the
-    * number of NON-EMPTY prefixes (≤ 64 long / 16 hex per batch).
+    * number of NON-EMPTY prefixes (≤ 64 long per batch; band strings:
+    * [[bandGeometry]]).
     * This is also why the r13 `bucketBy` was DROPPED from these
     * layouts in r14: buckets multiply the floor to prefixes × buckets
     * files per append (measured 11.4 s vs 1.4 s for one batch-sized
@@ -2159,24 +2317,19 @@ object Events {
     * Per-batch cost: the commit-record checks are catalog metadata; the
     * probe reads the index only in the batch's prefix partitions or
     * cells ([[prunedToTouched]]); then the sink append and the index
-    * append. A batch of at most [[MaxCollectedProbeRows]] probe values
-    * (keys, band arrays or vectors — the trickle regime a steady stream
-    * runs in) is decided on the driver: one job collects the values (an
-    * empty collect ends the call), one reads their index rows, and the
-    * index rows are built on the driver. That is 4 Spark jobs per fresh
-    * key or MinHash call and 6 per embedding call (its centroid read and
-    * cosine join) on the perfbench `novelty_ingest` run, plus a
-    * file-listing job when the touched partitions exceed Spark's
-    * parallel-listing threshold; a replay runs none. A larger batch (a
-    * backlog, or the first batch after a restart) takes the geometry's
-    * join form instead: its work runs on the executors and scales with
-    * the batch, the novel rows are checkpointed as the sink append
-    * computes them, and the index rows derive from them; the driver
-    * holds only the touched prefixes or cells. The signature geometries
-    * always take the join form ([[noveltyBandedJoin]]). No batch-dependent
-    * value enters generated code (batch sets and literals are held by
-    * reference, and `batch_id` is only a directory name — [[writeBatch]]),
-    * so a steady stream of batches reuses its compiled classes. Prior
+    * append. The key, MinHash and embedding geometries probe through
+    * one kernel ([[probeBatch]]): on the driver up to
+    * [[MaxCollectedProbeRows]] rows (the trickle regime), by its join
+    * form past it. A fresh call of the perfbench `novelty_ingest` run
+    * (25 arrivals, the driver form) runs 4 Spark jobs for the key or
+    * MinHash geometry and 6 for the embedding geometry (its centroid
+    * read and cosine join), plus a file-listing job when the touched
+    * partitions exceed Spark's parallel-listing threshold; a replay runs
+    * none. The signature geometries always take the join form
+    * ([[noveltyBandedJoin]]). No batch-dependent value enters generated
+    * code (batch sets and literals are held by reference, and `batch_id`
+    * is only a directory name — [[writeBatch]]), so a steady stream of
+    * batches reuses its compiled classes. Prior
     * batches are never read beyond the probed prefixes, nor rewritten.
     * Partition growth is bounded by [[compactBatchTable]] on a
     * maintenance cadence; both tables recover from a mid-compaction crash
@@ -2399,73 +2552,26 @@ object Events {
     PartitionScoped.setProperties(spark, table, Map(IndexKindProp -> "embedding"))
   }
 
-  /** The embedding geometry's batch-form probe: the rows of `work` whose
-    * `vecCol` has no index vector at cosine ≥ `threshold`
-    * ([[graft.llm.Dedup.cosine]], 6-decimal grain) in its probed cells,
-    * plus `novel`; and the distinct novel vectors, as column `vec`. None
-    * when `work` has no rows. The batch's distinct vectors are assigned to
-    * their `multiProbe` nearest cells, the index is read only in those
-    * cells ([[prunedToTouched]]), and the cell equi-join + exact cosine
-    * yields the duplicate VECTORS (vectors are values; the loop needs no
-    * row identity). Up to [[MaxCollectedProbeRows]] vectors this runs on
-    * the driver's copy of them and the duplicates filter `work` as a set;
-    * past it the vectors stay on the executors and the duplicates
-    * anti-join `work`. */
-  private[graft] def noveltyCellJoin(work: DataFrame, vecCol: String,
-                                     index: DataFrame,
-                                     cents: Array[Array[Double]],
-                                     threshold: Double, multiProbe: Int)
-      : Option[(DataFrame, DataFrame)] = {
-    val spark = work.sparkSession
-    val t = work.schema(vecCol).dataType
-    val bvec = col("__graft_bvec")
-    def withCells(vecs: DataFrame): DataFrame =
-      if (multiProbe <= 1)
-        vecs.withColumn("cell", graft.llm.Similarity.nearestCell(bvec, cents))
-      else
-        vecs.withColumn("cell", explode(graft.llm.Similarity.probeCells(
-          bvec, cents, multiProbe)))
-    // the vectors of `probed` with an index vector in `cells` at
-    // cosine ≥ threshold; self-norms staged once per side (the
-    // dedupAssigned convention) — same doubles, same Round6, bit-identical
-    // probe decisions in either form
-    def dupVecs(probed: DataFrame, cells: Seq[Any]): DataFrame =
-      probed.withColumn("__graft_bn2", graft.functions.DotProduct(bvec, bvec))
-        .join(prunedToTouched(index, "cell", cells)
-            .filter(col("vec").isNotNull)
-            .select(col("cell"), col("vec").as("__graft_iv"),
-              graft.functions.DotProduct(col("vec"), col("vec"))
-                .as("__graft_in2")),
-          Seq("cell"))
-        .filter(graft.functions.Round6(try_divide(
-            graft.functions.DotProduct(bvec, col("__graft_iv")),
-            sqrt(col("__graft_bn2") * col("__graft_in2")))) >= threshold)
-        .select(bvec)
-    collectUpTo(work.select(col(vecCol)), MaxCollectedProbeRows) match {
-      case Some(all) if all.isEmpty => None
-      case Some(all) =>
-        val vecs = all.map(_.get(0)).filter(_ != null).distinct
-        val probed = withCells(localFrame(spark, "__graft_bvec", t, vecs))
-        val cells = probed.collect().map(_.get(1)).distinct.toSeq
-        val dups: Set[Any] =
-          if (cells.isEmpty) Set.empty
-          else dupVecs(probed, cells).collect().map(_.get(0)).toSet
-        Some((work.filter(col(vecCol).isNull || !inSet(col(vecCol), t, dups))
-            .withColumn("novel", lit(true)),
-          localFrame(spark, "vec", t, vecs.filterNot(dups))))
-      case None =>
-        // cells are both collected and joined
-        val probed = withCells(work.select(col(vecCol).as("__graft_bvec"))
-          .filter(bvec.isNotNull).distinct()).localCheckpoint()
-        val cells = probed.select(col("cell")).distinct().collect()
-          .map(_.get(0)).toSeq
-        val novel = checkpointed(
-          work.join(dupVecs(probed, cells).distinct(), col(vecCol) === bvec,
-              "left_anti")
-            .withColumn("novel", lit(true)))
-        Some((novel, novel.select(col(vecCol).as("vec"))
-          .filter(col("vec").isNotNull).distinct()))
-    }
+  /** The embedding geometry of the probe ([[probeBatch]]): a vector's
+    * match keys are its `multiProbe` nearest cells, each its own prefix
+    * (the index is read only in the batch's probed cells), and a matched
+    * index vector is a duplicate at cosine ≥ `threshold`
+    * ([[graft.llm.Dedup.cosine]], 6-decimal grain; self-norms staged
+    * once per side, the dedupAssigned convention — the same doubles and
+    * the same Round6 in either form, so bit-identical decisions).
+    * Vectors are values: the loop needs no row identity. */
+  private[graft] def cellGeometry(vecCol: String, cents: Array[Array[Double]],
+                                  threshold: Double, multiProbe: Int)
+      : ProbeGeometry = {
+    import graft.functions.DotProduct
+    ProbeGeometry(vecCol,
+      matches = v =>
+        if (multiProbe <= 1) array(graft.llm.Similarity.nearestCell(v, cents))
+        else graft.llm.Similarity.probeCells(v, cents, multiProbe),
+      pfxOf = c => c, pfxCol = "cell", indexCol = "vec",
+      verify = Some(Verify("cell", v => DotProduct(v, v),
+        (bv, bn2, iv, in2) => graft.functions.Round6(try_divide(
+          DotProduct(bv, iv), sqrt(bn2 * in2))) >= threshold)))
   }
 
   /** The novelty-ingest loop over embeddings ([[ingestBatch]] in cosine
@@ -2475,7 +2581,7 @@ object Events {
     *    (model-sized); `collapseIntraBatch` runs [[collapseByVector]]
     *    first (same cells, same threshold, cells over `collapseCellCap`
     *    distinct vectors take its guarded form);
-    *  - probe: [[noveltyCellJoin]] — only the batch's `multiProbe`
+    *  - probe: [[cellGeometry]] — only the batch's `multiProbe`
     *    nearest cells of the index are read;
     *  - index rows: the novel vectors, assigned to their single nearest
     *    cell (the index side is single-assigned; `multiProbe` is the
@@ -2496,8 +2602,7 @@ object Events {
     require(multiProbe >= 1, s"multiProbe must be >= 1: $multiProbe")
     ingestBatch(batch, batchId, indexTable, sinkTable,
       new IngestGeometry("embedding", "createEmbeddingIndex", "cell",
-          Seq("__graft_bvec", "__graft_iv", "__graft_pv",
-            "__graft_repvec")) {
+          ProbeNames :+ "__graft_repvec") {
         private lazy val cents = batch.sparkSession
           .table(indexTable + "__cents")
           .collect().sortBy(_.getInt(0))
@@ -2514,7 +2619,8 @@ object Events {
         // while as index state it can never mark anything a duplicate
         def probe(work: DataFrame, idx: DataFrame)
             : Option[(DataFrame, DataFrame)] =
-          noveltyCellJoin(work, vecCol, idx, cents, threshold, multiProbe)
+          probeBatch(work, idx,
+              cellGeometry(vecCol, cents, threshold, multiProbe))
             .map { case (novel, vecs) =>
               (novel, vecs.filter(
                 graft.functions.DotProduct(col("vec"), col("vec")) =!= lit(0.0)))
@@ -2531,86 +2637,42 @@ object Events {
   // keys join the index so the next batch dedups against them
   // ------------------------------------------------------------------
 
-  /** Band-EXISTENCE novelty probe: a signed frame (carrying a band-key
-    * ARRAY column) against a one-band-per-row index. The frame's
-    * distinct band arrays explode and semi-join the index on `band`;
-    * arrays with ANY indexed band are duplicates and anti-join the
-    * frame (band arrays are joinable values — all copies of a text
-    * share the array, the ingest family's no-row-identity convention).
-    * NULL band arrays pass through novel. Unlike the hamming probes
+  /** The band geometry of the probe ([[probeBatch]]): a band-key ARRAY
+    * is a duplicate iff ANY of its bands is indexed (band arrays are
+    * joinable values — all copies of a text share the array, the ingest
+    * family's no-row-identity convention). Unlike the hamming probes
     * there is no candidate list and no verify step — band equality IS
     * the decision — so no bucket cap is needed: a hot band costs join
-    * rows (AQE-splittable), never memory. On a `band_pfx`-partitioned
-    * index ([[createBandIndex]]'s layout) the batch's touched prefixes
-    * (≤ 256) are collected when the probe is built, and the index scan
-    * reads only their partitions ([[prunedToTouched]] — spec-pinned);
-    * the join itself stays lazy and batch-scaled. */
+    * rows (AQE-splittable), never memory. A band's prefix is its first
+    * two characters ([[bandStrPfx]]); every key of
+    * [[graft.llm.Dedup.minhashBandArray]] starts with its band number
+    * and a colon ("0:" to "3:" at the default 4 bands), so a band index
+    * has one prefix per band — 4 — and any document touches all of
+    * them. */
+  private[graft] def bandGeometry(bandsCol: String): ProbeGeometry =
+    ProbeGeometry(bandsCol, matches = a => a, pfxOf = bandStrPfx,
+      pfxCol = "band_pfx", indexCol = "band")
+
+  /** Band-EXISTENCE novelty probe: the rows of a signed frame (carrying
+    * a band-key ARRAY column) whose array shares no band with a
+    * one-band-per-row index ([[bandGeometry]]), plus `novel`; NULL
+    * arrays pass through novel. The join form of the ingest's probe
+    * ([[probeJoin]]): lazy and batch-scaled, with the index scan pruned
+    * to the batch's prefixes on a `band_pfx`-partitioned index
+    * ([[createBandIndex]]'s layout). */
   def noveltyBandExistsJoin(signed: DataFrame, bandsCol: String,
                             index: DataFrame): DataFrame = {
-    rejectReserved(signed, BandExistsProbeNames, "noveltyBandExistsJoin")
-    val barr = col("__graft_barr")
-    val arrs0 = signed.select(col(bandsCol).as("__graft_barr"))
-      .filter(barr.isNotNull).distinct()
-    val hasPfx = index.columns.contains("band_pfx")
-    val arrs = if (hasPfx) arrs0.localCheckpoint() else arrs0
-    val idxSide =
-      if (!hasPfx) index
-      else prunedToTouched(index, "band_pfx", arrs
-        .select(explode(barr).as("__graft_band"))
-        .filter(col("__graft_band").isNotNull)
-        .select(bandStrPfx(col("__graft_band"))).distinct()
-        .collect().map(_.get(0)).toSeq)
-    val dupArrs = arrs
-      .select(barr, explode(barr).as("__graft_band"))
-      .join(idxSide.select(col("band").as("__graft_band"))
-        .filter(col("__graft_band").isNotNull), Seq("__graft_band"))
-      .select(barr).distinct()
-    signed.join(dupArrs, col(bandsCol) === barr, "left_anti")
-      .withColumn("novel", lit(true))
+    rejectReserved(signed, ProbeNames, "noveltyBandExistsJoin")
+    probeJoin(signed, index, bandGeometry(bandsCol))
   }
-
-  /** The MinHash ingest's probe: [[noveltyBandExistsJoin]] on a
-    * `band_pfx`-partitioned index, plus the novel arrays' distinct bands
-    * as column `band`; None when `signed` has no rows. Up to
-    * [[MaxCollectedProbeRows]] band arrays are collected, the index is
-    * read in their prefix partitions for exactly their bands, and the
-    * duplicate arrays filter `signed` as a set — no join, no exchange.
-    * Past it the probe is [[noveltyBandExistsJoin]] itself. */
-  private[graft] def bandProbe(signed: DataFrame, bandsCol: String,
-                               index: DataFrame)
-      : Option[(DataFrame, DataFrame)] =
-    collectUpTo(signed.select(col(bandsCol)), MaxCollectedProbeRows) match {
-      case Some(all) if all.isEmpty => None
-      case Some(all) =>
-        val arrs = all.filterNot(_.isNullAt(0)).map(_.getSeq[String](0))
-        val bands = arrs.flatten.filter(_ != null).distinct
-        val dups: Set[String] =
-          if (bands.isEmpty) Set.empty
-          else prunedToTouched(index, "band_pfx", bands.map(b =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(b)
-                .substringSQL(1, 2).toString).distinct)
-            .filter(inSet(col("band"), StringType, bands))
-            .select(col("band")).collect().map(_.getString(0)).toSet
-        val (dupArrs, novelArrs) = arrs.partition(_.exists(dups))
-        Some((signed.filter(col(bandsCol).isNull || !inSet(col(bandsCol),
-              signed.schema(bandsCol).dataType, dupArrs.distinct))
-            .withColumn("novel", lit(true)),
-          localFrame(signed.sparkSession, "band", StringType,
-            novelArrs.flatten.filter(_ != null).distinct)))
-      case None =>
-        val novel = checkpointed(noveltyBandExistsJoin(signed, bandsCol, index))
-        Some((novel, novel.select(explode(col(bandsCol)).as("band"))
-          .filter(col("band").isNotNull).distinct()))
-    }
 
   /** Create (replacing) a BAND-KEY index table for the MinHash ingest:
     * schema `(band STRING, band_pfx STRING, batch_id BIGINT)` — one
     * row per distinct band key — partitioned by `(batch_id, band_pfx)`
     * where the prefix is the band key's first two characters (the
     * string geometry of [[createSignatureIndex]]'s band_pfx: the probe
-    * reads only the batch's touched prefix partitions; keys from
-    * [[graft.llm.Dedup.minhashBandArray]] begin with their band number,
-    * so they fill only 4 prefixes). Same replay/maintenance layout
+    * reads only the batch's touched prefix partitions; how many there
+    * are: [[bandGeometry]]). Same replay/maintenance layout
     * otherwise; like the signature index, unbucketed (the probe's
     * batch side is broadcast-sized, and prefix × bucket file
     * fragmentation was the measured r14 append cost). `seed` carries
@@ -2635,7 +2697,7 @@ object Events {
     * native [[graft.functions.MinHashSig]] sliding window → `mh_bands`
     * md5 band keys, staged so the signature computes once per row),
     * tested for a shared band against the index
-    * ([[noveltyBandExistsJoin]] — prefix-pruned scan, no index-side
+    * ([[bandGeometry]] — prefix-pruned scan, no index-side
     * exchange), and the novel rows' distinct band keys append under
     * this `batch_id`. Rows keep every caller column plus `mh_bands` and
     * `novel`; NULL-text rows carry NULL bands and are KEPT in the sink,
@@ -2653,7 +2715,7 @@ object Events {
     ingestBatch(batch, batchId, indexTable, sinkTable,
       new IngestGeometry("band", "createBandIndex", "band_pfx",
           Seq("mh_bands", "__graft_mharr", "__graft_repbar") ++
-            BandExistsProbeNames) {
+            ProbeNames) {
         // the raw signature array is staged in its own projection
         // (referenced once per band — CollapseProject keeps
         // multi-referenced aliases staged, so MinHashSig runs once per
@@ -2671,7 +2733,7 @@ object Events {
         }
         def probe(staged: DataFrame, idx: DataFrame)
             : Option[(DataFrame, DataFrame)] =
-          bandProbe(staged, "mh_bands", idx)
+          probeBatch(staged, idx, bandGeometry("mh_bands"))
         def pfx: Column = bandStrPfx(col("band"))
       })
   }
@@ -2711,40 +2773,32 @@ object Events {
     PartitionScoped.setProperties(spark, table, Map(IndexKindProp -> "key"))
   }
 
-  /** Exact-KEY novelty probe: rows whose `keyCol` equals ANY indexed
-    * key are duplicates and dropped; NULL keys pass through novel
-    * (absence of a key is absence of duplicate evidence — the family
-    * convention). On a `key_pfx`-partitioned index
-    * ([[createKeyIndex]]'s layout) the batch's touched prefixes (≤ 64)
-    * are collected when the probe is built, and the index scan reads
-    * only their partitions ([[prunedToTouched]]); the batch-sized
-    * distinct key set builds the join's hash side — pruned,
-    * exchange-free, no state, and the join stays lazy.
+  /** The key geometry of the probe ([[probeBatch]]): a key is its own
+    * match key, with prefix [[keyPfx]] (a batch touches at most 64
+    * prefixes), and a duplicate iff it equals an indexed key.
     *
-    * The probe's key type must EQUAL the index key type: `key_pfx`
-    * was computed from `xxhash64` of the INDEX's representation, and
-    * xxhash64 is type-dependent (string '5' and int 5 hash apart), so
-    * a coerced equality join under mismatched pruning would silently
-    * mark true duplicates novel — rejected loudly instead. */
+    * The probe's key type must EQUAL the index key type
+    * ([[requireKeyType]]): `key_pfx` was computed from `xxhash64` of the
+    * INDEX's representation, and xxhash64 is type-dependent (string '5'
+    * and int 5 hash apart), so a coerced equality join under mismatched
+    * pruning would silently mark true duplicates novel — rejected
+    * loudly instead. */
+  private[graft] def keyGeometry(keyCol: String): ProbeGeometry =
+    ProbeGeometry(keyCol, matches = k => array(k), pfxOf = keyPfx,
+      pfxCol = "key_pfx", indexCol = "key")
+
+  /** Exact-KEY novelty probe: rows whose `keyCol` equals no indexed key
+    * ([[keyGeometry]]), plus `novel`; NULL keys pass through novel
+    * (absence of a key is absence of duplicate evidence — the family
+    * convention). The join form of the ingest's probe ([[probeJoin]]):
+    * lazy and batch-scaled, with the index scan pruned to the batch's
+    * prefixes on a `key_pfx`-partitioned index ([[createKeyIndex]]'s
+    * layout), where the key types must match. */
   def noveltyKeyExistsJoin(frame: DataFrame, keyCol: String,
                            index: DataFrame): DataFrame = {
-    rejectReserved(frame, KeyProbeNames, "noveltyKeyExistsJoin")
-    val k = col("__graft_key")
-    val hasPfx = index.columns.contains("key_pfx")
-    if (hasPfx) requireKeyType(frame, keyCol, index)
-    val keys0 = frame.select(col(keyCol).as("__graft_key"))
-      .filter(k.isNotNull).distinct()
-    val keys = if (hasPfx) keys0.localCheckpoint() else keys0
-    val idxSide =
-      if (!hasPfx) index
-      else prunedToTouched(index, "key_pfx", keys.select(keyPfx(k))
-        .distinct().collect().map(_.get(0)).toSeq)
-    val dupKeys = keys
-      .join(idxSide.select(col("key").as("__graft_key"))
-        .filter(col("__graft_key").isNotNull), Seq("__graft_key"),
-        "left_semi")
-    frame.join(dupKeys, col(keyCol) === k, "left_anti")
-      .withColumn("novel", lit(true))
+    rejectReserved(frame, ProbeNames, "noveltyKeyExistsJoin")
+    if (index.columns.contains("key_pfx")) requireKeyType(frame, keyCol, index)
+    probeJoin(frame, index, keyGeometry(keyCol))
   }
 
   private def requireKeyType(frame: DataFrame, keyCol: String,
@@ -2757,48 +2811,6 @@ object Events {
         "pruning is type-dependent, so a coerced join would silently " +
         "false-novel true duplicates; cast the batch key to the " +
         "index's type (or rebuild the index) first")
-  }
-
-  /** Driver-side identity of a key value: binary keys compare by content. */
-  private def keyIdentity(v: Any): Any = v match {
-    case b: Array[Byte] => b.toSeq
-    case other => other
-  }
-
-  /** The key ingest's probe: [[noveltyKeyExistsJoin]] on a
-    * `key_pfx`-partitioned index, plus the novel rows' distinct keys as
-    * column `key`; None when `frame` has no rows. Up to
-    * [[MaxCollectedProbeRows]] keys are collected with their prefixes,
-    * the index is read in their prefix partitions for exactly those
-    * keys, and the duplicates filter `frame` as a set — no join, no
-    * exchange. Past it the probe is [[noveltyKeyExistsJoin]] itself. */
-  private[graft] def keyProbe(frame: DataFrame, keyCol: String,
-                              index: DataFrame)
-      : Option[(DataFrame, DataFrame)] = {
-    requireKeyType(frame, keyCol, index)
-    val t = frame.schema(keyCol).dataType
-    collectUpTo(frame.select(col(keyCol), keyPfx(col(keyCol))),
-        MaxCollectedProbeRows) match {
-      case Some(all) if all.isEmpty => None
-      case Some(all) =>
-        val batch = all.filterNot(_.isNullAt(0))
-        val keys = batch.map(_.get(0)).distinctBy(keyIdentity)
-        val dups: Seq[Any] =
-          if (keys.isEmpty) Nil
-          else prunedToTouched(index, "key_pfx",
-              batch.map(_.getLong(1)).distinct)
-            .filter(inSet(col("key"), t, keys))
-            .select(col("key")).collect().map(_.get(0)).toSeq
-        val dupIds = dups.map(keyIdentity).toSet
-        Some((frame.filter(col(keyCol).isNull || !inSet(col(keyCol), t, dups))
-            .withColumn("novel", lit(true)),
-          localFrame(frame.sparkSession, "key", t,
-            keys.filterNot(k => dupIds(keyIdentity(k))))))
-      case None =>
-        val novel = checkpointed(noveltyKeyExistsJoin(frame, keyCol, index))
-        Some((novel, novel.select(col(keyCol).as("key"))
-          .filter(col("key").isNotNull).distinct()))
-    }
   }
 
   /** The novelty-ingest loop under key equality ([[ingestBatch]], index
@@ -2814,10 +2826,12 @@ object Events {
                             keyCol: String): Unit =
     ingestBatch(batch, batchId, indexTable, sinkTable,
       new IngestGeometry("key", "createKeyIndex", "key_pfx",
-          KeyProbeNames) {
+          ProbeNames) {
         def probe(staged: DataFrame, idx: DataFrame)
-            : Option[(DataFrame, DataFrame)] =
-          keyProbe(staged, keyCol, idx)
+            : Option[(DataFrame, DataFrame)] = {
+          requireKeyType(staged, keyCol, idx)
+          probeBatch(staged, idx, keyGeometry(keyCol))
+        }
         def pfx: Column = keyPfx(col("key"))
       })
 }

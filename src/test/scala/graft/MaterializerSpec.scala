@@ -496,41 +496,9 @@ class MaterializerSpec extends SparkSpec {
   /** Run `body` capturing every QueryExecution, return the target-table
     * FileSourceScanExec nodes observed (AQE stages flattened through). */
   private def capturedTargetScans(table: String)(body: => Unit)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-    import scala.jdk.CollectionConverters._
-    val captured = new java.util.concurrent.CopyOnWriteArrayList[
-      org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { captured.add(qe); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try body
-    finally {
-      var waited = 0
-      while (captured.isEmpty && waited < 10000) {
-        Thread.sleep(100); waited += 100
-      }
-      Thread.sleep(500)
-      spark.listenerManager.unregister(listener)
-    }
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val inner = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allNodes(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          allNodes(q.plan)
-        case _ => Seq.empty
-      }
-      p +: (p.children.flatMap(allNodes) ++ inner)
-    }
-    captured.asScala.toSeq
-      .flatMap(qe => allNodes(qe.executedPlan))
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    capturedExecutions(body)
+      .flatMap(qe => planNodes(qe.executedPlan))
       .collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains(table))
@@ -538,7 +506,6 @@ class MaterializerSpec extends SparkSpec {
                  p.toString.contains("__dbt_scoped_tmp") ||
                  p.toString.contains("__dbt_tmp")) => f
       }
-  }
 
   test("partition-scoped incremental merge: untouched partitions neither read nor rewritten") {
     val rel = Relation("inc_part_merge")

@@ -824,32 +824,12 @@ class StreamingSpec extends SparkSpec {
     }
     val before = (0L to 4L).map(p => p -> files(p)).toMap
     // capture every execution during batch 2 to audit the target scans
-    val captured =
-      new java.util.concurrent.CopyOnWriteArrayList[
-        org.apache.spark.sql.execution.QueryExecution]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { captured.add(qe); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val captured = capturedExecutions {
       // touches ONLY p=2 (keys 7 and 52 both land there; partition
       // value derives from the key — the stability contract)
       val b2 = Seq((7L, "v7b", 2L, 2L), (52L, "new", 2L, 2L))
         .toDF("k", "v", "ord", "p")
       Events.upsertBatch(b2, table, Seq("k"), "ord", Seq("p"))
-    } finally {
-      // QueryExecutionListener delivery is async — drain before reading
-      var waited = 0
-      while (captured.isEmpty && waited < 10000) {
-        Thread.sleep(100); waited += 100
-      }
-      Thread.sleep(500)
-      spark.listenerManager.unregister(listener)
     }
     // rewritten: only p=2's file set changed
     for (p <- 0L to 4L if p != 2L)
@@ -858,21 +838,8 @@ class StreamingSpec extends SparkSpec {
     assert(files(2L) != before(2L), "touched partition p=2 not rewritten")
     // read: every scan of the target during the batch carried partition
     // filters and selected only the touched partition's files
-    // AQE wraps the real plan inside AdaptiveSparkPlanExec/QueryStageExec
-    // whose children are hidden from plain collect — flatten through
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val inner = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          allNodes(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          allNodes(q.plan)
-        case _ => Seq.empty
-      }
-      p +: (p.children.flatMap(allNodes) ++ inner)
-    }
-    val targetScans = captured.asScala
-      .flatMap(qe => allNodes(qe.executedPlan))
+    val targetScans = captured
+      .flatMap(qe => planNodes(qe.executedPlan))
       .collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec
           if f.relation.location.rootPaths.exists(_.toString.contains(table))
@@ -1140,8 +1107,8 @@ class StreamingSpec extends SparkSpec {
     assert(kept1 == want1 && want1.nonEmpty)
     // the probe's index read is PARTITION-PRUNED to the probed cells
     // (the probe the ingest runs)
-    assertPrunedScan(Events.noveltyCellJoin(b1.limit(3), "embedding",
-      spark.table(idxT), cents, 0.95, 1).get._1, idxT, "cell")
+    assertPrunedScan(Events.probeBatch(b1.limit(3), spark.table(idxT),
+      Events.cellGeometry("embedding", cents, 0.95, 1)).get._1, idxT, "cell")
     // multiProbe (the recall lever) cannot change this construction's
     // decisions — exact copies co-locate under any probe width
     Events.createEmbeddingIndex(spark, idxM, e, "embedding", cents)
@@ -1534,27 +1501,13 @@ class StreamingSpec extends SparkSpec {
                                idxT: String, pfxCol: String,
                                skips: Boolean = true): Unit =
     withConf("spark.sql.adaptive.enabled" -> "false") {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
-      val scans = new java.util.concurrent.ConcurrentLinkedQueue[
-        FileSourceScanExec]()
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          qe.executedPlan.foreach {
-            case s: FileSourceScanExec
-                if s.tableIdentifier.exists(_.table == idxT) => scans.add(s)
-            case _ =>
-          }
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        probe.collect()
-        val deadline = System.nanoTime() + 10000000000L
-        while (scans.isEmpty && System.nanoTime() < deadline)
-          Thread.sleep(20)
-      } finally spark.listenerManager.unregister(listener)
+      val scans = capturedExecutions(probe.collect())
+        .flatMap(_.executedPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.tableIdentifier.exists(_.table == idxT) => s
+        })
       assert(scans.size == 1, s"expected one index read, got ${scans.size}")
-      val scan = scans.peek()
+      val scan = scans.head
       assert(scan.partitionFilters.exists(
           _.references.exists(_.name == pfxCol)),
         s"no $pfxCol partition filter on the index scan:\n$scan")
@@ -2323,30 +2276,60 @@ class StreamingSpec extends SparkSpec {
   test("a steady ingest call compiles no new classes") {
     // Spark caches generated classes by source text, so a batch id or a
     // touched-prefix set inlined into a plan made every ingest call
-    // compile afresh. Three key-ingest calls on fresh arrivals with new
-    // batch ids (the first creates the sink, the second warms the
-    // append): the third compiles nothing. Each batch holds 20 fresh
-    // keys and 5 seen ones, so every call's plans have the same shape.
-    val idxT = "steady_key_idx"; val sinkT = "steady_key_sink"
-    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
-    val keys = spark.range(0, 200)
-      .select($"id".as("doc_id"), md5($"id".cast("string")).as("k"))
-      .localCheckpoint()
-    Events.createKeyIndex(spark, idxT, keys.filter($"doc_id" < 100), "k")
-    val batches = (0 until 3).map(b => keys.filter(
-        ($"doc_id" >= 100 + 20 * b && $"doc_id" < 120 + 20 * b) ||
-          ($"doc_id" >= 5 * b && $"doc_id" < 5 * b + 5))
-      .localCheckpoint())
+    // compile afresh. Per geometry of the probe, three ingest calls on
+    // fresh arrivals with new batch ids (the first creates the sink, the
+    // second warms the append): the third compiles nothing. Each batch
+    // holds 20 fresh values and 5 seen ones, so every call's plans have
+    // the same shape.
+    import org.apache.spark.sql.DataFrame
+    val ids = spark.range(0, 200).select($"id".as("doc_id"))
+    val keys = ids.select($"doc_id", md5($"doc_id".cast("string")).as("k"))
+    // four random words: no fresh text shares a shingle with another
+    val texts = ids.select($"doc_id", concat_ws(" ", (0 until 4).map(w =>
+      substring(md5($"doc_id".cast("string")), 8 * w + 1, 8)): _*).as("text"))
+    val vecs = ids.select($"doc_id", array((1 to 16).map(j =>
+      (pmod(xxhash64($"doc_id", lit(j)), lit(2001L)) - 1000) / 1000.0): _*)
+      .as("embedding"))
+    val seedOf = (df: DataFrame) => df.filter($"doc_id" < 100)
     def compiles = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
-    Events.keyNoveltyIngestBatch(batches(0), 0L, idxT, sinkT, "k")
-    Events.keyNoveltyIngestBatch(batches(1), 1L, idxT, sinkT, "k")
-    val c0 = compiles
-    Events.keyNoveltyIngestBatch(batches(2), 2L, idxT, sinkT, "k")
-    assert(compiles == c0, s"the third call compiled ${compiles - c0} classes")
-    assert(spark.table(sinkT).filter($"batch_id" === 2L)
-      .select($"doc_id").as[Long].collect().toSet == (140L until 160L).toSet)
-    for (t <- Seq(idxT, sinkT)) spark.sql(s"DROP TABLE IF EXISTS $t")
+    type Ingest = (DataFrame, Long, String, String) => Unit
+    val geometries: Seq[(String, DataFrame, String => Unit, Ingest)] = Seq(
+      ("key", keys,
+        idx => Events.createKeyIndex(spark, idx, seedOf(keys), "k"),
+        Events.keyNoveltyIngestBatch(_, _, _, _, "k")),
+      ("minhash", texts,
+        idx => Events.createBandIndex(spark, idx,
+          seedOf(texts).select(graft.llm.Dedup.minhashBandArray(
+            graft.functions.MinHashSig(lower($"text"), 3, 16), 16, 4)
+            .as("b")), "b"),
+        Events.minhashNoveltyIngestBatch(_, _, _, _)),
+      ("embedding", vecs,
+        idx => Events.createEmbeddingIndex(spark, idx, seedOf(vecs),
+          "embedding", graft.llm.Similarity.ivfTrain(seedOf(vecs),
+            "doc_id", "embedding", 4)),
+        Events.embeddingNoveltyIngestBatch(_, _, _, _, "embedding", 0.95)))
+    for ((name, rows, create, ingest) <- geometries) {
+      val idxT = s"steady_${name}_idx"; val sinkT = s"steady_${name}_sink"
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+      create(idxT)
+      val batches = (0 until 3).map(b => rows.filter(
+          ($"doc_id" >= 100 + 20 * b && $"doc_id" < 120 + 20 * b) ||
+            ($"doc_id" >= 5 * b && $"doc_id" < 5 * b + 5))
+        .localCheckpoint())
+      ingest(batches(0), 0L, idxT, sinkT)
+      ingest(batches(1), 1L, idxT, sinkT)
+      val c0 = compiles
+      ingest(batches(2), 2L, idxT, sinkT)
+      assert(compiles == c0,
+        s"$name: the third call compiled ${compiles - c0} classes")
+      assert(spark.table(sinkT).filter($"batch_id" === 2L)
+        .select($"doc_id").as[Long].collect().toSet ==
+        (140L until 160L).toSet, s"$name: the third call kept other rows")
+      for (t <- Seq(idxT, s"${idxT}__cents", sinkT))
+        spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
   }
 
   test("every geometry: a re-delivered batch writes nothing, also after compaction") {
@@ -2480,17 +2463,19 @@ class StreamingSpec extends SparkSpec {
         (DataFrame, String, String) => Unit)] = Seq(
       ("key", keyed, "key",
         idx => Events.createKeyIndex(spark, idx, seedOf(keyed), "k"),
-        (b, idx) => Events.keyProbe(b, "k", idx),
+        (b, idx) => Events.probeBatch(b, idx, Events.keyGeometry("k")),
         (b, idx, sink) => Events.keyNoveltyIngestBatch(b, 0L, idx, sink, "k")),
       ("minhash", texts, "band",
         idx => Events.createBandIndex(spark, idx,
           banded(seedOf(texts)).select($"mh_bands".as("b")), "b"),
-        (b, idx) => Events.bandProbe(banded(b), "mh_bands", idx),
+        (b, idx) => Events.probeBatch(banded(b), idx,
+          Events.bandGeometry("mh_bands")),
         (b, idx, sink) => Events.minhashNoveltyIngestBatch(b, 0L, idx, sink)),
       ("embedding", vecs, "vec",
         idx => Events.createEmbeddingIndex(spark, idx, seedOf(vecs),
           "embedding", cents),
-        (b, idx) => Events.noveltyCellJoin(b, "embedding", idx, cents, 0.95, 1),
+        (b, idx) => Events.probeBatch(b, idx,
+          Events.cellGeometry("embedding", cents, 0.95, 1)),
         (b, idx, sink) => Events.embeddingNoveltyIngestBatch(b, 0L, idx, sink,
           "embedding", 0.95)))
     for ((name, batch, idxCol, create, probe, ingest) <- geometries) {
@@ -2566,7 +2551,7 @@ class StreamingSpec extends SparkSpec {
     Events.embeddingNoveltyIngestBatch(vecs, 0L, eIdx, eSink, "vec", 0.9)
     intercept[IllegalArgumentException] {
       Events.embeddingNoveltyIngestBatch(
-        vecs.withColumn("__graft_bvec", $"vec"), 0L, eIdx, eSink, "vec", 0.9)
+        vecs.withColumn("__graft_pv", $"vec"), 0L, eIdx, eSink, "vec", 0.9)
     }
     for (t <- Seq(tIdx, tSink, eIdx, s"${eIdx}__cents", eSink))
       spark.sql(s"DROP TABLE IF EXISTS $t")
