@@ -43,45 +43,11 @@ object Bench {
       // localCheckpoint blocks free only when the driver GCs the RDD,
       // and broadcast pieces only when ContextCleaner notices the GC —
       // across a 171-query board that accumulation taxes later queries
-      // and widens run-to-run variance. Outside the timed region.
-      //
-      // RDD.unpersist logWarns "was locally checkpointed, its lineage
-      // has been truncated" on every checkpointed RDD it releases —
-      // intentional here (the plan is never re-executed), and across a
-      // 180-query board the flood buried real warnings in the bench
-      // tail (r9 verdict #5). Suppress the RDD logger ONLY around this
-      // release call, bench runner only — warnings during query
-      // execution, and everywhere in library code, stay visible.
-      locally {
-        import org.apache.logging.log4j.{Level, LogManager}
-        import org.apache.logging.log4j.core.LoggerContext
-        import org.apache.logging.log4j.core.config.Configurator
-        // the warning is emitted by the CONCRETE RDD subclass's logger
-        // (e.g. org.apache.spark.rdd.MapPartitionsRDD), so the package
-        // logger is the one that covers them all. Restore must keep
-        // INHERITANCE intact: writing back the effective level would
-        // pin an explicit config on the package and detach it from
-        // future root-level changes — so when no explicit config
-        // existed, the temporary one is REMOVED, not overwritten.
-        val rddLogger = "org.apache.spark.rdd"
-        val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-        val hadExplicit =
-          ctx.getConfiguration.getLoggers.containsKey(rddLogger)
-        val prev =
-          if (hadExplicit)
-            ctx.getConfiguration.getLoggerConfig(rddLogger).getLevel
-          else null
-        Configurator.setLevel(rddLogger, Level.ERROR)
-        try spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        finally {
-          if (hadExplicit) Configurator.setLevel(rddLogger, prev)
-          else {
-            ctx.getConfiguration.removeLogger(rddLogger)
-            ctx.updateLoggers()
-          }
-        }
-      }
+      // and widens run-to-run variance. Outside the timed region, and
+      // without the lineage warning of every released checkpoint, which
+      // buried real warnings in the bench tail (r9 verdict #5).
+      graft.mat.PartitionScoped.releaseCheckpoints(
+        spark.sparkContext.getPersistentRDDs.values)
       System.gc()
       dt
     }

@@ -115,17 +115,6 @@ object Dedup {
   def minhashMix(h: Column, i: Int): Column =
     (h * lit(mixA(i)) + lit(mixB(i))) % lit(MinhashPrime)
 
-  /** One minhash value from a shingle array (per-row expression form —
-    * prefer [[minhashSignature]], which hashes each shingle once across
-    * all k functions). */
-  def minhash(shingleArr: Column, i: Int): Column =
-    array_min(transform(shingleArr,
-      s => minhashMix(TextAnalysis.tokenHash(s), i)))
-
-  /** k minhash signature values. */
-  def signature(shingleArr: Column, k: Int): Seq[Column] =
-    (0 until k).map(i => minhash(shingleArr, i))
-
   /** One row per (document, shingle string): word n-grams built
     * RELATIONALLY — posexplode tokens, lead() over a per-document
     * window, codegen'd concat — instead of the array-HOF form

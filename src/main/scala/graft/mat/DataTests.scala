@@ -58,15 +58,20 @@ object DataTests {
         Seq("value"), "left_anti")
 
   /** Fold named tests into the `dbt test` result table:
-    * (test_name, n_violations, passed), one row per test. Each count is
-    * a separate aggregate job (matching dbt, which runs each compiled
-    * test query independently). */
+    * (test_name, n_violations, passed), one row per test, computed
+    * eagerly in one action: every test's violation rows, tagged with the
+    * test's position, go through one union-all and one grouped count (a
+    * test with no violations has no group and counts 0). */
   def summary(tests: Seq[(String, DataFrame)]): DataFrame = {
     require(tests.nonEmpty, "no tests given")
     val spark = tests.head._2.sparkSession
     import spark.implicits._
-    tests.map { case (name, violations) =>
-      val n = violations.count()
+    val counts = tests.zipWithIndex
+      .map { case ((_, violations), i) => violations.select(lit(i).as("i")) }
+      .reduce(_ unionByName _)
+      .groupBy("i").count().as[(Int, Long)].collect().toMap
+    tests.zipWithIndex.map { case ((name, _), i) =>
+      val n = counts.getOrElse(i, 0L)
       (name, n, n == 0L)
     }.toDF("test_name", "n_violations", "passed")
   }

@@ -130,10 +130,14 @@ object Incremental {
     *
     * No unique key → degenerate insert (incremental.sql:198-204).
     *
-    * Rewrite: matched rows = inner join taking update cols from staged and
-    * the rest from target; unmatched target rows pass through (left_anti);
-    * unmatched staged rows insert (left_anti the other way). One shuffle on
-    * the keys serves all three branches.
+    * Rewrite: ONE full outer join of target and staged on the MERGE ON
+    * condition, each side carrying a marker column, then one `when` per
+    * column — a matched row takes the update columns from staged and the
+    * rest from target; a target-only row (no staged key, or a failed
+    * predicate) passes through; a staged-only row (a new or null key)
+    * inserts. Every target row the ON condition matches updates, so
+    * duplicate target keys each update. One shuffle on the keys, and the
+    * target is scanned once.
     */
   def merge(
       target: DataFrame,
@@ -145,8 +149,8 @@ object Incremental {
     val cols = target.columns.toIndexedSeq
     if (uniqueKeys.isEmpty)
       return append(target, staged.select(cols.map(col): _*))
-    // duplicate staged keys would fan the inner join out and emit one
-    // UPDATED COPY of the target row per staged twin — SQL MERGE's
+    // duplicate staged keys would fan the join out and emit one UPDATED
+    // COPY of the target row per staged twin — SQL MERGE's
     // multiple-match error case, caught at execution time instead
     val stagedAligned =
       uniqueKeyGuard(staged.select(cols.map(col): _*), uniqueKeys,
@@ -157,21 +161,18 @@ object Incremental {
                  else cols.filterNot(uniqueKeys.contains)
       base.filterNot(excludeColumns.contains)
     }
-    val tAlias = target.alias("t")
-    val sAlias = stagedAligned.alias("s")
+    val mark = "__graft_merge_side"
+    val tAlias = target.withColumn(mark, lit(true)).alias("t")
+    val sAlias = stagedAligned.withColumn(mark, lit(true)).alias("s")
     val onCond = (uniqueKeys.map(k => col(s"t.$k") === col(s"s.$k")) ++
       predicates).reduce(_ && _)
-
-    val matchedUpdated = tAlias.join(sAlias, onCond, "inner")
-      .select(cols.map { c =>
-        if (updates.contains(c)) col(s"s.$c").as(c) else col(s"t.$c").as(c)
-      }: _*)
-    val unmatchedTarget = tAlias.join(sAlias, onCond, "left_anti")
-      .select(cols.map(col): _*)
-    val inserted = sAlias.join(tAlias, onCond, "left_anti")
-      .select(cols.map(col): _*)
-
-    unmatchedTarget.unionByName(matchedUpdated).unionByName(inserted)
+    val inTarget = col(s"t.$mark").isNotNull
+    val inStaged = col(s"s.$mark").isNotNull
+    tAlias.join(sAlias, onCond, "full_outer").select(cols.map { c =>
+      (if (updates.contains(c))
+         when(inStaged, col(s"s.$c")).otherwise(col(s"t.$c"))
+       else when(inTarget, col(s"t.$c")).otherwise(col(s"s.$c"))).as(c)
+    }: _*)
   }
 
   /** insert_overwrite — replace exactly the PARTITIONS present in the

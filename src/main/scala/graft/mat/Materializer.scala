@@ -54,8 +54,8 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
     * catalog's property store is the durable home, so a fresh
     * SparkSession can pick up where another left off). */
   private def rawProperties(rel: Relation): Map[String, String] =
-    spark.sql(s"SHOW TBLPROPERTIES ${rel.render}").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    PartitionScoped.metadata(spark, rel.render).map(_.properties)
+      .getOrElse(Map.empty)
 
   /** Read back the table properties previously set via the `properties`
     * config (filters out Spark-internal keys and graft metadata).
@@ -461,10 +461,9 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
         staged, scope)(f)
     def fullRewrite(f: DataFrame => DataFrame): Unit = write(Nil)(f)
     // scoped path: rewrite only the touched partitions (the full rewrite
-    // over the cap); empty batch → no-op (the strategies are identities
-    // on an empty staged frame)
-    def scoped(f: DataFrame => DataFrame): Unit =
-      if (!staged.isEmpty) write(tablePartCols)(f)
+    // over the cap); an empty batch touches none and writes nothing (the
+    // strategies are identities on an empty staged frame)
+    def scoped(f: DataFrame => DataFrame): Unit = write(tablePartCols)(f)
 
     val scopable = tablePartCols.nonEmpty && schemaUnchanged
     def fastAppend(): Unit =
@@ -652,18 +651,20 @@ final class Materializer(spark: SparkSession, val catalog: CatalogOps) {
             Map(Materializer.SnapshotBucketsKey -> buckets.toString))
           buckets
       }
-    // staged is consumed up to four times below (isEmpty, the touched-
-    // partition collect, and twice inside applyChanges: closers +
-    // inserts) — lazily, each consumer re-ran the whole staging join
-    // (source scan, unique-key window guard, source⋈open join).
-    // Materialize it once: the frame is change-volume-sized (inserts +
-    // new versions + closes — exactly what this run writes), so the
-    // checkpoint is bounded by the batch, never by the history (r18,
-    // guide §5).
+    // staged is consumed up to three times below (the touched-bucket
+    // collect, or unbucketed the emptiness probe, and twice inside
+    // applyChanges: closers + inserts) — lazily, each consumer re-ran the
+    // whole staging join (source scan, unique-key window guard,
+    // source⋈open join). Materialize it once: the frame is
+    // change-volume-sized (inserts + new versions + closes — exactly what
+    // this run writes), so the checkpoint is bounded by the batch, never
+    // by the history (r18, guide §5).
     val staged = (if (bucketed)
       staged0.withColumn(BucketCol, bucketOf(effBuckets))
     else staged0).localCheckpoint()
-    if (staged.isEmpty) { tail(); return } // nothing changed: no-op
+    // nothing changed: no-op (bucketed, the scoped commit finds no
+    // touched bucket and writes nothing)
+    if (!bucketed && staged.isEmpty) { tail(); return }
     PartitionScoped.rewrite(spark, name, PartitionScoped.Dbt, snap, staged,
       if (bucketed) Seq(BucketCol) else Nil)(
       Snapshot.applyChanges(_, staged))

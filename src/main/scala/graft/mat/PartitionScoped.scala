@@ -2,6 +2,7 @@ package graft.mat
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTableType}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** How a rewrite reaches the catalog, and how a crashed one heals — the
@@ -13,16 +14,20 @@ import org.apache.spark.sql.functions._
   *  - '''scoped''' (the 100 TB incremental shape on a partitioned
   *    vanilla-parquet table: per-run cost tracks the partitions the
   *    staged batch touches, never the accumulated table size):
-  *     1. [[touchedPredicate]] — the staged batch's distinct partition
-  *        tuples become literal, null-safe partition filters (static
-  *        pruning: the target read never opens untouched partitions);
-  *     2. the caller's keyed rewrite (merge / delete+insert / SCD2
+  *     1. [[touchedTuples]] — one job, no shuffle, collects the staged
+  *        batch's distinct partition tuples (each task dedups its own);
+  *        an empty set means an empty batch, and nothing is written;
+  *     2. [[touchedPredicate]] — the tuples become literal, null-safe
+  *        partition filters (static pruning: the target read never opens
+  *        untouched partitions);
+  *     3. the caller's keyed rewrite (merge / delete+insert / SCD2
   *        apply) runs against the SCOPED target read;
-  *     3. [[overwriteTouched]] — the scoped result is materialized to the
-  *        scoped tmp (never overwrite partitions of a table from a plan
-  *        that reads it), then committed via dynamic partition overwrite,
-  *        which rewrites exactly the partitions present in the result —
-  *        the touched set;
+  *     4. [[overwriteTouched]] — the scoped result is materialized by an
+  *        eager local checkpoint (never overwrite partitions of a table
+  *        from a plan that reads it), rebalanced on the partition columns
+  *        and committed via dynamic partition overwrite, which rewrites
+  *        exactly the partitions present in the result — the touched
+  *        set, one file each for a small batch;
   *  - '''full''' ([[swap]], the reference's rename swap, table.sql:34-48,
   *    materialized_view.sql:11-21): the result is written to
   *    `<table>__<tag>_tmp`, the target renamed to `<table>__<tag>_backup`,
@@ -48,19 +53,21 @@ import org.apache.spark.sql.functions._
   * Scratch names per caller (a constant [[Tag]] each; the names are the
   * ones tables crash-parked by earlier versions carry):
   *  - [[Dbt]] — table, incremental, snapshot: `__dbt_tmp`,
-  *    `__dbt_backup`, scoped tmp `__dbt_scoped_tmp`;
+  *    `__dbt_backup`;
   *  - [[Upsert]] — [[graft.streaming.Events.upsertBatch]]:
-  *    `__upsert_tmp`, `__upsert_backup`; its scoped commit stages in
-  *    `__upsert_tmp` too;
+  *    `__upsert_tmp`, `__upsert_backup`;
   *  - [[Compact]] — [[graft.streaming.Events.compactBatchTable]]:
   *    `__compact_tmp`, `__compact_backup` (never scoped).
   *
-  * The scoped tmp is never promoted. It holds only the touched
-  * partitions, and a scoped commit never removes the target (it
-  * overwrites partitions of the existing table), so no crash of it leaves
-  * the target missing; [[heal]] drops it as a scratch table whenever the
-  * target is present. The dbt callers also stage it under a suffix of its
-  * own, which [[heal]] never promotes from.
+  * A scoped commit writes no catalog table and never removes the target
+  * (it overwrites partitions of the existing table), so no crash of it
+  * leaves the target missing. Its checkpoint lives in executor memory
+  * and disk only: a lost block fails the insert job before its commit,
+  * so the target is unchanged and a re-run converges. Earlier versions
+  * staged the scoped result in a catalog table (`__dbt_scoped_tmp`; for
+  * upsert, `__upsert_tmp`); [[Tag.scratch]] still names it, so [[heal]]
+  * drops one they parked whenever the target is present, and never
+  * promotes `__dbt_scoped_tmp`.
   *
   * `graft.*` TBLPROPERTIES (the snapshot's bucket count, an ingest
   * index's geometry and cap) live on the catalog entry, which the tmp's
@@ -92,7 +99,8 @@ object PartitionScoped {
     * full-table write anyway. */
   val MaxTouchedPartitions = 10000
 
-  /** One caller's scratch-table suffixes (see the recovery contract). */
+  /** One caller's scratch-table suffixes (see the recovery contract);
+    * `scopedTmp` is healed, never written. */
   private[graft] final case class Tag(tmp: String, backup: String,
                                       scopedTmp: String) {
     def scratch: Seq[String] = Seq(tmp, backup, scopedTmp).distinct
@@ -141,33 +149,33 @@ object PartitionScoped {
 
   /** Commit `f(target)` — the caller's rewrite of the current `target`
     * read against the `staged` batch — into `table`. With `partCols` the
-    * table's own partition columns and at most [[MaxTouchedPartitions]]
-    * touched partition tuples, `f` sees only the touched partitions and
-    * the result is
-    * committed by [[overwriteTouched]] (aligned to the table's physical
-    * column order); otherwise `f` sees the whole target and the result
-    * goes through [[swap]], written with the table's partition columns
-    * that the result still carries (a schema-changing run may add
-    * columns, so the result's own schema is written; a sync_all_columns
-    * run that removed a partition column rewrites unpartitioned). Other
-    * `partCols` take the full swap: dynamic overwrite replaces whole
-    * table partitions, so a scope on other columns (an upsert batch
-    * passing `partitionCols` to a table created without them) would
-    * replace them with part of their rows. A scoped call needs a
-    * non-empty `staged`: an empty batch has no touched set, and the
-    * caller no-ops instead. */
+    * table's own partition columns ([[scopes]]) and at most
+    * [[MaxTouchedPartitions]] touched partition tuples, `f` sees only the
+    * touched partitions and the result is committed by
+    * [[overwriteTouched]] (aligned to the table's physical column order);
+    * no touched tuple (an empty batch) writes nothing. Otherwise `f` sees
+    * the whole target and the result goes through [[swap]], written with
+    * the table's partition columns that the result still carries (a
+    * schema-changing run may add columns, so the result's own schema is
+    * written; a sync_all_columns run that removed a partition column
+    * rewrites unpartitioned). Other `partCols` take the full swap:
+    * dynamic overwrite replaces whole table partitions, so a scope on
+    * other columns (an upsert batch passing `partitionCols` to a table
+    * created without them) would replace them with part of their rows.
+    * The full swap runs on an empty `staged` too; its callers decide
+    * whether that is a no-op. */
   private[graft] def rewrite(spark: SparkSession, table: String, tag: Tag,
                              target: DataFrame, staged: DataFrame,
                              partCols: Seq[String])(
                              f: DataFrame => DataFrame): Unit = {
     val tableParts = partitionColumns(spark, table)
-    val scopable = partCols.nonEmpty &&
-      partCols.map(_.toLowerCase).toSet == tableParts.map(_.toLowerCase).toSet
-    (if (scopable) touchedPredicate(staged, partCols) else None) match {
-      case Some(pred) =>
-        overwriteTouched(spark, table, table + tag.scopedTmp,
-          f(target.filter(pred))
-            .select(spark.table(table).columns.map(col).toIndexedSeq: _*))
+    (if (scopes(tableParts, partCols)) touchedTuples(staged, partCols)
+     else None) match {
+      case Some(touched) =>
+        if (touched.nonEmpty)
+          overwriteTouched(spark, table, partCols,
+            f(target.filter(touchedPredicate(touched, partCols)))
+              .select(spark.table(table).columns.map(col).toIndexedSeq: _*))
       case None =>
         val result = f(target)
         val keepParts = tableParts.filter(c =>
@@ -179,51 +187,102 @@ object PartitionScoped {
     }
   }
 
-  /** The staged batch's distinct partition tuples as one literal, null-safe
+  /** Whether [[rewrite]] scopes by `partCols` a table partitioned by
+    * `tableParts`: the same columns, and some. */
+  private[graft] def scopes(tableParts: Seq[String],
+                            partCols: Seq[String]): Boolean =
+    partCols.nonEmpty &&
+      partCols.map(_.toLowerCase).toSet == tableParts.map(_.toLowerCase).toSet
+
+  /** The staged batch's distinct partition tuples, in one job that adds
+    * no shuffle: each task keeps at most [[MaxTouchedPartitions]] + 1
+    * distinct tuples of its own and the driver merges them. `None` past
+    * the cap (the caller falls back to the full-table rewrite); empty for
+    * an empty batch. */
+  private def touchedTuples(staged: DataFrame,
+                            partitionCols: Seq[String]): Option[Seq[Row]] = {
+    val cap = MaxTouchedPartitions + 1
+    val perTask = staged.select(partitionCols.map(col): _*).rdd
+      .mapPartitions { rows =>
+        val seen = scala.collection.mutable.HashSet.empty[Row]
+        while (rows.hasNext && seen.size < cap) seen += rows.next()
+        Iterator.single(seen.toArray)
+      }.collect()
+    val touched = perTask.iterator.flatten.distinct.take(cap).toSeq
+    if (touched.size > MaxTouchedPartitions) None else Some(touched)
+  }
+
+  /** Non-empty `touched` partition tuples as one literal, null-safe
     * filter (`<=>` — a NULL partition value is a real partition and must
-    * scope like any other). `None` when the batch touches more than
-    * [[MaxTouchedPartitions]] partitions (caller falls back to the
-    * full-table rewrite). The staged frame must be non-empty — an empty
-    * batch has no touched set and the caller should no-op instead. */
-  private def touchedPredicate(staged: DataFrame,
-                               partitionCols: Seq[String]): Option[Column] = {
-    val parts: Array[Row] = staged.select(partitionCols.map(col): _*)
-      .distinct().limit(MaxTouchedPartitions + 1).collect()
-    require(parts.nonEmpty,
-      "touchedPredicate on an empty staged batch — caller must no-op")
-    if (parts.length > MaxTouchedPartitions) None
-    else if (partitionCols.size == 1) {
+    * scope like any other). */
+  private def touchedPredicate(touched: Seq[Row],
+                               partitionCols: Seq[String]): Column =
+    if (partitionCols.size == 1) {
       // single partition column — the common case: ONE In node instead
       // of a |touched|-term OR tree (a 10k-term OR is real Catalyst
       // analysis cost at the cap; In is one node and still statically
       // prunable). `IN` is null-VOIDING, not null-safe, so a NULL
       // partition value (a real partition) gets its own isNull disjunct.
       val c = col(partitionCols.head)
-      val (nulls, vals) = parts.map(_.get(0)).partition(_ == null)
-      val in = if (vals.nonEmpty) Some(c.isin(vals.toIndexedSeq: _*)) else None
+      val (nulls, vals) = touched.map(_.get(0)).partition(_ == null)
+      val in = if (vals.nonEmpty) Some(c.isin(vals: _*)) else None
       val nn = if (nulls.nonEmpty) Some(c.isNull) else None
-      Some((in.toSeq ++ nn.toSeq).reduce(_ || _))
-    } else Some(parts.map { r =>
+      (in.toSeq ++ nn.toSeq).reduce(_ || _)
+    } else touched.map { r =>
       partitionCols.zipWithIndex
         .map { case (c, i) => col(c) <=> lit(r.get(i)) }
         .reduce(_ && _)
-    }.reduce(_ || _))
+    }.reduce(_ || _)
+
+  /** Commit a scoped rewrite: an eager local checkpoint of `result` is
+    * the barrier that cuts its lineage to `table` (never overwrite
+    * partitions of a table from a plan that reads it); then a rebalance
+    * on `partCols` and a dynamic-partition overwrite into `table`
+    * (position-based `insertInto`; `result` is aligned to the target's
+    * physical order, partition columns last). Only partitions PRESENT in
+    * the result — exactly the touched set — are rewritten; every other
+    * partition's files are untouched. The rebalance gives each partition
+    * to one task, so a small batch writes one file per touched partition,
+    * while adaptive execution still splits a skewed one. The checkpoint's
+    * blocks are released after the commit; a lost block fails the insert
+    * before its commit (the recovery contract). */
+  private def overwriteTouched(spark: SparkSession, table: String,
+                               partCols: Seq[String],
+                               result: DataFrame): Unit = {
+    val barrier = result.localCheckpoint()
+    try dynamicOverwrite(spark) {
+      barrier.hint("rebalance", partCols.map(col): _*)
+        .write.mode("overwrite").insertInto(table)
+    } finally releaseCheckpoints(barrier.queryExecution.logical.collect {
+      case r: LogicalRDD => r.rdd
+    })
   }
 
-  /** Commit a scoped rewrite: materialize `result` to `tmpTable`, then
-    * dynamic-partition-overwrite it into `table` (position-based
-    * `insertInto`; `result` is aligned to the target's physical order,
-    * partition columns last). Only partitions PRESENT in the result —
-    * exactly the touched set — are rewritten; every other partition's
-    * files are untouched. */
-  private def overwriteTouched(spark: SparkSession, table: String,
-                               tmpTable: String, result: DataFrame): Unit = {
-    drop(spark, tmpTable)
-    result.write.saveAsTable(tmpTable)
-    dynamicOverwrite(spark) {
-      spark.table(tmpTable).write.mode("overwrite").insertInto(table)
+  /** Unpersist `rdds`, locally checkpointed ones included. Spark warns,
+    * for every checkpointed RDD it releases, that its lineage is
+    * truncated — true, and the point of releasing it — so the
+    * `org.apache.spark.rdd` logger (the warning comes from the concrete
+    * RDD subclass's logger) is held at ERROR around the call only. A
+    * logger that had no level of its own gets the temporary one removed
+    * afterwards, so it keeps inheriting from the root; concurrent commits
+    * take turns, so none restores another's temporary level. */
+  private[graft] def releaseCheckpoints(
+      rdds: Iterable[org.apache.spark.rdd.RDD[_]]): Unit = synchronized {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.LoggerContext
+    import org.apache.logging.log4j.core.config.Configurator
+    val rddLogger = "org.apache.spark.rdd"
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val prev = Option(ctx.getConfiguration.getLoggers.get(rddLogger))
+      .map(_.getLevel)
+    Configurator.setLevel(rddLogger, Level.ERROR)
+    try rdds.foreach(_.unpersist(blocking = false))
+    finally prev match {
+      case Some(level) => Configurator.setLevel(rddLogger, level)
+      case None =>
+        ctx.getConfiguration.removeLogger(rddLogger)
+        ctx.updateLoggers()
     }
-    drop(spark, tmpTable)
   }
 
   /** `ALTER {TABLE|VIEW} … RENAME TO …` — the `alter {type}` form of

@@ -25,11 +25,7 @@ final case class Relation(
       schema.map(_.toLowerCase) == other.schema.map(_.toLowerCase) &&
       identifier.toLowerCase == other.identifier.toLowerCase
 
-  def withType(t: RelationType): Relation = copy(relType = t)
   def withIdentifier(id: String): Relation = copy(identifier = id)
-
-  /** dbt's temp-relation naming: suffix on the identifier (table.sql:13). */
-  def suffixed(suffix: String): Relation = withIdentifier(identifier + suffix)
 }
 
 object Relation {

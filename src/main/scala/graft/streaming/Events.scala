@@ -1719,8 +1719,8 @@ object Events {
     * distinct partition tuples (metadata-sized, capped at
     * [[PartitionScoped.MaxTouchedPartitions]]) become literal partition
     * filters on the target read (static partition pruning: untouched
-    * partitions are never READ), the scoped merge is materialized to a
-    * tmp table, and dynamic partition overwrite
+    * partitions are never READ), the scoped merge is materialized by a
+    * local checkpoint, and dynamic partition overwrite
     * (`partitionOverwriteMode=dynamic` + `insertInto`) commits it (only
     * partitions present in the merged result — exactly the touched set —
     * are REWRITTEN). Per-batch cost is O(touched partitions), not
@@ -1743,7 +1743,6 @@ object Events {
                   partitionCols: Seq[String] = Nil): Unit = {
     require(uniqueKeys.nonEmpty, "upsert needs unique keys")
     checkTableName(table)
-    if (batch.isEmpty) return
     val spark = batch.sparkSession
     val keysNotNull = uniqueKeys.map(col(_).isNotNull).reduce(_ && _)
     val w = org.apache.spark.sql.expressions.Window
@@ -1751,7 +1750,8 @@ object Events {
       .orderBy(col(orderCol).desc,
         xxhash64(batch.columns.map(col).toIndexedSeq: _*))
     val rn = "__graft_upsert_rn"
-    val collapsed = batch.filter(keysNotNull)
+    val keyed = batch.filter(keysNotNull)
+    val collapsed = keyed
       .withColumn(rn, row_number().over(w))
       .filter(col(rn) === 1).drop(rn)
     // without the heal, the tableExists check below would take the
@@ -1760,24 +1760,28 @@ object Events {
     if (!spark.catalog.tableExists(table)) {
       // first batch: create — possibly EMPTY when every row was
       // null-keyed (the schema is still known and downstream readers
-      // get a stable table; EmptyInputSpec pins this)
+      // get a stable table; EmptyInputSpec pins this); an empty batch
+      // creates nothing
+      if (batch.isEmpty) return
       if (partitionCols.nonEmpty)
         collapsed.write.partitionBy(partitionCols: _*).saveAsTable(table)
       else collapsed.write.saveAsTable(table)
       return
     }
-    // nothing staged against an EXISTING table (e.g. every row
-    // null-keyed): no-op. Without this, the partition-scoped path would
-    // reduce an EMPTY touched-partition set into its filter predicate
-    // (throw), and the unpartitioned path would rewrite the whole table
-    // with identical content — worse, through a plain (layout-dropping)
-    // swap if the table is partitioned. The isEmpty probe is a limit-1
-    // job on an already-collapsed micro-batch — negligible per batch.
-    if (collapsed.isEmpty) return
+    // nothing staged against an EXISTING table (an empty batch, or every
+    // row null-keyed): no-op. The scoped commit's touched-partition
+    // collect finds that out by itself and writes nothing; the full
+    // merge would rewrite the whole table with identical content, so it
+    // probes first (a limit-1 job on the keyed micro-batch).
+    if (!PartitionScoped.scopes(
+          PartitionScoped.partitionColumns(spark, table), partitionCols) &&
+        keyed.isEmpty) return
     // scoped (touched partitions, when partitioned and under the cap) or
-    // full merge — Incremental.merge keeps the target's column order
+    // full merge — Incremental.merge keeps the target's column order. The
+    // touched set is the keyed batch's: the collapsed batch's partitions
+    // under the stability contract, without the collapse's shuffle.
     PartitionScoped.rewrite(spark, table, PartitionScoped.Upsert,
-      spark.table(table), collapsed, partitionCols)(
+      spark.table(table), keyed, partitionCols)(
       graft.mat.Incremental.merge(_, collapsed, uniqueKeys))
   }
 

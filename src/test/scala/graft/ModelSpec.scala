@@ -37,6 +37,17 @@ class ModelSpec extends AnyFunSuite {
     assert(!unbounded.canExpandTo(ColumnModel("c", "varchar(20)")))
   }
 
+  test("type classes: is_integer / is_float / is_numeric (column.py:32-49)") {
+    for (t <- Seq("tinyint", "smallint", "integer", "int", "bigint")) {
+      assert(ColumnModel("c", t).isInteger, t)
+      assert(!ColumnModel("c", t).isFloat && !ColumnModel("c", t).isNumeric, t)
+    }
+    for (t <- Seq("real", "double", "decimal(10,2)", "varchar"))
+      assert(!ColumnModel("c", t).isInteger, t)
+    assert(ColumnModel("c", "double").isFloat)
+    assert(ColumnModel("c", "decimal(10,2)").isNumeric)
+  }
+
   test("decimal parse (column.py:93-107)") {
     val d = ColumnModel("c", "decimal(28,6)")
     assert(d.numericPrecision.contains(28))
